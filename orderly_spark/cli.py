@@ -108,9 +108,10 @@ def _dump_config(args: argparse.Namespace, out_dir: str, name: str) -> None:
 
 
 def cmd_extract(args: argparse.Namespace) -> int:
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    from orderly_spark.operators.extract import extract_reactions, molecule_name_side_output
+    from orderly_spark.operators.extract import extract_reactions, unresolved_names_agg
     from orderly_spark.session import get_spark
     from orderly_spark.sources import solvents as SV
     from orderly_spark.sources.ord import (
@@ -150,23 +151,33 @@ def cmd_extract(args: argparse.Namespace) -> int:
     # (the broadcast-set J1 shape; extractor.py:546-593)
     smiles = SV.solvent_smiles_set(dim).collect()[0].solvent_set
     sset = F.array(*[F.lit(s) for s in smiles]) if smiles else None
-    extracted = extract_reactions(decoded, solvent_set=sset, trust_labelling=args.trust_labelling)
-    write_extracted(extracted, f"{args.output_path}/extracted_ords")
+    names = None
     if args.consider_molecule_names:
-        # the side output must see the DECODED (pre-filter) data: the
-        # extract transform strips exactly the numeric/empty names
-        # this list exists to record, so reading the written parquet
-        # back always produced an empty CSV (review finding; the
-        # pipeline test feeds decoded data, confirming the stage)
-        names = molecule_name_side_output(decoded)
-        save_name_list(names, f"{args.output_path}/molecule_names")
+        # the name list is taken from the DECODED (pre-filter) rows, which
+        # hold the numeric/empty names the extract transform strips — on
+        # the write job itself, so each file is decoded once
+        names = Observation("extract_molecule_names")
+        decoded = decoded.observe(names, unresolved_names_agg().alias("names"))
+    extracted = extract_reactions(decoded, solvent_set=sset, trust_labelling=args.trust_labelling)
+    written = Observation("extract_rows")
+    write_extracted(
+        extracted.observe(written, F.count(F.lit(1)).alias("n")),
+        f"{args.output_path}/extracted_ords",
+    )
+    if names is not None:
+        save_name_list(
+            spark.createDataFrame([(n,) for n in names.get["names"]], "name string"),
+            f"{args.output_path}/molecule_names",
+        )
     _dump_config(args, args.output_path, "extract_config.json")
-    n = spark.read.parquet(f"{args.output_path}/extracted_ords").count()
-    print(f"extracted {n} reactions -> {args.output_path}/extracted_ords")
+    print(f"extracted {written.get['n']} reactions -> {args.output_path}/extracted_ords")
     return 0
 
 
 def cmd_clean(args: argparse.Namespace) -> int:
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     from orderly_spark.operators import cleaning as C
     from orderly_spark.session import get_spark
     from orderly_spark.sources.ord import load_name_list
@@ -202,12 +213,17 @@ def cmd_clean(args: argparse.Namespace) -> int:
     names = load_name_list(spark, args.molecules_to_remove_path)
     cleaned = C.clean_pipeline(df, names, cfg)
     train, test = C.train_test_split(cleaned, cfg)
-    train.write.mode("overwrite").parquet(f"{args.output_path}/train.parquet")
-    test.write.mode("overwrite").parquet(f"{args.output_path}/test.parquet")
+    counts = {}
+    for name, part in (("train", train), ("test", test)):
+        counts[name] = Observation(f"clean_{name}_rows")
+        part.observe(counts[name], F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(f"{args.output_path}/{name}.parquet")
     _dump_config(args, args.output_path, "clean_config.json")
-    spark_train = spark.read.parquet(f"{args.output_path}/train.parquet").count()
-    spark_test = spark.read.parquet(f"{args.output_path}/test.parquet").count()
-    print(f"cleaned -> {spark_train} train / {spark_test} test rows in {args.output_path}")
+    print(
+        f"cleaned -> {counts['train'].get['n']} train / {counts['test'].get['n']} "
+        f"test rows in {args.output_path}"
+    )
     return 0
 
 
@@ -229,6 +245,7 @@ def _clean_stage_reactant_cap(clean_data_path: str) -> int | None:
 
 
 def cmd_gen_fp(args: argparse.Namespace) -> int:
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from orderly_spark.functions import chem
@@ -236,19 +253,19 @@ def cmd_gen_fp(args: argparse.Namespace) -> int:
 
     spark = get_spark("orderly_spark.gen_fp")
     df = spark.read.parquet(args.clean_data_path)
-    fp = chem.morgan_fingerprint_udf(n_bits=args.fp_size, radius=args.radius)
-    # product_fp - reactant_fps, concat(diff, product) = 2*fp_size wide
-    # (fingerprints.py:59-74)
-    # subtract EVERY reactant's fingerprint (spec: product_fp - SUM of
-    # reactant fps, fingerprints.py:63-74) — hardcoding r0/r1 silently
-    # mis-fingerprinted rows with 3+ reactants (clean allows up to 5;
-    # review finding). Slot count defaults to the cap the CLEAN STAGE
-    # actually ran with, read from its clean_config.json lineage
-    # record (review finding r5: a fixed default of 5 silently dropped
-    # reactants beyond slot 5 whenever clean ran with --num-reactant
-    # > 5); an explicit --reactant-slots overrides. Out-of-range slots
-    # read as NULL → zero-vector fp → no-op in the difference, so an
-    # over-estimate only costs columns.
+    # Invariants (fingerprints.py:59-74):
+    # - rxn_diff_fp = product_fp − Σ fp(reactants[i]) over EVERY slot up
+    #   to the cap, and rxn_fp = concat(rxn_diff_fp, product_fp), 2·fp_size
+    #   wide; a null slot contributes zeros, so over-sizing only costs time.
+    # - The slot cap defaults to the --num-reactant the clean stage ran
+    #   with (its clean_config.json lineage record), so no reactant the
+    #   cleaned data can hold is silently dropped; --reactant-slots
+    #   overrides it.
+    # - Rows with more reactants than the cap are counted on the SAME job
+    #   that writes the output (an Observation, no extra pass). The count
+    #   is known only after the write, so a violation under the derived
+    #   cap removes the output (a consumer that ignores rc=2 must not read
+    #   it) and returns rc=2; under an explicit cap it warns.
     explicit = args.reactant_slots is not None
     if explicit:
         slots = args.reactant_slots
@@ -262,29 +279,19 @@ def cmd_gen_fp(args: argparse.Namespace) -> int:
             )
         slots = cap if cap is not None else 5
     max_r = max(slots, 0)
-    # Loud under-sizing guard at ZERO extra passes: an Observation on
-    # the SAME job that writes the fingerprints counts rows with more
-    # reactants than slots (an eager pre-scan would re-read the whole
-    # input — the extra-read class the r4 review removed; review r6).
-    # The metric is read after the write, so on violation the command
-    # fails AFTER producing output — rc=2 means disregard the output.
-    from pyspark.sql import Observation
-
     guard = Observation("genfp_slot_guard")
     df = df.observe(
-        guard, F.count(F.when(F.size("reactants") > max_r, 1)).alias("n_over")
+        guard,
+        F.count(F.lit(1)).alias("n_rows"),
+        F.count(F.when(F.size("reactants") > max_r, 1)).alias("n_over"),
     )
-    r_cols = [f"__r{i}_fp" for i in range(max_r)]
-    out = df.withColumn("product_fp", fp(F.get(F.col("products"), 0)))
-    for i, rc in enumerate(r_cols):
-        out = out.withColumn(rc, fp(F.get(F.col("reactants"), i)))
+    fps = chem.reaction_fingerprint_udf(n_bits=args.fp_size, radius=args.radius)(
+        F.col("products"), F.col("reactants"), F.lit(max_r)
+    )
     out = (
-        out.withColumn(
-            "rxn_diff_fp",
-            chem.fingerprint_difference(F.col("product_fp"), *[F.col(rc) for rc in r_cols]),
-        )
+        df.select("*", fps.alias("__fp"))
+        .select(*[df[c] for c in df.columns], "__fp.product_fp", "__fp.rxn_diff_fp")
         .withColumn("rxn_fp", F.concat(F.col("rxn_diff_fp"), F.col("product_fp")))
-        .drop(*r_cols)
     )
     out.write.mode("overwrite").parquet(args.output_path)
     over = guard.get["n_over"]
@@ -297,10 +304,6 @@ def cmd_gen_fp(args: argparse.Namespace) -> int:
         if explicit:
             print(f"WARNING: {msg} (explicit --reactant-slots)", file=sys.stderr)
         else:
-            # remove the mis-fingerprinted output so a consumer that
-            # ignores rc=2 cannot read it (review r6: overwrite had
-            # already replaced any previous good dataset; leaving the
-            # bad one behind made the failure silent downstream)
             import shutil
 
             shutil.rmtree(args.output_path, ignore_errors=True)
@@ -311,7 +314,7 @@ def cmd_gen_fp(args: argparse.Namespace) -> int:
                 file=sys.stderr,
             )
             return 2
-    n = spark.read.parquet(args.output_path).count()
+    n = guard.get["n_rows"]
     print(f"fingerprints ({2 * args.fp_size} wide) for {n} rows -> {args.output_path}")
     if args.npy_output_path:
         back = spark.read.parquet(args.output_path)

@@ -34,6 +34,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -272,46 +273,67 @@ def tm_first_order(arr: Column, tm_set: Column) -> Column:
     return F.concat(tm, rest)
 
 
-def morgan_fingerprint_udf(n_bits: int = 2048, radius: int = 3):
-    """Morgan fingerprint pandas UDF factory → ArrayType(IntegerType).
-    Zeros on parse failure, matching the reference's contract
-    (fingerprints.py:92-99). Without RDKit the kernel is the REAL
-    pure-Python Morgan/ECFP over the parsed SMILES graph
-    (functions/smiles.py — r11, F14 partial-close); unparseable input
-    gets zeros in BOTH environments (the r10-era md5 pseudo-fingerprint
-    fallback is gone — the parser made it unnecessary)."""
+def _morgan_fp_one(smiles: str | None, n_bits: int, radius: int, engine: str = "auto") -> np.ndarray:
+    """F14 per-molecule kernel (fingerprints.py:76-99): a counted,
+    hashed Morgan fingerprint as an int32 vector, zeros for null or
+    unparseable input in every engine. ``engine="auto"`` uses RDKit
+    when importable and the pure-Python parsed-graph kernel
+    (functions/smiles.py) otherwise; ``"parsed"`` always uses the
+    parser, so its values are identical in every environment."""
+    out = np.zeros(n_bits, dtype=np.int32)
+    if smiles is None:
+        return out
+    if HAVE_RDKIT and engine == "auto":
+        from rdkit.Chem import AllChem  # type: ignore
 
-    def _fp_one(smiles: str) -> list[int]:
-        if smiles is None:
-            return [0] * n_bits
-        if HAVE_RDKIT:
-            from rdkit.Chem import AllChem  # type: ignore
-
-            mol = Chem.MolFromSmiles(smiles)
-            if mol is None:
-                return [0] * n_bits
+        mol = Chem.MolFromSmiles(smiles)
+        if mol is not None:
             fp = AllChem.GetHashedMorganFingerprint(mol, radius, nBits=n_bits)
-            out = [0] * n_bits
             for idx, v in fp.GetNonzeroElements().items():
-                out[idx] = int(v)
-            return out
-        from orderly_spark.functions.smiles import morgan_fingerprint
+                out[idx] = v
+        return out
+    from orderly_spark.functions.smiles import morgan_fingerprint
 
-        fp = morgan_fingerprint(smiles, radius=radius, n_bits=n_bits)
-        return fp if fp is not None else [0] * n_bits
+    fp = morgan_fingerprint(smiles, radius=radius, n_bits=n_bits)
+    if fp is not None:
+        out[:] = fp
+    return out
 
+
+def _memoized_fp(n_bits: int, radius: int, engine: str = "auto"):
+    """Per-UDF-instance memo over :func:`_morgan_fp_one`: molecule
+    strings repeat heavily, so one kernel call per distinct molecule.
+    The cached vectors are shared between rows and slots, hence
+    read-only."""
+    memo: dict[str | None, np.ndarray] = {}
+
+    def fp(smiles: str | None) -> np.ndarray:
+        v = memo.get(smiles)
+        if v is None:
+            v = memo[smiles] = _morgan_fp_one(smiles, n_bits, radius, engine)
+            v.flags.writeable = False
+        return v
+
+    return fp
+
+
+def _fp_column_udf(n_bits: int, radius: int, engine: str):
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def fp_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        memo: dict[str, list[int]] = {}
+        fp = _memoized_fp(n_bits, radius, engine)
         for s in it:
-            def _memoized_fp(x):
-                if x not in memo:
-                    memo[x] = _fp_one(x)
-                return memo[x]
-
-            yield s.map(_memoized_fp)
+            yield s.map(fp)
 
     return fp_udf
+
+
+def morgan_fingerprint_udf(n_bits: int = 2048, radius: int = 3):
+    """Morgan fingerprint pandas UDF factory → ArrayType(IntegerType)
+    over one molecule column: :func:`_morgan_fp_one` (RDKit when
+    importable, else the parsed-graph kernel), memoised per distinct
+    molecule. Zeros on null or unparseable input, matching the
+    reference's contract (fingerprints.py:92-99)."""
+    return _fp_column_udf(n_bits, radius, "auto")
 
 
 def parsed_morgan_fp_udf(n_bits: int = 2048, radius: int = 3):
@@ -322,26 +344,48 @@ def parsed_morgan_fp_udf(n_bits: int = 2048, radius: int = 3):
     m_fp_matrix_sink). Zeros on parse failure, like the reference
     (fingerprints.py:92-99). RDKit agreement is the skip-gated parity
     tests' job, not this UDF's."""
-    from orderly_spark.functions.smiles import morgan_fingerprint
+    return _fp_column_udf(n_bits, radius, "parsed")
 
-    def _fp_one(smiles: str) -> list[int]:
-        if smiles is None:
-            return [0] * n_bits
-        fp = morgan_fingerprint(smiles, radius=radius, n_bits=n_bits)
-        return fp if fp is not None else [0] * n_bits
 
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def fp_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        memo: dict[str, list[int]] = {}
-        for s in it:
-            def _memoized_fp(x):
-                if x not in memo:
-                    memo[x] = _fp_one(x)
-                return memo[x]
+_REACTION_FP_TYPE = T.StructType(
+    [
+        T.StructField("product_fp", T.ArrayType(T.IntegerType())),
+        T.StructField("rxn_diff_fp", T.ArrayType(T.IntegerType())),
+    ]
+)
 
-            yield s.map(_memoized_fp)
 
-    return fp_udf
+def reaction_fingerprint_udf(n_bits: int = 2048, radius: int = 3):
+    """F14 + F15 fused (fingerprints.py:59-99): pandas UDF factory over
+    ``(products, reactants, n_reactants)`` → ``struct<product_fp,
+    rxn_diff_fp>`` where ``product_fp`` is the fingerprint of
+    ``products[0]`` and ``rxn_diff_fp = product_fp − Σ`` the
+    fingerprints of the first ``n_reactants`` reactants.
+
+    Invariants: the per-molecule kernel is :func:`_morgan_fp_one`, the
+    same as :func:`morgan_fingerprint_udf`'s, with one memo shared by
+    every slot; a null or empty product, a null reactant array or
+    member, and an unparseable molecule all contribute zeros; reactants
+    past ``n_reactants`` are ignored (the caller counts them)."""
+
+    @F.pandas_udf(_REACTION_FP_TYPE)
+    def rxn_fp_udf(
+        it: Iterator[tuple[pd.Series, pd.Series, pd.Series]],
+    ) -> Iterator[pd.DataFrame]:
+        fp = _memoized_fp(n_bits, radius)
+        for products, reactants, n_reactants in it:
+            product_fps, diffs = [], []
+            for prods, reacts, n in zip(products, reactants, n_reactants):
+                product = fp(prods[0] if prods is not None and len(prods) else None)
+                diff = product.copy()
+                for m in reacts[:n] if reacts is not None else ():
+                    if m is not None:
+                        diff -= fp(m)
+                product_fps.append(product)
+                diffs.append(diff)
+            yield pd.DataFrame({"product_fp": product_fps, "rxn_diff_fp": diffs})
+
+    return rxn_fp_udf
 
 
 @F.pandas_udf(T.StringType())
@@ -403,31 +447,3 @@ def fingerprint_difference(product_fp: Column, *reactant_fps: Column) -> Column:
     for r in reactant_fps:
         out = F.zip_with(out, F.coalesce(r, zeros), lambda a, b: a - F.coalesce(b, F.lit(0)))
     return out
-
-
-def reaction_fingerprint(product_fp: Column, reactant_fps: Column) -> Column:
-    """The gen_fp output row (fingerprints.py:59-74 / BASELINE spec):
-    ``concat(diff_fp, product_fp)`` → 2·n_bits wide, where diff_fp =
-    product_fp − Σ reactant_fps.
-
-    Inputs are fingerprint COLUMNS (``product_fp``: array<int>;
-    ``reactant_fps``: array of fingerprint arrays) — compute them once
-    per distinct molecule with :func:`morgan_fingerprint_udf` over a
-    distinct set and broadcast-join back (a pandas UDF cannot run
-    inside a higher-order lambda, and per-row UDF calls are the
-    anti-pattern at scale anyway). The summation/difference here is
-    aggregate+zip_with, fully JVM-side."""
-    zeros = F.transform(product_fp, lambda x: F.lit(0))
-    # coalesce(v, zeros): a NULL MEMBER fingerprint contributes zeros
-    # (review finding, r8: zip_with(acc, NULL) returned NULL and one
-    # missing fp silently nulled the entire reaction fingerprint; the
-    # per-element and outer coalesces guarded every level but this one)
-    rsum = F.aggregate(
-        F.coalesce(reactant_fps, F.array().cast("array<array<int>>")),
-        zeros,
-        lambda acc, v: F.zip_with(
-            acc, F.coalesce(v, zeros), lambda a, b: a + F.coalesce(b, F.lit(0))
-        ),
-    )
-    diff = F.zip_with(product_fp, rsum, lambda a, b: a - b)
-    return F.concat(diff, product_fp)

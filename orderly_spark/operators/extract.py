@@ -160,16 +160,32 @@ def extract_reactions(
     return df
 
 
+def _name_members() -> Column:
+    """Every role member of a row, as one array."""
+    return F.concat(
+        *[R._arr_safe(r) for r in ("reactants", "agents", "reagents", "solvents", "catalysts", "products")]
+    )
+
+
+def _is_unresolved_name(name: Column) -> Column:
+    return R.is_number(name) | (name == "")
+
+
 def molecule_name_side_output(df: DataFrame) -> DataFrame:
     """S7/A1: identifiers that canonicalisation could not parse —
     with RDKit absent this degrades to 'numeric or empty', keeping the
     distinct+sort plumbing (main.py:54-89) testable."""
-    all_roles = F.concat(
-        *[R._arr_safe(r) for r in ("reactants", "agents", "reagents", "solvents", "catalysts", "products")]
-    )
-    names = df.select(F.explode(all_roles).alias("name")).where(
-        R.is_number(F.col("name")) | (F.col("name") == "")
+    names = df.select(F.explode(_name_members()).alias("name")).where(
+        _is_unresolved_name(F.col("name"))
     )
     from orderly_spark.sources.ord import merge_molecule_names
 
     return merge_molecule_names(names)
+
+
+def unresolved_names_agg() -> Column:
+    """The names :func:`molecule_name_side_output` lists, as ONE sorted
+    distinct array aggregate — for ``df.observe``, so the list comes
+    from a job that already scans the rows."""
+    per_row = F.filter(_name_members(), _is_unresolved_name)
+    return F.array_sort(F.array_distinct(F.flatten(F.collect_set(per_row))))

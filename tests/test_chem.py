@@ -83,20 +83,36 @@ def test_fingerprint_difference(spark):
     assert out == [2, 2, 0]
 
 
-def test_reaction_fingerprint_concat(spark):
+def test_reaction_fingerprint_udf_matches_column_kernels(spark):
+    """The fused gen-fp kernel equals the per-column path it replaced:
+    morgan_fingerprint_udf per slot, then fingerprint_difference in the
+    JVM — over a null product array, a null reactant member, reactants
+    past the slot cap and a repeated molecule."""
     df = spark.createDataFrame(
-        [([5, 3, 1], [[1, 1, 0], [2, 0, 1]]), ([4, 4, 4], [])],
-        "pfp array<int>, rfps array<array<int>>",
+        [
+            (0, ["CCO"], ["CC", "O"]),
+            (1, None, ["N"]),
+            (2, ["CCO"], [None, "O", "N"]),
+            (3, ["CC"], ["CC"]),
+        ],
+        "i int, products array<string>, reactants array<string>",
     )
-    out = [
-        r.x
-        for r in df.select(
-            chem.reaction_fingerprint(F.col("pfp"), F.col("rfps")).alias("x")
-        ).collect()
-    ]
-    # diff = pfp - sum(rfps), output = diff ++ pfp (2x width, gen_fp spec)
-    assert out[0] == [2, 2, 0, 5, 3, 1]
-    assert out[1] == [4, 4, 4, 4, 4, 4]  # no reactants -> diff == pfp
+    n_bits, slots = 32, 2
+    fp = chem.morgan_fingerprint_udf(n_bits=n_bits)
+    want = df.withColumn("p", fp(F.get(F.col("products"), 0)))
+    for k in range(slots):
+        want = want.withColumn(f"r{k}", fp(F.get(F.col("reactants"), k)))
+    want = want.select(
+        "i", "p", chem.fingerprint_difference(F.col("p"), *[F.col(f"r{k}") for k in range(slots)]).alias("d")
+    )
+    got = df.select(
+        "i",
+        chem.reaction_fingerprint_udf(n_bits=n_bits)(
+            F.col("products"), F.col("reactants"), F.lit(slots)
+        ).alias("x"),
+    ).select("i", F.col("x.product_fp").alias("p"), F.col("x.rxn_diff_fp").alias("d"))
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    assert not any(got.filter("i = 3").first().d)  # CC − CC
 
 
 def test_npy_export_matches_reference_artifact_shape(spark, tmp_path):

@@ -559,3 +559,21 @@ def test_unresolved_routing_threshold(spark):
     big_plan = formatted_plan(C.handle_unresolved_names(df, big_names, cfg))
     assert "INSET" not in big_plan.upper()
     assert "BroadcastHashJoin" in big_plan
+
+
+def test_pack_unpack_row_roundtrips_backticked_column_names(spark):
+    """Column names reach the SQL-string builders quoted, with embedded
+    backticks doubled: a name holding a backtick (or a dot) round-trips
+    through _pack_row/_unpack_row unchanged, and so does _arr."""
+    cols = ["a`b", "c.d", "reactants"]
+    schema = T.StructType([
+        T.StructField("a`b", T.LongType()),
+        T.StructField("c.d", T.StringType()),
+        T.StructField("reactants", T.ArrayType(T.StringType())),
+    ])
+    df = spark.createDataFrame([(1, "x", None)], schema)
+    packed = df.select(C._pack_row(cols).alias("__row"))
+    out = C._unpack_row(packed, cols)
+    assert out.columns == cols
+    assert [tuple(r) for r in out.collect()] == [(1, "x", None)]
+    assert df.select(C._arr("reactants").alias("r")).first().r == []

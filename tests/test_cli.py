@@ -10,6 +10,7 @@ import shutil
 from pathlib import Path
 
 import pytest
+from pyspark.sql import functions as F
 
 from orderly_spark.cli import main
 from orderly_spark.sources import ord as O
@@ -174,3 +175,132 @@ def test_cli_extract_default_decoder_wire_protobuf(spark, tmp_path):
     # roles re-derived from the decoded rxn string; suffix stripped
     assert all(r.rxn_str == "CC.OO>N>CCO" for r in rows)
     assert sorted(r.yields[0] for r in rows) == [50.0, 51.0, 52.0, 53.0, 54.0, 55.0]
+
+
+def test_cli_genfp_values_pinned(workdir, spark, capsys):
+    """gen-fp's values, not only its shape: ``rxn_diff_fp`` is
+    ``product_fp`` minus the single-molecule fingerprints of the first
+    N reactants (fingerprints.py:59-74), ``rxn_fp`` is ``diff ++
+    product``, and a null/empty product, a null reactant member or an
+    unparseable molecule contributes zeros. The output keeps its column
+    names and types."""
+    from pyspark.sql import types as T
+
+    from orderly_spark.functions import chem
+
+    d = workdir / "genfp_values"
+    rows = [
+        (0, ["CC", "O"], None),  # null products
+        (1, ["N"], []),  # empty products
+        (2, [None, "O"], ["CCO"]),  # null reactant member
+        (3, ["CC", "O", "N"], ["CCO"]),  # more reactants than --reactant-slots
+        (4, None, ["c1ccccc1O"]),  # null reactants
+        (5, ["not a smiles"], ["CC(=O)O"]),  # unparseable reactant
+    ]
+    df = spark.createDataFrame(
+        rows, "original_index long, reactants array<string>, products array<string>"
+    )
+    df.write.mode("overwrite").parquet(str(d / "train.parquet"))
+    n_bits, slots = 32, 2
+    rc = main(["gen-fp", "--clean-data-path", str(d / "train.parquet"),
+               "--output-path", str(d / "fp.parquet"), "--fp-size", str(n_bits),
+               "--reactant-slots", str(slots)])
+    assert rc == 0
+    assert "1 rows have more than 2 reactants" in capsys.readouterr().err
+
+    mols = sorted({m for _, r, p in rows for m in (r or []) + (p or []) if m is not None})
+    single = spark.createDataFrame([(m,) for m in mols], "m string").select(
+        "m", chem.morgan_fingerprint_udf(n_bits=n_bits)(F.col("m")).alias("fp")
+    )
+    fp_of = {r.m: list(r.fp) for r in single.collect()}
+    assert any(fp_of.values()) and not any(fp_of["not a smiles"])
+
+    def fp1(m):
+        return fp_of[m] if m is not None else [0] * n_bits
+
+    out = spark.read.parquet(str(d / "fp.parquet"))
+    assert [(f.name, f.dataType) for f in out.schema.fields] == [
+        ("original_index", T.LongType()),
+        ("reactants", T.ArrayType(T.StringType())),
+        ("products", T.ArrayType(T.StringType())),
+        ("product_fp", T.ArrayType(T.IntegerType())),
+        ("rxn_diff_fp", T.ArrayType(T.IntegerType())),
+        ("rxn_fp", T.ArrayType(T.IntegerType())),
+    ]
+    got = {r.original_index: r for r in out.collect()}
+    assert sorted(got) == [i for i, _, _ in rows]
+    for i, reactants, products in rows:
+        product = fp1((products or [None])[0])
+        diff = list(product)
+        for m in (reactants or [])[:slots]:
+            diff = [a - b for a, b in zip(diff, fp1(m))]
+        r = got[i]
+        assert list(r.product_fp) == product, i
+        assert list(r.rxn_diff_fp) == diff, i
+        assert list(r.rxn_fp) == diff + product, i
+
+
+def _jobs_run(spark, group: str, argv: list[str]) -> int:
+    """Run one CLI command under its own job group; return how many
+    Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        assert main(argv) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cli_job_counts_and_name_list(spark, tmp_path):
+    """Each command's Spark jobs, pinned: extract decodes every file
+    once (the name list is observed on the write job, not re-decoded),
+    and no command re-reads its own output to print a row count (the
+    counts come from Observations on the writes). The name list still
+    equals molecule_name_side_output over the decoded rows: numeric
+    names, an empty name, and one name found in two files."""
+    from orderly_spark.operators.extract import molecule_name_side_output
+
+    def row(i, reactants, agents=("N",)):
+        return {"rxn_str": f"CC.OO>N>CCO |{i}|", "reactants": list(reactants),
+                "products": ["CCO"], "yields": [50.0 + i], "agents": list(agents),
+                "solvents": [], "is_mapped": False}
+
+    data = tmp_path / "data"
+    (data / "d1").mkdir(parents=True)
+    (data / "d2").mkdir()
+    (data / "d1" / "a.pb.gz").write_bytes(O.fake_dataset_bytes(
+        [row(0, ["CC", "123"]), row(1, ["CC", "OO"], ["", "N"])]
+        + [row(i, ["CC", "OO"]) for i in range(2, 8)]
+    ))
+    (data / "d2" / "b.pb.gz").write_bytes(O.fake_dataset_bytes(
+        [row(8, ["CC", "123"]), row(9, ["456", "OO"])]
+    ))
+    ex, cl = tmp_path / "ex", tmp_path / "cl"
+    jobs = {
+        "extract": _jobs_run(spark, "extract", [
+            "extract", "--data-path", str(data), "--output-path", str(ex), "--decoder", "json"]),
+        "clean": _jobs_run(spark, "clean", [
+            "clean", "--ord-extraction-path", str(ex / "extracted_ords"),
+            "--molecules-to-remove-path", str(ex / "molecule_names"),
+            "--output-path", str(cl), "--min-frequency-of-occurrence", "2", "--num-agent", "2"]),
+        "gen-fp": _jobs_run(spark, "gen-fp", [
+            "gen-fp", "--clean-data-path", str(cl / "train.parquet"),
+            "--output-path", str(tmp_path / "fp"), "--fp-size", "64"]),
+    }
+    # extract: solvents CSV read, solvent-set collect (2), the write, the
+    # name-list CSV (3: a sorted write under AQE). clean: its pipeline
+    # and split barriers plus the two writes. gen-fp: the input schema
+    # read and the write.
+    assert jobs == {"extract": 7, "clean": 19, "gen-fp": 2}
+
+    decoded = O.decode_reactions(O.scan_ord_files(spark, str(data)), decoder=O.json_decoder)
+    want = molecule_name_side_output(decoded)
+    assert [r.name for r in want.collect()] == ["", "123", "456"]
+    O.save_name_list(want, str(tmp_path / "want_names"))
+
+    def csv_text(d):
+        return "".join(f.read_text() for f in sorted(d.glob("*.csv")))
+
+    assert csv_text(ex / "molecule_names") == csv_text(tmp_path / "want_names")

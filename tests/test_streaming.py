@@ -370,3 +370,29 @@ def test_stream_state_partitions_set_and_restored(spark, events_dir):
         SP._state_sized_shuffle = orig
     assert seen["during"] == str(SP._stream_state_partitions())
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+@pytest.mark.parametrize("failing", ["get", "set"])
+def test_state_sized_shuffle_releases_lock_when_enter_raises(failing):
+    """A conf that raises inside ``__enter__`` must not leave the
+    module lock held: ``__exit__`` never runs then, and every later
+    drain in the process would block forever."""
+
+    class Conf:
+        def get(self, key):
+            if failing == "get":
+                raise RuntimeError("conf get failed")
+            return "4"
+
+        def set(self, key, value):
+            if failing == "set":
+                raise RuntimeError("conf set failed")
+
+    class Session:
+        conf = Conf()
+
+    with pytest.raises(RuntimeError, match=f"conf {failing} failed"):
+        with SP._state_sized_shuffle(Session(), 2):
+            pass
+    assert SP._STATE_CONF_LOCK.acquire(blocking=False)
+    SP._STATE_CONF_LOCK.release()

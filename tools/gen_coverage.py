@@ -101,8 +101,8 @@ IMPL: dict[str, tuple[str, str]] = {
     "F11": ("sources/solvents.py lower-cased name keys", "tests/test_sources.py"),
     "F12": ("contains/isin predicates (charcoal, uspto, ice)", "tests/test_extract.py"),
     "F13": ("operators/cleaning.py reaction_hash (sha256)", "tests/test_cleaning.py"),
-    "F14": ("functions/chem.py morgan_fingerprint_udf", "tests/test_chem.py"),
-    "F15": ("functions/chem.py fingerprint_difference (zip_with)", "tests/test_chem.py"),
+    "F14": ("functions/chem.py _morgan_fp_one kernel, one memo per UDF: reaction_fingerprint_udf (gen-fp, fused per row), morgan_fingerprint_udf / parsed_morgan_fp_udf (one column)", "tests/test_chem.py, tests/test_cli.py"),
+    "F15": ("functions/chem.py reaction_fingerprint_udf (gen-fp: product − Σ reactants in the fused kernel) + fingerprint_difference (zip_with over fingerprint columns)", "tests/test_chem.py, tests/test_cli.py"),
     "F16": ("operators/cleaning.py scramble_role_lists", "tests/test_cleaning.py"),
     "F17": ("operators/metrics.py ohe_vocab + encode_with_vocab", "tests/test_metrics.py"),
     "F18": ("operators/metrics.py set_equality_match", "tests/test_metrics.py"),
