@@ -8,8 +8,9 @@ remap → component-count trims → non-empty filters → reactants≠products
 → yield consistency → dedup (random survivor) → rare-molecule handling
 → second dedup → scramble → (export pivot handles nulls-last/column
 sort). Catalyst fuses the filter stages into one pass; the only
-shuffles are the frequency aggregate, the dedup windows, and the
-split-hash join — each annotated below with its 100 TB behaviour.
+shuffles are the membership collapses by row id, the frequency
+aggregate, the dedup windows, and the split-hash window — each
+annotated below with its 100 TB behaviour.
 
 Determinism: the reference relies on seeded numpy RNG + pandas row
 order (cleaner.py:796-816, admits platform-dependence at :483). Every
@@ -170,27 +171,69 @@ def _quote(name: str) -> str:
 
 def _pack_row(cols: Sequence[str]) -> Column:
     """``struct(c1, c2, …)`` over every column, as ONE SQL-parsed
-    expression (r16 — same py4j-round-trip rationale as :func:`_arr`;
-    SQL struct names its fields by attribute exactly like F.struct)."""
+    expression (same py4j-round-trip rationale as :func:`_arr`; SQL
+    struct names its fields by attribute exactly like F.struct)."""
     return F.expr("struct(" + ", ".join(_quote(c) for c in cols) + ")")
 
 
-def _unpack_row(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """Inverse of :func:`_pack_row` on a ``__row`` column: one
-    selectExpr call instead of len(cols) Column builds (r16)."""
-    return df.selectExpr(*[f"__row.{_quote(c)} AS {_quote(c)}" for c in cols])
+def _unpack_row(df: DataFrame, cols: Sequence[str], keep: Sequence[str] = ()) -> DataFrame:
+    """Inverse of :func:`_pack_row` on a ``__row`` column, in one
+    selectExpr call; ``keep`` columns of ``df`` ride along after it."""
+    return df.selectExpr(*[f"__row.{_quote(c)} AS {_quote(c)}" for c in cols], *keep)
 
 
 def _arr(c: str) -> Column:
-    # r16 (optimization round 2): built as ONE SQL-parsed expression.
-    # The Column-builder form (F.coalesce(F.col(c), F.array().cast(...)))
-    # costs ~10 py4j round trips per call and this helper is invoked
-    # dozens of times per pipeline construction; cProfile attributed
-    # ~1.6 s of c_clean_pipeline_fullscale's driver time to py4j socket
-    # round trips (4,921/query build). F.expr ships the whole subtree
-    # in one call and parses to the IDENTICAL expression (coalesce +
-    # CAST(array() AS array<string>)); oracle parity re-proven.
+    # built as ONE SQL-parsed expression: the Column-builder form
+    # (F.coalesce(F.col(c), F.array().cast(...))) costs ~10 py4j round
+    # trips per call and this helper is invoked dozens of times per
+    # pipeline construction; F.expr ships the whole subtree in one
+    # call and parses to the identical expression
     return F.expr(f"coalesce({_quote(c)}, CAST(array() AS array<string>))")
+
+
+def _member_hits(df: DataFrame, roles: Sequence[str], dim: DataFrame, agg: Column) -> DataFrame:
+    """Probe every member of ``roles`` against ``dim`` (one string
+    column ``__hit``) and return one row per input row: the packed row
+    ``__row`` (see :func:`_pack_row`) beside ``agg``, an aggregate over
+    ``__hit``, which is NULL for a member that matched nothing.
+
+    Members are exploded beside the packed row, probed in a broadcast
+    hash join (O(1) per member; NULL members never match) and collapsed
+    back by ``original_index``. Invariants:
+
+    - nothing is collected to the driver at any dimension size, and
+      building the plan runs no Spark job;
+    - the caller's plan is consumed once; the partial aggregation
+      re-collapses the adjacent exploded copies map-side, so about one
+      copy per row crosses the exchange, and none does when ``df`` is
+      already hash-partitioned by the id;
+    - ``dim`` holds each ``__hit`` at most once, so a row yields
+      exactly ``max(1, #members)`` probed copies;
+    - ``original_index`` is unique. A group with more copies than its
+      row has members holds two rows, and the collapse fails the job
+      naming ``original_index`` instead of merging them.
+    """
+    members = F.concat(*[_arr(r) for r in roles])
+    exploded = df.select(
+        F.col("original_index").alias("__ui"),
+        _pack_row(df.columns).alias("__row"),
+        F.greatest(F.size(members), F.lit(1)).alias("__copies"),
+        F.explode_outer(members).alias("__m"),
+    )
+    probed = exploded.join(F.broadcast(dim), exploded["__m"] == dim["__hit"], "left")
+    collapsed = probed.groupBy("__ui").agg(
+        F.any_value("__row").alias("__row"),  # all copies identical
+        agg,
+        F.count(F.lit(1)).alias("__n"),
+        F.max("__copies").alias("__copies"),
+    )
+    unique_id = F.when(F.col("__n") == F.col("__copies"), F.lit(True)).otherwise(
+        F.raise_error(F.lit(
+            "original_index is not unique: two input rows share one original_index, "
+            "and the membership collapse would merge them"
+        ))
+    )
+    return collapsed.filter(unique_id).drop("__ui", "__n", "__copies")
 
 
 def handle_unresolved_names(df: DataFrame, names: DataFrame, cfg: CleanConfig) -> DataFrame:
@@ -200,37 +243,25 @@ def handle_unresolved_names(df: DataFrame, names: DataFrame, cfg: CleanConfig) -
     b) drop any row containing an unresolved name;
     c) set→NULL everywhere.
 
-    ``names`` is one string column ``name`` (a dimension table).
+    ``names`` is one string column ``name`` (a dimension table; NULL
+    and repeated names are ignored). Membership is one broadcast hash
+    join over every role's members (:func:`_member_hits`): no driver
+    collect at any dimension size, no Spark job while building, and
+    ``original_index`` must be unique (a repeat fails the job). Mode
+    (b) keeps only a per-row boolean; modes (a)/(c) keep the set of
+    unresolved names present in the row and null them out in place:
 
-    Membership machinery — chosen for probe cost, not just broadcast
-    size. A broadcast MAP is NOT O(1) per lookup: Spark's
-    ArrayBasedMapData has no hash index, so element_at linearly scans
-    the keys — O(|bad|) per member, measured at ~8 s for 1.5k names ×
-    1M members at sf0.1. Instead:
-
-    - mode (b), pure row drop: ONE pass — explode members beside the
-      packed row, broadcast HASH join the name set for the flag, and
-      collapse back by the unique row id (any_value over identical
-      copies; partial aggregation re-collapses map-side, so ~1× the
-      input rows cross any exchange). Real hash probes, O(1) per
-      member, no driver materialisation, and the caller's upstream
-      plan is consumed exactly once (the r15 explode→semi→anti shape
-      consumed it twice; AQE never matched the copies — r16).
-    - modes (a)/(c) need member-level null-out inside array
-      transforms, where a join can't reach: the distinct name set is
-      collected to a literal IN list, which Catalyst converts to an
-      InSet HASH SET (O(1), codegen'd). MEASURED ceiling (r10 — this
-      corrects an earlier "10³–10⁶" guess by three orders): the cost
-      is not the collect or the execution but PY4J EXPRESSION
-      CONSTRUCTION — ``is_bad`` is built at 7 sites (__has_bad +
-      5 roles + products) at ~0.8 ms per name EACH, measured 11.8 s
-      build / 0.98 s exec at just 10³ names and linear beyond
-      (same root cause as the A4 finding, probe P3). The reference's
-      USPTO molecules-to-remove list is ~10⁴–10⁵, so past
-      _RARE_LITERAL_MAX distinct names these modes now route to
-      :func:`_unresolved_nullout_join` (explode → broadcast semi/anti
-      joins → positional rebuild; zero driver state), exact-twin
-      pinned by a randomized equality test over both modes.
+    - a nulled member is removed (the reference pushes it to None and
+      relies on nulls-last + slot trimming, extractor.py:940-1016), and
+      so is a NULL member; a NULL role array stays NULL, except
+      products, which become [];
+    - products move WITH their paired yields (cleaner.py:415-469), so
+      the products↔yields zip is filtered, never products alone; the
+      zip pads the shorter side with NULL, so an extra yield is
+      dropped and an extra product keeps a NULL yield;
+    - mode (a) tests for an unresolved name on the original arrays and
+      keeps a row when ``is_mapped`` is true or it had none (a NULL
+      ``is_mapped`` row survives only if it had none).
     """
     modes = [
         cfg.set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn,
@@ -240,217 +271,39 @@ def handle_unresolved_names(df: DataFrame, names: DataFrame, cfg: CleanConfig) -
     if sum(bool(m) for m in modes) != 1:
         raise ValueError("exactly one unresolved-name mode must be set (cleaner.py:89-95)")
 
-    names_d = names.select(F.col("name")).where(F.col("name").isNotNull()).distinct()
-
-    if (
-        not cfg.remove_rxn_with_unresolved_names
-        and "original_index" in df.columns
-        and names_d.limit(_RARE_LITERAL_MAX + 1).count() > _RARE_LITERAL_MAX
-    ):
-        # modes (a)/(c) beyond the literal ceiling: join-based null-out
-        # (r10 — same threshold routing as the rare stage; the decision
-        # count is limit-bounded, never a collect)
-        cleaned = _unresolved_nullout_join(df, names_d)
-        if cfg.set_unresolved_names_to_none:
-            return cleaned.drop("__has_bad")
-        return cleaned.filter(F.col("is_mapped") | ~F.col("__has_bad")).drop("__has_bad")
-
-    if cfg.remove_rxn_with_unresolved_names and "original_index" in df.columns:
-        # r16 (optimization round 2, guide §2.4): SINGLE-PASS row drop.
-        # The previous shape derived offending ids from an explode of
-        # ``df`` and anti-joined them back onto ``df`` — two consumers
-        # of the caller's upstream plan, and AQE's stage cache does not
-        # match the copies (r15 profiling: c_clean_pipeline_fullscale's
-        # scaffold aggregation executed TWICE inside the rare-stage
-        # checkpoint job, 0 ReusedExchange). Here the upstream is
-        # consumed exactly ONCE: members are exploded beside the packed
-        # row, flagged by one broadcast hash join (same O(1)-per-member
-        # probe as before; NULL members never match), and collapsed
-        # back by the unique ``original_index``. The collapse is an
-        # aggregation whose partial phase re-collapses the ~|members|
-        # exploded copies map-side (explode emits them adjacently), so
-        # at most ~1× the original rows cross any exchange — and when
-        # ``df`` is already hash-partitioned by the id (the scaffold
-        # groupBy of every gated caller), alias-aware partitioning
-        # propagation makes the collapse exchange-free.
-        # Contract (unchanged, now load-bearing for the collapse):
-        # ``original_index`` is unique — merge_extracted builds it as a
-        # global row index and every scaffold keys it by its groupBy.
-        exploded = df.select(
-            F.col("original_index").alias("__ui"),
-            _pack_row(df.columns).alias("__row"),
-            F.explode_outer(F.concat(*[_arr(r) for r in ALL_ROLES])).alias("__m"),
-        )
-        flagged = exploded.join(
-            F.broadcast(names_d), exploded["__m"] == names_d["name"], "left"
-        )
-        collapsed = flagged.groupBy("__ui").agg(
-            F.any_value(F.col("__row")).alias("__row"),  # all copies identical
-            F.max(names_d["name"].isNotNull()).alias("__has_bad"),
-        )
-        return _unpack_row(collapsed.filter(~F.col("__has_bad")), df.columns)
-
-    bad_list = [r[0] for r in names_d.collect()]
-
-    def is_bad(x: Column) -> Column:
-        return x.isin(bad_list) if bad_list else F.lit(False)
-
-    # materialise the overlap flag BEFORE any null-out so mode (a)'s
-    # row-drop gate sees the original arrays, not the cleaned ones.
-    # coalesce→false (review finding, r8, verified live): is_bad(NULL
-    # member) is NULL, and F.exists's three-valued logic then returns
-    # NULL instead of false for a row with a NULL member and no bad
-    # name — mode (a)'s filter silently DROPPED such clean rows
-    # (false | ~NULL = NULL), diverging from the join path.
-    with_bad = df.withColumn(
-        "__has_bad",
-        F.coalesce(
-            F.exists(F.concat(*[_arr(r) for r in ALL_ROLES]), is_bad),
-            F.lit(False),
-        ),
-    )
-
-    def null_out(col: Column) -> Column:
-        return F.transform(col, lambda x: F.when(is_bad(x), None).otherwise(x))
-
-    def drop_nulled(col: Column) -> Column:
-        # the reference pushes unresolved→None then relies on
-        # nulls-last + slot trimming; in the array model a nulled
-        # member is simply removed (extractor.py:940-1016)
-        return F.filter(null_out(col), lambda x: x.isNotNull())
+    names_d = names.select(F.col("name").alias("__hit")).where(F.col("__hit").isNotNull()).distinct()
 
     if cfg.remove_rxn_with_unresolved_names:
-        return with_bad.filter(~F.col("__has_bad")).drop("__has_bad")
-
-    nulled = with_bad
-    for r in ("reactants", "agents", "reagents", "solvents", "catalysts"):
-        nulled = nulled.withColumn(r, drop_nulled(F.col(r)))
-    # products move WITH their paired yields (the reference keeps the
-    # pair aligned through _sort_row_relative / move-None-to-end,
-    # cleaner.py:415-469): filter the zip, never products alone
-    pz = F.filter(
-        F.arrays_zip(
-            null_out(_arr("products")).alias("p"),
-            F.coalesce(F.col("yields"), F.array().cast("array<double>")).alias("y"),
-        ),
-        lambda s: s["p"].isNotNull(),
-    )
-    nulled = (
-        nulled.withColumn("__pz", pz)
-        .withColumn("products", F.transform("__pz", lambda s: s["p"]))
-        .withColumn("yields", F.transform("__pz", lambda s: s["y"]))
-        .drop("__pz")
-    )
-    if cfg.set_unresolved_names_to_none:
-        return nulled.drop("__has_bad")
-    # mode (a): rows that had an unresolved name but no mapped rxn_str
-    # are dropped; mapped rows keep the cleaned arrays
-    kept = nulled.filter(F.col("is_mapped") | ~F.col("__has_bad"))
-    return kept.drop("__has_bad")
-
-
-def _unresolved_nullout_join(
-    df: DataFrame, names_d: DataFrame, id_col: str = "original_index"
-) -> DataFrame:
-    """Join-based twin of the literal null-out for P11 modes (a)/(c)
-    (r10): one explode of non-null (role, pos, member, yield) triples,
-    a broadcast SEMI join for the ``__has_bad`` flag (NULL members
-    never match, reproducing the literal path's coalesce-false), a
-    broadcast ANTI join keeping resolved members, and a positional
-    array rebuild. Zero driver state at any |names| — the literal twin
-    pays ~0.8 ms of py4j expression build per name at each of its 7
-    ``isin`` sites (measured 11.8 s at just 10³ names).
-
-    Exact-twin semantics, pinned by a randomized equality test
-    (tests/test_cleaning.py):
-    - NULL members are dropped (the literal drop_nulled/zip-filter
-      does the same), and a NULL role ARRAY stays NULL for the five
-      scalar roles but becomes [] for products (the literal path runs
-      products through _arr before zipping);
-    - products move WITH their paired yields; arrays_zip's padding
-      (extra yields → p=NULL → dropped; extra products → y=NULL →
-      kept) is reproduced by zipping the same coalesced arrays."""
-    scalar_roles = [r for r in ALL_ROLES if r != "products"]
-    y_arr = F.coalesce(F.col("yields"), F.array().cast("array<double>"))
-
-    def _tag(role: str) -> Column:
-        return F.transform(
-            _arr(role),
-            lambda x, i: F.struct(
-                F.lit(role).alias("role"),
-                i.alias("pos"),
-                x.alias("m"),
-                F.lit(None).cast("double").alias("y"),
-            ),
+        flagged = _member_hits(
+            df, ALL_ROLES, names_d, F.max(F.col("__hit").isNotNull()).alias("__has_bad")
         )
+        return _unpack_row(flagged.filter(~F.col("__has_bad")), df.columns)
 
-    prod = F.transform(
-        F.arrays_zip(_arr("products").alias("p"), y_arr.alias("y")),
-        lambda s, i: F.struct(
-            F.lit("products").alias("role"), i.alias("pos"), s["p"].alias("m"), s["y"].alias("y")
-        ),
+    hits = _member_hits(df, ALL_ROLES, names_d, F.collect_set("__hit").alias("__hits"))
+    if cfg.set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn:
+        hits = hits.filter(F.expr("__row.is_mapped OR size(__hits) = 0"))
+
+    # SQL-parsed expressions over the packed row, two selectExpr calls
+    # in all: a withColumn chain re-analyses the plan once per role
+    # (see _arr for the py4j rationale)
+    def null_out(arr: str) -> str:
+        return f"transform({arr}, x -> IF(array_contains(__hits, x), NULL, x))"
+
+    pz = (
+        "filter(zip_with("
+        + null_out("coalesce(__row.products, CAST(array() AS array<string>))")
+        + ", coalesce(__row.yields, CAST(array() AS array<double>)), "
+        "(p, y) -> struct(p AS p, y AS y)), s -> s.p IS NOT NULL)"
     )
-    tagged = F.concat(*[_tag(r) for r in scalar_roles], prod)
-    exploded = (
-        df.select(F.col(id_col).alias("__nid"), F.explode(tagged).alias("t"))
-        .filter(F.col("t")["m"].isNotNull())
+    cleaned = {
+        r: f"filter({null_out('__row.' + _quote(r))}, x -> x IS NOT NULL)"
+        for r in ("reactants", "agents", "reagents", "solvents", "catalysts")
+    }
+    cleaned["products"] = "transform(__pz, s -> s.p)"
+    cleaned["yields"] = "transform(__pz, s -> s.y)"
+    return hits.selectExpr("__row", f"{pz} AS __pz", "__hits").selectExpr(
+        *[f"{cleaned.get(c, '__row.' + _quote(c))} AS {_quote(c)}" for c in df.columns]
     )
-    bad_ids = (
-        exploded.join(F.broadcast(names_d), exploded["t"]["m"] == names_d["name"], "left_semi")
-        .select(F.col("__nid").alias("__bid"))
-        .distinct()
-    )
-    kept = exploded.join(
-        F.broadcast(names_d), exploded["t"]["m"] == names_d["name"], "left_anti"
-    )
-    rebuilt = kept.groupBy("__nid").agg(
-        *[
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(F.col("t.role") == r, F.struct(F.col("t.pos"), F.col("t.m")))
-                    )
-                ),
-                lambda s: s["m"],
-            ).alias(f"__new_{r}")
-            for r in scalar_roles
-        ],
-        F.array_sort(
-            F.collect_list(
-                F.when(
-                    F.col("t.role") == "products",
-                    F.struct(F.col("t.pos"), F.col("t.m"), F.col("t.y")),
-                )
-            )
-        ).alias("__new_pz"),
-    )
-    out = (
-        df.join(rebuilt, df[id_col] == rebuilt["__nid"], "left")
-        .join(F.broadcast(bad_ids), df[id_col] == F.col("__bid"), "left")
-        .withColumn("__has_bad", F.col("__bid").isNotNull())
-    )
-    for r in scalar_roles:
-        out = out.withColumn(
-            r,
-            F.when(F.col(r).isNull(), F.lit(None).cast("array<string>")).otherwise(
-                F.coalesce(F.col(f"__new_{r}"), F.array().cast("array<string>"))
-            ),
-        )
-    out = (
-        out.withColumn(
-            "products",
-            F.coalesce(
-                F.transform("__new_pz", lambda s: s["m"]), F.array().cast("array<string>")
-            ),
-        )
-        .withColumn(
-            "yields",
-            F.coalesce(
-                F.transform("__new_pz", lambda s: s["y"]), F.array().cast("array<double>")
-            ),
-        )
-    )
-    return out.drop("__nid", "__bid", "__new_pz", *[f"__new_{r}" for r in scalar_roles])
 
 
 def rename_catalysts_to_reagents(df: DataFrame) -> DataFrame:
@@ -531,141 +384,37 @@ def condition_value_counts(df: DataFrame) -> DataFrame:
     )
 
 
-# measured crossover between the two A4 strategies (r10 probe P3):
-# literal ≈ 0.3 s + 2 ms·|frequent|·4 roles of py4j expression build,
-# join flat ≈ 0.4 s → break-even near 100; 256 keeps small dims on the
-# exchange-free literal path with margin
-_RARE_LITERAL_MAX = 256
-
-
 def map_rare_molecules_to_other(df: DataFrame, counts: DataFrame, min_freq: int, other: str = "other") -> DataFrame:
     """A4 (cleaner.py:341-368): condition-role members with global
-    count < k become 'other'.
+    count < k become ``other``; NULL members stay NULL, a NULL role
+    array becomes [], and member order is kept.
 
-    Membership is tested against the FREQUENT set, inverted — a member
-    is rare iff NOT in {molecule: count ≥ k}: |frequent| ≤
-    total_members / k BY CONSTRUCTION (each frequent molecule accounts
-    for ≥ k member occurrences), so the collected set has a hard bound
-    independent of vocabulary size — the rare set does not (at LLM
-    scale it IS the vocabulary). Execution-side the literal becomes a
-    Catalyst InSet hash set even inside the transform lambda (verified
-    in the optimized plan — OptimizeIn fires within LambdaFunction);
-    a broadcast MAP is not an option (ArrayBasedMapData element_at is
-    a linear key scan).
-
-    MEASURED CEILING (r10, tools/round10_scale_probe.py P3 — this
-    REVERSES the guidance an earlier version of this docstring gave):
-    the real cost is not execution (0.29 s at sf0.1) or Catalyst
-    (0.42 s) but PY4J EXPRESSION CONSTRUCTION — ``x.isin(freq_list)``
-    ships each literal through a py4j call, ~2 ms per entry per role
-    column, measured 29 s at |frequent| = 13 k × 4 roles vs the join
-    twin's flat 0.4 s. Crossover vs
-    :func:`map_rare_molecules_to_other_join` is only ~O(100) frequent
-    entries; prefer THIS variant only for small frequent sets or when
-    no row id exists for the join rebuild. The clean pipeline routes
-    between the two automatically (_RARE_LITERAL_MAX)."""
-    freq_list = [
-        r[0]
-        for r in counts.filter(F.col("count") >= min_freq)
-        .select("molecule")
-        .where(F.col("molecule").isNotNull())
-        .collect()
-    ]
-    out = df
+    ``counts`` holds one row per ``molecule`` with its ``count`` (as
+    :func:`condition_value_counts` builds it). A member is rare iff it
+    is NOT in the frequent set {molecule: count ≥ k}, which holds at
+    most total_members / k molecules by construction. That set is the
+    broadcast dimension of one membership join (:func:`_member_hits`):
+    no driver collect at any vocabulary size, no Spark job while
+    building, and ``original_index`` must be unique (a repeat fails
+    the job). Each row keeps the set of frequent molecules it holds
+    and maps the rest in place."""
+    freq = counts.filter(F.col("count") >= min_freq).select(F.col("molecule").alias("__hit"))
+    hits = _member_hits(df, CONDITION_ROLES, freq, F.collect_set("__hit").alias("__hits"))
+    out = _unpack_row(hits, df.columns, ["__hits"])
     for r in CONDITION_ROLES:
         out = out.withColumn(
             r,
             F.transform(
                 _arr(r),
-                # NULL members stay NULL (review finding: x.isin(...)
-                # is NULL for NULL x, so the bare otherwise() mapped
-                # NULLs to 'other' — diverging from both the oracle's
-                # CASE WHEN list_contains and the remove-rows twin,
-                # which never matches NULL in its equi-join)
-                lambda x: F.when(
-                    x.isin(freq_list) if freq_list else F.lit(False), x
-                )
+                lambda x: F.when(F.array_contains(F.col("__hits"), x), x)
                 .when(x.isNotNull(), F.lit(other))
                 .otherwise(F.lit(None).cast("string")),
             ),
         )
-    return out
+    return out.drop("__hits")
 
 
-def map_rare_molecules_to_other_join(
-    df: DataFrame,
-    counts: DataFrame,
-    min_freq: int,
-    other: str = "other",
-    id_col: str = "original_index",
-) -> DataFrame:
-    """Join-based twin of :func:`map_rare_molecules_to_other` for
-    vocabularies too large to collect (no driver materialisation at
-    any scale — the shape remove_rows_with_rare_molecules already
-    uses, extended with an array rebuild):
-
-    explode (role, pos, member) → broadcast-hash join the frequent set
-    (bounded at total/k rows; spills to a shuffle join via AQE if even
-    that outgrows broadcast) → groupBy row id rebuilding each role
-    array in position order → join back on the id.
-
-    Cost: one shuffle of the member triples + one of the fact table —
-    and FLAT in the frequent-set size, which makes this the DEFAULT
-    past ~O(100) frequent entries: the literal twin pays ~2 ms of py4j
-    expression construction PER ENTRY PER ROLE (measured 29 s at 13 k
-    entries vs 0.4 s here — r10 probe P3; an earlier docstring
-    guessed the opposite crossover at 10⁶). Gated end-to-end as
-    ``c_rare_to_other_join`` with a plan lint asserting zero driver
-    materialisation."""
-    freq = counts.filter(F.col("count") >= min_freq).select("molecule")
-
-    def _tag(role: str) -> Column:
-        return F.transform(
-            _arr(role),
-            lambda x, i: F.struct(F.lit(role).alias("role"), i.alias("pos"), x.alias("m")),
-        )
-
-    tagged = F.concat(*[_tag(r) for r in CONDITION_ROLES])
-    exploded = df.select(F.col(id_col).alias("__mid"), F.explode(tagged).alias("t"))
-    marked = exploded.join(
-        F.broadcast(freq), exploded["t"]["m"] == freq["molecule"], "left"
-    ).select(
-        "__mid",
-        F.col("t")["role"].alias("role"),
-        F.col("t")["pos"].alias("pos"),
-        # NULL members are PRESERVED, matching the literal twin (review
-        # finding, r8, verified live: a NULL never matches the freq
-        # join, so the old otherwise() rewrote it to 'other' — the
-        # exact divergence a prior review fixed on the literal side)
-        F.when(F.col("t")["m"].isNull(), F.lit(None).cast("string"))
-        .when(F.col("molecule").isNotNull(), F.col("t")["m"])
-        .otherwise(F.lit(other))
-        .alias("m"),
-    )
-    rebuilt = marked.groupBy("__mid").agg(
-        *[
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(F.col("role") == r, F.struct(F.col("pos"), F.col("m")))
-                    )
-                ),
-                lambda s: s["m"],
-            ).alias(f"__new_{r}")
-            for r in CONDITION_ROLES
-        ]
-    )
-    out = df.join(rebuilt, df[id_col] == rebuilt["__mid"], "left")
-    for r in CONDITION_ROLES:
-        # rows with zero condition members produce no triples → null
-        # from the left join → keep their original (empty) arrays
-        out = out.withColumn(r, F.coalesce(F.col(f"__new_{r}"), _arr(r)))
-    return out.drop("__mid", *[f"__new_{r}" for r in CONDITION_ROLES])
-
-
-def remove_rows_with_rare_molecules(
-    df: DataFrame, counts: DataFrame, min_freq: int, id_col: str = "original_index"
-) -> DataFrame:
+def remove_rows_with_rare_molecules(df: DataFrame, counts: DataFrame, min_freq: int) -> DataFrame:
     """A5/J3 (cleaner.py:370-396): drop rows containing any condition
     molecule with global count < k.
 
@@ -677,7 +426,7 @@ def remove_rows_with_rare_molecules(
     and every shuffle carries only (id, molecule) pairs."""
     rare = counts.filter(F.col("count") < min_freq).select("molecule")
     members = df.select(
-        F.col(id_col).alias("__rmid"),
+        F.col("original_index").alias("__rmid"),
         F.explode(F.concat(*[_arr(r) for r in CONDITION_ROLES])).alias("__m"),
     )
     bad_ids = (
@@ -685,7 +434,7 @@ def remove_rows_with_rare_molecules(
         .select("__rmid")
         .distinct()
     )
-    return df.join(bad_ids, df[id_col] == bad_ids["__rmid"], "left_anti")
+    return df.join(bad_ids, df["original_index"] == bad_ids["__rmid"], "left_anti")
 
 
 def reaction_key(df: DataFrame, roles: Sequence[str], include_yields: bool = False) -> Column:
@@ -853,32 +602,26 @@ def train_test_split(df: DataFrame, cfg: CleanConfig) -> tuple[DataFrame, DataFr
 # the full pipeline
 # ---------------------------------------------------------------------------
 
-#: see clean_pipeline's rare stage — module-level so A/B probes can
-#: toggle it inside one session; the shipped default is measured
-_RARE_STAGE_BARRIER = True
-
-
-def clean_pipeline(
-    df: DataFrame,
-    molecule_names: DataFrame,
-    cfg: CleanConfig,
-    persist_intermediate: bool = False,
-) -> DataFrame:
+def clean_pipeline(df: DataFrame, molecule_names: DataFrame, cfg: CleanConfig) -> DataFrame:
     """The fixed stage order of cleaner._get_dataframe
     (cleaner.py:533-882), minus the merge (see merge_extracted) and
     the export pivot (schema.array_to_wide).
 
-    SIDE EFFECT / DEPLOYMENT NOTE (r16, ADVICE r15): with the default
-    rare-stage barrier this function EAGERLY runs a Spark job (the
-    ``localCheckpoint`` of the deduped relation) during construction,
-    and the materialised blocks live on executor-local storage — not
-    recoverable on executor loss. Correct in local mode and on static
-    executors; on a cluster with dynamic allocation, prefer writing
-    the deduped intermediate to a table and re-reading it (the
-    explicit, caller-owned barrier), or a reliable ``checkpoint()``
-    with a checkpoint dir. The same caveat applies to every
-    ``localCheckpoint`` barrier in this package (train_test_split,
-    prefix-filter, simhash, kmeans/RQ, PageRank iteration state)."""
+    ``original_index`` must be unique (the membership stages fail the
+    job on a repeat). Dimensions (unresolved names, frequent
+    molecules) reach the rows through broadcast joins; nothing is
+    collected to the driver at any dimension size.
+
+    When the rare-molecule stage and the first dedup both run, the
+    deduped relation is ``localCheckpoint``-ed: the rare stage reads it
+    twice (value counts, membership probe), and the checkpoint runs the
+    upstream once instead of once per reader. That checkpoint is the
+    only Spark work this function runs while building. Its blocks live on
+    executor-local storage and are lost with the executor: correct in
+    local mode and on static executors; under dynamic allocation write
+    the deduped rows to a table and read them back instead, or use a
+    reliable ``checkpoint()``. The same holds for every
+    ``localCheckpoint`` barrier in this package."""
     dedup1_ran = False
     out = handle_unresolved_names(df, molecule_names, cfg)
     if cfg.num_cat == 0 and cfg.num_reag > 0:
@@ -893,53 +636,14 @@ def clean_pipeline(
         # frequency counts — the reference runs it inside the
         # rare-molecule block, not unconditionally (cleaner.py:806-828)
         if cfg.drop_duplicates:
-            out = dedup_reactions(out, cfg, include_yields=cfg.consistent_yield)
+            out = dedup_reactions(out, cfg, include_yields=cfg.consistent_yield).localCheckpoint()
             dedup1_ran = True
-            if _RARE_STAGE_BARRIER:
-                # r15 (optimization round, guide §3.3/§5): the rare
-                # stage fans the deduped relation into THREE consumers
-                # (value-counts explode, offender-members explode, the
-                # main anti-join probe side). The runtime plan showed
-                # the scaffold scan + dedup aggregation executed once
-                # PER consumer — AQE's stage cache never matched the
-                # three subtrees (3 scans / 8 exchanges / 0 reuse at
-                # sf0.1). One localCheckpoint bounds the upstream to a
-                # single execution; the materialised relation is the
-                # deduped row set — the same bytes the three consumers
-                # each rebuilt.
-                out = out.localCheckpoint()
-        if persist_intermediate:
-            # OFF by default: the rare stage's three consumers (counts
-            # explode, members explode, main anti-join) share the dedup
-            # window's exchange subtree, which Catalyst's ReuseExchange
-            # computes ONCE within the final plan — a persist here paid
-            # the materialisation cost twice and, left unpersisted,
-            # squeezed executor memory for every later query in the
-            # session (measured: +142% on the query that followed).
-            # At 100 TB, if a real barrier is wanted, write the
-            # intermediate to a table and reread it — caller-owned,
-            # explicit lifecycle.
-            from pyspark.storagelevel import StorageLevel
-
-            out = out.persist(StorageLevel.MEMORY_AND_DISK)
         counts = condition_value_counts(out)
+        k = cfg.min_frequency_of_occurrence
         if cfg.map_rare_molecules_to_other:
-            # strategy routing (r10, probe P3): the literal variant
-            # costs ~2 ms of py4j expression construction per frequent
-            # entry per role (29 s at 13 k entries), the join variant
-            # is flat (~0.4 s) — route on the frequent-set size. The
-            # probe count moves at most _RARE_LITERAL_MAX + 1 rows to
-            # the driver, so the decision itself is scale-safe.
-            k = cfg.min_frequency_of_occurrence
-            n_freq = (
-                counts.filter(F.col("count") >= k).limit(_RARE_LITERAL_MAX + 1).count()
-            )
-            if n_freq > _RARE_LITERAL_MAX:
-                out = map_rare_molecules_to_other_join(out, counts, k)
-            else:
-                out = map_rare_molecules_to_other(out, counts, k)
+            out = map_rare_molecules_to_other(out, counts, k)
         else:
-            out = remove_rows_with_rare_molecules(out, counts, cfg.min_frequency_of_occurrence)
+            out = remove_rows_with_rare_molecules(out, counts, k)
     if cfg.drop_duplicates:
         # yield columns join the subset whenever consistent_yield is on
         # (get_columns_for_duplicate_checking, cleaner.py:768-794):

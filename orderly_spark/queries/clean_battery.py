@@ -169,9 +169,9 @@ def c_reactions_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def c_unresolved_drop_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P11 mode (b) (cleaner.py:572-657): drop any reaction containing
-    an unresolved name — explode → broadcast semi-join on members →
-    anti-join on offending ids (the O(1)-per-member hash-join shape;
-    in-row arrays_overlap scans were measured slower and rejected)."""
+    an unresolved name — members exploded beside the packed row, one
+    broadcast hash join on the name set (O(1) per member), collapse
+    back by row id."""
     rx = _reactions(spark, sf_dir)
     cfg = C.CleanConfig(
         set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn=False,
@@ -352,39 +352,12 @@ def c_rare_remove_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def c_rare_to_other(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3→A4 (cleaner.py:341-368): rare condition molecules mapped to
-    'other' in place (order-preserving map-side array transform)."""
+    'other' in place, order preserved. The frequent set meets the
+    members in a broadcast hash join; nothing is collected to the
+    driver (plan-asserted in tests/test_plans.py)."""
     rx = _reactions(spark, sf_dir)
     counts = C.condition_value_counts(rx)
     out = C.map_rare_molecules_to_other(rx, counts, 4)
-    return out.select("rid", _j("agents").alias("a"), _j("solvents").alias("v"))
-
-
-@query(
-    "c_rare_to_other_join",
-    # identical semantics to c_rare_to_other — the oracle is the same
-    # replay; only the Spark physical strategy differs
-    oracle=f"""
-    WITH {RX_SQL}, {COUNTS_SQL}
-    SELECT rid,
-           COALESCE(array_to_string(list_transform(agents,   x -> CASE WHEN list_contains(rl, x) THEN 'other' ELSE x END), '.'), '') AS a,
-           COALESCE(array_to_string(list_transform(solvents, x -> CASE WHEN list_contains(rl, x) THEN 'other' ELSE x END), '.'), '') AS v
-    FROM rx, rare
-    """,
-    category="clean",
-    survey="A3,A4",
-)
-def c_rare_to_other_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4 beyond the driver ceiling (r10, promoting the documented
-    path to a gated query): the JOIN-based twin of c_rare_to_other —
-    explode member triples → broadcast-join the frequent set →
-    positional array rebuild → join back. ZERO driver materialisation
-    at any vocabulary size (the literal variant collects the frequent
-    set; this one never collects anything), proving the 100 TB path
-    rather than documenting it. Plan-asserted in tests/test_plans.py:
-    no InSet literal, no LocalTableScan of collected molecules."""
-    rx = _reactions(spark, sf_dir)
-    counts = C.condition_value_counts(rx)
-    out = C.map_rare_molecules_to_other_join(rx, counts, 4, id_col="rid")
     return out.select("rid", _j("agents").alias("a"), _j("solvents").alias("v"))
 
 

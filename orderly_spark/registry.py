@@ -129,8 +129,10 @@ GRADE_PRIORITY: tuple[str, ...] = (
     "d_bloom_lsh_incremental",
     "d_incremental_index_dedup",
     # (b) the r15 rotation ledger — the full remaining r10-era cohort
-    # (37 rows, CORRECTNESS_r10 order from c_rare_to_other_join)
-    "c_rare_to_other_join",
+    # (37 rows, CORRECTNESS_r10 order). The first row's query, a
+    # join-shaped twin of c_rare_to_other, is deleted; c_rare_to_other,
+    # whose A4 stage now runs that join shape, takes its slot.
+    "c_rare_to_other",
     "r_zip_align_filter",
     "c_merge_extracted_roundtrip",
     "c_dedup_random_survivor",

@@ -104,5 +104,5 @@ def apply_name_replacements(
     ArrayBasedMapData), so per-member cost is O(|map|). Right for this
     dimension (~700 names incl. the manual dict — the reference's own
     ceiling); past ~10⁴ entries switch to the explode → broadcast-hash
-    join → rebuild shape (see cleaning.map_rare_molecules_to_other_join)."""
+    join → collapse-by-row-id shape (see cleaning._member_hits)."""
     return F.transform(arr, lambda x: F.coalesce(F.try_element_at(name_map, F.lower(x)), x))

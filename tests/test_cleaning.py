@@ -253,41 +253,6 @@ def test_observation_telemetry_no_extra_action(spark):
     assert obs.get["rows"] == 1
 
 
-def test_map_rare_to_other_literal_and_join_paths_agree(spark):
-    """A4's two membership machineries — the InSet literal (frequent
-    set collected, the default) and the pure-join rebuild (no driver
-    state, the LLM-vocabulary path) — must produce identical arrays,
-    including empty-role rows and order preservation."""
-    df = rx_rows(
-        spark,
-        [
-            {"rxn_str": "a", "agents": ["x", "y", "x"], "solvents": ["z"]},
-            {"rxn_str": "b", "agents": ["y"], "solvents": []},
-            {"rxn_str": "c", "agents": [], "solvents": []},
-            {"rxn_str": "d", "agents": ["w", "y", "q"], "solvents": ["y"]},
-            # NULL member must be PRESERVED by BOTH paths (review
-            # finding, r8: the join path rewrote it to 'other'
-            # because NULL never matches the freq equi-join)
-            {"rxn_str": "e", "agents": ["y", None], "solvents": []},
-        ],
-    )
-    counts = C.condition_value_counts(df)
-    a = C.map_rare_molecules_to_other(df, counts, min_freq=2)
-    b = C.map_rare_molecules_to_other_join(df, counts, min_freq=2)
-    cols = ["rxn_str", *C.CONDITION_ROLES]
-    ra = {r["rxn_str"]: r for r in a.select(*cols).collect()}
-    rb = {r["rxn_str"]: r for r in b.select(*cols).collect()}
-    assert set(ra) == set(rb) == {"a", "b", "c", "d", "e"}
-    for k in ra:
-        for role in C.CONDITION_ROLES:
-            assert list(ra[k][role] or []) == list(rb[k][role] or []), (k, role)
-    # y (count 5) and x (count 2) survive; z/w/q (count 1) -> 'other'
-    assert list(ra["a"]["agents"]) == ["x", "y", "x"]
-    assert list(ra["a"]["solvents"]) == ["other"]
-    assert list(ra["d"]["agents"]) == ["other", "y", "other"]
-    assert list(ra["e"]["agents"]) == ["y", None]  # NULL preserved, both paths
-
-
 def test_reaction_key_member_boundaries_cannot_collide(spark):
     """Review regression: ['CC.O'] vs ['CC','O'] — SMILES salts contain
     '.', so the key must encode member boundaries, not rely on the
@@ -423,144 +388,6 @@ def test_array_to_wide_preserves_existing_wide_data_without_array(spark):
     assert out.columns.count("reactant_000") == 1
 
 
-def test_rare_stage_routes_on_frequent_set_size(spark):
-    """r10 probe P3 finding institutionalized: the pipeline's
-    map-to-other stage uses the InSet literal only while |frequent| <=
-    _RARE_LITERAL_MAX (py4j expression build is ~2 ms per literal per
-    role — 29 s at 13 k entries), and the zero-driver-state join
-    rebuild beyond it. Pinned on the PLAN: the literal path carries an
-    INSET, the join path must not."""
-    from pyspark.sql import functions as F
-
-    from orderly_spark.plans.audit import formatted_plan
-
-    def frame(n_distinct):
-        # every molecule appears k=2 times -> all n_distinct frequent
-        rows = [
-            (i, ["C"], [f"a{i % n_distinct}"], [], [], [], ["O"], [None], None, False, i)
-            for i in range(2 * n_distinct)
-        ]
-        return spark.createDataFrame(
-            rows,
-            "rid long, reactants array<string>, agents array<string>, "
-            "reagents array<string>, solvents array<string>, catalysts array<string>, "
-            "products array<string>, yields array<double>, rxn_str string, "
-            "is_mapped boolean, original_index long",
-        )
-
-    names = spark.createDataFrame([("zzz-none",)], "name string")
-    cfg = C.CleanConfig(
-        consistent_yield=False, min_frequency_of_occurrence=2,
-        map_rare_molecules_to_other=True, drop_duplicates=False,
-        scramble=False,
-    )
-    # 20 distinct: above OptimizeIn's InSet conversion threshold (10),
-    # below _RARE_LITERAL_MAX — the literal path, as an INSET
-    small = C.clean_pipeline(frame(20), names, cfg)
-    assert "INSET" in formatted_plan(small).upper()
-    big = C.clean_pipeline(frame(C._RARE_LITERAL_MAX + 10), names, cfg)
-    assert "INSET" not in formatted_plan(big).upper()
-    # and both keep every (frequent) member intact
-    assert small.count() == 40
-    assert big.count() == 2 * (C._RARE_LITERAL_MAX + 10)
-
-
-def test_unresolved_nullout_join_equals_literal_path(spark):
-    """r10: the join-based P11 null-out must EXACTLY equal the literal
-    path on a seeded random corpus including the edge shapes the
-    docstring pins: NULL members, NULL role arrays (stay NULL for
-    scalar roles, [] for products), arrays_zip padding in both
-    directions, bad names in every role, and rows with nothing bad.
-    Both modes (a) and (c) are compared."""
-    import random
-
-    rng = random.Random(31)
-    bad_names = [f"bad{i}" for i in range(40)]
-    pool = bad_names + [f"ok{i}" for i in range(60)] + [None]
-
-    def arr(max_n):
-        if rng.random() < 0.15:
-            return None
-        return [rng.choice(pool) for _ in range(rng.randint(0, max_n))]
-
-    rows = []
-    for i in range(400):
-        prods = arr(3)
-        n_y = rng.choice([0, 1, 2, 3, 4])  # deliberately mis-sized vs prods
-        rows.append(
-            (
-                i,
-                arr(3), arr(3), arr(2), arr(2), arr(2),
-                prods,
-                None if rng.random() < 0.2 else [
-                    None if rng.random() < 0.3 else float(rng.randint(0, 100))
-                    for _ in range(n_y)
-                ],
-                None,
-                rng.random() < 0.5,
-                i,
-            )
-        )
-    df = spark.createDataFrame(
-        rows,
-        "rid long, reactants array<string>, agents array<string>, "
-        "reagents array<string>, solvents array<string>, catalysts array<string>, "
-        "products array<string>, yields array<double>, rxn_str string, "
-        "is_mapped boolean, original_index long",
-    )
-    names = spark.createDataFrame([(n,) for n in bad_names], "name string")
-    names_d = names.distinct()
-
-    for mode_kw in (
-        dict(set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn=True,
-             remove_rxn_with_unresolved_names=False, set_unresolved_names_to_none=False),
-        dict(set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn=False,
-             remove_rxn_with_unresolved_names=False, set_unresolved_names_to_none=True),
-    ):
-        cfg = C.CleanConfig(**mode_kw)
-        lit_out = C.handle_unresolved_names(df.drop("original_index"), names, cfg)
-        # literal path forced via missing id col; join path direct
-        joined = C._unresolved_nullout_join(df, names_d)
-        if cfg.set_unresolved_names_to_none:
-            join_out = joined.drop("__has_bad")
-        else:
-            join_out = joined.filter(
-                F.col("is_mapped") | ~F.col("__has_bad")
-            ).drop("__has_bad")
-        cols = ["rid", "reactants", "agents", "reagents", "solvents",
-                "catalysts", "products", "yields", "is_mapped"]
-        got = sorted(map(tuple, join_out.select(cols).collect()))
-        want = sorted(map(tuple, lit_out.select(cols).collect()))
-        assert got == want, (mode_kw, [p for p in zip(got, want) if p[0] != p[1]][:3])
-
-
-def test_unresolved_routing_threshold(spark):
-    """handle_unresolved_names routes to the join path past
-    _RARE_LITERAL_MAX distinct names (plan has a join, no INSET/IN
-    literal list), and stays on the literal path below it."""
-    from orderly_spark.plans.audit import formatted_plan
-
-    rows = [(i, ["C"], [f"a{i}"], [], [], [], ["O"], [None], None, False, i)
-            for i in range(20)]
-    df = spark.createDataFrame(
-        rows,
-        "rid long, reactants array<string>, agents array<string>, "
-        "reagents array<string>, solvents array<string>, catalysts array<string>, "
-        "products array<string>, yields array<double>, rxn_str string, "
-        "is_mapped boolean, original_index long",
-    )
-    cfg = C.CleanConfig()  # mode (a)
-    small_names = spark.createDataFrame([(f"b{i}",) for i in range(30)], "name string")
-    big_names = spark.createDataFrame(
-        [(f"b{i}",) for i in range(C._RARE_LITERAL_MAX + 10)], "name string"
-    )
-    small_plan = formatted_plan(C.handle_unresolved_names(df, small_names, cfg))
-    assert "INSET" in small_plan.upper() or " IN (" in small_plan
-    big_plan = formatted_plan(C.handle_unresolved_names(df, big_names, cfg))
-    assert "INSET" not in big_plan.upper()
-    assert "BroadcastHashJoin" in big_plan
-
-
 def test_pack_unpack_row_roundtrips_backticked_column_names(spark):
     """Column names reach the SQL-string builders quoted, with embedded
     backticks doubled: a name holding a backtick (or a dot) round-trips
@@ -577,3 +404,249 @@ def test_pack_unpack_row_roundtrips_backticked_column_names(spark):
     assert out.columns == cols
     assert [tuple(r) for r in out.collect()] == [(1, "x", None)]
     assert df.select(C._arr("reactants").alias("r")).first().r == []
+
+
+# ---------------------------------------------------------------------------
+# P11 / A4 against a pure-Python reference
+# ---------------------------------------------------------------------------
+
+_SCALAR_ROLES = ("reactants", "agents", "reagents", "solvents", "catalysts")
+_MEMBERSHIP_SCHEMA = (
+    "rid long, reactants array<string>, agents array<string>, "
+    "reagents array<string>, solvents array<string>, catalysts array<string>, "
+    "products array<string>, yields array<double>, rxn_str string, "
+    "is_mapped boolean, original_index long"
+)
+_MODES = {
+    "a": {},
+    "b": dict(set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn=False,
+              remove_rxn_with_unresolved_names=True),
+    "c": dict(set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn=False,
+              set_unresolved_names_to_none=True),
+}
+
+
+def _ref_unresolved(row, bad, mode):
+    """P11 on one row dict, or None when the row is dropped."""
+    has_bad = any(m in bad for r in C.ALL_ROLES for m in (row[r] or []))
+    if mode == "b":
+        return None if has_bad else row
+    if mode == "a" and has_bad and not row["is_mapped"]:
+        return None
+    out = dict(row)
+    for r in _SCALAR_ROLES:
+        if row[r] is not None:
+            out[r] = [m for m in row[r] if m is not None and m not in bad]
+    prods, ys = row["products"] or [], row["yields"] or []
+    pairs = [
+        (prods[i] if i < len(prods) else None, ys[i] if i < len(ys) else None)
+        for i in range(max(len(prods), len(ys)))
+    ]
+    kept = [(p, y) for p, y in pairs if p is not None and p not in bad]
+    out["products"], out["yields"] = [p for p, _ in kept], [y for _, y in kept]
+    return out
+
+
+def _ref_rare_to_other(rows, k):
+    """A4 over all rows: condition members with count < k -> 'other'."""
+    from collections import Counter
+
+    counts = Counter(m for row in rows for r in C.CONDITION_ROLES for m in (row[r] or []))
+    out = []
+    for row in rows:
+        row = dict(row)
+        for r in C.CONDITION_ROLES:
+            row[r] = [
+                None if m is None else (m if counts[m] >= k else "other") for m in (row[r] or [])
+            ]
+        out.append(row)
+    return out
+
+
+def _membership_corpus(spark, n=400, seed=31):
+    """Seeded rows covering NULL members, NULL role arrays, yields
+    longer and shorter than products, and NULL is_mapped; member
+    frequencies are skewed so A4 sees both frequent and rare ones."""
+    import random
+
+    rng = random.Random(seed)
+
+    def member():
+        u = rng.random()
+        if u < 0.05:
+            return None
+        if u < 0.30:
+            return f"bad{rng.randrange(40)}"
+        return f"ok{int(rng.expovariate(0.08))}"
+
+    def arr(max_n):
+        if rng.random() < 0.15:
+            return None
+        return [member() for _ in range(rng.randint(0, max_n))]
+
+    cols = ["rid", *C.ALL_ROLES, "yields", "rxn_str", "is_mapped", "original_index"]
+    rows = []
+    for i in range(n):
+        yields = None if rng.random() < 0.2 else [
+            None if rng.random() < 0.3 else float(rng.randint(0, 100))
+            for _ in range(rng.randint(0, 4))
+        ]
+        rows.append(dict(zip(cols, (
+            i, arr(3), arr(3), arr(2), arr(2), arr(2), arr(3), yields, None,
+            rng.choice([True, False, None]), i,
+        ))))
+    return rows, spark.createDataFrame([tuple(r[c] for c in cols) for r in rows], _MEMBERSHIP_SCHEMA)
+
+
+def _as_rows(df):
+    return {r.rid: r.asDict() for r in df.collect()}
+
+
+def test_membership_stages_match_python_reference(spark):
+    rows, df = _membership_corpus(spark)
+    bad = {f"bad{i}" for i in range(40)}
+    names = spark.createDataFrame([(b,) for b in sorted(bad)] + [("bad3",), (None,)], "name string")
+    # the corpus really exercises every edge the reference encodes
+    assert any(r["is_mapped"] is None for r in rows)
+    assert any(r["reactants"] is None for r in rows) and any(r["products"] is None for r in rows)
+    assert any(len(r["yields"] or []) > len(r["products"] or []) for r in rows)
+    assert any(len(r["yields"] or []) < len(r["products"] or []) for r in rows)
+    assert any(None in (r["agents"] or []) for r in rows)
+    for mode, kw in _MODES.items():
+        got = _as_rows(C.handle_unresolved_names(df, names, C.CleanConfig(**kw)))
+        want = {r["rid"]: o for r in rows if (o := _ref_unresolved(r, bad, mode)) is not None}
+        assert set(got) == set(want), mode
+        assert got == want, (mode, [k for k in want if got[k] != want[k]][:3])
+
+    k = 8
+    got = _as_rows(C.map_rare_molecules_to_other(df, C.condition_value_counts(df), k))
+    want = {r["rid"]: r for r in _ref_rare_to_other(rows, k)}
+    assert got == want, [i for i in want if got[i] != want[i]][:3]
+    flat = [m for r in want.values() for role in C.CONDITION_ROLES for m in r[role]]
+    assert "other" in flat and any(m not in ("other", None) for m in flat)
+
+
+def test_membership_collapse_fails_on_repeated_original_index(spark):
+    """Two rows sharing an original_index would be merged by the
+    collapse; every P11 mode and A4 fail the job instead, naming the
+    column."""
+    df = spark.createDataFrame(
+        [
+            (0, ["a", "b"], ["g"], [], [], [], ["p"], [1.0], None, True, 7),
+            (1, ["c"], [], [], ["s"], [], ["p"], [2.0], None, True, 7),
+            (2, ["a"], ["g"], [], [], [], ["p"], [3.0], None, True, 8),
+        ],
+        _MEMBERSHIP_SCHEMA,
+    )
+    names = spark.createDataFrame([("zzz",)], "name string")
+    stages = {m: (lambda kw=kw: C.handle_unresolved_names(df, names, C.CleanConfig(**kw)))
+              for m, kw in _MODES.items()}
+    stages["A4"] = lambda: C.map_rare_molecules_to_other(df, C.condition_value_counts(df), 2)
+    for stage, build in stages.items():
+        with pytest.raises(Exception, match="original_index"):
+            build().collect()
+        with pytest.raises(Exception, match="original_index"):
+            build().count()
+
+
+def test_clean_pipeline_build_job_count(spark):
+    """Building the membership stages runs no Spark job, and building
+    clean_pipeline in mode (a) with rare molecules mapped to 'other'
+    runs only the dedup checkpoint: its AQE stages (the distinct name
+    set, its broadcast, the collapse by row id, the dedup window) and
+    the checkpoint's result stage."""
+    rows, df = _membership_corpus(spark, n=60)
+    names = spark.createDataFrame([(f"bad{i}",) for i in range(40)], "name string")
+    cfg = C.CleanConfig(min_frequency_of_occurrence=2, map_rare_molecules_to_other=True)
+    sc = spark.sparkContext
+
+    def jobs(group, build):
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    counts = C.condition_value_counts(df)
+    assert jobs("build_p11", lambda: C.handle_unresolved_names(df, names, cfg)) == 0
+    assert jobs("build_a4", lambda: C.map_rare_molecules_to_other(df, counts, 2)) == 0
+    assert jobs("build_clean", lambda: C.clean_pipeline(df, names, cfg)) == 5
+
+
+def test_map_rare_to_other_literal_and_join_paths_agree(spark):
+    """A4 once had two membership paths (an InSet literal and a join
+    rebuild); its one broadcast-join path must agree with the
+    pure-Python reference on hand rows covering empty-role rows, order
+    preservation and NULL members (kept NULL, never mapped to
+    'other')."""
+    inputs = [
+        {"rxn_str": "a", "agents": ["x", "y", "x"], "solvents": ["z"]},
+        {"rxn_str": "b", "agents": ["y"], "solvents": []},
+        {"rxn_str": "c", "agents": [], "solvents": []},
+        {"rxn_str": "d", "agents": ["w", "y", "q"], "solvents": ["y"]},
+        {"rxn_str": "e", "agents": ["y", None], "solvents": []},
+    ]
+    df = rx_rows(spark, inputs)
+    out = C.map_rare_molecules_to_other(df, C.condition_value_counts(df), min_freq=2)
+    got = {r["rxn_str"]: r for r in out.select("rxn_str", *C.CONDITION_ROLES).collect()}
+    ref_in = [{role: r.get(role, []) for role in C.CONDITION_ROLES} | {"rxn_str": r["rxn_str"]} for r in inputs]
+    want = {r["rxn_str"]: r for r in _ref_rare_to_other(ref_in, 2)}
+    assert set(got) == set(want) == {"a", "b", "c", "d", "e"}
+    for k in want:
+        for role in C.CONDITION_ROLES:
+            assert list(got[k][role] or []) == want[k][role], (k, role)
+    # y (count 5) and x (count 2) survive; z/w/q (count 1) -> 'other'
+    assert list(got["a"]["agents"]) == ["x", "y", "x"]
+    assert list(got["a"]["solvents"]) == ["other"]
+    assert list(got["d"]["agents"]) == ["other", "y", "other"]
+    assert list(got["e"]["agents"]) == ["y", None]
+
+
+def test_unresolved_nullout_join_equals_literal_path(spark):
+    """P11 modes (a) and (c) once had two null-out paths (an isin
+    literal and a join); the one broadcast-join path must equal the
+    pure-Python reference on a seeded corpus: NULL members, NULL role
+    arrays (stay NULL for scalar roles, [] for products), arrays_zip
+    padding in both directions, bad names in every role, and rows with
+    nothing bad."""
+    import random
+
+    rng = random.Random(31)
+    bad_names = [f"bad{i}" for i in range(40)]
+    pool = bad_names + [f"ok{i}" for i in range(60)] + [None]
+
+    def arr(max_n):
+        if rng.random() < 0.15:
+            return None
+        return [rng.choice(pool) for _ in range(rng.randint(0, max_n))]
+
+    cols = ["rid", *C.ALL_ROLES, "yields", "rxn_str", "is_mapped", "original_index"]
+    rows = []
+    for i in range(400):
+        prods = arr(3)
+        n_y = rng.choice([0, 1, 2, 3, 4])  # deliberately mis-sized vs prods
+        yields = None if rng.random() < 0.2 else [
+            None if rng.random() < 0.3 else float(rng.randint(0, 100)) for _ in range(n_y)
+        ]
+        rows.append(dict(zip(cols, (
+            i, arr(3), arr(3), arr(2), arr(2), arr(2), prods, yields, None, rng.random() < 0.5, i,
+        ))))
+    df = spark.createDataFrame([tuple(r[c] for c in cols) for r in rows], _MEMBERSHIP_SCHEMA)
+    names = spark.createDataFrame([(n,) for n in bad_names], "name string")
+    bad = set(bad_names)
+
+    for mode, mode_kw in (
+        ("a", dict(set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn=True,
+                   remove_rxn_with_unresolved_names=False, set_unresolved_names_to_none=False)),
+        ("c", dict(set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn=False,
+                   remove_rxn_with_unresolved_names=False, set_unresolved_names_to_none=True)),
+    ):
+        got = _as_rows(C.handle_unresolved_names(df, names, C.CleanConfig(**mode_kw)))
+        want = {r["rid"]: o for r in rows if (o := _ref_unresolved(r, bad, mode)) is not None}
+        assert set(got) == set(want), mode
+        assert got == want, (mode, [k for k in want if got[k] != want[k]][:3])
+        # both kinds of row survive: some lost a bad member, some had none
+        assert any(got[k] != rows[k] for k in got), mode
+        assert len(want) < len(rows) or mode == "c"

@@ -291,9 +291,9 @@ def test_cli_job_counts_and_name_list(spark, tmp_path):
     }
     # extract: solvents CSV read, solvent-set collect (2), the write, the
     # name-list CSV (3: a sorted write under AQE). clean: its pipeline
-    # and split barriers plus the two writes. gen-fp: the input schema
-    # read and the write.
-    assert jobs == {"extract": 7, "clean": 19, "gen-fp": 2}
+    # and split barriers plus the two writes; no job decides a plan
+    # shape. gen-fp: the input schema read and the write.
+    assert jobs == {"extract": 7, "clean": 17, "gen-fp": 2}
 
     decoded = O.decode_reactions(O.scan_ord_files(spark, str(data)), decoder=O.json_decoder)
     want = molecule_name_side_output(decoded)

@@ -40,7 +40,7 @@ IMPL: dict[str, tuple[str, str]] = {
     "P8": ("functions/rxn.py drop_empty_members + schema.py yields alignment", "tests/test_extract.py"),
     "P9": ("schema.py MISSING sentinel handling in wide_to_array / normalize_sentinels", "tests/test_cleaning.py"),
     "P10": ("sources/solvents.py apply_name_replacements (broadcast map)", "tests/test_sources.py"),
-    "P11": ("operators/cleaning.py handle_unresolved_names (3 modes)", "tests/test_cleaning.py"),
+    "P11": ("operators/cleaning.py handle_unresolved_names (3 modes; broadcast membership join, collapse by original_index)", "tests/test_cleaning.py"),
     "P12": ("functions/rxn.py remove_pd_c_carbon", "tests/test_extract.py"),
     "P13": ("functions/rxn.py impute_ice_temperature", "tests/test_extract.py"),
     # §2.3 joins
@@ -59,7 +59,7 @@ IMPL: dict[str, tuple[str, str]] = {
     "A1": ("sources/ord.py merge_molecule_names (distinct+sort)", "tests/test_sources.py"),
     "A2": ("array_sort(array_distinct(...)) — clean scaffold", ""),
     "A3": ("operators/cleaning.py condition_value_counts", "tests/test_cleaning.py"),
-    "A4": ("operators/cleaning.py map_rare_molecules_to_other", "tests/test_cleaning.py"),
+    "A4": ("operators/cleaning.py map_rare_molecules_to_other (broadcast membership join, collapse by original_index)", "tests/test_cleaning.py"),
     "A5": ("operators/cleaning.py remove_rows_with_rare_molecules", "tests/test_cleaning.py"),
     "A6": ("operators/cleaning.py dedup_reactions (seeded random survivor)", "tests/test_cleaning.py"),
     "A7": ("count()/Observation telemetry (bench.py)", ""),

@@ -157,10 +157,26 @@ def probe_adversarial_shapes(per_family: int = 200) -> None:
         assert fallbacks == 0, (name, fallbacks)
 
 
+def _synthetic_smiles(n: int) -> list[str]:
+    """n DISTINCT parseable molecules with realistic size spread
+    (chains, a branch, a charge site, a ring). A C/N chain segment
+    encodes the full index in binary, so the generator is injective
+    and the memoised UDF cache cannot shortcut the parse."""
+    out = []
+    for i in range(n):
+        a, b = i % 53, (i // 53) % 41
+        ring = "1" if i % 3 == 0 else ""
+        # i in binary as a C/N heavy-atom chain (LSB first; 'C'=1)
+        tail = "".join("C" if (i >> k) & 1 else "N" for k in range(max(i.bit_length(), 1)))
+        out.append(
+            f"C{ring}C{'C' * a}N(CC{'O' * (b % 4)})C{'C' * b}{tail}"
+            f"C(=O)[O-].[Na+]{'C' + ring if ring else ''}"
+        )
+    return out
+
+
 def probe_udf_throughput_postfix(n: int = 20_000) -> None:
     """P2: honest end-to-end UDF numbers on the INJECTIVE corpus."""
-    from round11_scale_probe import _synthetic_smiles
-
     from orderly_spark.session import get_spark
 
     mols = _synthetic_smiles(n)
