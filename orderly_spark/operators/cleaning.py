@@ -486,7 +486,7 @@ def dedup_reactions(df: DataFrame, cfg: CleanConfig, include_yields: bool = Fals
     # back to the row_number-window shape. r15 switched to a min_by
     # argmin for its map-side partial aggregation, A/B'd a wash at
     # sf0.1 — but at sf0.1 BOTH shapes are driver/overhead-bound. The
-    # r16 10×-sf0.1 scaling probe (tools/round16_scale_probe.py) is
+    # 10×-sf0.1 corpus (``tools/probe.py --gen --scale 10``) is
     # compute-bound and separates them: the min_by full-row struct
     # buffer is not hash-mutable, so it plans as SortAggregate —
     # sorting the full-width rows TWICE (partial + final) around the

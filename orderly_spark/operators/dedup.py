@@ -43,23 +43,16 @@ def minhash_signatures(
     *,
     shingle_n: int = 3,
     num_hashes: int = 16,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Per-document MinHash signature as a DataFrame (id, sig) where
     sig[h] = min over shingles of md5(h ':' shingle) — min taken on
     the 32-hex-char string, a valid uniform order.
 
-    ``hash_fn='xxhash64'`` is the THROUGHPUT variant: sig[h] = min of
-    xxhash64(h, shingle) as a signed long — any uniform order is a
-    valid MinHash order, so candidate SEMANTICS are unchanged (exact
-    dups still always collide; near-dup recall follows the same
-    banding math). Measured honestly (80 k docs, local[32], warm):
-    full candidate pipeline 12.1 s (md5) vs 10.0 s (xxhash64) — ~1.2×,
-    NOT the naive per-hash ratio, because the shingle explode + 16
-    parallel min-aggregates dominate, not the hash kernel. The md5
-    default stays because the DuckDB oracle can only mirror md5; pick
-    xxhash64 when CPU-bound at scale, md5 where a value gate must
-    replay the pipeline.
+    The min over md5 strings is kept because the DuckDB oracle can
+    mirror md5 exactly. A cheaper hash (xxhash64) would keep candidate
+    semantics but measured only ~1.2× faster on the full candidate
+    pipeline (80 k docs, local[32]): the shingle explode and the 16
+    parallel min-aggregates dominate, not the hash kernel.
 
     Relational formulation: shingles are materialised ONCE per
     document (explode), then ONE aggregation computes all num_hashes
@@ -78,14 +71,10 @@ def minhash_signatures(
         F.col(id_col).alias("__id"),
         F.explode(shingles(tokens(F.col(text_col)), shingle_n)).alias("s"),
     )
-    if hash_fn == "xxhash64":
-        mins = [F.min(F.xxhash64(F.lit(h), F.col("s"))) for h in range(num_hashes)]
-    else:
-        # seeded_md5 IS md5(concat('{h}:', s)) — the shared helper, so
-        # the minhash seed format can never drift from the rest of the
-        # seeded-hash surface (review finding, r8; expression
-        # byte-identical to the previous inline form)
-        mins = [F.min(seeded_md5(h, F.col("s"))) for h in range(num_hashes)]
+    # seeded_md5 IS md5(concat('{h}:', s)) — the shared helper, so the
+    # minhash seed format can never drift from the rest of the
+    # seeded-hash surface
+    mins = [F.min(seeded_md5(h, F.col("s"))) for h in range(num_hashes)]
     return sh.groupBy("__id").agg(F.array(*mins).alias("sig"))
 
 
@@ -97,7 +86,6 @@ def lsh_band_keys(
     shingle_n: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """LSH index entries for a document set: (__id, band_idx,
     band_hash) with one 16-byte key per band. This IS the storable
@@ -114,18 +102,11 @@ def lsh_band_keys(
             f"bands ({bands}) must divide num_hashes ({num_hashes})"
         )
     rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(
-        df, id_col, text_col, shingle_n=shingle_n, num_hashes=num_hashes, hash_fn=hash_fn
+    sigs = minhash_signatures(df, id_col, text_col, shingle_n=shingle_n, num_hashes=num_hashes)
+    band_hashes = F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda b: F.md5(F.concat_ws("|", F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band))),
     )
-    if hash_fn == "xxhash64":
-        band_of = lambda b: F.xxhash64(  # noqa: E731
-            F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band)
-        ).cast("string")
-    else:
-        band_of = lambda b: F.md5(  # noqa: E731
-            F.concat_ws("|", F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band))
-        )
-    band_hashes = F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), band_of)
     return sigs.select(
         "__id",
         F.posexplode(band_hashes).alias("band_idx", "band_hash"),
@@ -140,7 +121,6 @@ def lsh_candidate_pairs(
     shingle_n: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """MinHash-LSH candidate pairs: documents agreeing on ALL rows of
     at least one band. Output: (id_a, id_b) with id_a < id_b, distinct.
@@ -151,8 +131,7 @@ def lsh_candidate_pairs(
     of document size. Skewed buckets (boilerplate docs) are split by
     AQE skew-join handling."""
     banded = lsh_band_keys(
-        df, id_col, text_col, shingle_n=shingle_n, num_hashes=num_hashes, bands=bands,
-        hash_fn=hash_fn,
+        df, id_col, text_col, shingle_n=shingle_n, num_hashes=num_hashes, bands=bands
     )
     a = banded.alias("a")
     b = banded.alias("b")
@@ -249,7 +228,7 @@ def prefix_filter_jaccard_pairs(
     (id) window for per-doc rank, the prefix self-equi-join, and a
     per-doc set join for verification. No cross join anywhere.
 
-    WHEN to use which exact plan (measured, tools/round6_scale_probe):
+    WHEN to use which exact plan (measured on 4×-replicated sf0.1):
     the win is the df-SKEW crossover, not universal. On a corpus where
     every doc shares boilerplate (headers/footers/licenses — the web
     shape), the exhaustive join's Σ df² goes quadratic in corpus size

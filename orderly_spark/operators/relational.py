@@ -43,67 +43,6 @@ def topk_per_group(
     return df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
 
 
-def dedup_deterministic(
-    df: DataFrame,
-    subset: Sequence[str],
-    survivor_order: Sequence[Column],
-) -> DataFrame:
-    """Duplicate elimination on a column subset with a *deterministic*
-    survivor (SURVEY A6).
-
-    The reference shuffles with a seeded RNG then keeps the first
-    duplicate; Spark's ``dropDuplicates`` keeps an arbitrary row.
-    This keeps exactly the row ranked first by ``survivor_order``
-    within each duplicate group — reproducible across cluster sizes
-    and retries (required for exchange/retry-safe lineage at scale).
-    """
-    w = Window.partitionBy(*[F.col(c) for c in subset]).orderBy(*survivor_order)
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
-
-
-def dedup_random_survivor(df: DataFrame, subset: Sequence[str], seed: int, tiebreak: str) -> DataFrame:
-    """Reference-parity variant of A6: a seeded-pseudorandom duplicate
-    survives (``cleaner.py:796-816`` semantics, distribution-stable).
-
-    Randomness is derived from ``md5(tiebreak, seed)`` rather than
-    ``rand()`` so the choice is a pure function of the data — rerun-
-    and partitioning-independent (Spark's rand() is neither).
-    """
-    order = F.md5(F.concat_ws("\x1f", F.col(tiebreak).cast("string"), F.lit(str(seed))))
-    return dedup_deterministic(df, subset, [order, F.col(tiebreak)])
-
-
-def value_counts(df: DataFrame, col: Column, out_col: str = "value") -> DataFrame:
-    """Frequency table of an exploded/scalar column (SURVEY A3).
-
-    Two-phase hash aggregate; map-side partial combine means shuffle
-    traffic is bounded by distinct-value count per partition.
-    """
-    return df.select(col.alias(out_col)).groupBy(out_col).agg(F.count(F.lit(1)).alias("count"))
-
-
-def rare_values(counts: DataFrame, min_frequency: int, value_col: str = "value") -> DataFrame:
-    """Values with frequency < min_frequency (feeds A4/A5)."""
-    return counts.filter(F.col("count") < min_frequency).select(value_col)
-
-
-def map_rare_to_other(
-    df: DataFrame, col_name: str, counts: DataFrame, min_frequency: int, other: str = "other"
-) -> DataFrame:
-    """SURVEY A4: values with global count < k replaced by a sentinel.
-
-    Broadcast join against the (small) counts table — the counts table
-    has one row per *distinct* value, so it stays broadcastable even
-    when the fact table is 100 TB.
-    """
-    rare = rare_values(counts, min_frequency).withColumnRenamed("value", "__rare_v")
-    return (
-        df.join(F.broadcast(rare), df[col_name] == F.col("__rare_v"), "left")
-        .withColumn(col_name, F.when(F.col("__rare_v").isNotNull(), F.lit(other)).otherwise(F.col(col_name)))
-        .drop("__rare_v")
-    )
-
-
 def sessionize(
     df: DataFrame,
     user_col: str,

@@ -132,76 +132,6 @@ def cosine_topk(
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def cosine_topk_arrow(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-) -> DataFrame:
-    """Arrow-vectorized brute-force top-k — the THROUGHPUT kernel:
-    the query block is collected (Q is ANN-contract small), normalised
-    once, and each corpus Arrow batch is scored with one numpy matmul
-    (Cn @ Qn.T) inside ``mapInPandas``; only each batch's per-query
-    top-k survives, so the shuffle into the global top-k window
-    carries ≤ batches×Q×k rows.
-
-    Same (query, neighbour, rank) results as :func:`cosine_topk`
-    whenever cosine gaps exceed float-summation noise (~1e-12 here) —
-    pinned by tests/test_similarity_ops.py. The exact decimal-fold
-    kernel remains the value-gated baseline: BLAS pairwise summation
-    is not bit-identical to a sequential fold, so this kernel is for
-    throughput, not the oracle. Measured (512k×64 corpus, Q=50,
-    local[32], 16k-row partitions): 1.3 s vs the interpreted HOF
-    fold's 17.2 s — 13×. Batch size matters as much as the kernel:
-    the same run over ~60-row partitions was SLOWER than the fold
-    (55 s) because per-batch Python/Arrow overhead swamped the
-    matmul; see tools/ann_scale_probe.py."""
-    import numpy as np
-    import pandas as pd
-
-    q_rows = queries.filter(_usable_vec(F.col(vec_col))).select(id_col, vec_col).collect()
-    qids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    Q = np.array([list(r[vec_col]) for r in q_rows], dtype=np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-
-    def score(batches):
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            # Arrow hands array<float> cells over as per-row ndarrays:
-            # np.stack is a single copy — never list(v) per cell
-            # (a Python-loop conversion forfeits the matmul's win)
-            C = np.stack(pdf[vec_col].to_numpy()).astype(np.float64, copy=False)
-            # zero-norm guard, numpy flavour (r11: the _usable_vec
-            # contract) — keep the batch shape, score such rows -inf
-            norms = np.linalg.norm(C, axis=1, keepdims=True)
-            dead = norms[:, 0] == 0.0
-            norms[dead] = 1.0
-            Cn = C / norms
-            Cn[dead] = 0.0  # dot -> 0 everywhere; never reaches top-k
-            S = Cn @ Qn.T  # corpus-batch × Q cosine block
-            S[ids[:, None] == qids[None, :]] = -np.inf  # exclude self
-            kk = min(k, S.shape[0])
-            top = np.argpartition(-S, kk - 1, axis=0)[:kk]  # (k, Q)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(qids, kk),
-                    "neighbor_id": ids[top].T.ravel(),
-                    "cosine": np.take_along_axis(S, top, axis=0).T.ravel(),
-                }
-            )
-
-    scored = embeddings.select(id_col, vec_col).mapInPandas(
-        score, "query_id long, neighbor_id long, cosine double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .filter(F.col("cosine") != float("-inf"))
-    )
-
-
 def _hyperplane(dim: int, seed: int, plane: int) -> list[float]:
     """Deterministic pseudo-random unit-free hyperplane: component i is
     derived from md5 bytes of (seed, plane, i) — centred on 0."""
@@ -332,7 +262,6 @@ def ivf_cosine_topk(
     n_cells: int = 8,
     n_probe: int = 2,
     seed: int = 23,
-    cell_col: str | None = None,
 ) -> DataFrame:
     """IVF-style ANN: corpus vectors live in coarse cells (argmax dot
     against broadcast centroids, computed map-side); each query probes
@@ -342,12 +271,10 @@ def ivf_cosine_topk(
     At 100 TB: the corpus cell id is a persisted/partitioned column —
     probing prunes the scan to n_probe/n_cells of the data (partition
     pruning on `cell`), and the candidate join is an equi-join on a
-    tiny key. Pass ``cell_col`` when the corpus already carries its
-    assignment (the deployment shape: assign once at ingest, amortise
-    over every query batch — tools/ann_scale_probe.py measures the
-    difference); otherwise cells are computed inline. Deterministic
-    end to end (pseudo-centroids, first-max ties), so the DuckDB
-    oracle checks exact values."""
+    tiny key. Cells are computed inline here; the deployment shape
+    assigns them once at ingest and amortises the assignment over every
+    query batch. Deterministic end to end (pseudo-centroids, first-max
+    ties), so the DuckDB oracle checks exact values."""
     embeddings = embeddings.filter(_usable_vec(F.col(vec_col)))
     queries = queries.filter(_usable_vec(F.col(vec_col)))
     cents = pseudo_centroids(dim, n_cells, seed)
@@ -368,7 +295,7 @@ def ivf_cosine_topk(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("__cv"),
         _norm(F.col(vec_col)).alias("__cn"),
-        (F.col(cell_col) if cell_col else ivf_cell(F.col(vec_col), cents)).alias("cell"),
+        ivf_cell(F.col(vec_col), cents).alias("cell"),
     )
     qdots = _cell_dots(F.col(vec_col), cents)
     ranked = F.array_sort(
@@ -416,8 +343,7 @@ def semantic_dedup_stats(
     The quadratic pairwise term is confined within cells — k cells cut
     pair volume by ~k, the SemDeDup design point; raise k (k-means-
     trained centroids via operators/clustering.kmeans_fit) for sharper
-    balls with the SAME plan shape (measured in
-    tools/round6_scale_probe.py probe C)."""
+    balls with the SAME plan shape."""
     cells = embeddings.filter(_usable_vec(F.col(vec_col))).select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("ev"),

@@ -314,13 +314,12 @@ def j_pareto_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     by construction — the fact table reduces map-side first), so the
     unpartitioned ordering is metadata-scale, the same boundedness
     class as the compaction plan's per-hour window. At 100 TB the
-    frontier input is |suppliers| rows, never |lineitem|. Honest
-    crossover (tools/round7_scale_probe.py): at 20 k points the
-    quadratic dominance join is still broadcast-cheap (0.9× — sweep
-    does NOT win yet); the sweep is the plan that survives when the
-    point set outgrows a broadcast (its cost stays n log n while the
-    semi-join's comparison volume is n²), and the probe pins frontier
-    equality between the two at 20 k points either way."""
+    frontier input is |suppliers| rows, never |lineitem|. Measured
+    crossover: at 20 k points the quadratic dominance join is still
+    broadcast-cheap (0.9× — sweep does NOT win yet); the sweep is the
+    plan that survives when the point set outgrows a broadcast (its
+    cost stays n log n while the semi-join's comparison volume is n²).
+    tests/test_analytics_ops.py pins sweep == brute-force frontier."""
     s = (
         load(spark, sf_dir, "lineitem")
         .groupBy("l_suppkey")

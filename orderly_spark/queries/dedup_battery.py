@@ -170,16 +170,14 @@ def d_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     while the join volume drops from Σ df² over every shingle to
     Σ df² over prefix occurrences of the rarest shingles. The payoff
     is the df-skew crossover (boilerplate-heavy corpora: measured
-    11.6× at 20 k docs, tools/round6_scale_probe.py), not a universal
-    speedup — see the operator docstring for the honest negative on
-    uniform-df corpora."""
+    11.6× at 20 k docs), not a universal speedup — see the operator
+    docstring for the honest negative on uniform-df corpora."""
     d = load(spark, sf_dir, "documents", fan_out=True).filter(F.col("doc_id") < 400)
     return D.prefix_filter_jaccard_pairs(d, "doc_id", "text", shingle_n=3, t_num=1, t_den=8)
 
 
 #: web-corpus boilerplate tail (license/footer shape) — the df-skew
-#: regime prefix filtering exists for; same fixture shape as
-#: tools/round6_scale_probe.py's winning probe point
+#: regime prefix filtering exists for
 _BOILER = " copyright notice all rights reserved terms of service apply here"
 
 
@@ -216,7 +214,7 @@ def d_prefix_filter_jaccard_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σ df² goes quadratic in corpus size — while prefix filtering
     excludes exactly those max-df shingles from every prefix (AllPairs
     orders prefixes by ASCENDING global frequency) and stays flat
-    (11.6× at 20 k docs, tools/round6_scale_probe.py). Unlike
+    (11.6× at 20 k docs). Unlike
     d_prefix_filter_jaccard (uniform-df, capped at 400 docs, 0 rows at
     sf0.1), this runs the FULL documents table at t = 1/2 and returns
     pairs at every graded scale (28 / 25 / 256 at sf0.001/0.01/0.1),
@@ -574,7 +572,7 @@ def d_bloom_lsh_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast state replace a full index scan per batch; the exact
     equi-join sees only bloom-positive keys (see
     operators/dedup.py bloom_filtered_index_probe). Honest test-scale
-    trade (round13_scale_probe P3): 88% of probe keys pruned map-side,
+    trade: 88% of probe keys pruned map-side,
     but wall time is ~1.6x the unfiltered probe at sf0.01 — the bloom
     BUILD scans the whole index, which only amortizes when the filter
     is PERSISTED and bit-OR-appended per accepted batch like the index

@@ -951,10 +951,10 @@ def j_interval_overlap_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate pushdown note: the event_type filters reach the scan
     (PushedFilters), so each session build reads one type's rows.
 
-    HONEST probe results (tools/round8_scale_probe.py, sf0.1,
-    equality-asserted): at THIS query's per-user grain the plain
-    user_id equi-join + inequality filter is faster (grid 0.16× —
-    ~8 sessions/user makes per-key quadratic trivial); at coarse keys
+    Measured at sf0.1 (identical pairs from both shapes): at THIS
+    query's per-user grain the plain user_id equi-join + inequality
+    filter is faster (grid 0.16× — ~8 sessions/user makes per-key
+    quadratic trivial); at coarse keys
     (user_id % 8, 2 h sessions, ~2.4k sessions/key) the grid is
     already 1.19× and its advantage grows with per-key session
     count², which is the celebrity-key / tenant-grain regime this

@@ -431,9 +431,8 @@ def m_condition_benchmark_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def condition_benchmark_table(rx: DataFrame) -> DataFrame:
     """The benchmark-table pipeline on an arbitrary reactions frame
-    (rid, solvents, agents) — shared by the gated query above and
-    tools/round5_scale_probe.py, so the probe always measures the
-    shipped pipeline."""
+    (rid, solvents, agents), so the same pipeline runs on the capped
+    gate scaffold and on any uncapped or scaled reactions frame."""
     from pyspark.sql import Window
 
     def nft(cols):

@@ -1313,8 +1313,10 @@ def j_salted_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     can't help (a downstream window/agg pins the partitioning): no
     single reducer ever owns a whole hot key, at the cost of
     replicating the small side n_salts times (keep it broadcast-sized
-    ÷ n_salts). tools/skew_probe.py measures what skew actually costs
-    on this engine; tests/test_storage_layout.py pins salted == plain
+    ÷ n_salts). On one node, combinable aggregates and COUNT(DISTINCT)
+    are already skew-immune (map-side partials; Catalyst's two-phase
+    distinct rewrite), so salting is for joins and custom aggregations
+    only; tests/test_storage_layout.py pins salted == plain
     row-for-row."""
     from orderly_spark.operators.relational import salted_join
 

@@ -366,9 +366,8 @@ def corpus_curation_stats(d: DataFrame) -> DataFrame:
     exact dedup (min-doc_id survivor per normalised-text hash) →
     MinHash-LSH near dups resolved to clusters (iterative min-label
     propagation) with only cluster survivors kept → per-source corpus
-    stats. Shared by the gated query below and
-    tools/curation_scale_probe.py, so the probe always measures the
-    shipped pipeline."""
+    stats. Shared by the gated query below, so any scaled or replicated
+    documents frame runs the shipped pipeline."""
     from pyspark.sql import Window
 
     from orderly_spark.operators import dedup as D
@@ -412,12 +411,6 @@ def t_corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Deterministic sampling & mixture weighting (training-data staples)
 # ---------------------------------------------------------------------------
-
-# Shared with the curation battery — the (Spark, SQL) expression twins
-# live next to each other in operators/text.py (review r6: previously
-# four hand-synced copies).
-_SAMPLE_THRESHOLDS = T.SAMPLE_THRESHOLDS
-
 
 @query(
     "t_udtf_token_runs",

@@ -52,6 +52,19 @@ def test_lsh_candidate_pairs(spark, docs):
     assert all(a < b for a, b in pairs)
     assert not any(4 in p for p in pairs)  # unrelated doc never pairs
 
+    # longer documents: exact duplicates pair, shingle-disjoint ones never do
+    longer = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog again and again"),
+            (2, "the quick brown fox jumps over the lazy dog again and again"),
+            (3, "completely different words populate this entirely unrelated text body"),
+            (4, "yet another disjoint vocabulary sentence with zero overlap present here"),
+        ],
+        "doc_id long, text string",
+    )
+    pairs = {(r.id_a, r.id_b) for r in D.lsh_candidate_pairs(longer, "doc_id", "text").collect()}
+    assert pairs == {(1, 2)}
+
 
 def test_ngram_jaccard_exact_value(spark):
     # A: "a b c d" -> bigrams {a b, b c, c d}; B: "a b c e" -> {a b, b c, c e}
@@ -184,30 +197,6 @@ def test_star_contraction_equals_label_propagation(spark):
 def test_star_contraction_empty_pairs(spark):
     pairs = spark.createDataFrame([], "id_a long, id_b long")
     assert D.duplicate_clusters_star(pairs).collect() == []
-
-
-def test_xxhash_minhash_variant_same_semantics(spark):
-    """The xxhash64 throughput variant must (1) always pair exact
-    duplicates (identical shingle sets → identical signatures under
-    ANY hash), (2) produce the same output schema, and (3) never pair
-    documents sharing no shingles."""
-    from orderly_spark.operators.dedup import lsh_candidate_pairs
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog again and again"),
-        (2, "the quick brown fox jumps over the lazy dog again and again"),
-        (3, "completely different words populate this entirely unrelated text body"),
-        (4, "yet another disjoint vocabulary sentence with zero overlap present here"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    for fn in ("md5", "xxhash64"):
-        pairs = {
-            (r.id_a, r.id_b)
-            for r in lsh_candidate_pairs(df, "doc_id", "text", hash_fn=fn).collect()
-        }
-        assert (1, 2) in pairs, fn
-        # docs 3/4 share no shingles with anything → must not pair
-        assert (3, 4) not in pairs and (1, 3) not in pairs and (2, 4) not in pairs, fn
 
 
 def test_prefix_filter_jaccard_equals_bruteforce(spark, docs):

@@ -101,27 +101,6 @@ def test_asof_join_backward_literal(spark):
     assert got[("k2", 7)] == (None, None)  # per-key isolation: k2's right row is later
 
 
-def test_arrow_kernel_matches_exact_kernel(spark, sf_smoke):
-    """cosine_topk_arrow (numpy matmul fast path) must return the same
-    (query, neighbour, rank) triples as the exact decimal-fold kernel
-    — BLAS summation noise (~1e-12) cannot flip ranks on this data."""
-    from orderly_spark.operators.similarity import cosine_topk, cosine_topk_arrow
-    from orderly_spark.tables import load
-    import pyspark.sql.functions as F
-
-    e = load(spark, sf_smoke, "embeddings", fan_out=True)
-    q = e.filter(F.col("vec_id") < 5)
-    exact = {
-        (r.query_id, r.rank): r.neighbor_id
-        for r in cosine_topk(e, q, id_col="vec_id", vec_col="embedding", k=3).collect()
-    }
-    fast = {
-        (r.query_id, r.rank): r.neighbor_id
-        for r in cosine_topk_arrow(e, q, id_col="vec_id", vec_col="embedding", k=3).collect()
-    }
-    assert exact == fast
-
-
 def test_asof_join_backward_right_tie_is_deterministic(spark):
     """Two right rows sharing (key, ts): the winner must be the
     GREATEST right row in value-column order, independent of partition

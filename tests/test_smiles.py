@@ -566,6 +566,50 @@ def test_canonical_explicit_ceilings():
     assert chain is not None and canonical_smiles(chain) == chain
 
 
+def _bits(i: int) -> str:
+    """i in binary as a C/N chain: a distinct tail per index."""
+    return "".join("C" if (i >> k) & 1 else "N" for k in range(max(i.bit_length(), 1)))
+
+
+def _tree(d: int, leaf: str) -> str:
+    return leaf if d == 0 else f"C({_tree(d - 1, leaf)}){_tree(d - 1, leaf)}"
+
+
+_ADVERSARIAL_SHAPES = {
+    # 10..40 concurrently open %nn ring bonds
+    "deep_rings": lambda i: (
+        "C" + "".join(f"%{10 + k}" for k in range(10 + i % 31)) + "C" * (3 + i % 5)
+        + "C" + "".join(f"%{10 + k}" for k in reversed(range(10 + i % 31)))
+    ),
+    # 120-300 heavy atoms with periodic substituents and a charged head
+    "long_chain": lambda i: "".join(
+        "C(O)" if k % 17 == 0 else "N" if k % 23 == 0 else "C" for k in range(120 + (i * 7) % 181)
+    ) + "C(=O)[O-]",
+    # charges up to ±15, isotopes up to 999, explicit-H extremes
+    "charge_isotope": lambda i: (
+        f"[{100 + (i * 13) % 900}C{'H' + str(i % 5) if i % 5 else ''}+{i % 15 + 1}]"
+        f"C(=O)[{(100 + (i * 13) % 900) % 250 + 1}N-{i % 7 + 1}][{100 + (i * 13) % 900}Pt+{i % 4 + 1}]"
+    ),
+    # binary trees of depth 5-6 written as nested parens
+    "branch_storm": lambda i: _tree(5 + i % 2, "CNOS"[i % 4]) + _bits(i),
+    # 25 dot-disconnected components
+    "salt_swarm": lambda i: ".".join(
+        [["[Na+]", "[Cl-]", "CCO", "[K+]", "C(=O)[O-]", "O"][(i + k) % 6] for k in range(24)] + ["C" + _bits(i)]
+    ),
+}
+
+
+@pytest.mark.parametrize("family", sorted(_ADVERSARIAL_SHAPES))
+def test_canonical_adversarial_shapes_never_fall_back(family):
+    """Every adversarial shape family stays inside the parser subset,
+    canonicalises (no None fallback) and is a canon fixed point."""
+    for i in range(0, 200, 7):
+        s = _ADVERSARIAL_SHAPES[family](i)
+        assert morgan_fingerprint(s, radius=2, n_bits=1024) is not None, (family, i)
+        c = canonical_smiles(s)
+        assert c is not None and canonical_smiles(c) == c, (family, i, c)
+
+
 def test_canonical_writer_bare_vs_bracket_spelling():
     # bracket kept only where the bare spelling would change the H
     # count / charge / isotope on re-parse
@@ -938,6 +982,20 @@ def test_perception_aromatic_input_untouched():
     # ring-free molecules skip entirely
     m = parse_smiles("CCO")
     assert smiles.perceive_aromaticity(m) is m
+
+    # past _PERCEIVE_EDGE_CAP ring bonds perception is skipped entirely
+    # (the fuzzer-lattice guard): even a Kekulé benzene beside the
+    # lattice stays Kekulé, while beside a small lattice it is perceived
+    def lattice_and_benzene(spine: int):
+        w = 80
+        opens = "C" + "".join(f"%{10 + k}" for k in range(w))
+        closes = "C" + "".join(f"%{10 + k}" for k in reversed(range(w)))
+        return parse_smiles(opens + "C" * spine + closes + ".C1=CC=CC=C1")
+
+    big = lattice_and_benzene(smiles._PERCEIVE_EDGE_CAP)
+    assert smiles.perceive_aromaticity(big) is big
+    small = smiles.perceive_aromaticity(lattice_and_benzene(10))
+    assert sum(a.aromatic for a in small.atoms) == 6
 
 
 def test_cycle_orbit_path():

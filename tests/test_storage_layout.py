@@ -71,6 +71,20 @@ def test_partition_pruning_from_filter(spark, sf_smoke, tmp_path_factory):
     shutil.rmtree(out, ignore_errors=True)
 
 
+def test_load_sees_rewritten_table_schema(spark, tmp_path):
+    """A table rewritten in place with an extra column is read with its
+    new schema: the loader's schema cache must not outlive the files."""
+    sf_dir = str(tmp_path)
+    path = f"{sf_dir}/region.parquet"
+    base = spark.createDataFrame([(0, "AFRICA"), (1, "AMERICA")], "r_regionkey long, r_name string")
+    base.write.parquet(path)
+    assert load(spark, sf_dir, "region").columns == ["r_regionkey", "r_name"]
+    base.withColumn("r_comment", F.lit("x")).write.mode("overwrite").parquet(path)
+    again = load(spark, sf_dir, "region")
+    assert again.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert again.filter(F.col("r_comment") == "x").count() == 2
+
+
 def test_salted_join_matches_plain(spark, sf_smoke):
     from orderly_spark.operators.relational import salted_join
 
