@@ -97,11 +97,9 @@ def _dump_config(args: argparse.Namespace, out_dir: str, name: str) -> None:
     from orderly_spark.functions.smiles import CANON_VERSION
 
     cfg = {k: v for k, v in vars(args).items() if k != "cmd"}
-    # r14 (VERDICT item 6): record the canonicalisation version so
-    # persisted canonical-SMILES columns can be detected as stale when
-    # re-runs mix engine versions (r13 changed pure-cycle spellings,
-    # r14 added stereo tags) — at 100 TB a silent version mix across
-    # incremental re-runs is a data-drift class, not a cosmetic.
+    # the canonicalisation version, so persisted canonical-SMILES
+    # columns from runs of different engine versions can be told apart
+    # instead of mixing silently across incremental re-runs
     cfg["canon_version"] = CANON_VERSION
     Path(out_dir).mkdir(parents=True, exist_ok=True)
     (Path(out_dir) / name).write_text(json.dumps(cfg, indent=2, default=str))
@@ -126,20 +124,15 @@ def cmd_extract(args: argparse.Namespace) -> int:
     spark = get_spark("orderly_spark.extract")
     files = scan_ord_files(spark, args.data_path, glob=args.ord_file_ending)
     if args.name_contains_substring:
-        # normalised FILENAME match (reference extractor.py:84-95) —
-        # a raw full-path contains() also matched directory names and
-        # was case-sensitive (review finding; rxn.filename_contains
-        # existed for exactly this)
+        # the match is on the normalised file NAME (reference
+        # extractor.py:84-95), case-insensitive, never on directory names
         from orderly_spark.functions.rxn import filename_contains
 
         files = files.filter(
-            filename_contains(
-                F.col("path"), args.name_contains_substring, inverse=args.inverse_substring
-            )
+            filename_contains("path", args.name_contains_substring, inverse=args.inverse_substring)
         )
-    # 'auto' is the wire-format protobuf decoder (r10: pure-Python
-    # codec, no ord-schema needed); 'json' selects the JSON-lines
-    # format explicitly
+    # 'auto' is the wire-format protobuf decoder (a pure-Python codec,
+    # no ord-schema needed); 'json' selects the JSON-lines format
     decoder = json_decoder if args.decoder == "json" else proto_decoder
     decoded = decode_reactions(files, decoder=decoder)
     dim = (
@@ -147,10 +140,7 @@ def cmd_extract(args: argparse.Namespace) -> int:
         if args.solvents_path
         else SV.default_solvents(spark)
     )
-    # tiny dimension (~615 rows): collect once, ship as a literal array
-    # (the broadcast-set J1 shape; extractor.py:546-593)
-    smiles = SV.solvent_smiles_set(dim).collect()[0].solvent_set
-    sset = F.array(*[F.lit(s) for s in smiles]) if smiles else None
+    sset = SV.solvent_set_literal(dim)
     names = None
     if args.consider_molecule_names:
         # the name list is taken from the DECODED (pre-filter) rows, which
@@ -239,7 +229,7 @@ def _clean_stage_reactant_cap(clean_data_path: str) -> int | None:
             return int(json.loads(cfg.read_text())["num_reactant"])
         except (OSError, ValueError, KeyError, TypeError, json.JSONDecodeError):
             # TypeError: valid JSON of the wrong shape, e.g.
-            # {"num_reactant": null} or a top-level list (review r6)
+            # {"num_reactant": null} or a top-level list
             continue
     return None
 

@@ -1,8 +1,18 @@
 """Reaction-extraction functions (SURVEY §2.2/§2.3/§2.8, M3) as pure
 Catalyst expressions — the reference implements each as row-at-a-time
 Python inside ``orderly/extract/extractor.py``; here every one is a
-whole-stage-codegen-able Column builder, so extraction runs JVM-side
-at scan speed with no Python in the hot path.
+whole-stage-codegen-able expression, so extraction runs JVM-side at
+scan speed with no Python in the hot path.
+
+Every builder takes Spark SQL operands (column names or expressions)
+and returns one Spark SQL expression string. Wrap it in ``F.expr`` for
+a Column, or compose it into a larger expression and ship a whole
+stage as one ``selectExpr``/``withColumns``: a tree built in SQL text
+crosses py4j once, where the same tree of Column builders crosses it
+once per node. Operands are spliced in parenthesised, and lambda
+variables carry a leading underscore (``_x``), so an operand may be
+any expression over any columns not themselves named ``_x``, ``_p``,
+``_s``, ``_l``, ``_r`` or ``_i``.
 
 Reference parity, cited per function. Nothing here shuffles; the only
 exchange in the extract pipeline is the optional distinct() for the
@@ -11,41 +21,60 @@ molecule-name side output (SURVEY §3.1).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+EMPTY_STRINGS = "CAST(array() AS ARRAY<STRING>)"
+EMPTY_DOUBLES = "CAST(array() AS ARRAY<DOUBLE>)"
 
 
-def _arr_safe(c: str) -> Column:
-    """Null-safe array column (null → empty array<string>)."""
-    return F.coalesce(F.col(c), F.array().cast("array<string>"))
+def sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal that reads back as exactly
+    ``s``: backslash and quote are escaped, and the ``$`` of a ``${`` is
+    written ``\\u0024``, since Spark substitutes ``${name}`` variables
+    in the SQL text before it parses the literal."""
+    body = s.replace("\\", "\\\\").replace("'", "\\'").replace("${", "\\u0024{")
+    return f"'{body}'"
+
+
+# regex operands, as SQL literals
+_DOT = sql_string(r"\.")
+_FILENAME_PUNCT = sql_string("[:\"']")
+_GRANT_MONTH = sql_string(r"grants?-(\d{4}_\d{2})")
+_HEX_FLOAT = sql_string("(?i)^[+-]?0x")
+_JAVA_SUFFIX = sql_string("[0-9.][dDfF]$")
+_BAD_UNDERSCORE = sql_string("(^_)|(_$)|(_[^0-9])|([^0-9]_)")
+
+
+def arr_safe(arr: str) -> str:
+    """Null-safe string array (null → empty array<string>)."""
+    return f"coalesce({arr}, {EMPTY_STRINGS})"
+
 
 # ---------------------------------------------------------------------------
 # F1/S3/S4 — filename functions
 # ---------------------------------------------------------------------------
 
 
-def strip_filename(col: Column) -> Column:
+def strip_filename(col: str) -> str:
     """F1 (extractor.py:23-26,55-65): normalise a dataset filename —
     '/'→'-fs-', strip ':' '"' "'", ' '→'_', '.'→'-', lowercase."""
-    out = F.regexp_replace(col, "/", "-fs-")
-    out = F.regexp_replace(out, "[:\"']", "")
-    out = F.regexp_replace(out, " ", "_")
-    out = F.regexp_replace(out, "\\.", "-")
-    return F.lower(out)
+    out = f"regexp_replace({col}, '/', '-fs-')"
+    out = f"regexp_replace({out}, {_FILENAME_PUNCT}, '')"
+    out = f"regexp_replace({out}, ' ', '_')"
+    out = f"regexp_replace({out}, {_DOT}, '-')"
+    return f"lower({out})"
 
 
-def filename_contains(col: Column, substring: str, inverse: bool = False) -> Column:
+def filename_contains(col: str, substring: str, inverse: bool = False) -> str:
     """S3 (extractor.py:84-95): keep/skip by normalised-name substring."""
-    pred = strip_filename(col).contains(substring.lower())
-    return ~pred if inverse else pred
+    pred = f"contains({strip_filename(col)}, {sql_string(substring.lower())})"
+    return f"NOT {pred}" if inverse else pred
 
 
-def grant_date_from_filename(col: Column) -> Column:
+def grant_date_from_filename(col: str) -> str:
     """S4 (extractor.py:78-81): 'uspto-grants-YYYY_MM' → timestamp.
     The reference parses with '%Y_%M' (minutes — a quirk it itself
     documents as a bug); we parse the intended 'yyyy_MM' month."""
-    raw = F.regexp_extract(col, r"grants?-(\d{4}_\d{2})", 1)
-    return F.try_to_timestamp(F.when(raw != "", raw), F.lit("yyyy_MM"))
+    raw = f"regexp_extract({col}, {_GRANT_MONTH}, 1)"
+    return f"try_to_timestamp(nullif({raw}, ''), 'yyyy_MM')"
 
 
 # ---------------------------------------------------------------------------
@@ -53,25 +82,26 @@ def grant_date_from_filename(col: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def rxn_segments(rxn_str: Column) -> Column:
+def rxn_segments(rxn_str: str) -> str:
     """F2 (extractor.py:160-180): drop the CXSMILES extension
     (everything after the first space), then split on '>'. Valid
     reaction strings have exactly 3 segments; callers gate on
     :func:`rxn_is_valid`."""
-    return F.split(F.split(rxn_str, " ")[0], ">")
+    return f"split(split({rxn_str}, ' ')[0], '>')"
 
 
-def rxn_is_valid(rxn_str: Column) -> Column:
-    return F.size(rxn_segments(rxn_str)) == 3
+def rxn_is_valid(rxn_str: str) -> str:
+    return f"size({rxn_segments(rxn_str)}) = 3"
 
 
-def rxn_role(rxn_str: Column, idx: int) -> Column:
+def rxn_role(rxn_str: str, idx: int) -> str:
     """Segment idx∈{0:reactants, 1:agents, 2:products}, '.'-split into
     a molecule list (extractor.py:191-198); empty segment → []."""
-    seg = F.get(rxn_segments(rxn_str), idx)
-    return F.when(
-        seg.isNull() | (seg == ""), F.array().cast("array<string>")
-    ).otherwise(F.split(seg, "\\."))
+    seg = f"get({rxn_segments(rxn_str)}, {int(idx)})"
+    return (
+        f"CASE WHEN {seg} IS NULL OR {seg} = '' THEN {EMPTY_STRINGS} "
+        f"ELSE split({seg}, {_DOT}) END"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -87,46 +117,40 @@ TEMP_CONTROL_CELSIUS = {
 }
 
 
-def temperature_to_celsius(value: Column, unit: Column, control_type: Column) -> Column:
+def temperature_to_celsius(value: str, unit: str, control_type: str) -> str:
     """F6 (extractor.py:424-455): F→C, K→C, C passthrough; when no
     measurement, fall back to the control-type default."""
     measured = (
-        F.when(unit == "FAHRENHEIT", (value - 32.0) * 5.0 / 9.0)
-        .when(unit == "KELVIN", value - 273.15)
-        .when(unit == "CELSIUS", value)
+        f"CASE WHEN ({unit}) = 'FAHRENHEIT' THEN (({value}) - 32.0D) * 5.0D / 9.0D "
+        f"WHEN ({unit}) = 'KELVIN' THEN ({value}) - 273.15D "
+        f"WHEN ({unit}) = 'CELSIUS' THEN {value} END"
     )
-    control = F.when(control_type.isNull(), F.lit(None).cast("double"))
-    for name, c in TEMP_CONTROL_CELSIUS.items():
-        control = F.when(control_type == name, F.lit(c)).otherwise(control)
-    return F.coalesce(measured, control)
+    control = " ".join(f"WHEN {sql_string(k)} THEN {v!r}D" for k, v in TEMP_CONTROL_CELSIUS.items())
+    return f"coalesce({measured}, CASE ({control_type}) {control} END)"
 
 
-def time_to_hours(value: Column, unit: Column) -> Column:
+def time_to_hours(value: str, unit: str) -> str:
     """F7 (extractor.py:458-474): min/60, s/3600, day*24 → hours,
-    rounded to 2 places with HALF_EVEN (r9, closing the r8 ledgered
-    ceiling): the reference's Python round() is banker's rounding, so
-    F.bround matches it at exactly-representable .xx5 boundaries
-    (bround(0.125, 2) = 0.12 = Python; F.round gave 0.13). All three
-    twins move in lockstep: this Column fn, sql_registry's
-    time_to_hours, and the oracle-side DBROUND macro. Residual
+    rounded to 2 places with HALF_EVEN: the reference's Python round()
+    is banker's rounding, so bround matches it at exactly-representable
+    .xx5 boundaries (bround(0.125, 2) = 0.12 = Python; HALF_UP gives
+    0.13). The oracle-side DBROUND macro rounds the same way. Residual
     ceiling documented on DBROUND: bround works on the double's
-    shortest repr, Python on the true binary value — they still
-    differ on non-dyadic ...5-printing doubles (2.675 → 2.68 vs
-    Python 2.67)."""
-    hours = (
-        F.when(unit == "MINUTE", value / 60.0)
-        .when(unit == "SECOND", value / 3600.0)
-        .when(unit == "DAY", value * 24.0)
-        .when(unit == "HOUR", value)
+    shortest repr, Python on the true binary value — they still differ
+    on non-dyadic ...5-printing doubles (2.675 → 2.68 vs Python 2.67)."""
+    return (
+        f"bround(CASE WHEN ({unit}) = 'MINUTE' THEN ({value}) / 60.0D "
+        f"WHEN ({unit}) = 'SECOND' THEN ({value}) / 3600.0D "
+        f"WHEN ({unit}) = 'DAY' THEN ({value}) * 24.0D "
+        f"WHEN ({unit}) = 'HOUR' THEN {value} END, 2)"
     )
-    return F.bround(hours, 2)
 
 
-def yield_percentage(value: Column, measurement_type: Column) -> Column:
+def yield_percentage(value: str, measurement_type: str) -> str:
     """F8 (extractor.py:404-408): type==PERCENTAGEYIELD → round(v,2).
     HALF_EVEN like the reference's Python round() — see
     :func:`time_to_hours` for the rounding contract."""
-    return F.when(measurement_type == "PERCENTAGEYIELD", F.bround(value, 2))
+    return f"CASE WHEN ({measurement_type}) = 'PERCENTAGEYIELD' THEN bround({value}, 2) END"
 
 
 # ---------------------------------------------------------------------------
@@ -134,35 +158,33 @@ def yield_percentage(value: Column, measurement_type: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def is_number(col: Column) -> Column:
+def is_number(col: str) -> str:
     """F10 (extractor.py:754-771): parses as Python int()/float() —
     including the numeric-underscore rule ('1_000' IS a number, '1_' /
     '_1' / '1__0' are not: every underscore must sit between digits).
-    Pure expression: a digit-sandwich regexp gate plus try_cast on the
-    underscore-stripped string, MINUS the two Java-isms Spark's cast
-    accepts but Python float() rejects (review finding, r8, verified
-    live): a trailing [dDfF] suffix after a digit/dot ('1d', '2.5f',
-    '1e5d') and hex-float literals ('0x1p3'). DuckDB's TRY_CAST
-    already matches Python on both (and on inf/nan forms), so this
-    also closes a latent engine-vs-oracle divergence."""
-    t = F.trim(col)
-    java_only = t.rlike("(?i)^[+-]?0x") | t.rlike("[0-9.][dDfF]$")
-    plain = col.try_cast("double").isNotNull() & ~java_only
-    bad_underscore = col.rlike("(^_)|(_$)|(_[^0-9])|([^0-9]_)")
-    stripped_ok = (
-        F.regexp_replace(col, "_", "").try_cast("double").isNotNull() & ~java_only
+    A digit-sandwich regexp gate plus try_cast on the underscore-stripped
+    string, MINUS the two Java-isms Spark's cast accepts but Python
+    float() rejects: a trailing [dDfF] suffix after a digit/dot ('1d',
+    '2.5f', '1e5d') and hex-float literals ('0x1p3'). DuckDB's TRY_CAST
+    matches Python on both (and on inf/nan forms), so the engine and the
+    oracle agree. Null is not a number."""
+    t = f"trim({col})"
+    return (
+        f"CASE WHEN {t} RLIKE {_HEX_FLOAT} OR {t} RLIKE {_JAVA_SUFFIX} THEN false "
+        f"WHEN contains({col}, '_') THEN NOT (({col}) RLIKE {_BAD_UNDERSCORE}) "
+        f"AND try_cast(regexp_replace({col}, '_', '') AS DOUBLE) IS NOT NULL "
+        f"ELSE try_cast({col} AS DOUBLE) IS NOT NULL END"
     )
-    return F.when(col.contains("_"), ~bad_underscore & stripped_ok).otherwise(plain)
 
 
-def drop_numeric_identifiers(arr: Column) -> Column:
+def drop_numeric_identifiers(arr: str) -> str:
     """P7: strip members that parse as numbers from a role list."""
-    return F.filter(arr, lambda x: ~is_number(x))
+    return f"filter({arr}, _x -> NOT ({is_number('_x')}))"
 
 
-def drop_empty_members(arr: Column) -> Column:
+def drop_empty_members(arr: str) -> str:
     """P8 (extractor.py:879-923), unpaired half: strip ''/null."""
-    return F.filter(arr, lambda x: x.isNotNull() & (x != ""))
+    return f"filter({arr}, _x -> _x IS NOT NULL AND _x != '')"
 
 
 # ---------------------------------------------------------------------------
@@ -170,26 +192,20 @@ def drop_empty_members(arr: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def split_solvents_agents(components: Column, solvent_set: Column) -> tuple[Column, Column]:
+def split_solvents_agents(components: str, solvent_set: str) -> tuple[str, str]:
     """J1 (extractor.py:546-593 merge_to_agents): partition a component
     list into (solvents ∈ set, agents ∉ set), each sorted-distinct
     (the reference set()s both sides). ``solvent_set`` is a sorted
-    array column from the broadcast solvent dimension — membership is
-    a map-side array_contains, no shuffle at any scale."""
-    # NULL members: array_contains(set, NULL) is NULL, so a bare
-    # predicate pair would drop a null component from BOTH sides
-    # (review finding). The reference classifies None as an agent
-    # (None not in solvent set, extractor.py:546-593) — coalesce the
-    # membership test so nulls land there too.
-    is_solvent = lambda x: F.coalesce(  # noqa: E731
-        F.array_contains(solvent_set, x), F.lit(False)
-    )
-    solvents = F.array_sort(
-        F.array_distinct(F.filter(components, lambda x: is_solvent(x)))
-    )
-    agents = F.array_sort(
-        F.array_distinct(F.filter(components, lambda x: ~is_solvent(x)))
-    )
+    array from the broadcast solvent dimension — membership is a
+    map-side array_contains, no shuffle at any scale.
+
+    array_contains(set, NULL) is NULL, so the membership test is
+    coalesced to false: a null component is an agent, as in the
+    reference (None is not in the solvent set), instead of dropping
+    out of both sides."""
+    member = f"coalesce(array_contains({solvent_set}, _x), false)"
+    solvents = f"array_sort(array_distinct(filter({components}, _x -> {member})))"
+    agents = f"array_sort(array_distinct(filter({components}, _x -> NOT {member})))"
     return solvents, agents
 
 
@@ -199,8 +215,8 @@ def split_solvents_agents(components: Column, solvent_set: Column) -> tuple[Colu
 
 
 def align_yields_to_products(
-    products: Column, labelled_products: Column, labelled_yields: Column
-) -> Column:
+    products: str, labelled_products: str, labelled_yields: str
+) -> str:
     """J5 (extractor.py:519-543 match_yield_with_product): per-row
     first-match lookup — outcome yields keyed by their labelled product
     follow the rxn-string product order. array_position gives the
@@ -208,32 +224,28 @@ def align_yields_to_products(
     throw under Spark's duplicate-key policy); a nested loop in the
     reference, O(|products|²) worst-case per row here but never leaves
     the row — no shuffle."""
-    return F.transform(
-        products,
-        lambda p: F.get(
-            labelled_yields, F.array_position(labelled_products, p).cast("int") - 1
-        ),
+    return (
+        f"transform({products}, _p -> "
+        f"get({labelled_yields}, CAST(array_position({labelled_products}, _p) AS INT) - 1))"
     )
 
 
-def sort_products_longest_first(products: Column) -> Column:
+def sort_products_longest_first(products: str) -> str:
     """O5 ordering: descending SMILES length, ties lexicographic."""
-    return F.array_sort(
-        products,
-        lambda l, r: F.when(F.length(l) > F.length(r), -1)
-        .when(F.length(l) < F.length(r), 1)
-        .when(l < r, -1)
-        .when(l > r, 1)
-        .otherwise(0),
+    return (
+        f"array_sort({products}, (_l, _r) -> "
+        "CASE WHEN length(_l) > length(_r) THEN -1 WHEN length(_l) < length(_r) THEN 1 "
+        "WHEN _l < _r THEN -1 WHEN _l > _r THEN 1 ELSE 0 END)"
     )
 
 
-def yields_to_longest_product(products: Column, single_yield: Column) -> Column:
+def yields_to_longest_product(products: str, single_yield: str) -> str:
     """O5 (extractor.py:409-419): sort products by descending SMILES
     length (ties lexicographic) and attach the lone yield to the first."""
     ordered = sort_products_longest_first(products)
-    return F.transform(
-        ordered, lambda p, i: F.when(i == 0, single_yield).otherwise(F.lit(None).cast("double"))
+    return (
+        f"transform({ordered}, (_p, _i) -> "
+        f"CASE WHEN _i = 0 THEN {single_yield} ELSE CAST(NULL AS DOUBLE) END)"
     )
 
 
@@ -242,20 +254,22 @@ def yields_to_longest_product(products: Column, single_yield: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def remove_pd_c_carbon(agents: Column, has_tm: Column, procedure: Column) -> Column:
+def remove_pd_c_carbon(agents: str, has_tm: str, procedure: str) -> str:
     """P12 (extractor.py:1024-1039): if any agent has a transition
     metal OR the procedure mentions charcoal, 'C'/'[C]' in agents is
     palladium-on-carbon support, not a reagent — remove it."""
-    cond = has_tm | F.coalesce(F.lower(procedure).contains("charcoal"), F.lit(False))
-    cleaned = F.array_remove(F.array_remove(agents, "C"), "[C]")
-    return F.when(cond, cleaned).otherwise(agents)
+    cond = f"({has_tm}) OR coalesce(contains(lower({procedure}), 'charcoal'), false)"
+    return (
+        f"CASE WHEN {cond} THEN array_remove(array_remove({agents}, 'C'), '[C]') "
+        f"ELSE {agents} END"
+    )
 
 
-def impute_ice_temperature(temperature: Column, identifiers: Column) -> Column:
+def impute_ice_temperature(temperature: str, identifiers: str) -> str:
     """P13 (extractor.py:341-343,1045-1048): an 'ice' / 'ice water'
     input with no measured temperature ⇒ 0 °C."""
-    ice = F.exists(identifiers, lambda x: F.lower(x).isin("ice", "ice water"))
-    return F.coalesce(temperature, F.when(ice, 0.0))
+    ice = f"exists({identifiers}, _x -> lower(_x) IN ('ice', 'ice water'))"
+    return f"coalesce({temperature}, CASE WHEN {ice} THEN 0.0D END)"
 
 
 # ---------------------------------------------------------------------------
@@ -263,6 +277,6 @@ def impute_ice_temperature(temperature: Column, identifiers: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def parse_experiment_date(col: Column) -> Column:
+def parse_experiment_date(col: str) -> str:
     """F9 (extractor.py:484-499): 'MM/dd/yyyy', coerce-to-null."""
-    return F.try_to_timestamp(col, F.lit("MM/dd/yyyy"))
+    return f"try_to_timestamp({col}, 'MM/dd/yyyy')"

@@ -28,38 +28,17 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from orderly_spark.functions import rxn as R
 from orderly_spark.functions.chem import (
     canonical_smiles_udf,
     has_transition_metal_udf,
     morgan_fingerprint_udf,
 )
 
-# F1 (extractor.py:23-26,55-65) — mirrors functions/rxn.strip_filename.
-_STRIP_FILENAME = """
-CREATE OR REPLACE TEMPORARY FUNCTION strip_filename(s STRING) RETURNS STRING
-RETURN lower(
-  regexp_replace(
-    regexp_replace(
-      regexp_replace(regexp_replace(s, '/', '-fs-'), '[:"\\']', ''),
-      ' ', '_'),
-    '\\\\.', '-'))
-"""
 
-# F10 (extractor.py:754-771) — Python float()/int() semantics incl.
-# the digit-sandwich underscore rule; mirrors functions/rxn.is_number
-# (including the r8 Java-ism exclusions: trailing [dDfF] suffix and
-# hex-float literals, which Spark's cast accepts but Python rejects).
-_IS_NUMBER = """
-CREATE OR REPLACE TEMPORARY FUNCTION is_number(s STRING) RETURNS BOOLEAN
-RETURN CASE
-  WHEN trim(s) RLIKE '(?i)^[+-]?0x' OR trim(s) RLIKE '[0-9.][dDfF]$'
-    THEN false
-  WHEN contains(s, '_')
-    THEN NOT (s RLIKE '(^_)|(_$)|(_[^0-9])|([^0-9]_)')
-         AND try_cast(regexp_replace(s, '_', '') AS DOUBLE) IS NOT NULL
-  ELSE try_cast(s AS DOUBLE) IS NOT NULL
-END
-"""
+def _sql_function(name: str, params: str, returns: str, body: str) -> str:
+    return f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({params}) RETURNS {returns} RETURN {body}"
+
 
 # F13 (cleaner.py:913-924) — mirrors operators/cleaning.reaction_hash.
 _REACTION_HASH = """
@@ -70,49 +49,20 @@ RETURN sha2(concat_ws('.', concat(
   array_sort(transform(coalesce(products,  array()), x -> coalesce(x, 'NULL'))))), 256)
 """
 
-# F6 (extractor.py:424-455) — mirrors functions/rxn.temperature_to_celsius
-# (control-type defaults AMBIENT=25, ICE_BATH=0, DRY_ICE=-78.5,
-# LIQUID_NITROGEN=-196).
-_TEMP_TO_CELSIUS = """
-CREATE OR REPLACE TEMPORARY FUNCTION temp_to_celsius(
-    value DOUBLE, unit STRING, control_type STRING) RETURNS DOUBLE
-RETURN coalesce(
-  CASE WHEN unit = 'FAHRENHEIT' THEN (value - 32.0D) * 5.0D / 9.0D
-       WHEN unit = 'KELVIN'     THEN value - 273.15D
-       WHEN unit = 'CELSIUS'    THEN value END,
-  CASE control_type WHEN 'AMBIENT' THEN 25.0D
-                    WHEN 'ICE_BATH' THEN 0.0D
-                    WHEN 'DRY_ICE' THEN -78.5D
-                    WHEN 'LIQUID_NITROGEN' THEN -196.0D END)
-"""
-
-# F7 (extractor.py:458-474) — mirrors functions/rxn.time_to_hours.
-# bround (HALF_EVEN), in lockstep with the Column twin: the reference
-# uses Python round(), which is banker's rounding (r9).
-_TIME_TO_HOURS = """
-CREATE OR REPLACE TEMPORARY FUNCTION time_to_hours(
-    value DOUBLE, unit STRING) RETURNS DOUBLE
-RETURN bround(CASE WHEN unit = 'MINUTE' THEN value / 60.0D
-                   WHEN unit = 'SECOND' THEN value / 3600.0D
-                   WHEN unit = 'DAY'    THEN value * 24.0D
-                   WHEN unit = 'HOUR'   THEN value END, 2)
-"""
-
-# S4 (extractor.py:78-81) — mirrors functions/rxn.grant_date_from_filename.
-_GRANT_DATE = """
-CREATE OR REPLACE TEMPORARY FUNCTION grant_date_from_filename(s STRING)
-RETURNS TIMESTAMP
-RETURN try_to_timestamp(
-  nullif(regexp_extract(s, 'grants?-(\\\\d{4}_\\\\d{2})', 1), ''), 'yyyy_MM')
-"""
-
+# The extraction rules are the expressions of functions/rxn, so a SQL
+# caller and the extract pipeline run one implementation of each.
 _SQL_FUNCTIONS = (
-    _STRIP_FILENAME,
-    _IS_NUMBER,
+    _sql_function("strip_filename", "s STRING", "STRING", R.strip_filename("s")),
+    _sql_function("is_number", "s STRING", "BOOLEAN", R.is_number("s")),
     _REACTION_HASH,
-    _TEMP_TO_CELSIUS,
-    _TIME_TO_HOURS,
-    _GRANT_DATE,
+    _sql_function(
+        "temp_to_celsius",
+        "value DOUBLE, unit STRING, control_type STRING",
+        "DOUBLE",
+        R.temperature_to_celsius("value", "unit", "control_type"),
+    ),
+    _sql_function("time_to_hours", "value DOUBLE, unit STRING", "DOUBLE", R.time_to_hours("value", "unit")),
+    _sql_function("grant_date_from_filename", "s STRING", "TIMESTAMP", R.grant_date_from_filename("s")),
 )
 
 

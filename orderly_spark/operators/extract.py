@@ -30,16 +30,26 @@ from orderly_spark.functions import rxn as R
 TM_SYMBOL_REGEX = (
     "\\[[0-9]*(Ti|V|Cr|Mn|Fe|Co|Ni|Cu|Zr|Nb|Mo|Tc|Ru|Rh|Pd|Ag|Hf|Ta|W|Re|Os|Ir|Pt|Au)"
 )
+_TM = R.sql_string(TM_SYMBOL_REGEX)
+_UNPAIRED_ROLES = ("reactants", "agents", "reagents", "solvents", "catalysts")
+_ALL_ROLES = (*_UNPAIRED_ROLES, "products")
 
 
-def _tm_first(arr: Column) -> Column:
+def _has_tm(arr: str) -> str:
+    return f"exists({arr}, _x -> _x RLIKE {_TM})"
+
+
+def _tm_first(arr: str) -> str:
     """O3 stable reorder: TM-containing members first, relative order
     otherwise preserved (merge_to_agents sorted(key=has_tm,
     reverse=True) is a stable sort over the alphabetical list)."""
-    return F.concat(
-        F.filter(arr, lambda x: x.rlike(TM_SYMBOL_REGEX)),
-        F.filter(arr, lambda x: ~x.rlike(TM_SYMBOL_REGEX)),
-    )
+    return f"concat(filter({arr}, _x -> _x RLIKE {_TM}), filter({arr}, _x -> NOT (_x RLIKE {_TM})))"
+
+
+def _with_sql(df: DataFrame, exprs: dict[str, str]) -> DataFrame:
+    """One stage: each column of ``exprs`` replaced (or added) by its
+    SQL expression, all read from the columns as they were before it."""
+    return df.withColumns({c: F.expr(e) for c, e in exprs.items()})
 
 
 def extract_reactions(
@@ -59,125 +69,95 @@ def extract_reactions(
     per-role sorted-dedup (A2/O2), solvent/agent partition against the
     broadcast solvent set (J1), Pd/C support-carbon exception (P12),
     ice-temperature imputation (P13).
+
+    Each stage is one ``withColumns`` of SQL expressions from
+    :mod:`orderly_spark.functions.rxn`, so building the plan costs a
+    few py4j round trips per column, not one per expression node.
     """
     df = decoded
     if not trust_labelling:
-        valid = R.rxn_is_valid(F.col("rxn_str"))
-        df = df.filter(F.col("rxn_str").isNull() | valid)
-        has_rxn = F.col("rxn_str").isNotNull()
-        parsed_products = R.rxn_role(F.col("rxn_str"), 2)
-        df = (
-            df.withColumn(
-                "yields",
-                F.when(
-                    has_rxn,
-                    R.align_yields_to_products(
-                        parsed_products, F.col("products"), F.col("yields")
-                    ),
-                ).otherwise(F.col("yields")),
-            )
-            .withColumn(
-                "reactants",
-                F.when(has_rxn, R.rxn_role(F.col("rxn_str"), 0)).otherwise(F.col("reactants")),
-            )
-            .withColumn(
-                "agents",
-                F.when(
-                    has_rxn,
-                    F.concat(R.rxn_role(F.col("rxn_str"), 1), R._arr_safe("agents")),
-                ).otherwise(F.col("agents")),
-            )
-            .withColumn(
-                "products",
-                F.when(has_rxn, parsed_products).otherwise(F.col("products")),
-            )
-        )
+        df = df.filter(f"rxn_str IS NULL OR {R.rxn_is_valid('rxn_str')}")
 
-    # P7 + P8 on every role except products (whose yields are parallel)
-    for role in ("reactants", "agents", "reagents", "solvents", "catalysts"):
-        df = df.withColumn(
-            role,
-            R.drop_numeric_identifiers(R.drop_empty_members(R._arr_safe(role))),
-        )
-    # products↔yields: filter the pair together (extractor.py:879-923)
-    pz = F.filter(
-        F.arrays_zip(
-            R._arr_safe("products").alias("p"),
-            F.coalesce(F.col("yields"), F.array().cast("array<double>")).alias("y"),
-        ),
-        lambda s: s["p"].isNotNull() & (s["p"] != "") & ~R.is_number(s["p"]),
-    )
-    df = df.withColumn("__pz", pz)
-    df = (
-        df.withColumn("products", F.transform("__pz", lambda s: s["p"]))
-        .withColumn("yields", F.transform("__pz", lambda s: s["y"]))
-        .drop("__pz")
-    )
+        def parsed(expr: str, labelled: str) -> str:
+            return f"CASE WHEN rxn_str IS NOT NULL THEN {expr} ELSE {labelled} END"
 
-    # A2/O2: sorted-dedup on unpaired roles
-    for role in ("reactants", "agents", "reagents", "solvents", "catalysts"):
-        df = df.withColumn(role, F.array_sort(F.array_distinct(F.col(role))))
+        # yields follow the parsed product order, looked up in the
+        # labelled products this stage replaces
+        df = _with_sql(df, {
+            "yields": parsed(
+                R.align_yields_to_products(R.rxn_role("rxn_str", 2), "products", "yields"), "yields"
+            ),
+            "reactants": parsed(R.rxn_role("rxn_str", 0), "reactants"),
+            "agents": parsed(f"concat({R.rxn_role('rxn_str', 1)}, {R.arr_safe('agents')})", "agents"),
+            "products": parsed(R.rxn_role("rxn_str", 2), "products"),
+        })
 
-    # J1: merge_to_agents (extractor.py:546-593) — in the rxn-string
-    # path the labelled catalysts/solvents/reagents pool INTO agents,
-    # the pool is partitioned against the solvent dimension, catalysts
-    # and reagents are emptied, and agents get a stable TM-first order
-    # (scramble later preserves agent order on exactly this premise,
-    # cleaner.py:497-500)
+    # P7 + P8, then A2/O2 sorted-dedup, on every role except products;
+    # products and yields are parallel, so they are filtered as pairs
+    # (extractor.py:879-923) through the zipped __pz
+    stage = {
+        r: f"array_sort(array_distinct({R.drop_numeric_identifiers(R.drop_empty_members(R.arr_safe(r)))}))"
+        for r in _UNPAIRED_ROLES
+    }
+    stage["products"] = R.arr_safe("products")
+    stage["yields"] = f"coalesce(yields, {R.EMPTY_DOUBLES})"
+    df = _with_sql(df, stage)
+    keep_product = f"_s.products IS NOT NULL AND _s.products != '' AND NOT ({R.is_number('_s.products')})"
+    df = _with_sql(df, {"__pz": f"filter(arrays_zip(products, yields), _s -> {keep_product})"})
+    df = _with_sql(df, {
+        "products": "transform(__pz, _s -> _s.products)",
+        "yields": "transform(__pz, _s -> _s.yields)",
+    }).drop("__pz")
+
     if not trust_labelling:
-        comp = F.concat(
-            F.col("agents"), F.col("catalysts"), F.col("solvents"), F.col("reagents")
+        # J1: merge_to_agents (extractor.py:546-593) — in the rxn-string
+        # path the labelled catalysts/solvents/reagents pool INTO agents,
+        # the pool is partitioned against the solvent dimension, catalysts
+        # and reagents are emptied, and agents get a stable TM-first order
+        # (scramble later preserves agent order on exactly this premise,
+        # cleaner.py:497-500)
+        df = df.withColumn(
+            "__solvent_set", solvent_set if solvent_set is not None else F.expr(R.EMPTY_STRINGS)
         )
         sv, ag = R.split_solvents_agents(
-            comp, solvent_set if solvent_set is not None else F.array().cast("array<string>")
+            "concat(agents, catalysts, solvents, reagents)", "__solvent_set"
         )
-        df = (
-            df.withColumn("solvents", sv)
-            .withColumn("agents", _tm_first(ag))
-            .withColumn("reagents", F.array().cast("array<string>"))
-            .withColumn("catalysts", F.array().cast("array<string>"))
-        )
+        df = _with_sql(df, {
+            "solvents": sv,
+            "agents": _tm_first(ag),
+            "reagents": R.EMPTY_STRINGS,
+            "catalysts": R.EMPTY_STRINGS,
+        }).drop("__solvent_set")
     else:
         # labelled path keeps the roles; catalysts still get TM-first
         # (extractor.py:1052-1056 — useful when the cleaner renames
         # catalysts to reagents)
-        df = df.withColumn("catalysts", _tm_first(F.col("catalysts")))
+        df = _with_sql(df, {"catalysts": _tm_first("catalysts")})
 
     # P12: Pd/C support carbon (TM detection via bracket-symbol scan —
-    # the chem-UDF TM dimension can replace this flag when RDKit is on)
-    has_tm = F.exists(F.col("agents"), lambda x: x.rlike(TM_SYMBOL_REGEX))
-    df = df.withColumn(
-        "agents", R.remove_pd_c_carbon(F.col("agents"), has_tm, F.col("procedure_details"))
-    )
-
-    # P13: ice → 0 °C
-    df = df.withColumn(
-        "temperature",
-        R.impute_ice_temperature(
-            F.col("temperature"), F.concat(F.col("agents"), F.col("solvents"))
-        ),
-    )
-    return df
+    # the chem-UDF TM dimension can replace this flag when RDKit is on).
+    # P13: ice → 0 °C; removing 'C'/'[C]' never changes whether an ice
+    # member is present, so both read the agents before P12.
+    return _with_sql(df, {
+        "agents": R.remove_pd_c_carbon("agents", _has_tm("agents"), "procedure_details"),
+        "temperature": R.impute_ice_temperature("temperature", "concat(agents, solvents)"),
+    })
 
 
-def _name_members() -> Column:
+def _name_members() -> str:
     """Every role member of a row, as one array."""
-    return F.concat(
-        *[R._arr_safe(r) for r in ("reactants", "agents", "reagents", "solvents", "catalysts", "products")]
-    )
+    return f"concat({', '.join(R.arr_safe(r) for r in _ALL_ROLES)})"
 
 
-def _is_unresolved_name(name: Column) -> Column:
-    return R.is_number(name) | (name == "")
+def _is_unresolved_name(name: str) -> str:
+    return f"{R.is_number(name)} OR {name} = ''"
 
 
 def molecule_name_side_output(df: DataFrame) -> DataFrame:
     """S7/A1: identifiers that canonicalisation could not parse —
     with RDKit absent this degrades to 'numeric or empty', keeping the
     distinct+sort plumbing (main.py:54-89) testable."""
-    names = df.select(F.explode(_name_members()).alias("name")).where(
-        _is_unresolved_name(F.col("name"))
-    )
+    names = df.selectExpr(f"explode({_name_members()}) AS name").where(_is_unresolved_name("name"))
     from orderly_spark.sources.ord import merge_molecule_names
 
     return merge_molecule_names(names)
@@ -187,5 +167,5 @@ def unresolved_names_agg() -> Column:
     """The names :func:`molecule_name_side_output` lists, as ONE sorted
     distinct array aggregate — for ``df.observe``, so the list comes
     from a job that already scans the rows."""
-    per_row = F.filter(_name_members(), _is_unresolved_name)
-    return F.array_sort(F.array_distinct(F.flatten(F.collect_set(per_row))))
+    per_row = f"filter({_name_members()}, _x -> {_is_unresolved_name('_x')})"
+    return F.expr(f"array_sort(array_distinct(flatten(collect_set({per_row}))))")

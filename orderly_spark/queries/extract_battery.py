@@ -46,10 +46,8 @@ def x_strip_filename(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1 (extractor.py:23-26,55-65): chained replace normalisation as
     one codegen'd regexp pipeline."""
     d = load(spark, sf_dir, "documents")
-    raw = F.concat(
-        F.col("source"), F.lit("/Doc: "), F.col("doc_id").cast("string"), F.lit(" v1.2")
-    )
-    return d.select("doc_id", R.strip_filename(raw).alias("normalised"))
+    raw = "concat(source, '/Doc: ', CAST(doc_id AS STRING), ' v1.2')"
+    return d.selectExpr("doc_id", f"{R.strip_filename(raw)} AS normalised")
 
 
 # ---------------------------------------------------------------------------
@@ -104,10 +102,10 @@ def x_rxn_string_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     rs = rx.select("rid", rxn.alias("rxn"))
-    return rs.filter(R.rxn_is_valid(F.col("rxn"))).select(
+    return rs.filter(R.rxn_is_valid("rxn")).selectExpr(
         "rid",
-        F.concat_ws(",", R.rxn_role(F.col("rxn"), 1)).alias("agents_parsed"),
-        F.concat_ws(",", R.rxn_role(F.col("rxn"), 2)).alias("products_parsed"),
+        f"concat_ws(',', {R.rxn_role('rxn', 1)}) AS agents_parsed",
+        f"concat_ws(',', {R.rxn_role('rxn', 2)}) AS products_parsed",
     )
 
 
@@ -139,25 +137,13 @@ def x_unit_conversions(spark: SparkSession, sf_dir: str) -> DataFrame:
     defaults, time min/s/day→hours with round(2) — event_type plays
     the unit enum."""
     e = load(spark, sf_dir, "events")
-    unit = (
-        F.when(F.col("event_type") == "click", "FAHRENHEIT")
-        .when(F.col("event_type") == "view", "KELVIN")
-        .when(F.col("event_type") == "purchase", "CELSIUS")
-    )
-    control = (
-        F.when(F.col("event_type") == "signup", "AMBIENT")
-        .when(F.col("event_type") == "error", "DRY_ICE")
-    )
-    tunit = (
-        F.when(F.col("event_type") == "click", "MINUTE")
-        .when(F.col("event_type") == "view", "SECOND")
-        .when(F.col("event_type") == "error", "DAY")
-        .otherwise("HOUR")
-    )
-    return e.select(
+    unit = "CASE event_type WHEN 'click' THEN 'FAHRENHEIT' WHEN 'view' THEN 'KELVIN' WHEN 'purchase' THEN 'CELSIUS' END"
+    control = "CASE event_type WHEN 'signup' THEN 'AMBIENT' WHEN 'error' THEN 'DRY_ICE' END"
+    tunit = "CASE event_type WHEN 'click' THEN 'MINUTE' WHEN 'view' THEN 'SECOND' WHEN 'error' THEN 'DAY' ELSE 'HOUR' END"
+    return e.selectExpr(
         "event_id",
-        R.temperature_to_celsius(F.col("value"), unit, control).alias("celsius"),
-        R.time_to_hours(F.col("value"), tunit).alias("hours"),
+        f"{R.temperature_to_celsius('value', unit, control)} AS celsius",
+        f"{R.time_to_hours('value', tunit)} AS hours",
     )
 
 
@@ -195,10 +181,10 @@ def x_date_parsing(spark: SparkSession, sf_dir: str) -> DataFrame:
     datestr = F.when((F.col("rid") % 7) == 0, "not a date").otherwise(
         F.concat(mm, F.lit("/"), dd, F.lit("/"), yy)
     )
-    return rx.select(
+    return rx.select("rid", fname.alias("fname"), datestr.alias("datestr")).selectExpr(
         "rid",
-        R.grant_date_from_filename(fname).alias("grant_date"),
-        R.parse_experiment_date(datestr).alias("exp_date"),
+        f"{R.grant_date_from_filename('fname')} AS grant_date",
+        f"{R.parse_experiment_date('datestr')} AS exp_date",
     )
 
 
@@ -225,12 +211,9 @@ def x_numeric_identifier_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     '1.5e3' ARE numbers (Python float() semantics incl. the
     digit-sandwiched-underscore rule, SURVEY F10), 'x35' is not."""
     rx = _reactions(spark, sf_dir)
-    noisy = F.concat(
-        F.col("reactants"),
-        F.array(F.lit("35"), F.lit("x35"), F.lit("1.5e3"), F.lit("1_000"), F.lit("")),
-    )
+    noisy = "concat(reactants, array('35', 'x35', '1.5e3', '1_000', ''))"
     kept = R.drop_empty_members(R.drop_numeric_identifiers(noisy))
-    return rx.select("rid", F.concat_ws(",", kept).alias("kept"))
+    return rx.selectExpr("rid", f"concat_ws(',', {kept}) AS kept")
 
 
 # ---------------------------------------------------------------------------
@@ -267,12 +250,9 @@ def x_solvent_agent_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_distinct(F.collect_list(F.concat(F.lit("s"), F.col("s_suppkey").cast("string"))))
         ).alias("ss")
     )
-    comp = F.concat(F.col("agents"), F.col("solvents"))
-    sv, ag = R.split_solvents_agents(comp, F.col("ss"))
-    return rx.join(F.broadcast(sset)).select(
-        "rid",
-        F.concat_ws(",", sv).alias("solvents_out"),
-        F.concat_ws(",", ag).alias("agents_out"),
+    sv, ag = R.split_solvents_agents("concat(agents, solvents)", "ss")
+    return rx.join(F.broadcast(sset)).selectExpr(
+        "rid", f"concat_ws(',', {sv}) AS solvents_out", f"concat_ws(',', {ag}) AS agents_out"
     )
 
 
@@ -300,12 +280,9 @@ def x_yield_product_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reversed product list, so alignment must invert it. First-match
     per-row lookup, no shuffle."""
     rx = _reactions(spark, sf_dir).filter(F.size("products") > 0)
-    aligned = R.align_yields_to_products(
-        F.col("products"), F.reverse(F.col("products")), F.col("yields")
-    )
-    return rx.select(
-        "rid",
-        F.concat_ws(",", F.transform(aligned, lambda y: y.cast("string"))).alias("aligned"),
+    aligned = R.align_yields_to_products("products", "reverse(products)", "yields")
+    return rx.selectExpr(
+        "rid", f"concat_ws(',', transform({aligned}, _y -> CAST(_y AS STRING))) AS aligned"
     )
 
 
@@ -355,9 +332,9 @@ def x_tm_first_and_pd_c(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = rx.join(F.broadcast(tm)).withColumn(
         "agents_c", F.concat(F.col("agents"), F.array(F.lit("C")))
     )
-    has_tm = F.exists(F.col("agents"), lambda x: F.array_contains(F.col("ts"), x))
-    procedure = F.when((F.col("rid") % 5) == 0, "heated over charcoal")
-    cleaned = R.remove_pd_c_carbon(F.col("agents_c"), has_tm, procedure)
+    has_tm = "exists(agents, _x -> array_contains(ts, _x))"
+    procedure = "CASE WHEN rid % 5 = 0 THEN 'heated over charcoal' END"
+    cleaned = F.expr(R.remove_pd_c_carbon("agents_c", has_tm, procedure))
     from orderly_spark.functions.chem import tm_first_order
 
     return df.select(
@@ -382,11 +359,9 @@ def x_ice_imputation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P13 (extractor.py:341-343,1045-1048): 'ice' identifier + null
     temperature ⇒ 0 °C; measured temperatures win."""
     rx = _reactions(spark, sf_dir)
-    temp = F.when((F.col("rid") % 3) == 0, (F.col("rid") % 40).cast("double"))
-    idents = F.when(
-        (F.col("rid") % 4) == 0, F.array(F.lit("Ice Water"), F.lit("x"))
-    ).otherwise(F.array(F.lit("x")))
-    return rx.select("rid", R.impute_ice_temperature(temp, idents).alias("temperature"))
+    temp = "CASE WHEN rid % 3 = 0 THEN CAST(rid % 40 AS DOUBLE) END"
+    idents = "CASE WHEN rid % 4 = 0 THEN array('Ice Water', 'x') ELSE array('x') END"
+    return rx.selectExpr("rid", f"{R.impute_ice_temperature(temp, idents)} AS temperature")
 
 
 # ---------------------------------------------------------------------------
@@ -414,14 +389,11 @@ def x_yield_longest_product(spark: SparkSession, sf_dir: str) -> DataFrame:
     descending SMILES length (custom array_sort comparator), attach the
     lone yield to the longest."""
     rx = _reactions(spark, sf_dir).filter(F.size("products") > 0)
-    y = (F.col("rid") % 100).cast("double")
-    attached = R.yields_to_longest_product(F.col("products"), y)
-    return rx.select(
+    attached = R.yields_to_longest_product("products", "CAST(rid % 100 AS DOUBLE)")
+    return rx.selectExpr(
         "rid",
-        F.get(R.sort_products_longest_first(F.col("products")), 0).alias("longest"),
-        F.concat_ws(
-            ",", F.transform(attached, lambda v: F.coalesce(v.cast("string"), F.lit("NULL")))
-        ).alias("attached"),
+        f"get({R.sort_products_longest_first('products')}, 0) AS longest",
+        f"concat_ws(',', transform({attached}, _v -> coalesce(CAST(_v AS STRING), 'NULL'))) AS attached",
     )
 
 
@@ -519,13 +491,8 @@ def x_yield_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     — only PERCENTAGEYIELD-typed measurements produce a value,
     round(2). Scaffold: 'click'/'view' events play PERCENTAGEYIELD."""
     e = load(spark, sf_dir, "events").filter((F.col("event_id") % 7) == 0)
-    mtype = F.when(
-        F.col("event_type").isin("click", "view"), F.lit("PERCENTAGEYIELD")
-    ).otherwise(F.col("event_type"))
-    return e.select(
-        "event_id",
-        R.yield_percentage(F.col("value") * 0.97, mtype).alias("yield_pct"),
-    )
+    mtype = "CASE WHEN event_type IN ('click', 'view') THEN 'PERCENTAGEYIELD' ELSE event_type END"
+    return e.selectExpr("event_id", f"{R.yield_percentage('value * 0.97D', mtype)} AS yield_pct")
 
 
 # ---------------------------------------------------------------------------
@@ -929,11 +896,9 @@ def x_real_solvent_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     known non-solvent on every 4th key) plus one synthetic agent; the
     set intersection/difference must route members exactly as the
     dimension dictates. The oracle reads the same CSV."""
-    # the dimension rides as a broadcast ONE-ROW array column (the
-    # repo's standard J1 shape, sources/solvents.py:87) instead of a
-    # collected 615-element literal baked into every task's codegen
-    # (review finding); the dimension size is F.size() on that same
-    # broadcast column, so no driver job touches the CSV at all
+    # the dimension rides as a broadcast ONE-ROW array column (the J1
+    # shape of sources/solvents.solvent_smiles_set), and its size is
+    # F.size() on that same column, so no driver job touches the CSV
     dim = SV.default_solvents(spark)
     sset = SV.solvent_smiles_set(
         dim.select("smiles").where(F.col("smiles").isNotNull()).distinct()
@@ -953,11 +918,9 @@ def x_real_solvent_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     members = F.array(first, F.concat(F.lit("Zz"), pk.cast("string")))
-    solv, agents = R.split_solvents_agents(members, F.col("solvent_set"))
-    return p.select(
-        pk.alias("pk"),
-        F.concat_ws(",", solv).alias("solvents_out"),
-        F.concat_ws(",", agents).alias("agents_out"),
+    solv, agents = R.split_solvents_agents("members", "solvent_set")
+    return p.select(pk.alias("pk"), members.alias("members"), "solvent_set").selectExpr(
+        "pk", f"concat_ws(',', {solv}) AS solvents_out", f"concat_ws(',', {agents}) AS agents_out"
     )
 
 

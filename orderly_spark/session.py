@@ -17,6 +17,15 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+#: Size of the JVM-wide cache of compiled generated classes. Invariant:
+#: it holds the working set of several passes, so a repeated plan never
+#: recompiles. An ``ord_e2e`` pass (extract, clean, gen-fp) compiles
+#: ~125 classes and a ``registry_hot`` pass ~215; Spark's default of 100
+#: is smaller than one pass, and its LRU then evicts every class before
+#: its next use. An entry is ~2.5 KB of bytecode plus a ~7.5 KB source
+#: key, so 1000 entries cost at most ~20 MB of driver heap.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def _cpus() -> int:
     try:
@@ -44,25 +53,21 @@ def get_spark(app_name: str = "orderly_spark", *, shuffle_partitions: int | None
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # r15 (optimization round, guide §2.2/§2.5): AQE's coalescing is
-        # byte-targeted and blind to downstream per-row CPU. Several
-        # pipelines run CPU-heavy operators (tokenise/shingle explode,
-        # per-pair array_intersect verify, collect_set finalisation)
-        # DOWNSTREAM of an exchange whose payload is only a few hundred
-        # KB; the default 1M minPartitionSize floor then coalesces those
-        # exchanges to 1-4 partitions and the CPU-bound tail runs on
-        # 1-4 cores (measured: training-prep's dedup-window exchange,
-        # 390 KB, coalesced to ONE task that burned 5.2 s of the 5.5 s
-        # slot). A lower floor keeps parallelismFirst (the default)
-        # effective for small-byte/high-CPU states; at cluster scale
-        # post-shuffle partitions are hundreds of MB, so the floor is
-        # never the binding constraint there — this is parameterised,
-        # not a local[32] magic number.
+        # AQE's coalescing targets bytes and is blind to per-row CPU. A
+        # CPU-heavy operator downstream of a small exchange (tokenise or
+        # shingle explode, per-pair array_intersect verify, collect_set
+        # finalisation behind a few hundred KB of shuffle) must still
+        # spread over every core, so the coalescing floor sits below
+        # the 1M default: at that default a 390 KB dedup-window exchange
+        # coalesced to one task that ran 5.2 s of a 5.5 s slot. At
+        # cluster scale post-shuffle partitions are hundreds of MB and
+        # the floor never binds.
         .config(
             "spark.sql.adaptive.coalescePartitions.minPartitionSize",
             os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "16k"),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
@@ -76,3 +81,16 @@ def get_spark(app_name: str = "orderly_spark", *, shuffle_partitions: int | None
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> tuple[int, float | None]:
+    """(classes compiled, seconds spent compiling them) by this JVM's
+    code generator so far, from Spark's ``CodegenMetrics``. The seconds
+    sum the compile-time histogram's samples; once the JVM has compiled
+    more classes than the histogram retains (1028), the sum is no longer
+    the total and the seconds are None."""
+    h = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    n, snap = h.getCount(), h.getSnapshot()
+    if snap.size() < n:
+        return n, None
+    return n, spark._jvm.java.util.Arrays.stream(snap.getValues()).sum() / 1000.0

@@ -302,8 +302,10 @@ def merge_molecule_names(names: DataFrame, col: str = "name") -> DataFrame:
 
 
 def save_name_list(df: DataFrame, path: str, col: str = "name") -> None:
-    """S7 sink (orderly/data/util.py:10-21): one-column sorted CSV."""
-    df.select(col).orderBy(col).coalesce(1).write.mode("overwrite").option(
+    """S7 sink (orderly/data/util.py:10-21): one-column sorted CSV.
+    The rows move to one partition and are sorted there: the same bytes
+    as a global sort, without its range-partitioning sample job."""
+    df.select(col).repartition(1).sortWithinPartitions(col).write.mode("overwrite").option(
         "header", "true"
     ).csv(path)
 

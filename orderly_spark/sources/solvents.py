@@ -23,6 +23,8 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from orderly_spark.functions.rxn import sql_string
+
 PACKAGED_SOLVENTS_CSV = os.path.join(os.path.dirname(os.path.dirname(__file__)), "data", "solvents.csv")
 
 # (name, alt_name, smiles) — common solvents, public knowledge
@@ -91,6 +93,16 @@ def solvent_smiles_set(solvents: DataFrame) -> DataFrame:
     return solvents.agg(
         F.array_sort(F.collect_set("smiles")).alias("solvent_set")
     )
+
+
+def solvent_set_literal(solvents: DataFrame) -> Column | None:
+    """The J1 membership set collected once and shipped as ONE literal
+    array expression (None when the dimension has no SMILES). The set is
+    written as SQL text and parsed JVM-side, so building it costs O(1)
+    py4j round trips whatever its size; a Column built one ``F.lit`` per
+    member costs ~4 per member."""
+    smiles = solvent_smiles_set(solvents).collect()[0].solvent_set
+    return F.expr(f"array({', '.join(map(sql_string, smiles))})") if smiles else None
 
 
 def apply_name_replacements(

@@ -290,10 +290,11 @@ def test_cli_job_counts_and_name_list(spark, tmp_path):
             "--output-path", str(tmp_path / "fp"), "--fp-size", "64"]),
     }
     # extract: solvents CSV read, solvent-set collect (2), the write, the
-    # name-list CSV (3: a sorted write under AQE). clean: its pipeline
+    # name-list CSV (2: the one-partition exchange, then the sorted
+    # write; no range-partitioning sample job). clean: its pipeline
     # and split barriers plus the two writes; no job decides a plan
     # shape. gen-fp: the input schema read and the write.
-    assert jobs == {"extract": 7, "clean": 17, "gen-fp": 2}
+    assert jobs == {"extract": 6, "clean": 17, "gen-fp": 2}
 
     decoded = O.decode_reactions(O.scan_ord_files(spark, str(data)), decoder=O.json_decoder)
     want = molecule_name_side_output(decoded)
@@ -304,3 +305,71 @@ def test_cli_job_counts_and_name_list(spark, tmp_path):
         return "".join(f.read_text() for f in sorted(d.glob("*.csv")))
 
     assert csv_text(ex / "molecule_names") == csv_text(tmp_path / "want_names")
+
+
+def _fixture_pipeline(data: Path, out: Path, *extract_args: str) -> None:
+    """extract → clean → gen-fp through the CLI, as a user runs it."""
+    assert main(["extract", "--data-path", str(data), "--output-path", str(out / "ex"),
+                 "--decoder", "json", *extract_args]) == 0
+    assert main(["clean", "--ord-extraction-path", str(out / "ex" / "extracted_ords"),
+                 "--molecules-to-remove-path", str(out / "ex" / "molecule_names"),
+                 "--output-path", str(out / "cl"), "--min-frequency-of-occurrence", "2",
+                 "--num-agent", "2"]) == 0
+    assert main(["gen-fp", "--clean-data-path", str(out / "cl" / "train.parquet"),
+                 "--output-path", str(out / "fp"), "--fp-size", "64"]) == 0
+
+
+def test_cli_pipeline_reuses_generated_code(spark, workdir, tmp_path):
+    """The JVM's cache of generated classes holds a whole pass: running
+    the same pipeline again compiles at most a tenth of the classes the
+    first run compiled. A cache smaller than one pass's working set
+    (~125 classes) evicts every class before its reuse, and each pass
+    recompiles nearly all of them."""
+    from orderly_spark.session import codegen_compiles
+
+    compiled = []
+    for k in range(2):
+        before = codegen_compiles(spark)[0]
+        _fixture_pipeline(workdir / "data", tmp_path / f"pass{k}")
+        compiled.append(codegen_compiles(spark)[0] - before)
+    assert compiled[1] * 10 <= compiled[0], compiled
+
+
+def test_cli_solvent_set_escapes_sql_literals(spark, tmp_path):
+    """--solvents-path members holding a backslash, a quote or a
+    ``${...}`` reach the SQL solvent-set literal intact: extract routes
+    them to solvents exactly as the same set built as one Column
+    literal per member does."""
+    import csv
+
+    from orderly_spark.operators.extract import extract_reactions
+    from orderly_spark.sources import solvents as SV
+
+    # '.' splits reaction-string members, so the substituted variable
+    # has a dot-free name
+    spark.conf.set("solvent", "substituted")
+    odd = ["C/C=C\\C", "O'C", "Cl\\'", "\\\\", "C${solvent}", "$"]
+    sv_csv = tmp_path / "solvents.csv"
+    with sv_csv.open("w", newline="") as fh:
+        w = csv.writer(fh)
+        w.writerow(["solvent_name_1", "smiles"])
+        w.writerows([[f"s{i}", s] for i, s in enumerate(odd + ["O"])])
+    data = tmp_path / "data"
+    data.mkdir()
+    (data / "a.pb.gz").write_bytes(O.fake_dataset_bytes([
+        {"rxn_str": f"CC>{'.'.join(odd)}.N>CCO", "reactants": [], "products": ["CCO"],
+         "yields": [50.0], "agents": ["O"], "solvents": ["C/C=C\\C"], "is_mapped": False},
+    ]))
+    out = tmp_path / "ex"
+    assert main(["extract", "--data-path", str(data), "--output-path", str(out), "--decoder", "json",
+                 "--solvents-path", str(sv_csv)]) == 0
+    got = spark.read.parquet(str(out / "extracted_ords")).select("solvents", "agents").collect()
+
+    dim = SV.load_solvents_csv(spark, str(sv_csv))
+    members = SV.solvent_smiles_set(dim).collect()[0].solvent_set
+    assert sorted(members) == sorted(odd + ["O"])
+    decoded = O.decode_reactions(O.scan_ord_files(spark, str(data)), decoder=O.json_decoder)
+    want = extract_reactions(decoded, solvent_set=F.array(*[F.lit(s) for s in members]))
+    assert got == want.select("solvents", "agents").collect()
+    assert got[0].solvents == sorted(odd + ["O"]) and got[0].agents == ["N"]
+    spark.conf.unset("solvent")

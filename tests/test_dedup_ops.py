@@ -217,12 +217,15 @@ def test_prefix_filter_jaccard_equals_bruteforce(spark, docs):
 
 
 def test_prefix_filter_sid_is_injective_on_corpus(spark, sf_smoke):
-    """r16: the verify arrays use sid = xxhash64(shingle) — a pure
-    function of the shingle (retry-safe, unlike the r15 window-min
-    monotonically_increasing_id, which could mix mid generations under
-    a fetch-failure partial recompute). Jaccard is exact iff the
-    shingle→sid map is injective ON THE DATA; audit it on the real
-    (boilerplate-skewed) corpus: distinct shingles == distinct sids."""
+    """The verify arrays use sid = xxhash64(shingle), a pure function
+    of the shingle and so retry-safe. Jaccard is exact iff the
+    shingle→sid map is injective on the data. Collision bound: a
+    verified candidate pair of docs holding na and nb shingles is
+    misread only if one of its na·nb cross pairs of DIFFERENT shingles
+    shares a 64-bit hash, probability ≈ na·nb/2^64 per candidate
+    (derivation at operators/dedup.py, prefix_filter_jaccard_pairs).
+    Audited here on the real (boilerplate-skewed) corpus: distinct
+    shingles == distinct sids."""
     from orderly_spark.operators.text import shingles, tokens
     from orderly_spark.tables import load
 

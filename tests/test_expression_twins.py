@@ -762,7 +762,7 @@ def test_is_number_python_semantics_three_way():
 
     want = {v: py_ok(v) for v in vals}
     df = spark.createDataFrame([(v,) for v in vals], "v string")
-    got_fn = {r.v: r.ok for r in df.select("v", is_number(F.col("v")).alias("ok")).collect()}
+    got_fn = {r.v: r.ok for r in df.select("v", F.expr(is_number("v")).alias("ok")).collect()}
     assert got_fn == want
     df.createOrReplaceTempView("__isnum_t")
     got_sql = {

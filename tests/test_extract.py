@@ -19,7 +19,7 @@ def one(spark, expr, **cols):
 def test_strip_filename(spark):
     got = one(
         spark,
-        R.strip_filename(F.col("f")),
+        F.expr(R.strip_filename("f")),
         f=("string", "ord_data/Uspto: 'grants' V1.2 file"),
     )
     assert got == "ord_data-fs-uspto_grants_v1-2_file"
@@ -34,11 +34,11 @@ def test_rxn_string_parse(spark):
         ],
         "rxn string",
     )
-    out = df.select(
-        R.rxn_is_valid(F.col("rxn")).alias("ok"),
-        R.rxn_role(F.col("rxn"), 0).alias("r"),
-        R.rxn_role(F.col("rxn"), 1).alias("a"),
-        R.rxn_role(F.col("rxn"), 2).alias("p"),
+    out = df.selectExpr(
+        f"{R.rxn_is_valid('rxn')} AS ok",
+        f"{R.rxn_role('rxn', 0)} AS r",
+        f"{R.rxn_role('rxn', 1)} AS a",
+        f"{R.rxn_role('rxn', 2)} AS p",
     ).collect()
     assert [r.ok for r in out] == [True, False, True]
     assert out[0].r == ["CC", "O"] and out[0].a == ["N"] and out[0].p == ["CCO"]
@@ -61,7 +61,7 @@ def test_temperature_conversion(spark):
     got = [
         r.t
         for r in df.select(
-            R.temperature_to_celsius(F.col("v"), F.col("u"), F.col("c")).alias("t")
+            F.expr(R.temperature_to_celsius("v", "u", "c")).alias("t")
         ).collect()
     ]
     want = [w for *_, w in cases]
@@ -75,7 +75,7 @@ def test_time_conversion_rounding(spark):
         [(90.0, "MINUTE"), (30.0, "SECOND"), (2.0, "DAY"), (1.5, "HOUR")],
         "v double, u string",
     )
-    got = [r.h for r in df.select(R.time_to_hours(F.col("v"), F.col("u")).alias("h")).collect()]
+    got = [r.h for r in df.select(F.expr(R.time_to_hours("v", "u")).alias("h")).collect()]
     assert got == [1.5, 0.01, 48.0, 1.5]  # 30s → 0.008333 → round 0.01
 
 
@@ -91,7 +91,7 @@ def test_time_conversion_half_even_at_xx5_boundary(spark):
         [(7.5, "MINUTE"), (8.1, "MINUTE"), (0.375, "HOUR"), (0.385, "HOUR")],
         "v double, u string",
     )
-    got = [r.h for r in df.select(R.time_to_hours(F.col("v"), F.col("u")).alias("h")).collect()]
+    got = [r.h for r in df.select(F.expr(R.time_to_hours("v", "u")).alias("h")).collect()]
     # dyadic ties: exact Python agreement (the r9 fix's target class)
     assert got[0] == round(7.5 / 60, 2) == 0.12
     assert got[2] == round(0.375, 2) == 0.38
@@ -116,7 +116,7 @@ def test_is_number_python_semantics(spark):
         "nan": True,  # float('nan') parses in Python AND Spark cast
     }
     df = spark.createDataFrame([(k,) for k in cases], "s string")
-    got = {r.s: r.n for r in df.select("s", R.is_number(F.col("s")).alias("n")).collect()}
+    got = {r.s: r.n for r in df.select("s", F.expr(R.is_number("s")).alias("n")).collect()}
     assert got == cases
 
 
@@ -124,8 +124,8 @@ def test_split_solvents_agents(spark):
     df = spark.createDataFrame(
         [(["O", "CCO", "N", "O"],)], "comp array<string>"
     ).withColumn("sset", F.array(F.lit("CCO"), F.lit("O")))
-    sv, ag = R.split_solvents_agents(F.col("comp"), F.col("sset"))
-    row = df.select(sv.alias("s"), ag.alias("a")).collect()[0]
+    sv, ag = R.split_solvents_agents("comp", "sset")
+    row = df.selectExpr(f"{sv} AS s", f"{ag} AS a").collect()[0]
     assert row.s == ["CCO", "O"]  # sorted distinct members of the set
     assert row.a == ["N"]
 
@@ -136,7 +136,7 @@ def test_yield_alignment_first_match(spark):
         "products array<string>, lab array<string>, ys array<double>",
     )
     got = df.select(
-        R.align_yields_to_products(F.col("products"), F.col("lab"), F.col("ys")).alias("o")
+        F.expr(R.align_yields_to_products("products", "lab", "ys")).alias("o")
     ).collect()[0].o
     # 'b' hits FIRST labelled 'b' (20.0) both times; missing → null
     assert got == [20.0, 10.0, 20.0]
@@ -144,9 +144,9 @@ def test_yield_alignment_first_match(spark):
 
 def test_yields_to_longest_product(spark):
     df = spark.createDataFrame([(["CC", "CCCO", "CCO"],)], "p array<string>")
-    ordered = df.select(R.sort_products_longest_first(F.col("p")).alias("o")).collect()[0].o
+    ordered = df.select(F.expr(R.sort_products_longest_first("p")).alias("o")).collect()[0].o
     assert ordered == ["CCCO", "CCO", "CC"]
-    ys = df.select(R.yields_to_longest_product(F.col("p"), F.lit(55.0)).alias("y")).collect()[0].y
+    ys = df.select(F.expr(R.yields_to_longest_product("p", "55.0D")).alias("y")).collect()[0].y
     assert ys == [55.0, None, None]
 
 
@@ -162,7 +162,7 @@ def test_pd_c_exception(spark):
     got = [
         r.a
         for r in df.select(
-            R.remove_pd_c_carbon(F.col("agents"), F.col("tm"), F.col("proc")).alias("a")
+            F.expr(R.remove_pd_c_carbon("agents", "tm", "proc")).alias("a")
         ).collect()
     ]
     assert got == [["[Pd]", "N"], ["N"], ["C", "N"]]
@@ -175,7 +175,7 @@ def test_ice_imputation(spark):
     )
     got = [
         r.t
-        for r in df.select(R.impute_ice_temperature(F.col("t"), F.col("ids")).alias("t")).collect()
+        for r in df.select(F.expr(R.impute_ice_temperature("t", "ids")).alias("t")).collect()
     ]
     assert got == [0.0, None, 50.0]
 
@@ -186,8 +186,8 @@ def test_grant_date_and_experiment_date(spark):
         "f string, d string",
     )
     out = df.select(
-        R.grant_date_from_filename(F.col("f")).alias("g"),
-        R.parse_experiment_date(F.col("d")).alias("e"),
+        F.expr(R.grant_date_from_filename("f")).alias("g"),
+        F.expr(R.parse_experiment_date("d")).alias("e"),
     ).collect()
     assert str(out[0].g) == "1995-11-01 00:00:00"
     assert str(out[0].e) == "1998-07-04 00:00:00"

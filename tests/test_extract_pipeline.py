@@ -80,6 +80,31 @@ def test_extract_end_to_end(spark, ord_root):
     assert spark.read.parquet(sink).count() == 3
 
 
+def test_extract_plan_builds_in_few_py4j_round_trips(spark, ord_root, monkeypatch):
+    """Building extract's plan over the packaged 615-row solvent set
+    stays within a fixed py4j budget: each stage ships SQL text, and the
+    whole set is one literal expression. Built node by node, with one
+    Column per set member, the same plan took ~6,800 round trips."""
+    from orderly_spark.sources import solvents as SV
+
+    decoded = O.decode_reactions(O.scan_ord_files(spark, ord_root), decoder=O.json_decoder)
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, []
+
+    def counted(command, *args, **kwargs):
+        # py4j's own deletes of garbage-collected proxies are not plan work
+        if not command.startswith("m\nd\n"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    solvent_set = SV.solvent_set_literal(SV.default_solvents(spark))
+    extract_reactions(decoded, solvent_set=solvent_set)
+    monkeypatch.undo()
+    assert solvent_set is not None
+    assert len(sent) <= 300, len(sent)
+
+
 def test_molecule_name_side_output(spark, ord_root):
     files = O.scan_ord_files(spark, ord_root)
     decoded = O.decode_reactions(files, decoder=O.json_decoder)

@@ -39,7 +39,7 @@ def test_probe_scaled_corpus_and_stage_attribution(spark, sf_smoke, tmp_path):
     for table in LINKED:
         assert (dst / f"{table}.parquet").resolve() == Path(sf_smoke, f"{table}.parquet").resolve()
 
-    lines = _probe("--sf-dir", str(dst), "--slots", SLOT, "--reps", "1").splitlines()
+    lines = _probe("--sf-dir", str(dst), "--slots", SLOT, "--reps", "2").splitlines()
     assert len(lines) == 1
     rec = json.loads(lines[0])
     assert rec["slot"] == SLOT
@@ -48,6 +48,11 @@ def test_probe_scaled_corpus_and_stage_attribution(spark, sf_smoke, tmp_path):
     assert stages["jobs"] >= 1 and stages["tasks"] >= 1 and stages["cpu_s"] > 0, stages
     assert rec["build_s"] > 0 and rec["exec_s"] > 0
     assert len(rec["calib_py"]) == len(rec["calib_jvm"]) == 2
+    # the first rep compiles the slot's generated classes; the second
+    # finds every one of them in the cache
+    codegen = rec["codegen"]
+    assert len(codegen["classes"]) == len(codegen["compile_s"]) == 2, codegen
+    assert codegen["classes"][0] > 0 and codegen["classes"][1] == 0, codegen
 
 
 _IMPORT_CHECK = """

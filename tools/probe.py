@@ -38,7 +38,11 @@ fastest rep is reported. After the session stops, one JSON line per slot
 goes to standard output: ``build_s``, ``exec_s`` and ``rows`` of the
 fastest rep, ``stages`` (tasks, run/CPU seconds, shuffle and spill MB,
 jobs and stages of that rep's Spark jobs, read from the event log),
-``plan`` (facts from ``orderly_spark.plans.audit``) and the host
+``plan`` (facts from ``orderly_spark.plans.audit``), ``codegen`` (the
+classes each rep compiled and its seconds of compiling, one value per
+rep, from Spark's CodegenMetrics: a rep that reuses every generated
+class compiles 0; seconds are null past the first 1028 classes the JVM
+compiled, see ``orderly_spark.session.codegen_compiles``) and the host
 calibrations ``calib_py``/``calib_jvm`` as [before, after] the slots.
 ``--plans DIR`` also writes each slot's formatted plan to DIR/NAME.txt.
 Launcher settings are the benchmark's traced run (event log on, all
@@ -125,7 +129,7 @@ def run(sf_dir: str, slots: list[str], reps: int, plans: Path | None, work: Path
 
     from orderly_spark.plans.audit import audit
     from orderly_spark.registry import REGISTRY
-    from orderly_spark.session import get_spark
+    from orderly_spark.session import codegen_compiles, get_spark
     from orderly_spark.tables import TABLES, load
 
     if plans is not None:
@@ -144,12 +148,19 @@ def run(sf_dir: str, slots: list[str], reps: int, plans: Path | None, work: Path
         log(f"calib_py {calib[0][0]:.3f}s calib_jvm {calib[0][1]:.3f}s")
         for name in slots:
             runs = []
+            codegen = {"classes": [], "compile_s": []}
             for _ in range(reps):
+                before = codegen_compiles(spark)
                 with tr.span(name) as span:
                     with tr.span(f"{name}.build") as b:
                         df = REGISTRY[name].fn(spark, sf_dir)
                     with tr.span(f"{name}.exec") as e:
                         rows = df.count()
+                after = codegen_compiles(spark)
+                codegen["classes"].append(after[0] - before[0])
+                codegen["compile_s"].append(
+                    None if None in (before[1], after[1]) else round(after[1] - before[1], 4)
+                )
                 a = audit(df)
                 # as in bench.py's loop, no finished rep's DataFrame (and the
                 # checkpoints it pins) stays alive while the next rep runs
@@ -159,6 +170,7 @@ def run(sf_dir: str, slots: list[str], reps: int, plans: Path | None, work: Path
             if plans is not None:
                 (plans / f"{name}.txt").write_text(a.text)
             best[name] = r = min(runs, key=lambda run: run["span"].duration)
+            r["codegen"] = codegen
             log(f"{name}: build {r['build_s']:.2f}s exec {r['exec_s']:.2f}s ({r['rows']} rows)")
         calib.append(calibrate(spark))
     finally:
@@ -176,6 +188,7 @@ def run(sf_dir: str, slots: list[str], reps: int, plans: Path | None, work: Path
             "rows": r["rows"],
             "stages": {k: round(v, 4) for k, v in stages.items()},
             "plan": r["plan"],
+            "codegen": r["codegen"],
             "calib_py": [round(c[0], 4) for c in calib],
             "calib_jvm": [round(c[1], 4) for c in calib],
         })
