@@ -40,6 +40,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from orderly_spark.session import barrier
+
 try:  # pragma: no cover - rdkit not in harness image
     from rdkit import Chem  # type: ignore
 
@@ -201,33 +203,20 @@ def canonicalise_via_dimension(df: DataFrame, array_col: str, is_mapped_col: str
     Versus a per-row UDF this reduces RDKit work from Σ|arr| to
     |distinct molecules| and keeps the expensive stage off the fact
     shuffle path."""
-    # review fixes, each empirically confirmed against the old shape:
-    # - group by a synthetic UNIQUE row id, not by all non-array
-    #   columns (identical rows merged: 5 rows in, 4 out, arrays
-    #   concatenated) — also avoids shuffling the fact table by every
-    #   column;
+    # - rows group by a synthetic UNIQUE row id, not by all non-array
+    #   columns: identical rows must not merge, and the fact table is
+    #   not shuffled by every column;
     # - plain posexplode + left join back to the base frame, so empty/
     #   null arrays stay empty/null (posexplode_outer's (null, null)
-    #   row became a phantom [null] member);
-    # - eqNullSafe on both join keys: is_mapped is nullable, and a
-    #   plain equality nulled out EVERY member of is_mapped-null rows.
-    # - __rid is PINNED with localCheckpoint before the plan branches:
-    #   monotonically_increasing_id() is position-dependent, and the id
-    #   column feeds two join branches (exploded and the final join
-    #   back). Without pinning, a shuffle upstream / AQE replan / task
-    #   retry can re-evaluate the two branches over different row
-    #   orders, silently mismatching ids (NULL or wrong arrays). The
-    #   checkpoint materialises the id'd rows once so both branches
-    #   read the same partitions; cost is one local write of the fact
-    #   slice, which the Σ|arr|→|distinct| UDF saving dwarfs.
-    # - pairs is built from the CHECKPOINTED with_id, not the raw df
-    #   (review finding, r8): building it from df re-ran the full
-    #   upstream lineage a second time, and for a nondeterministic
-    #   upstream the pairs scan could see DIFFERENT rows than the
-    #   checkpointed frame — the broadcast join would miss molecules
-    #   and null their canon, exactly the failure the __rid pinning
-    #   exists to prevent.
-    with_id = df.withColumn("__rid", F.monotonically_increasing_id()).localCheckpoint()
+    #   row would become a phantom [null] member);
+    # - eqNullSafe on both join keys: is_mapped is nullable;
+    # - pairs is built from the pinned with_id, not the raw df: for a
+    #   nondeterministic upstream a second scan could see DIFFERENT
+    #   rows, and the broadcast join would then null their canon.
+    with_id = df.withColumn("__rid", F.monotonically_increasing_id())
+    # pinned position-dependent id: __rid feeds the exploded branch and
+    # the join back, which must see the same rows
+    with_id = barrier(with_id, "canonicalise_via_dimension.rid")
     pairs = (
         with_id.select(F.explode(F.col(array_col)).alias("m"), F.col(is_mapped_col).alias("im"))
         .distinct()

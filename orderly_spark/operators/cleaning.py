@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from orderly_spark.schema import MISSING, wide_to_array
+from orderly_spark.session import barrier
 
 CONDITION_ROLES = ("agents", "solvents", "reagents", "catalysts")
 ALL_ROLES = ("reactants", "agents", "reagents", "solvents", "catalysts", "products")
@@ -585,14 +586,12 @@ def train_test_split(df: DataFrame, cfg: CleanConfig) -> tuple[DataFrame, DataFr
     """F20 + J4 (cleaner.py:1375-1421 + 886-945): deterministic
     pseudo-random split with leakage repair; returns (train, test).
 
-    The routed relation (:func:`train_test_split_routed`) is
-    localCheckpointed before the two filters — the pair contract
-    means two consumers, and without a barrier each would re-run the
-    window AND the caller's upstream plan (AQE stage-cache reuse does
-    not fire on the copies; same evidence as clean_pipeline's rare
-    stage). A real deployment materialises both splits to sinks (S9)
-    anyway, so the barrier mirrors the deployment shape."""
-    routed = train_test_split_routed(df, cfg).localCheckpoint()
+    The routed relation (:func:`train_test_split_routed`) passes a
+    barrier before the two filters. A real deployment materialises
+    both splits to sinks (S9) anyway, so the barrier mirrors the
+    deployment shape."""
+    # two readers: the train and test filters
+    routed = barrier(train_test_split_routed(df, cfg), "train_test_split.routed")
     final_train = routed.filter(F.col("__to_train")).drop("__to_train")
     clean_test = routed.filter(~F.col("__to_train")).drop("__to_train")
     return final_train, clean_test
@@ -613,15 +612,8 @@ def clean_pipeline(df: DataFrame, molecule_names: DataFrame, cfg: CleanConfig) -
     collected to the driver at any dimension size.
 
     When the rare-molecule stage and the first dedup both run, the
-    deduped relation is ``localCheckpoint``-ed: the rare stage reads it
-    twice (value counts, membership probe), and the checkpoint runs the
-    upstream once instead of once per reader. That checkpoint is the
-    only Spark work this function runs while building. Its blocks live on
-    executor-local storage and are lost with the executor: correct in
-    local mode and on static executors; under dynamic allocation write
-    the deduped rows to a table and read them back instead, or use a
-    reliable ``checkpoint()``. The same holds for every
-    ``localCheckpoint`` barrier in this package."""
+    deduped relation passes a barrier (``session.barrier``): the only
+    Spark work this function runs while building."""
     dedup1_ran = False
     out = handle_unresolved_names(df, molecule_names, cfg)
     if cfg.num_cat == 0 and cfg.num_reag > 0:
@@ -636,7 +628,9 @@ def clean_pipeline(df: DataFrame, molecule_names: DataFrame, cfg: CleanConfig) -
         # frequency counts — the reference runs it inside the
         # rare-molecule block, not unconditionally (cleaner.py:806-828)
         if cfg.drop_duplicates:
-            out = dedup_reactions(out, cfg, include_yields=cfg.consistent_yield).localCheckpoint()
+            out = dedup_reactions(out, cfg, include_yields=cfg.consistent_yield)
+            # two readers: the rare stage's value counts and membership probe
+            out = barrier(out, "clean_pipeline.dedup1")
             dedup1_ran = True
         counts = condition_value_counts(out)
         k = cfg.min_frequency_of_occurrence

@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from orderly_spark.operators.text import seeded_md5
+from orderly_spark.session import barrier
 
 __all__ = [
     "quantize_vec",
@@ -175,22 +176,11 @@ def kmeans_fit(
     TypeError). They simply receive no assignment row; the SQL oracle
     twin filters identically.
     """
-    # r15 (optimization round, guide §2.4): Lloyd's loop drives
-    # 2 + iterations actions over `base` (the seed scan, one collect
-    # per update, the dim head) and callers immediately re-consume the
-    # final assignment — un-materialised, every one of those re-ran
-    # the caller's full upstream lineage (for the stacked RQ trainer,
-    # that lineage GROWS per level: level ℓ's collects replayed every
-    # earlier level's assign+residual chain, profiled at ~10 replay
-    # stages for a 2-level train). Materialising the (id, quantized
-    # vector) relation once is the same recipe Spark MLlib's own
-    # KMeans applies to an uncached input; the checkpoint is the
-    # training input the loop must iterate over by definition.
-    base = (
-        embeddings.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col), quantize_vec(F.col(vec_col), scale_bits).alias("__qv"))
-        .localCheckpoint()
+    base = embeddings.filter(F.col(vec_col).isNotNull()).select(
+        F.col(id_col), quantize_vec(F.col(vec_col), scale_bits).alias("__qv")
     )
+    # readers: the dim head, the seed scan, every update and the final assignment
+    base = barrier(base, "kmeans_fit.base")
     # dim from a single-row head, not a full scan
     head = base.select(F.size("__qv").alias("d")).head()
     if head is None:
@@ -634,14 +624,8 @@ def rq_adc_topk(
                 F.col("__qv"), F.element_at(cmap, F.col(f"code{lvl}")), lambda a, b: a - b
             ),
         )
-        # r15 (optimization round, guide §2.4): each level's residual
-        # state is consumed by the NEXT level's trainer (itself
-        # multiple actions) and by the final encode pass — left lazy,
-        # level ℓ+1 replayed every earlier level's assign+residual
-        # chain per action (the pagerank loop-state problem).
-        # Materialise per level: the relation is (id, residual,
-        # codes) — exactly the state a staged encoder must carry.
-        cur = cur.localCheckpoint()
+        # loop state: the next level's trainer and the final encode pass
+        cur = barrier(cur, "rq_adc_topk.residuals")
 
     # composed-centroid squared norm per vector, map-side literals
     composed = None

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from orderly_spark.operators.text import seeded_md5, shingles, tokens
+from orderly_spark.session import barrier
 
 
 def exact_dup_groups(df: DataFrame, id_col: str, key: Column) -> DataFrame:
@@ -147,6 +148,29 @@ def lsh_candidate_pairs(
     )
 
 
+def _shared_shingle_counts(df: DataFrame, id_col: str, text_col: str, shingle_n: int, op: str) -> DataFrame:
+    """(id_a, id_b, shared, na, nb) for every unordered id pair
+    (id_a < id_b) sharing a shingle: the shared distinct-shingle count
+    from the shingle self-join, and each side's distinct-shingle
+    count. Cost is Σ per-shingle df², never a document cross join."""
+    sh = df.select(
+        F.col(id_col).alias("__id"),
+        F.explode(shingles(tokens(F.col(text_col)), shingle_n)).alias("shingle"),
+    ).distinct()
+    # three readers: sizes and both self-join sides
+    sh = barrier(sh, f"{op}.shingles")
+    sizes = sh.groupBy("__id").agg(F.count(F.lit(1)).alias("n_shingles"))
+    a, b = sh.alias("a"), sh.alias("b")
+    shared = (
+        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.__id") < F.col("b.__id")))
+        .groupBy(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+    sa = sizes.select(F.col("__id").alias("id_a"), F.col("n_shingles").alias("na"))
+    sb = sizes.select(F.col("__id").alias("id_b"), F.col("n_shingles").alias("nb"))
+    return shared.join(sa, "id_a").join(sb, "id_b")
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -162,30 +186,8 @@ def ngram_jaccard_pairs(
     join: cost is Σ per-shingle df², the standard exact-similarity
     plan. Jaccard = shared / (|A| + |B| - shared) from exact distinct
     shingle counts — integer arithmetic, engine-independent."""
-    sh = (
-        df.select(
-            F.col(id_col).alias("__id"),
-            F.explode(shingles(tokens(F.col(text_col)), shingle_n)).alias("shingle"),
-        )
-        .distinct()
-        # THREE consumers (sizes + both self-join sides) — materialise
-        # once, the same measured-8x-recompute fix containment_pairs
-        # and prefix_filter_jaccard_pairs already carry (review
-        # finding, r8: this identical shape was the one left out)
-        .localCheckpoint()
-    )
-    sizes = sh.groupBy("__id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    a, b = sh.alias("a"), sh.alias("b")
-    shared = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.__id") < F.col("b.__id")))
-        .groupBy(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    sa = sizes.select(F.col("__id").alias("id_a"), F.col("n_shingles").alias("na"))
-    sb = sizes.select(F.col("__id").alias("id_b"), F.col("n_shingles").alias("nb"))
     return (
-        shared.join(sa, "id_a")
-        .join(sb, "id_b")
+        _shared_shingle_counts(df, id_col, text_col, shingle_n, "ngram_jaccard_pairs")
         .withColumn("jaccard", F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared")).cast("double"))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
@@ -239,47 +241,24 @@ def prefix_filter_jaccard_pairs(
     keep :func:`ngram_jaccard_pairs` there."""
     from pyspark.sql import Window
 
-    # The tokenize+explode+distinct pipeline runs exactly once: its
-    # ONLY consumer is the windowed pass below, whose localCheckpoint
-    # is the single materialisation point every downstream subtree
-    # (prefix sides, verify sets) reads. An earlier shape fanned
-    # (id, shingle) into five independent subtrees and needed its own
-    # barrier here (measured 8× recompute: 110 s → 14 s at 20 k docs);
-    # after the r15 windowed-pass rewrite that barrier had one
-    # consumer and only added a serial materialisation round trip.
     sh = df.select(
         F.col(id_col).alias("__id"),
         F.explode(shingles(tokens(F.col(text_col)), shingle_n)).alias("shingle"),
     ).distinct()
-    # r15 (optimization round, guide §2.4 "remove shuffles outright"):
-    # ONE windowed pass computes everything the old plan derived via
-    # three separate joins — per-shingle df (was a groupBy + join
-    # back), per-doc size n (was a second groupBy + join), and the
-    # opaque long shingle identity `sid` for the int verify arrays
-    # (was a third join against the dfreq checkpoint). Two exchanges
-    # of the (id, shingle) relation total (by shingle, then by id)
-    # instead of ~6; the per-doc rank window and the per-doc count
-    # share the second exchange, and the verify-stage collect_set
-    # reuses the checkpoint's id-partitioning with no exchange at all.
-    #   df  = count(*) over (partition by shingle) — same values as
-    #         the old groupBy, same global prefix order (df, shingle).
-    #   sid = xxhash64(shingle) — the opaque long identity for the int
-    #         verify arrays. r16 (VERDICT r15 item 3): the previous
-    #         min(monotonically_increasing_id()) over the shingle
-    #         partition was nondeterministic under task retry (a
-    #         fetch-failure partial recompute can mix mid generations
-    #         across stage attempts, and mins over two generations can
-    #         collide ACROSS shingles); xxhash64 is a pure function of
-    #         the shingle — retry-safe by construction, cheaper than a
-    #         window min, and computed map-side. It is injective up to
-    #         64-bit collisions; Jaccard only misreads a pair if that
-    #         pair's two docs hold two DIFFERENT shingles with equal
-    #         hashes, probability ≈ na·nb/2^64 per verified candidate
-    #         (~1e-8 for this corpus; ~5e-5 even at 10^9 candidates ×
-    #         10^3-shingle docs). The bijection on the actual corpus is
-    #         pinned by test (distinct shingles == distinct sids) and
-    #         the pair set by the exhaustive-twin + DuckDB oracles.
-    #         sid never enters the prefix order.
+    # ONE windowed pass over (id, shingle), two exchanges (by shingle,
+    # then by id), computes every per-row fact the later stages read:
+    #   df   = count(*) over the shingle partition; with the shingle it
+    #          is the global prefix order.
+    #   sid  = xxhash64(shingle), the long identity in the int verify
+    #          arrays: a pure function of the shingle, so retry-safe,
+    #          and computed map-side. It is injective up to 64-bit
+    #          collisions; Jaccard misreads a pair only if its two docs
+    #          hold two DIFFERENT shingles with equal hashes,
+    #          probability ≈ na·nb/2^64 per verified candidate. sid
+    #          never enters the prefix order.
+    #   rank = position in the doc's prefix order; n = the doc's size.
+    # The verify-stage collect_set reuses the barrier's id-partitioning
+    # with no exchange.
     w_sh = Window.partitionBy("shingle")
     w_id = Window.partitionBy("__id").orderBy(F.col("df"), F.col("shingle"))
     ranked = (
@@ -287,16 +266,17 @@ def prefix_filter_jaccard_pairs(
         .withColumn("sid", F.xxhash64(F.col("shingle")))
         .withColumn("rank", F.row_number().over(w_id))
         .withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("__id")))
-        .localCheckpoint()
     )
+    # readers: both prefix sides of the candidate join and the verify sets
+    ranked = barrier(ranked, "prefix_filter_jaccard_pairs.ranked")
     # ceil(t·n) = (t_num·n + t_den - 1) div t_den — integer `div`
     # end-to-end: floor of a double quotient is exact only below 2^53
     # (advice r6; safe at per-doc shingle counts, but this helper must
     # not become a latent trap if reused on corpus-scale counts)
     ceil_tn = F.expr(f"(({t_num} * n) + {t_den - 1}) div {t_den}")
     prefix_len = F.col("n") - ceil_tn + 1
-    # both sides of the candidate self-join filter the checkpointed
-    # ranked relation map-side — no recompute, no extra checkpoint
+    # both sides of the candidate self-join filter the materialised
+    # ranked relation map-side
     pre = ranked.filter(F.col("rank") <= prefix_len).select(
         "__id", "shingle", "rank", "n"
     )
@@ -345,7 +325,7 @@ def prefix_filter_jaccard_pairs(
         # the UNVERIFIED candidate set — exposed so tests can pin the
         # PRUNING itself (the verify stage would mask over-generation)
         return cand
-    # the int verify arrays come straight off the checkpointed ranked
+    # the int verify arrays come straight off the materialised ranked
     # relation (already partitioned by __id — no exchange, no join)
     sets = ranked.groupBy("__id").agg(F.collect_set("sid").alias("sset"))
     sa = sets.select(F.col("__id").alias("id_a"), F.col("sset").alias("__sa"))
@@ -439,16 +419,11 @@ def simhash_pairs(
         raise ValueError(f"bands must divide 16 into >=2-bit slices, got {bands}")
     width = 16 // bands
     mask = (1 << width) - 1
-    # r15 (optimization round, guide §2.4): the signature relation is
-    # consumed by bands × 2 subtrees (each band's union branch on each
-    # self-join side) with no common exchange — un-checkpointed, the
-    # tokenize + 16-bit majority-vote kernel re-ran per consumer (8
-    # corpus scans in the 4-band plan, seen in the registry-wide plan
-    # sweep). Materialised once it is (id, int16) per doc — the same
-    # bytes-per-row class as the LSH band-key checkpoint above.
     h = df.select(
         F.col(id_col).alias("__id"), simhash16(F.col(text_col), seed=seed).alias("sh")
-    ).localCheckpoint()
+    )
+    # bands × 2 readers: each band's union branch on each self-join side
+    h = barrier(h, "simhash_pairs.signatures")
     buckets = None
     for b in range(bands):
         sl = h.select(
@@ -498,20 +473,18 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 12) -> DataFrame:
     documents. Rounds needed = component diameter; LSH dup clusters
     are near-cliques, so 2-4 rounds converge in practice (capped at
     ``max_iterations``; the driver-side loop checks an aggregate
-    count, it never collects data). ``localCheckpoint`` truncates the
-    per-round lineage so the plan stays flat; checkpoint blocks are
-    bounded by the (small) iteration count. For planet-scale graphs
+    count, it never collects data). A per-round barrier truncates the
+    lineage so the plan stays flat; its blocks are bounded by the
+    (small) iteration count. For planet-scale graphs
     swap in the large-star/small-star variant — the per-round
     relational shape is identical.
     """
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    edges = (
-        edges.unionByName(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint()  # reused every round — cut the candidate-gen lineage once
-    )
+    edges = edges.unionByName(
+        pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
+    ).distinct()
+    # readers: the label seed and every round's join
+    edges = barrier(edges, "duplicate_clusters.edges")
     labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
         "label", F.col("id")
     )
@@ -531,25 +504,20 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 12) -> DataFrame:
             .groupBy("src")
             .agg(F.min("__nlabel").alias("__nbr"))
         )
-        new_labels = (
-            labels.join(nbr, labels["id"] == nbr["src"], "left")
-            .select(
-                "id",
-                F.least(F.col("label"), F.coalesce(F.col("__nbr"), F.col("label"))).alias("label"),
-            )
-            .localCheckpoint()
+        new_labels = labels.join(nbr, labels["id"] == nbr["src"], "left").select(
+            "id",
+            F.least(F.col("label"), F.coalesce(F.col("__nbr"), F.col("label"))).alias("label"),
         )
+        # loop state: read by the convergence check and the next round
+        new_labels = barrier(new_labels, "duplicate_clusters.labels")
         # Convergence check: labels are monotonically NON-INCREASING
         # per node (min over self+neighbours), so for NUMERIC ids
         # Σlabel strictly decreases until the fixpoint — "sum
-        # unchanged" ⟺ "no label changed". One cheap aggregate over
-        # the already-checkpointed frame per round instead of a
-        # labels⨝labels join + count. Decimal accumulation: id sums
-        # can exceed int64 at scale. NON-numeric ids (string doc ids —
-        # review finding, r8: the decimal cast THROWS under ANSI and
-        # NULLed the sum otherwise, breaking the loop after 2 rounds
-        # with wrong clusters) use an exact changed-label count
-        # against the previous checkpointed frame instead.
+        # unchanged" ⟺ "no label changed": one cheap aggregate over
+        # the materialised labels per round. Decimal accumulation: id
+        # sums can exceed int64 at scale. NON-numeric ids (string doc
+        # ids, whose decimal cast throws under ANSI) use an exact
+        # changed-label count against the previous round's labels.
         if _numeric_labels:
             new_sum = new_labels.agg(
                 F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
@@ -610,9 +578,11 @@ def duplicate_clusters_star(pairs: DataFrame, max_iterations: int = 30) -> DataF
         sym.unionByName(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
     )
-    members = sym.select(F.col("u").alias("id")).distinct().localCheckpoint()
+    # readers: the member set and the first round
+    sym = barrier(sym, "duplicate_clusters_star.edges")
+    # the final join reads the node set from rows fixed before the loop
+    members = barrier(sym.select(F.col("u").alias("id")).distinct(), "duplicate_clusters_star.members")
 
     def edge_sig(e: DataFrame):
         # order-independent fingerprint of the (directed) edge set
@@ -633,12 +603,13 @@ def duplicate_clusters_star(pairs: DataFrame, max_iterations: int = 30) -> DataF
             out = nbrs.unionByName(self_link)
         out = out.filter(F.col("a") != F.col("b"))
         # re-symmetrise: the star ops reason over full neighbourhoods
-        return (
+        out = (
             out.select(F.col("a").alias("u"), F.col("b").alias("v"))
             .unionByName(out.select(F.col("b").alias("u"), F.col("a").alias("v")))
             .distinct()
-            .localCheckpoint()
         )
+        # loop state: read by the edge signature and the next star op
+        return barrier(out, "duplicate_clusters_star.star")
 
     e = sym
     prev: object = object()
@@ -692,28 +663,7 @@ def containment_pairs(
     df-capped candidate join, so high-df boilerplate shingles should
     be stopworded upstream.
     """
-    # THREE consumers read the shingle relation (sizes + both sides of
-    # the self-join) — checkpoint it once or the tokenize/explode
-    # pipeline re-runs per consumer (the measured 8× recomputation
-    # shape prefix_filter_jaccard_pairs documents; review r7)
-    sh = (
-        df.select(
-            F.col(id_col).alias("__id"),
-            F.explode(shingles(tokens(F.col(text_col)), shingle_n)).alias("shingle"),
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    sizes = sh.groupBy("__id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    a, b = sh.alias("a"), sh.alias("b")
-    shared = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.__id") < F.col("b.__id")))
-        .groupBy(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    sa = sizes.select(F.col("__id").alias("id_a"), F.col("n_shingles").alias("na"))
-    sb = sizes.select(F.col("__id").alias("id_b"), F.col("n_shingles").alias("nb"))
-    both = shared.join(sa, "id_a").join(sb, "id_b")
+    both = _shared_shingle_counts(df, id_col, text_col, shingle_n, "containment_pairs")
     fwd = both.filter(F.col("shared") * c_den >= c_num * F.col("na")).select(
         F.col("id_a").alias("id_inner"),
         F.col("id_b").alias("id_outer"),

@@ -18,8 +18,12 @@ rank mass per edge per iteration — the deliberate price of exactness.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from orderly_spark.session import barrier
 
 DEFAULT_SCALE = 10**12
 
@@ -27,21 +31,12 @@ DEFAULT_SCALE = 10**12
 #: rank/contrib relations at or under this many nodes are broadcast in
 #: the iteration joins (16 B of data per row; ~64 B/row as a built hash
 #: relation, so the 1M default ~= 64 MB — safe even on default-sized
-#: (1g) drivers/executors, where the r15 4M cap (~256 MB, built twice
-#: per iteration) could OOM despite sitting under Spark's 8 GB hard
-#: broadcast cap — r16, ADVICE r15. Deployments with big drivers raise
-#: it via SPARK_GRAFT_PR_BROADCAST_NODES. Above the cap the shuffle
-#: plan is kept: at billions of nodes the rank table is fact-sized and
-#: broadcasting it would be the classic driver-OOM anti-pattern
-#: (guide §3.1/§5).
-import os as _os
-
-try:
-    BROADCAST_NODES_MAX = int(
-        _os.environ.get("SPARK_GRAFT_PR_BROADCAST_NODES", "") or 1_000_000
-    )
-except ValueError:
-    BROADCAST_NODES_MAX = 1_000_000
+#: (1g) drivers and executors). Deployments with big drivers raise it
+#: via SPARK_GRAFT_PR_BROADCAST_NODES; a value that is not an integer
+#: fails the import. Above the cap the shuffle plan is kept: at
+#: billions of nodes the rank table is fact-sized and broadcasting it
+#: would be the classic driver-OOM anti-pattern.
+BROADCAST_NODES_MAX = int(os.environ.get("SPARK_GRAFT_PR_BROADCAST_NODES", "") or 1_000_000)
 
 
 def pagerank_fixed_point(
@@ -63,42 +58,30 @@ def pagerank_fixed_point(
     scalar (bounded by the node set, same class as the corpus-total
     count in the LM scorer). At 100 TB: pre-partition edges by src so
     the rank join is co-located; iterations reuse that partitioning;
-    localCheckpoint every few rounds keeps the plan flat (same recipe
-    as duplicate_clusters).
+    a barrier per round keeps the plan flat (same recipe as
+    duplicate_clusters).
 
     Dangling nodes (outdeg 0) keep redistributing nothing — their rank
     mass shrinks to the base term; acceptable for the diagnostic use
     here and stated so the semantics are pinned (the classic remedy,
     spreading dangling mass uniformly, needs only one extra aggregate).
     """
-    # Materialise the caller's edge lineage ONCE before anything
-    # consumes it (review finding: nodes' checkpoint ran the full
-    # edge subtree — for the battery caller, a distinct over the
-    # fact table — and e's checkpoint then re-ran it twice more,
-    # edges side + outdeg side). nodes/outdeg/e all derive from the
-    # checkpointed frame, so the dominant shuffle is paid once.
-    edges = edges.localCheckpoint()
-    # r15 (optimization round, second pass): ONE aggregation over one
-    # union pass computes the node set AND per-node outdeg together
-    # (outdeg = how many times the node occurs as src), replacing the
-    # separate nodes-distinct and outdeg-groupBy checkpoints — one
-    # materialisation and one edges pass instead of two of each. The
-    # iteration then carries outdeg INSIDE the rank state, deleting
-    # the per-iteration ranks⋈outdeg join: rank div outdeg is read
-    # straight off the broadcast state row. Identical integer
-    # arithmetic (the division is constant across a src's edges);
-    # dangling nodes (outdeg 0) are filtered out of the contribution
-    # relation before the division (ANSI div throws on zero) — exactly
-    # the old shape, where they were absent from the outdeg join.
+    # readers: the node aggregation and every iteration's contribution join
+    edges = barrier(edges, "pagerank_fixed_point.edges")
+    # ONE aggregation over one union pass computes the node set AND
+    # per-node outdeg (how many times the node occurs as src). The
+    # iteration carries outdeg inside the rank state, so rank div
+    # outdeg is read straight off the broadcast state row; dangling
+    # nodes (outdeg 0) are filtered out of the contribution relation
+    # before the division (ANSI div throws on zero).
     nodes = (
         edges.select(F.col("src").alias("node"), F.lit(1).alias("__is_src"))
         .unionAll(edges.select(F.col("dst").alias("node"), F.lit(0).alias("__is_src")))
         .groupBy("node")
         .agg(F.sum("__is_src").alias("outdeg"))
-        # consumed in every iteration's left join, the count, and the
-        # caller's final ranking — materialise once
-        .localCheckpoint()
     )
+    # readers: the count, every iteration's left join and the caller's ranking
+    nodes = barrier(nodes, "pagerank_fixed_point.nodes")
     n = nodes.count()
     if n == 0:
         # empty graph → empty (node, rank_fp) result with the output
@@ -149,15 +132,9 @@ def pagerank_fixed_point(
             )
         )
         if it < iterations - 1:
-            # r15 (optimization round): materialise each iteration's
-            # rank state. Lazy loop state makes iteration k's broadcast
-            # embed the whole plan of iterations 1..k-1, and AQE's
-            # stage cache does not dedupe the replays (profiled: ~6
-            # full edge passes for 3 iterations). Checkpointed, each
-            # broadcast reads n materialised rows and the edge relation
-            # is scanned exactly once per iteration. The final
-            # iteration stays lazy for the caller's plan.
-            ranks = ranks.localCheckpoint()
+            # loop state: the next iteration's broadcast reads n rows;
+            # the final iteration stays lazy for the caller's plan
+            ranks = barrier(ranks, "pagerank_fixed_point.ranks")
     return ranks.select("node", "rank_fp")
 
 
@@ -193,7 +170,7 @@ def label_propagation_communities(
     Scale shape: per round, one edges⨝labels hash join on the node id
     + one (node,label) count + one max_by per node — shuffles carry
     (id,label,count) triples only, never documents; the per-round
-    ``localCheckpoint`` keeps the plan flat exactly like
+    barrier keeps the plan flat exactly like
     duplicate_clusters/pagerank. Vote aggregation is max(struct(count,
     -label)) — a single partial-aggregable expression, no window, so
     map-side combine collapses the vote table before the shuffle.
@@ -202,8 +179,9 @@ def label_propagation_communities(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .distinct()
-        .localCheckpoint()  # reused every round — cut candidate-gen lineage once
     )
+    # readers: the label seed and every round's vote join
+    edges = barrier(edges, "label_propagation_communities.edges")
     labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
@@ -220,6 +198,7 @@ def label_propagation_communities(
             # max over (count, -label): most votes, then smallest label
             .agg(F.max(F.struct(F.col("c"), (-F.col("label")).alias("nl"))).alias("w"))
             .select("node", (-F.col("w.nl")).alias("label"))
-            .localCheckpoint()
         )
+        # loop state: the next round's vote join and self-vote
+        labels = barrier(labels, "label_propagation_communities.labels")
     return labels.select("node", F.col("label").alias("community"))

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from orderly_spark.operators import dedup as D
 from orderly_spark.operators import text as T
 from orderly_spark.registry import query
+from orderly_spark.session import barrier
 from orderly_spark.tables import load
 
 TOKS = T.TOKENS_SQL("text")
@@ -460,23 +461,10 @@ def d_incremental_index_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ever. Dedup-against-self of the batch is d_minhash_lsh_pairs on
     the batch alone; this op is the cross-generation half."""
     d = load(spark, sf_dir, "documents", fan_out=True)
-    # two consumers (hits + the all-new left side) — materialise the
-    # batch's keys once instead of re-running shingle+minhash per use.
-    # r16 (guide §2.6): the eager checkpoint is submitted from a worker
-    # thread so the OLD side's plan construction (driver-side py4j +
-    # Catalyst work, independent of the batch keys) overlaps the
-    # checkpoint job instead of serialising behind it; result identical
-    # — fut.result() is the same materialised DataFrame.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        _fut = _pool.submit(
-            lambda: D.lsh_band_keys(
-                d.filter(F.col("doc_id") % 5 == 0), "doc_id", "text"
-            ).localCheckpoint()
-        )
-        old_keys = D.lsh_band_keys(d.filter(F.col("doc_id") % 5 != 0), "doc_id", "text")
-        new_keys = _fut.result()
+    new_keys = D.lsh_band_keys(d.filter(F.col("doc_id") % 5 == 0), "doc_id", "text")
+    # two readers: the index hits and the all-new left side
+    new_keys = barrier(new_keys, "d_incremental_index_dedup.new_keys")
+    old_keys = D.lsh_band_keys(d.filter(F.col("doc_id") % 5 != 0), "doc_id", "text")
     hits = (
         new_keys.join(
             old_keys.withColumnRenamed("__id", "__old"), ["band_idx", "band_hash"]
@@ -486,13 +474,11 @@ def d_incremental_index_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = hits.groupBy("__id").agg(F.count(F.lit(1)).alias("n_index_matches"))
     all_new = new_keys.select("__id").distinct()
-    # r15 (optimization round): agg is bounded by the BATCH doc count
-    # (one row per new doc with >= 1 index hit) — the side this op's
-    # contract already declares broadcastable — but it derives from
-    # the checkpointed batch keys, whose unknown stats made Catalyst
-    # plan the tail join as a SortMergeJoin (registry-wide plan
-    # sweep). Broadcast stays correct at 100 TB: the batch is the
-    # small ingest increment by construction.
+    # agg is bounded by the BATCH doc count (one row per new doc with
+    # >= 1 index hit), the side this op declares broadcastable; the
+    # hint is needed because the barrier's output has no statistics.
+    # Broadcast stays correct at 100 TB: the batch is the small ingest
+    # increment by construction.
     return all_new.join(F.broadcast(agg), "__id", "left").select(
         F.col("__id").alias("new_doc_id"),
         F.coalesce(F.col("n_index_matches"), F.lit(0)).cast("long").alias("n_index_matches"),
@@ -580,9 +566,9 @@ def d_bloom_lsh_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory — the same caveat d_incremental_index_dedup documents
     for the index recompute)."""
     d = load(spark, sf_dir, "documents", fan_out=True)
-    new_keys = D.lsh_band_keys(
-        d.filter(F.col("doc_id") % 5 == 0), "doc_id", "text"
-    ).localCheckpoint()
+    new_keys = D.lsh_band_keys(d.filter(F.col("doc_id") % 5 == 0), "doc_id", "text")
+    # readers: the probe's per-doc key counts and its bloom-positive join
+    new_keys = barrier(new_keys, "d_bloom_lsh_incremental.new_keys")
     old_keys = D.lsh_band_keys(d.filter(F.col("doc_id") % 5 != 0), "doc_id", "text")
     return D.bloom_filtered_index_probe(
         new_keys, old_keys, m_bits=_BLM_BITS, k_hashes=_BLM_K
@@ -640,9 +626,9 @@ def d_bloom_verdict_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed + plan-pinned in tests/test_plans.py), and no per-bucket
     pair product is ever materialised."""
     d = load(spark, sf_dir, "documents", fan_out=True)
-    new_keys = D.lsh_band_keys(
-        d.filter(F.col("doc_id") % 5 == 0), "doc_id", "text"
-    ).localCheckpoint()
+    new_keys = D.lsh_band_keys(d.filter(F.col("doc_id") % 5 == 0), "doc_id", "text")
+    # readers: the probe's per-doc key counts and its bloom-positive join
+    new_keys = barrier(new_keys, "d_bloom_verdict_only.new_keys")
     old_keys = D.lsh_band_keys(d.filter(F.col("doc_id") % 5 != 0), "doc_id", "text")
     return D.bloom_filtered_index_probe(
         new_keys, old_keys, m_bits=_BLM_BITS, k_hashes=_BLM_K, verdict_only=True
@@ -689,13 +675,9 @@ def d_dupgraph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     high-degree hubs (boilerplate) get degree-capped upstream. Wedge
     counts come from a (node, degree) aggregation — integers only."""
     d = load(spark, sf_dir, "documents", fan_out=True)
-    # five consumers (degrees, edge count, three join sides) — without
-    # this the shingle+minhash+band pipeline re-runs per consumer (the
-    # probe measures it as the dominant cost); the pair list itself is
-    # tiny, so materialising it once is the right trade
-    pairs = D.lsh_candidate_pairs(
-        d, "doc_id", "text", shingle_n=3, num_hashes=16, bands=4
-    ).localCheckpoint()
+    pairs = D.lsh_candidate_pairs(d, "doc_id", "text", shingle_n=3, num_hashes=16, bands=4)
+    # five readers: degrees, the edge count and three triangle-join sides
+    pairs = barrier(pairs, "d_dupgraph_triangle_stats.pairs")
     nodes = pairs.select(F.col("id_a").alias("id")).unionAll(
         pairs.select(F.col("id_b").alias("id"))
     )

@@ -85,8 +85,8 @@ def g_pagerank_part_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape per iteration: one edges⋈ranks equi-join on src + one
     dst-keyed aggregation (map-side partial sums); rank state is 16 B
     per node. Edge set is built once (distinct (part, supplier) from
-    the fact table — the co-occurrence projection pattern) and
-    localCheckpointed so the iteration plans stay flat."""
+    the fact table — the co-occurrence projection pattern) and passes
+    a barrier so the iteration plans stay flat."""
     l = load(spark, sf_dir, "lineitem")
     pairs = l.select("l_partkey", "l_suppkey").distinct()
     edges = pairs.select(

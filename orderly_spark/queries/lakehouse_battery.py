@@ -23,6 +23,7 @@ from orderly_spark.operators import text as T
 from orderly_spark.operators.relational import epoch_us
 from orderly_spark.queries.relational import _HEX2BIG
 from orderly_spark.registry import DROUND, DSUM, dsum, query
+from orderly_spark.session import barrier
 from orderly_spark.tables import load
 
 TOKS = T.TOKENS_SQL("text")
@@ -408,8 +409,8 @@ def t_bm25_rational_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOINED doc lengths back onto tf rows. ``len`` is functionally
     dependent on ``doc_id``, so carrying it through the tf groupBy as
     an extra grouping key yields identical rows and deletes the
-    doc_id join; the tiny projected relation is localCheckpointed so
-    the tokenise pass runs exactly once. Scoring arithmetic is
+    doc_id join; the tiny projected relation passes a barrier so the
+    tokenise pass runs exactly once. Scoring arithmetic is
     byte-identical (same IEEE chain, same inputs)."""
     d = load(spark, sf_dir, "documents", fan_out=True)
     base = (
@@ -424,8 +425,9 @@ def t_bm25_rational_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("__b"),
         )
         .select("doc_id", "__b.len", "__b.hits")
-        .localCheckpoint()
     )
+    # readers: the corpus stats, the document frequencies and the tf rows
+    base = barrier(base, "t_bm25_rational_rank.base")
     stats = base.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("len").cast("long").alias("total_len"),
@@ -435,15 +437,9 @@ def t_bm25_rational_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("term", "doc_id", "len")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    # r16 (VERDICT r15 item 6): df(term) = |{doc : term ∈ hits}| is
-    # computed straight off the checkpointed ``base`` (explode of the
-    # per-doc DISTINCT hit set → 3-row aggregate) instead of
-    # re-aggregating ``tf`` — the old ``tf.groupBy("term")`` was a
-    # second consumer of the tf subtree, and the tf partial aggregation
-    # executed once PER consumer (AQE stage-cache mismatch, the r15
-    # finding). Identical values: tf ≥ 1 ⇔ term ∈ hits, and
-    # array_distinct collapses within-doc repeats exactly as the
-    # (term, doc) grouping did. The tf aggregation now runs once.
+    # df(term) = |{doc : term ∈ hits}| comes straight off ``base``
+    # (explode of the per-doc DISTINCT hit set), so the tf aggregation
+    # has one reader: tf ≥ 1 ⇔ term ∈ hits.
     dfs = (
         base.select(F.explode(F.array_distinct("hits")).alias("term"))
         .groupBy("term")

@@ -1766,16 +1766,11 @@ def a_bloom_filter_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checkable."""
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
-    # three consumers (bit positions, truth join, key count) re-derive
-    # this dimension-sized subtree — deliberately left LAZY: an eager
-    # localCheckpoint here would run a Spark job whenever the
-    # DataFrame is merely CONSTRUCTED (plan audits, sweep setup) and
-    # leak one cached RDD per call for the session lifetime; three
-    # scans of a filtered dimension are cheaper than either (review
-    # r6 reversing an earlier review-r6 suggestion — measured against
-    # the checkpoint's constant costs, laziness wins at dimension
-    # scale; prefix_filter_jaccard's checkpoint is different: its
-    # subtree is a fact-scale explode)
+    # three readers (bit positions, truth join, key count) re-derive
+    # this dimension-sized subtree, deliberately without a barrier: a
+    # barrier runs a Spark job whenever the DataFrame is merely built
+    # (plan audits, sweep setup) and pins its blocks for the session,
+    # and three scans of a filtered dimension cost less than either
     build = c.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey").distinct()
 
     def positions(key: Column) -> list[Column]:

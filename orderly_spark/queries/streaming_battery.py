@@ -20,8 +20,8 @@ def _finish(df: DataFrame, tmp: str, view: str | None = None) -> DataFrame:
     """Materialise a streaming query's (small) result and remove its
     scratch directory (now the shared tables.materialize_then_clean
     contract — this battery pioneered it). ``view`` names the memory
-    sink's temp table: it is dropped AFTER the localCheckpoint
-    materialises the result, releasing the sink's buffered rows from
+    sink's temp table: it is dropped AFTER the barrier materialises
+    the result, releasing the sink's buffered rows from
     driver memory (r9 hygiene — each gate run used to leave its whole
     streamed table pinned in the session for the session's lifetime)."""
     out = materialize_then_clean(df, tmp)

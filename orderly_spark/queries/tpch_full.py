@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from orderly_spark.registry import DAVG, DSUM, davg, dsum, query
+from orderly_spark.session import barrier
 from orderly_spark.tables import load
 
 
@@ -343,8 +344,8 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the previous two-aggregate shape re-ran the fact scan + broadcast
     join twice — lineage caches nothing). The rollup's grand-total row
     is identified by ``grouping()``, and the part-grain rollup output
-    is localCheckpointed once for its two consumers (tiny: one row per
-    part + 1). Decimal sums are order-independent, so the rollup
+    passes one barrier for its two consumers (tiny: one row per part
+    + 1). Decimal sums are order-independent, so the rollup
     produces bit-identical values to the two-pass shape, and the
     double `>` stays bit-deterministic in both engines.
 
@@ -367,11 +368,9 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("l_partkey", (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("val"))
     )
-    r = (
-        nl.rollup("l_partkey")
-        .agg(dsum("val").alias("part_value"), F.grouping("l_partkey").alias("g"))
-        .localCheckpoint()
-    )
+    r = nl.rollup("l_partkey").agg(dsum("val").alias("part_value"), F.grouping("l_partkey").alias("g"))
+    # two readers: the per-part rows and the grand-total threshold
+    r = barrier(r, "q11_important_parts.rollup")
     agg = r.filter(F.col("g") == 0).select("l_partkey", "part_value")
     tot = r.filter(F.col("g") == 1).select(
         (F.col("part_value") * F.lit(0.001)).alias("threshold")

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -81,6 +81,47 @@ def get_spark(app_name: str = "orderly_spark", *, shuffle_partitions: int | None
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+#: Local properties that name a barrier's job: the stage name Spark
+#: shows (``callSite.short``) and the job description.
+_BARRIER_PROPS = ("callSite.short", "spark.job.description")
+
+
+def barrier(df: DataFrame, label: str) -> DataFrame:
+    """Cut ``df``'s lineage with one eager ``localCheckpoint`` job whose
+    stage and job description read ``barrier:<label>``; return the
+    checkpointed frame. Every lineage cut in this package goes through
+    here, and each call site states the invariant its cut protects:
+    several readers, loop state, a pinned position-dependent id, or
+    lineage severed before its input files are deleted.
+
+    Why cut at all: lineage caches nothing, and AQE's stage-cache
+    reuse does not fire on the copies of a subtree that several
+    readers plan independently, so without a barrier each reader
+    re-runs the whole upstream plan (profiled on c_split_fullscale
+    and the clean pipeline's rare-molecule stage). A loop's state
+    left lazy embeds every earlier round's plan in the next one.
+
+    Executor loss: the checkpoint's blocks live in executor-local
+    storage and are lost with their executor. That is correct in
+    local mode and on static executors; under dynamic allocation write
+    the relation to a table and read it back, or use a reliable
+    ``checkpoint()`` instead.
+
+    The job runs in the caller's job group (``spark.jobGroup.id`` is
+    never touched, so tracers that attribute jobs by group see it).
+    The caller's stage name and description are restored afterwards,
+    also when the checkpointed plan raises."""
+    sc = df.sparkSession.sparkContext
+    saved = [(k, sc.getLocalProperty(k)) for k in _BARRIER_PROPS]
+    for k, _ in saved:
+        sc.setLocalProperty(k, f"barrier:{label}")
+    try:
+        return df.localCheckpoint()
+    finally:
+        for k, v in saved:
+            sc.setLocalProperty(k, v)
 
 
 def codegen_compiles(spark: SparkSession) -> tuple[int, float | None]:

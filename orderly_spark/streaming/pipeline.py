@@ -137,26 +137,20 @@ def sessionized_events(
 def _stream_state_partitions() -> int:
     """Number of shuffle partitions — and therefore state-store
     instances per stateful operator — a stream STARTED BY THIS MODULE
-    runs with (``SPARK_GRAFT_STREAM_STATE_PARTITIONS``, default 8).
+    runs with (``SPARK_GRAFT_STREAM_STATE_PARTITIONS``, default 8; a
+    value that is not an integer raises ``ValueError``).
 
-    r15 (optimization round, guide §2.2): state partitioning is a
-    STREAM-LIFETIME property — Spark pins it into the checkpoint at
-    first start — so on a real deployment it is chosen deliberately
-    for the state volume, never inherited from whatever width the
-    batch session happens to use. Inheriting the session's
-    ``spark.sql.shuffle.partitions`` (= local core count here) gave
-    every stateful operator 32 state stores, each paying per-BATCH
-    delta-file and commit I/O: measured on the stream-stream full
-    outer join (2 stateful operators × multi-batch availableNow),
-    8.7 s → 3.1 s wall by sizing stores to the bounded state these
-    gates carry. Results are partition-independent (watermark, dedup,
-    join and emission semantics do not read the partition count)."""
+    State partitioning is a STREAM-LIFETIME property — Spark pins it
+    into the checkpoint at first start — so it is chosen for the state
+    volume, never inherited from the batch session's
+    ``spark.sql.shuffle.partitions``: every state store pays per-BATCH
+    delta-file and commit I/O (the stream-stream full outer join ran
+    8.7 s with 32 stores, 3.1 s with 8). Results are
+    partition-independent (watermark, dedup, join and emission
+    semantics do not read the partition count)."""
     import os
 
-    try:
-        return int(os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "") or 8)
-    except ValueError:
-        return 8
+    return int(os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "") or 8)
 
 
 #: serialises the session-conf override window below: concurrent

@@ -11,6 +11,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from orderly_spark.session import barrier
+
 TABLES = (
     "region",
     "nation",
@@ -104,12 +106,12 @@ def materialize_then_clean(df: DataFrame, *paths: str) -> DataFrame:
     """Materialise a (small) query result, then delete the scratch
     directories its plan reads from — the leak-free contract for every
     sink-roundtrip gate query (review finding: each gate run used to
-    leave its scratch export in /tmp). The localCheckpoint severs
-    lineage from the deleted files; callers only pass results that are
-    aggregate/dimension sized."""
+    leave its scratch export in /tmp). Callers only pass results that
+    are aggregate/dimension sized."""
     import shutil
 
-    out = df.localCheckpoint()
+    # lineage severed before the files it reads are deleted
+    out = barrier(df, "materialize_then_clean")
     for p in paths:
         shutil.rmtree(p, ignore_errors=True)
     return out

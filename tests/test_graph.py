@@ -2,6 +2,13 @@
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+from pathlib import Path
+
+import pytest
+
 import orderly_spark.queries  # noqa: F401
 from orderly_spark.operators.graph import DEFAULT_SCALE, pagerank_fixed_point
 from orderly_spark.registry import REGISTRY
@@ -95,3 +102,23 @@ def test_lpa_empty_pairs_returns_empty(spark):
 
     pairs = spark.createDataFrame([], "id_a long, id_b long")
     assert label_propagation_communities(pairs).count() == 0
+
+
+def test_malformed_env_sizes_raise(monkeypatch):
+    """A size in the environment that is not an integer fails loudly
+    instead of silently becoming the default: the PageRank broadcast
+    cap at import, the streaming state-store count when a stream
+    starts."""
+    proc = subprocess.run(
+        [sys.executable, "-c", "import orderly_spark.operators.graph"],
+        cwd=Path(__file__).resolve().parent.parent,
+        env={**os.environ, "SPARK_GRAFT_PR_BROADCAST_NODES": "1e6"},
+        capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode != 0 and "ValueError" in proc.stderr, proc.stderr[-2000:]
+
+    from orderly_spark.streaming import pipeline as SP
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "eight")
+    with pytest.raises(ValueError):
+        SP._stream_state_partitions()

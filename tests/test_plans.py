@@ -54,18 +54,15 @@ def test_filter_stack_is_one_fused_pass(spark, sf_smoke):
 
 
 def test_clean_pipeline_shuffle_budget(spark, sf_smoke):
-    """The full pipeline's shuffle count is bounded and known. r15
-    (optimization round): the rare stage's three consumers (counts,
-    offending-id members, main anti-join) used to repeat the
-    scaffold+dedup subtree per branch, and runtime profiling showed
-    AQE's stage cache never matched the copies (3 scans / 8 exchanges
-    / 0 reuse at sf0.1 — the pre-r15 claim that stage reuse executes
-    them once was wrong at runtime). clean_pipeline now localCheckpoints
-    the deduped relation, so the static plan of the final query reads
-    the materialised barrier (ExistingRDD scans, no parquet scan) and
-    carries only the post-barrier shuffles. A regression that re-plans
-    the scaffold into the final query (parquet scan back in the plan)
-    or adds per-consumer shuffles breaks the ceilings."""
+    """The full pipeline's shuffle count is bounded and known. The
+    rare stage's consumers would each repeat the scaffold+dedup subtree
+    (AQE's stage cache does not match the copies), so clean_pipeline
+    puts the deduped relation through a barrier: the static plan of
+    the final query reads the materialised rows (ExistingRDD scans, no
+    parquet scan) and carries only the post-barrier shuffles. A
+    regression that re-plans the scaffold into the final query (parquet
+    scan back in the plan) or adds per-consumer shuffles breaks the
+    ceilings."""
     spark.catalog.clearCache()  # cached intermediates change the plan shape
     a = plan(spark, sf_smoke, "c_clean_pipeline_fullscale")
     # 4 static Exchange nodes at sf0.001: counts agg(2) + offender

@@ -46,6 +46,8 @@ def test_probe_scaled_corpus_and_stage_attribution(spark, sf_smoke, tmp_path):
     assert rec["rows"] == REGISTRY[SLOT].fn(spark, str(dst)).count()
     stages = rec["stages"]
     assert stages["jobs"] >= 1 and stages["tasks"] >= 1 and stages["cpu_s"] > 0, stages
+    # jobs started while the slot's DataFrame was built (its barriers)
+    assert 0 <= rec["build_jobs"] <= stages["jobs"], rec
     assert rec["build_s"] > 0 and rec["exec_s"] > 0
     assert len(rec["calib_py"]) == len(rec["calib_jvm"]) == 2
     # the first rep compiles the slot's generated classes; the second

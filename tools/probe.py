@@ -38,6 +38,8 @@ fastest rep is reported. After the session stops, one JSON line per slot
 goes to standard output: ``build_s``, ``exec_s`` and ``rows`` of the
 fastest rep, ``stages`` (tasks, run/CPU seconds, shuffle and spill MB,
 jobs and stages of that rep's Spark jobs, read from the event log),
+``build_jobs`` (the jobs of that rep started while its DataFrame was
+built: its eager barriers, see ``orderly_spark.session.barrier``),
 ``plan`` (facts from ``orderly_spark.plans.audit``), ``codegen`` (the
 classes each rep compiled and its seconds of compiling, one value per
 rep, from Spark's CodegenMetrics: a rep that reuses every generated
@@ -166,7 +168,7 @@ def run(sf_dir: str, slots: list[str], reps: int, plans: Path | None, work: Path
                 # checkpoints it pins) stays alive while the next rep runs
                 del df
                 runs.append({"build_s": b.duration, "exec_s": e.duration, "rows": rows, "span": span,
-                             "plan": plan_facts(a)})
+                             "build_span": b, "plan": plan_facts(a)})
             if plans is not None:
                 (plans / f"{name}.txt").write_text(a.text)
             best[name] = r = min(runs, key=lambda run: run["span"].duration)
@@ -181,11 +183,13 @@ def run(sf_dir: str, slots: list[str], reps: int, plans: Path | None, work: Path
     for name in slots:
         r = best[name]
         stages = span_stage_metrics(tr, ev, r.pop("span"))
+        build_jobs = span_stage_metrics(tr, ev, r.pop("build_span"))["jobs"]
         out.append({
             "slot": name,
             "build_s": round(r["build_s"], 4),
             "exec_s": round(r["exec_s"], 4),
             "rows": r["rows"],
+            "build_jobs": build_jobs,
             "stages": {k: round(v, 4) for k, v in stages.items()},
             "plan": r["plan"],
             "codegen": r["codegen"],
