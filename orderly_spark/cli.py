@@ -36,12 +36,6 @@ def build_parser() -> argparse.ArgumentParser:
     e.add_argument("--name-contains-substring", default=None, help="only files whose name contains this (e.g. uspto)")
     _bool_flag(e, "inverse-substring", False, "invert the substring filter")
     e.add_argument("--solvents-path", default=None, help="solvents.csv override (default: the packaged 615-row dimension)")
-    e.add_argument(
-        "--decoder",
-        choices=["auto", "proto", "json"],
-        default="auto",
-        help="file decoder: ORD protobuf (pure-Python wire codec) or the gzip JSON-lines format; auto = proto",
-    )
 
     c = sub.add_parser("clean", help="extracted parquet -> cleaned train/test parquet (reference: orderly.clean)")
     c.add_argument("--ord-extraction-path", required=True)
@@ -114,27 +108,20 @@ def cmd_extract(args: argparse.Namespace) -> int:
     from orderly_spark.sources import solvents as SV
     from orderly_spark.sources.ord import (
         decode_reactions,
-        json_decoder,
-        proto_decoder,
         save_name_list,
         scan_ord_files,
         write_extracted,
     )
 
     spark = get_spark("orderly_spark.extract")
-    files = scan_ord_files(spark, args.data_path, glob=args.ord_file_ending)
-    if args.name_contains_substring:
-        # the match is on the normalised file NAME (reference
-        # extractor.py:84-95), case-insensitive, never on directory names
-        from orderly_spark.functions.rxn import filename_contains
-
-        files = files.filter(
-            filename_contains("path", args.name_contains_substring, inverse=args.inverse_substring)
-        )
-    # 'auto' is the wire-format protobuf decoder (a pure-Python codec,
-    # no ord-schema needed); 'json' selects the JSON-lines format
-    decoder = json_decoder if args.decoder == "json" else proto_decoder
-    decoded = decode_reactions(files, decoder=decoder)
+    files = scan_ord_files(
+        spark,
+        args.data_path,
+        glob=args.ord_file_ending,
+        name_contains=args.name_contains_substring,
+        inverse=args.inverse_substring,
+    )
+    decoded = decode_reactions(files)
     dim = (
         SV.load_solvents_csv(spark, args.solvents_path)
         if args.solvents_path

@@ -568,7 +568,8 @@ def duplicate_clusters_star(pairs: DataFrame, max_iterations: int = 30) -> DataF
     Fixpoint: the edge set stops changing (checked via an
     order-independent hash-sum aggregate, same trick as the label-sum
     check above). At the fixpoint every component is a star centred on
-    its minimum id; the label of u is min(N(u) ∪ {u}).
+    its minimum id; the label of u is min(N(u) ∪ {u}). No fixpoint
+    within ``max_iterations`` rounds raises ``ValueError``.
 
     Output matches duplicate_clusters exactly: (doc_id, cluster_id)
     for every node that appears in ``pairs``.
@@ -619,6 +620,14 @@ def duplicate_clusters_star(pairs: DataFrame, max_iterations: int = 30) -> DataF
         if sig == prev:
             break
         prev = sig
+    else:
+        # an edge set that never stopped changing is not yet all stars:
+        # its labels would split components, so fail as
+        # duplicate_clusters does
+        raise ValueError(
+            f"duplicate_clusters_star did not converge in {max_iterations} "
+            "iterations; raise max_iterations"
+        )
     labels = (
         e.groupBy("u")
         .agg(F.min("v").alias("__mv"))

@@ -977,12 +977,12 @@ def x_real_solvent_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="S1,S3,S2",
 )
 def x_ord_scan_prune_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S1+S3 (main.py:27-51): binaryFile scan with pathGlobFilter and a
-    filename skip-substring predicate — pruned files are never read —
+    """S1+S3 (main.py:27-51): binaryFile scan with pathGlobFilter and an
+    inverse file-name predicate — pruned files are never decoded —
     then the one-to-many mapInPandas decode (S2, extractor.py:103-500)
     over REAL gzipped wire-format ``Dataset`` protobufs built by the
-    :mod:`~orderly_spark.sources.ord_wire` encoder (r10: the decode is
-    the pure-Python protobuf codec, no JSON fake). One dataset file per
+    :mod:`~orderly_spark.sources.ord_wire` encoder and decoded by its
+    pure-Python protobuf codec. One dataset file per
     nation, each holding a feature-rich reaction (role buckets, dotted
     SMILES, yield padding, every temperature/time unit family, strict
     date parse) plus a degenerate reaction (invalid rxn string, no
@@ -1046,7 +1046,7 @@ def x_ord_scan_prune_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # decoy that must be excluded by the glob, not the substring
     with open(os.path.join(root, "keep_readme.txt"), "w") as fh:
         fh.write("not a dataset")
-    files = scan_ord_files(spark, root, glob="*.pb.gz", skip_substring="skip_")
+    files = scan_ord_files(spark, root, glob="*.pb.gz", name_contains="skip_", inverse=True)
     decoded = decode_reactions(files)  # default = the protobuf wire codec
     from orderly_spark.tables import materialize_then_clean
 

@@ -27,11 +27,19 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CODEGEN_CACHE_ENTRIES = 1000
 
 
+#: AQE's coalescing targets bytes and is blind to per-row CPU. A
+#: CPU-heavy operator downstream of a small exchange (tokenise or
+#: shingle explode, per-pair array_intersect verify, collect_set
+#: finalisation behind a few hundred KB of shuffle) must still spread
+#: over every core, so the coalescing floor sits below the 1M default:
+#: at that default a 390 KB dedup-window exchange coalesced to one task
+#: that ran 5.2 s of a 5.5 s slot. At cluster scale post-shuffle
+#: partitions are hundreds of MB and the floor never binds.
+AQE_MIN_PARTITION_SIZE = "16k"
+
+
 def _cpus() -> int:
-    try:
-        return int(os.environ.get("SPARK_GRAFT_CPUS", "") or os.cpu_count() or 8)
-    except ValueError:
-        return os.cpu_count() or 8
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "") or os.cpu_count() or 8)
 
 
 def get_spark(app_name: str = "orderly_spark", *, shuffle_partitions: int | None = None) -> SparkSession:
@@ -53,19 +61,7 @@ def get_spark(app_name: str = "orderly_spark", *, shuffle_partitions: int | None
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE's coalescing targets bytes and is blind to per-row CPU. A
-        # CPU-heavy operator downstream of a small exchange (tokenise or
-        # shingle explode, per-pair array_intersect verify, collect_set
-        # finalisation behind a few hundred KB of shuffle) must still
-        # spread over every core, so the coalescing floor sits below
-        # the 1M default: at that default a 390 KB dedup-window exchange
-        # coalesced to one task that ran 5.2 s of a 5.5 s slot. At
-        # cluster scale post-shuffle partitions are hundreds of MB and
-        # the floor never binds.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "16k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", AQE_MIN_PARTITION_SIZE)
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.session.timeZone", "UTC")

@@ -1,40 +1,38 @@
 """ORD dataset source (SURVEY S1-S5, §3.1).
 
 The reference walks `data/ord/*/*.pb.gz` with a two-level glob, skips
-one known-outlier dataset by filename, and fans protobuf decoding out
-over processes with joblib (orderly/extract/main.py:27-51, 612-623).
-Spark-first shape:
+datasets by a substring of their normalised file name, and fans
+protobuf decoding out over processes with joblib
+(orderly/extract/main.py:27-51, 612-623; extractor.py:84-95).
 
-    scan_ord_files(spark, root)            # binaryFile + glob pruning
-      -> decode_reactions(files)           # mapInPandas: bytes → rows
+One read path, one format: gzipped ORD ``Dataset`` protobufs become
+``REACTION_SCHEMA`` rows only through
+
+    scan_ord_files(spark, root)            # binaryFile + glob + name filter
+      -> decode_reactions(files)           # mapInPandas: bytes -> rows
       -> write parquet (partitionBy file)  # S5
 
-File pruning happens AT THE SOURCE (pathGlobFilter + filename filter
-pushed into the scan), so excluded datasets are never read — the
-reference's hand-rolled skip list (main.py:36-47) becomes partition
-pruning. Decode parallelism = one task per file (or per file-split),
-replacing joblib process fan-out with cluster task fan-out.
+The file-name filter is :func:`orderly_spark.functions.rxn.
+filename_contains` on each file's basename, applied to the scan, so
+excluded datasets are never decoded. Decode parallelism is one task per
+file (or per file split), replacing joblib's process fan-out.
 
-The protobuf parse runs through the pure-Python wire codec in
-:mod:`orderly_spark.sources.ord_wire` (r10 — no ord-schema needed; the
-package's generated classes are used only as a skip-gated parity
-cross-check when importable). `decode_reactions` still takes a
-pluggable per-file decoder; the gzip JSON-lines format
-(`fake_dataset_bytes` / `json_decoder`) remains as a second, trivially
-inspectable source format.
+The per-file decoder is the pure-Python wire codec in
+:mod:`orderly_spark.sources.ord_wire`; ord-schema is not needed, and
+its generated classes serve only as a skip-gated parity cross-check
+when importable.
 """
 
 from __future__ import annotations
 
 import gzip
-import io
-import json
 from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from orderly_spark.functions.rxn import filename_contains
 from orderly_spark.schema import REACTION_SCHEMA
 
 try:  # pragma: no cover - not in harness image
@@ -53,24 +51,24 @@ def scan_ord_files(
     spark: SparkSession,
     root: str,
     glob: str = "*.pb.gz",
-    skip_substring: str | None = None,
+    name_contains: str | None = None,
+    inverse: bool = False,
 ) -> DataFrame:
-    """S1/S3: binaryFile scan with glob + filename predicate pushed to
-    the source (reference: get_file_names, main.py:27-51). Returns
-    (path, modificationTime, length, content); the skip predicate
-    prunes files before any byte is decoded."""
+    """S1/S3: binaryFile scan of every file under ``root`` matching
+    ``glob`` (reference: get_file_names, main.py:27-51). With
+    ``name_contains``, keep only files whose normalised NAME contains
+    it (case-insensitive, '.' read as '-'; extractor.py:84-95), or,
+    with ``inverse``, only files whose name does not. Directory names
+    never match. Returns (path, modificationTime, length, content)."""
     df = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)
         .option("recursiveFileLookup", "true")
         .load(root)
     )
-    if skip_substring:
-        # match the FILENAME only (reference semantics, main.py:36-47):
-        # a full-path match would also prune every file under any
-        # directory whose name contains the substring (review finding)
-        basename = F.substring_index(F.col("path"), "/", -1)
-        df = df.filter(~basename.contains(skip_substring))
+    if name_contains:
+        basename = "substring_index(path, '/', -1)"
+        df = df.filter(filename_contains(basename, name_contains, inverse=inverse))
     return df
 
 
@@ -89,51 +87,6 @@ def proto_decoder(filename: str, content: bytes) -> Iterator[dict]:
         data = content
     for rxn in ord_wire.iter_dataset_reactions(data):
         yield ord_wire.reaction_to_row(rxn)
-
-
-_TS_FIELDS = ("date_of_experiment", "grant_date")
-
-
-def json_decoder(filename: str, content: bytes) -> Iterator[dict]:
-    """Deterministic fake-format decoder: gzip JSON-lines, one reaction
-    per line with REACTION_SCHEMA field names. Stands in for protobuf
-    so scan→decode→write is testable without ord-schema.
-
-    Timestamp fields arrive as ISO strings in JSON and are parsed to
-    real datetimes here — without this, any fixture row carrying
-    date_of_experiment/grant_date failed the Arrow conversion against
-    REACTION_SCHEMA's TimestampType (review finding: the schema's
-    timestamp slice was untestable end to end)."""
-    import datetime as _dt
-
-    with gzip.open(io.BytesIO(content), "rt") as fh:
-        for line in fh:
-            line = line.strip()
-            if not line:
-                continue
-            row = json.loads(line)
-            for f in _TS_FIELDS:
-                v = row.get(f)
-                if isinstance(v, str):
-                    row[f] = _dt.datetime.fromisoformat(v)
-            yield row
-
-
-def fake_dataset_bytes(rows: list[dict]) -> bytes:
-    """Inverse of :func:`json_decoder` for fixtures (datetimes are
-    serialised as ISO strings, the decoder parses them back)."""
-    import datetime as _dt
-
-    def _default(o):
-        if isinstance(o, (_dt.datetime, _dt.date)):
-            return o.isoformat()
-        raise TypeError(type(o).__name__)
-
-    buf = io.BytesIO()
-    with gzip.open(buf, "wt") as fh:
-        for r in rows:
-            fh.write(json.dumps(r, default=_default) + "\n")
-    return buf.getvalue()
 
 
 # minimum batch size before an all-files-skipped batch is treated as a
@@ -169,7 +122,7 @@ def decode_reactions(
     100%-skip is a systemic decoder bug wearing a quarantine, and must
     not masquerade as an empty corpus.
 
-    ``total_skip_guard`` (r13, ADVICE r12): the all-failed task size at
+    ``total_skip_guard``: the all-failed task size at
     which skip mode aborts (default ``_TOTAL_SKIP_GUARD``); pass a
     larger value or ``None`` to tolerate bigger all-corrupt tasks.
     CAVEAT: binaryFile packs co-located files into one task, so
@@ -210,17 +163,15 @@ def decode_reactions(
             yield pd.DataFrame(out, columns=field_names) if out else pd.DataFrame(
                 columns=field_names
             )
-        # total-skip guard (r12 advice): quarantine mode exists to drop
-        # the rare corrupt TAIL, not to swallow a systemic decoder bug —
-        # if EVERY file of a many-file TASK failed, the likely culprit
-        # is the decoder, and an empty DataFrame would masquerade as an
-        # empty corpus. Counted across the whole task (at scale a task
-        # packs many files); threshold total_skip_guard keeps a few
+        # total-skip guard: quarantine mode exists to drop the rare
+        # corrupt TAIL, not to swallow a systemic decoder bug — if EVERY
+        # file of a many-file TASK failed, the likely culprit is the
+        # decoder, and an empty DataFrame would masquerade as an empty
+        # corpus. Counted across the whole task (at scale a task packs
+        # many files); the total_skip_guard threshold keeps a few
         # co-located corrupt files from false-aborting a quarantined
-        # fleet (pinned by test; None disables — r13 ADVICE: clustered
-        # genuine corruption wider than the guard needs the caller to
-        # opt out, see docstring). A systemic bug on a big corpus
-        # always crosses the threshold in some task.
+        # fleet (None disables it, see docstring). A systemic bug on a
+        # big corpus always crosses the threshold in some task.
         if (
             skip
             and total_skip_guard is not None
@@ -239,7 +190,7 @@ def decode_reactions(
     return files.select("path", "content").mapInPandas(expand, REACTION_SCHEMA)
 
 
-def decode_errors(files: DataFrame, decoder: Decoder | None = None) -> DataFrame:
+def decode_errors(files: DataFrame) -> DataFrame:
     """The quarantine audit for ``decode_reactions(on_error='skip')``:
     one row per file whose decode RAISES — (file, error_class,
     error). Files that decode cleanly produce no row, so at scale the
@@ -249,7 +200,6 @@ def decode_errors(files: DataFrame, decoder: Decoder | None = None) -> DataFrame
     it as a separate audit pass, not inline with the data pass. Same
     per-file task shape as the decode (mapInPandas over
     (path, content))."""
-    dec = decoder if decoder is not None else proto_decoder
     cols = ["file", "error_class", "error"]
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -258,7 +208,7 @@ def decode_errors(files: DataFrame, decoder: Decoder | None = None) -> DataFrame
             for path, content in zip(pdf["path"], pdf["content"]):
                 fname = str(path).rsplit("/", 1)[-1]
                 try:
-                    for _ in dec(fname, bytes(content)):
+                    for _ in proto_decoder(fname, bytes(content)):
                         pass
                 except Exception as ex:  # noqa: BLE001 — the audit's whole job
                     out.append(

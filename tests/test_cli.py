@@ -1,5 +1,5 @@
 """CLI round trip: python -m orderly_spark extract -> clean -> gen-fp
-over fake ORD files — the switch-over path for a user of the
+over wire-format ORD files — the switch-over path for a user of the
 reference's `orderly.extract` / `orderly.clean` / `orderly.gen_fp`
 CLIs (main.py:239-454, cleaner.py:948-1196)."""
 
@@ -14,8 +14,33 @@ from pyspark.sql import functions as F
 
 from orderly_spark.cli import main
 from orderly_spark.sources import ord as O
+from orderly_spark.sources import ord_wire as W
 
 TMP = Path(__file__).parent / "tmp_cli"
+
+
+def _pb_gz(rows: list[dict]) -> bytes:
+    """``rows`` as a gzipped ORD ``Dataset``: each row's reaction string,
+    its labelled reactants (role 1), agents (as reagents, role 2) and
+    solvents (role 3), and its products with their yields. The CLI's
+    default extract re-derives roles from the reaction string and pools
+    every labelled non-reactant into the agents, so the reagent label
+    reads as the agent label did."""
+
+    def compounds(members, role):
+        return [W.encode_compound([(2, m)], role) for m in members]
+
+    return W.dataset_pb_gz([
+        W.encode_reaction(
+            cxsmiles=r["rxn_str"],
+            is_mapped=r["is_mapped"],
+            inputs=[("m", compounds(r["reactants"], 1) + compounds(r.get("agents", []), 2)
+                     + compounds(r.get("solvents", []), 3))],
+            products=list(zip(r["products"], r["yields"])),
+            procedure_details=r.get("procedure_details", ""),
+        )
+        for r in rows
+    ])
 
 
 @pytest.fixture(scope="module")
@@ -46,7 +71,7 @@ def workdir(spark):  # spark fixture keeps one session for the in-process CLI
             "is_mapped": False,
         }
     ]
-    (TMP / "data" / "d1" / "a.pb.gz").write_bytes(O.fake_dataset_bytes(rows))
+    (TMP / "data" / "d1" / "a.pb.gz").write_bytes(_pb_gz(rows))
     yield TMP
     shutil.rmtree(TMP, ignore_errors=True)
 
@@ -58,7 +83,6 @@ def test_cli_extract_clean_genfp_roundtrip(workdir, spark, capsys):
             "extract",
             "--data-path", str(workdir / "data"),
             "--output-path", ex_out,
-            "--decoder", "json",
         ]
     )
     assert rc == 0
@@ -147,11 +171,9 @@ def test_cli_unresolved_mode_exclusivity(workdir):
 
 
 def test_cli_extract_default_decoder_wire_protobuf(spark, tmp_path):
-    """r10: the CLI's DEFAULT decoder (--decoder auto) parses real
-    wire-format .pb.gz through the pure-Python codec — the exact
-    switch-over path a reference user hits first, no flags needed."""
-    from orderly_spark.sources import ord_wire as W
-
+    """The CLI's decoder parses real wire-format .pb.gz through the
+    pure-Python codec — the exact switch-over path a reference user
+    hits first, no flags needed."""
     data = tmp_path / "data" / "d1"
     data.mkdir(parents=True)
     rxns = [
@@ -175,6 +197,37 @@ def test_cli_extract_default_decoder_wire_protobuf(spark, tmp_path):
     # roles re-derived from the decoded rxn string; suffix stripped
     assert all(r.rxn_str == "CC.OO>N>CCO" for r in rows)
     assert sorted(r.yields[0] for r in rows) == [50.0, 51.0, 52.0, 53.0, 54.0, 55.0]
+
+
+@pytest.fixture(scope="module")
+def named_data(tmp_path_factory):
+    """Dataset files under a data root whose directory names contain
+    the filter substring: only the file names may decide a match."""
+    root = tmp_path_factory.mktemp("names") / "data_uspto_root"
+    (root / "other").mkdir(parents=True)
+    (root / "plain").mkdir()
+    one = W.dataset_pb_gz([W.encode_reaction(cxsmiles="CC>N>CCO", products=[("CCO", 50.0)])])
+    for rel in ("other/b.pb.gz", "Uspto.Grants-2001.pb.gz", "plain/uspto-a.pb.gz"):
+        (root / rel).write_bytes(one)
+    return root
+
+
+@pytest.mark.parametrize(
+    "flags, want",
+    [
+        # keep, case-insensitive; b.pb.gz sits under 'data_uspto_root'
+        (["--name-contains-substring", "uspto"], {"Uspto.Grants-2001.pb.gz", "uspto-a.pb.gz"}),
+        # skip
+        (["--name-contains-substring", "uspto", "--inverse-substring"], {"b.pb.gz"}),
+        # the name is normalised '.' -> '-' before the match
+        (["--name-contains-substring", "USPTO-grants"], {"Uspto.Grants-2001.pb.gz"}),
+    ],
+)
+def test_cli_extract_name_filter_matches_file_name_only(spark, named_data, tmp_path, flags, want):
+    out = tmp_path / "ex"
+    assert main(["extract", "--data-path", str(named_data), "--output-path", str(out), *flags]) == 0
+    got = spark.read.parquet(str(out / "extracted_ords")).select("extracted_from_file").distinct()
+    assert {r.extracted_from_file for r in got.collect()} == want
 
 
 def test_cli_genfp_values_pinned(workdir, spark, capsys):
@@ -270,17 +323,17 @@ def test_cli_job_counts_and_name_list(spark, tmp_path):
     data = tmp_path / "data"
     (data / "d1").mkdir(parents=True)
     (data / "d2").mkdir()
-    (data / "d1" / "a.pb.gz").write_bytes(O.fake_dataset_bytes(
+    (data / "d1" / "a.pb.gz").write_bytes(_pb_gz(
         [row(0, ["CC", "123"]), row(1, ["CC", "OO"], ["", "N"])]
         + [row(i, ["CC", "OO"]) for i in range(2, 8)]
     ))
-    (data / "d2" / "b.pb.gz").write_bytes(O.fake_dataset_bytes(
+    (data / "d2" / "b.pb.gz").write_bytes(_pb_gz(
         [row(8, ["CC", "123"]), row(9, ["456", "OO"])]
     ))
     ex, cl = tmp_path / "ex", tmp_path / "cl"
     jobs = {
         "extract": _jobs_run(spark, "extract", [
-            "extract", "--data-path", str(data), "--output-path", str(ex), "--decoder", "json"]),
+            "extract", "--data-path", str(data), "--output-path", str(ex)]),
         "clean": _jobs_run(spark, "clean", [
             "clean", "--ord-extraction-path", str(ex / "extracted_ords"),
             "--molecules-to-remove-path", str(ex / "molecule_names"),
@@ -296,7 +349,7 @@ def test_cli_job_counts_and_name_list(spark, tmp_path):
     # shape. gen-fp: the input schema read and the write.
     assert jobs == {"extract": 6, "clean": 17, "gen-fp": 2}
 
-    decoded = O.decode_reactions(O.scan_ord_files(spark, str(data)), decoder=O.json_decoder)
+    decoded = O.decode_reactions(O.scan_ord_files(spark, str(data)))
     want = molecule_name_side_output(decoded)
     assert [r.name for r in want.collect()] == ["", "123", "456"]
     O.save_name_list(want, str(tmp_path / "want_names"))
@@ -310,7 +363,7 @@ def test_cli_job_counts_and_name_list(spark, tmp_path):
 def _fixture_pipeline(data: Path, out: Path, *extract_args: str) -> None:
     """extract → clean → gen-fp through the CLI, as a user runs it."""
     assert main(["extract", "--data-path", str(data), "--output-path", str(out / "ex"),
-                 "--decoder", "json", *extract_args]) == 0
+                 *extract_args]) == 0
     assert main(["clean", "--ord-extraction-path", str(out / "ex" / "extracted_ords"),
                  "--molecules-to-remove-path", str(out / "ex" / "molecule_names"),
                  "--output-path", str(out / "cl"), "--min-frequency-of-occurrence", "2",
@@ -356,19 +409,19 @@ def test_cli_solvent_set_escapes_sql_literals(spark, tmp_path):
         w.writerows([[f"s{i}", s] for i, s in enumerate(odd + ["O"])])
     data = tmp_path / "data"
     data.mkdir()
-    (data / "a.pb.gz").write_bytes(O.fake_dataset_bytes([
+    (data / "a.pb.gz").write_bytes(_pb_gz([
         {"rxn_str": f"CC>{'.'.join(odd)}.N>CCO", "reactants": [], "products": ["CCO"],
          "yields": [50.0], "agents": ["O"], "solvents": ["C/C=C\\C"], "is_mapped": False},
     ]))
     out = tmp_path / "ex"
-    assert main(["extract", "--data-path", str(data), "--output-path", str(out), "--decoder", "json",
+    assert main(["extract", "--data-path", str(data), "--output-path", str(out),
                  "--solvents-path", str(sv_csv)]) == 0
     got = spark.read.parquet(str(out / "extracted_ords")).select("solvents", "agents").collect()
 
     dim = SV.load_solvents_csv(spark, str(sv_csv))
     members = SV.solvent_smiles_set(dim).collect()[0].solvent_set
     assert sorted(members) == sorted(odd + ["O"])
-    decoded = O.decode_reactions(O.scan_ord_files(spark, str(data)), decoder=O.json_decoder)
+    decoded = O.decode_reactions(O.scan_ord_files(spark, str(data)))
     want = extract_reactions(decoded, solvent_set=F.array(*[F.lit(s) for s in members]))
     assert got == want.select("solvents", "agents").collect()
     assert got[0].solvents == sorted(odd + ["O"]) and got[0].agents == ["N"]

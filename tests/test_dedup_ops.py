@@ -199,6 +199,19 @@ def test_star_contraction_empty_pairs(spark):
     assert D.duplicate_clusters_star(pairs).collect() == []
 
 
+def test_star_contraction_raises_on_non_convergence(spark):
+    """An iteration budget that ends before the edge set stops changing
+    fails loudly, as duplicate_clusters does: the labels of the last
+    round split a 41-node chain into many clusters."""
+    chain = [(i, i + 1) for i in range(40)]
+    pairs = spark.createDataFrame(chain, "id_a long, id_b long")
+    with pytest.raises(ValueError, match="did not converge"):
+        D.duplicate_clusters_star(pairs, max_iterations=1)
+    # the default budget converges to one component labelled 0
+    got = {r.doc_id: r.cluster_id for r in D.duplicate_clusters_star(pairs).collect()}
+    assert len(got) == 41 and set(got.values()) == {0}
+
+
 def test_prefix_filter_jaccard_equals_bruteforce(spark, docs):
     """Prefix filtering is EXACT: same pairs + values as the
     all-shingle co-occurrence join at the same threshold."""

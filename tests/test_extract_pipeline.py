@@ -1,7 +1,8 @@
-"""End-to-end extract pipeline (SURVEY §3.1): fake ORD files →
-binaryFile scan → mapInPandas decode → columnar extract transform →
-(clean pipeline →) split. One test drives the whole engine path the
-reference's two CLIs cover."""
+"""End-to-end extract pipeline (SURVEY §3.1): decoded reaction rows →
+columnar extract transform → (clean pipeline →) split, and the same
+from wire-format ORD files through binaryFile scan → mapInPandas
+decode. Together they drive the whole engine path the reference's two
+CLIs cover."""
 
 from __future__ import annotations
 
@@ -13,16 +14,20 @@ from pyspark.sql import functions as F
 
 from orderly_spark.operators import cleaning as C
 from orderly_spark.operators.extract import extract_reactions, molecule_name_side_output
+from orderly_spark.schema import REACTION_SCHEMA
 from orderly_spark.sources import ord as O
 
 TMP = Path(__file__).parent / "tmp_e2e"
 
 
 @pytest.fixture(scope="module")
-def ord_root(spark):
+def decoded(spark):
+    """Decoded rows the wire codec cannot produce: a literal invalid
+    reaction string, an extended-SMILES suffix, labelled agents. Shaped
+    as decode_reactions emits them (absent fields NULL, the source file
+    named)."""
     if TMP.exists():
         shutil.rmtree(TMP)
-    (TMP / "d1").mkdir(parents=True)
     rows = [
         # rxn-string path: roles re-derived, labelled yields realigned
         {"rxn_str": "CC.OO>N>CCO |f:1|", "reactants": ["junk"],
@@ -41,14 +46,13 @@ def ord_root(spark):
         {"rxn_str": "O>ice.OO>CC", "reactants": ["O"], "products": ["CC"],
          "yields": [None], "temperature": None, "is_mapped": False},
     ]
-    (TMP / "d1" / "a.pb.gz").write_bytes(O.fake_dataset_bytes(rows))
-    yield str(TMP)
+    full = [{**{f: r.get(f) for f in REACTION_SCHEMA.fieldNames()}, "extracted_from_file": "a.pb.gz"}
+            for r in rows]
+    yield spark.createDataFrame(full, REACTION_SCHEMA)
     shutil.rmtree(TMP, ignore_errors=True)
 
 
-def test_extract_end_to_end(spark, ord_root):
-    files = O.scan_ord_files(spark, ord_root)
-    decoded = O.decode_reactions(files, decoder=O.json_decoder)
+def test_extract_end_to_end(spark, decoded):
     solvent_set = F.array(F.lit("OO"))  # pretend OO is a known solvent
     out = extract_reactions(decoded, solvent_set=solvent_set)
     rows = {r.rxn_str: r for r in out.collect()}
@@ -80,14 +84,13 @@ def test_extract_end_to_end(spark, ord_root):
     assert spark.read.parquet(sink).count() == 3
 
 
-def test_extract_plan_builds_in_few_py4j_round_trips(spark, ord_root, monkeypatch):
+def test_extract_plan_builds_in_few_py4j_round_trips(spark, decoded, monkeypatch):
     """Building extract's plan over the packaged 615-row solvent set
     stays within a fixed py4j budget: each stage ships SQL text, and the
     whole set is one literal expression. Built node by node, with one
     Column per set member, the same plan took ~6,800 round trips."""
     from orderly_spark.sources import solvents as SV
 
-    decoded = O.decode_reactions(O.scan_ord_files(spark, ord_root), decoder=O.json_decoder)
     client = spark.sparkContext._gateway._gateway_client
     send, sent = client.send_command, []
 
@@ -105,17 +108,13 @@ def test_extract_plan_builds_in_few_py4j_round_trips(spark, ord_root, monkeypatc
     assert len(sent) <= 300, len(sent)
 
 
-def test_molecule_name_side_output(spark, ord_root):
-    files = O.scan_ord_files(spark, ord_root)
-    decoded = O.decode_reactions(files, decoder=O.json_decoder)
+def test_molecule_name_side_output(spark, decoded):
     names = [r.name for r in molecule_name_side_output(decoded).collect()]
     assert "35" in names or "42" in names
 
 
-def test_extract_then_clean_then_split(spark, ord_root):
+def test_extract_then_clean_then_split(spark, decoded):
     """The full engine path: extract → clean → leakage-aware split."""
-    files = O.scan_ord_files(spark, ord_root)
-    decoded = O.decode_reactions(files, decoder=O.json_decoder)
     extracted = extract_reactions(decoded, solvent_set=F.array(F.lit("OO")))
     with_idx = extracted.withColumn("original_index", F.monotonically_increasing_id())
     cfg = C.CleanConfig(
@@ -133,13 +132,14 @@ def test_extract_then_clean_then_split(spark, ord_root):
 
 
 def test_extract_end_to_end_wire_protobuf(spark, tmp_path):
-    """r10: the same pipeline over REAL wire-format protobuf through
-    the DEFAULT decoder — and the semantic difference the wire path
-    makes explicit: an invalid CXSMILES becomes rxn_str=None at
-    DECODE time (extractor.py:161-180 returns None), so the row
-    survives extract_reactions on its labelled roles (the reference's
-    use_labelling_if_extract_fails=True), unlike a JSON row carrying
-    a literal invalid string, which the validity filter drops."""
+    """The same pipeline over REAL wire-format protobuf through the
+    decoder — and the semantic difference the wire path makes
+    explicit: an invalid CXSMILES becomes rxn_str=None at DECODE time
+    (extractor.py:161-180 returns None), so the row survives
+    extract_reactions on its labelled roles (the reference's
+    use_labelling_if_extract_fails=True), unlike a decoded row
+    carrying a literal invalid string, which the validity filter
+    drops."""
     from orderly_spark.sources import ord_wire as W
 
     d = tmp_path / "pb"

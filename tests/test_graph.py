@@ -108,7 +108,7 @@ def test_malformed_env_sizes_raise(monkeypatch):
     """A size in the environment that is not an integer fails loudly
     instead of silently becoming the default: the PageRank broadcast
     cap at import, the streaming state-store count when a stream
-    starts."""
+    starts, the session's core count when a session is built."""
     proc = subprocess.run(
         [sys.executable, "-c", "import orderly_spark.operators.graph"],
         cwd=Path(__file__).resolve().parent.parent,
@@ -122,3 +122,9 @@ def test_malformed_env_sizes_raise(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "eight")
     with pytest.raises(ValueError):
         SP._stream_state_partitions()
+
+    from orderly_spark.session import _cpus
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "abc")
+    with pytest.raises(ValueError):
+        _cpus()

@@ -1,5 +1,5 @@
-"""ORD source plumbing tests (SURVEY S1-S8): binaryFile scan with
-source-level pruning, mapInPandas one-to-many decode, partitioned
+"""ORD source plumbing tests (SURVEY S1-S8): binaryFile scan with a
+file-name predicate, mapInPandas one-to-many decode, partitioned
 parquet sink, name-list merge, solvent dimension builders."""
 
 from __future__ import annotations
@@ -11,9 +11,20 @@ import pytest
 from pyspark.sql import functions as F
 
 from orderly_spark.sources import ord as O
+from orderly_spark.sources import ord_wire as W
 from orderly_spark.sources import solvents as SV
 
 FIXDIR = Path(__file__).parent / "tmp_ord_fixtures"
+
+
+def _rxn(rxn_str: str, reactants: list[str], products: list[tuple[str, float | None]],
+         is_mapped: bool) -> bytes:
+    return W.encode_reaction(
+        cxsmiles=rxn_str,
+        is_mapped=is_mapped,
+        inputs=[("m", [W.encode_compound([(2, r)], 1) for r in reactants])],
+        products=products,
+    )
 
 
 @pytest.fixture(scope="module")
@@ -23,17 +34,12 @@ def ord_dir():
     (FIXDIR / "uspto").mkdir(parents=True)
     (FIXDIR / "other").mkdir(parents=True)
     rows_a = [
-        {"rxn_str": "CC>O>CCO", "reactants": ["CC"], "products": ["CCO"],
-         "yields": [90.0], "is_mapped": True},
-        {"rxn_str": "N>O>NO", "reactants": ["N"], "products": ["NO"],
-         "yields": [None], "is_mapped": False},
+        _rxn("CC>O>CCO", ["CC"], [("CCO", 90.0)], True),
+        _rxn("N>O>NO", ["N"], [("NO", None)], False),
     ]
-    rows_b = [
-        {"rxn_str": "C>N>CN", "reactants": ["C"], "products": ["CN"],
-         "yields": [50.0], "is_mapped": True},
-    ]
-    (FIXDIR / "uspto" / "uspto-a.pb.gz").write_bytes(O.fake_dataset_bytes(rows_a))
-    (FIXDIR / "other" / "b.pb.gz").write_bytes(O.fake_dataset_bytes(rows_b))
+    rows_b = [_rxn("C>N>CN", ["C"], [("CN", 50.0)], True)]
+    (FIXDIR / "uspto" / "uspto-a.pb.gz").write_bytes(W.dataset_pb_gz(rows_a))
+    (FIXDIR / "other" / "b.pb.gz").write_bytes(W.dataset_pb_gz(rows_b))
     (FIXDIR / "other" / "ignore.txt").write_bytes(b"not a dataset")
     yield str(FIXDIR)
     shutil.rmtree(FIXDIR, ignore_errors=True)
@@ -42,13 +48,52 @@ def ord_dir():
 def test_scan_glob_and_skip(spark, ord_dir):
     files = O.scan_ord_files(spark, ord_dir)
     assert files.count() == 2  # .txt pruned by glob
-    skipped = O.scan_ord_files(spark, ord_dir, skip_substring="uspto")
+    skipped = O.scan_ord_files(spark, ord_dir, name_contains="uspto", inverse=True)
     assert skipped.count() == 1
+
+
+@pytest.fixture(scope="module")
+def named_root(tmp_path_factory):
+    """Dataset files under directories whose NAMES contain the filter
+    substring: only the file names may decide a match."""
+    root = tmp_path_factory.mktemp("names") / "data_USPTO_root"
+    (root / "other").mkdir(parents=True)
+    (root / "plain").mkdir()
+    one = W.dataset_pb_gz([W.encode_reaction(cxsmiles="C>N>O")])
+    for rel in ("other/b.pb.gz", "Uspto.Grants-2001.pb.gz", "plain/uspto-a.pb.gz"):
+        (root / rel).write_bytes(one)
+    return str(root)
+
+
+def _names(files) -> set[str]:
+    return {r.path.rsplit("/", 1)[-1] for r in files.select("path").collect()}
+
+
+@pytest.mark.parametrize(
+    "substring, inverse, want",
+    [
+        # keep/skip by file name; 'other/b.pb.gz' sits under a
+        # directory whose name contains the substring
+        ("uspto", False, {"Uspto.Grants-2001.pb.gz", "uspto-a.pb.gz"}),
+        ("uspto", True, {"b.pb.gz"}),
+        # case-insensitive, on both sides
+        ("USPTO", False, {"Uspto.Grants-2001.pb.gz", "uspto-a.pb.gz"}),
+        # the name is normalised '.' -> '-' before the match
+        ("uspto-grants-2001-pb", False, {"Uspto.Grants-2001.pb.gz"}),
+        ("uspto-grants-2001-pb", True, {"b.pb.gz", "uspto-a.pb.gz"}),
+        # a directory name alone never matches
+        ("root", False, set()),
+        ("other", True, {"b.pb.gz", "Uspto.Grants-2001.pb.gz", "uspto-a.pb.gz"}),
+    ],
+)
+def test_scan_name_filter_matches_file_name_only(spark, named_root, substring, inverse, want):
+    files = O.scan_ord_files(spark, named_root, name_contains=substring, inverse=inverse)
+    assert _names(files) == want
 
 
 def test_decode_reactions_roundtrip(spark, ord_dir):
     files = O.scan_ord_files(spark, ord_dir)
-    df = O.decode_reactions(files, decoder=O.json_decoder)
+    df = O.decode_reactions(files)
     rows = {r.rxn_str: r for r in df.collect()}
     assert set(rows) == {"CC>O>CCO", "N>O>NO", "C>N>CN"}
     assert rows["CC>O>CCO"].reactants == ["CC"]
@@ -58,11 +103,9 @@ def test_decode_reactions_roundtrip(spark, ord_dir):
 
 
 def test_default_decoder_is_wire_protobuf(spark, tmp_path):
-    """r10: decode_reactions' DEFAULT decoder is the pure-Python ORD
+    """decode_reactions' DEFAULT decoder is the pure-Python ORD
     protobuf wire codec — a real .pb.gz Dataset decodes end to end
     with ord-schema absent (closing S2)."""
-    from orderly_spark.sources import ord_wire as W
-
     d = tmp_path / "ord_pb"
     d.mkdir()
     rxn = W.encode_reaction(
@@ -84,7 +127,7 @@ def test_default_decoder_is_wire_protobuf(spark, tmp_path):
 def test_write_extracted_partitioned(spark, ord_dir, tmp_path_factory):
     out = str(FIXDIR / "out_parquet")
     files = O.scan_ord_files(spark, ord_dir)
-    O.write_extracted(O.decode_reactions(files, decoder=O.json_decoder), out)
+    O.write_extracted(O.decode_reactions(files), out)
     back = spark.read.parquet(out)
     assert back.count() == 3
     # partitionBy(extracted_from_file) → one subdir per source file
@@ -134,84 +177,6 @@ def test_name_list_csv_round_trip(spark):
     assert back == ["a", "b"]
 
 
-class TestOrdDataSource:
-    """Native Python DataSource (spark.read.format('ord')) — planning
-    -time filename pruning + per-file partition decode."""
-
-    @pytest.fixture(scope="class")
-    def ord_dir(self, tmp_path_factory):
-        root = tmp_path_factory.mktemp("ord_ds")
-        (root / "d1").mkdir()
-        (root / "d2").mkdir()
-        rows1 = [{"rxn_str": "CC>O>CN", "reactants": ["CC"], "products": ["CN"],
-                  "yields": [None], "is_mapped": False}]
-        rows2 = [{"rxn_str": "O>N>CO", "reactants": ["O"], "products": ["CO"],
-                  "yields": [50.0], "is_mapped": True},
-                 {"rxn_str": "N>O>NC", "reactants": ["N"], "products": ["NC"],
-                  "yields": [None], "is_mapped": False}]
-        from orderly_spark.sources.ord import fake_dataset_bytes
-        (root / "d1" / "uspto-a.pb.gz").write_bytes(fake_dataset_bytes(rows1))
-        (root / "d2" / "other-b.pb.gz").write_bytes(fake_dataset_bytes(rows2))
-        return str(root)
-
-    def test_read_all(self, spark, ord_dir):
-        from orderly_spark.sources.ord_datasource import register_ord_source
-        register_ord_source(spark)
-        df = (spark.read.format("ord").option("path", ord_dir)
-              .option("decoder", "json").load())
-        rows = df.collect()
-        assert len(rows) == 3
-        assert {r.extracted_from_file for r in rows} == {"uspto-a.pb.gz", "other-b.pb.gz"}
-        assert df.schema["reactants"].dataType.simpleString() == "array<string>"
-
-    def test_skip_substring_prunes_partitions(self, spark, ord_dir):
-        from orderly_spark.sources.ord_datasource import register_ord_source
-        register_ord_source(spark)
-        df = (spark.read.format("ord").option("path", ord_dir)
-              .option("decoder", "json").option("skip_substring", "uspto").load())
-        assert {r.extracted_from_file for r in df.collect()} == {"other-b.pb.gz"}
-        # pruning happens at planning: exactly one input partition remains
-        assert df.rdd.getNumPartitions() == 1
-
-    def test_contains_substring(self, spark, ord_dir):
-        from orderly_spark.sources.ord_datasource import register_ord_source
-        register_ord_source(spark)
-        df = (spark.read.format("ord").option("path", ord_dir)
-              .option("decoder", "json").option("contains_substring", "uspto").load())
-        assert [r.rxn_str for r in df.collect()] == ["CC>O>CN"]
-
-    def test_default_format_is_wire_protobuf(self, spark, tmp_path):
-        """r10: the native 'ord' source's default decoder is the wire
-        codec — real .pb.gz bytes decode without any option."""
-        from orderly_spark.sources import ord_wire as W
-        from orderly_spark.sources.ord_datasource import register_ord_source
-
-        d = tmp_path / "pb"
-        d.mkdir()
-        rxn = W.encode_reaction(
-            cxsmiles="C>N>O",
-            inputs=[("m", [W.encode_compound([(2, "C")], 1)])],
-            products=[("O", 42.0)],
-        )
-        (d / "x.pb.gz").write_bytes(W.dataset_pb_gz([rxn]))
-        register_ord_source(spark)
-        rows = spark.read.format("ord").option("path", str(d)).load().collect()
-        assert len(rows) == 1
-        assert rows[0].rxn_str == "C>N>O" and rows[0].yields == [42.0]
-
-    def test_feeds_extract_pipeline(self, spark, ord_dir):
-        """The native source composes with the columnar extract
-        transform exactly like the binaryFile path."""
-        from pyspark.sql import functions as F
-        from orderly_spark.operators.extract import extract_reactions
-        from orderly_spark.sources.ord_datasource import register_ord_source
-        register_ord_source(spark)
-        df = (spark.read.format("ord").option("path", ord_dir)
-              .option("decoder", "json").load())
-        out = extract_reactions(df, solvent_set=F.array(F.lit("O")))
-        assert out.count() == 3
-
-
 def test_packaged_solvents_full_dimension(spark):
     """The packaged dimension is the full 615-row public table
     (reference orderly/data/solvents.py:12-29 layout) and both lookup
@@ -226,37 +191,13 @@ def test_packaged_solvents_full_dimension(spark):
     assert "O" in sset and len(sset) > 500
 
 
-def test_json_decoder_round_trips_timestamps(spark, ord_dir):
-    """Review regression: REACTION_SCHEMA's TimestampType fields were
-    untestable through the JSON fake — ISO strings now parse to real
-    datetimes so the Arrow conversion succeeds end to end."""
-    import datetime as dt
-
-    rows = [{
-        "rxn_str": "T>S>TS",
-        "reactants": ["T"],
-        "products": ["TS"],
-        "yields": [1.0],
-        "is_mapped": True,
-        "date_of_experiment": dt.datetime(2005, 1, 1, 12, 30),
-        "grant_date": dt.datetime(1960, 6, 1),  # pre-1970 survives too
-    }]
-    p = FIXDIR / "ts" / "ts.pb.gz"
-    p.parent.mkdir(parents=True, exist_ok=True)
-    p.write_bytes(O.fake_dataset_bytes(rows))
-    files = O.scan_ord_files(spark, str(p.parent))
-    got = O.decode_reactions(files, decoder=O.json_decoder).collect()[0]
-    assert got.date_of_experiment == dt.datetime(2005, 1, 1, 12, 30)
-    assert got.grant_date == dt.datetime(1960, 6, 1)
-
-
 def test_write_extracted_reextract_keeps_other_partitions(spark, ord_dir):
     """Review regression (data loss): re-extracting ONE dataset must
     overwrite only its own partition — Spark's default STATIC
     partition-overwrite truncates the whole output directory first."""
     out = str(FIXDIR / "out_reextract")
     files = O.scan_ord_files(spark, ord_dir)
-    full = O.decode_reactions(files, decoder=O.json_decoder)
+    full = O.decode_reactions(files)
     O.write_extracted(full, out)
     n_before = spark.read.parquet(out).count()
     # re-extract just the b.pb.gz dataset
@@ -273,8 +214,6 @@ def test_corrupt_wire_quarantine_and_audit(spark, tmp_path):
     never silent data loss); on_error='skip' quarantines corrupt files
     and decode_errors() over the same scan names each one with its
     error class, so skip + audit together lose nothing silently."""
-    from orderly_spark.sources import ord_wire as W
-
     d = tmp_path / "ord_mixed"
     d.mkdir()
     good = W.dataset_pb_gz([W.encode_reaction(cxsmiles="C>N>O")])
@@ -307,8 +246,6 @@ def test_total_skip_guard(spark, tmp_path):
     masquerade as an empty corpus — a task whose ≥8 files ALL fail
     raises; below the threshold (or with any good file present) the
     quarantine stays quiet."""
-    from orderly_spark.sources import ord_wire as W
-
     d = tmp_path / "ord_all_bad"
     d.mkdir()
     for i in range(8):
@@ -337,36 +274,8 @@ def test_total_skip_guard(spark, tmp_path):
     # genuine corruption — raised past the cluster size or disabled,
     # the 8-file all-corrupt task quarantines quietly instead of
     # aborting; a nonsense threshold is rejected at plan time
-    files8 = O.scan_ord_files(spark, str(d)).filter(
-        ~F.col("path").endswith("good.pb.gz")
-    ).repartition(1)
+    files8 = O.scan_ord_files(spark, str(d), name_contains="good", inverse=True).repartition(1)
     assert O.decode_reactions(files8, on_error="skip", total_skip_guard=None).count() == 0
     assert O.decode_reactions(files8, on_error="skip", total_skip_guard=20).count() == 0
     with pytest.raises(ValueError, match="total_skip_guard"):
         O.decode_reactions(files8, on_error="skip", total_skip_guard=1)
-
-
-def test_native_ord_source_on_error_skip(spark, tmp_path):
-    """r11: the native format('ord') path mirrors decode_reactions'
-    quarantine contract — default loud abort, .option('on_error',
-    'skip') drops exactly the corrupt files, unknown mode rejected at
-    plan time."""
-    from orderly_spark.sources import ord_wire as W
-    from orderly_spark.sources.ord_datasource import register_ord_source
-
-    d = tmp_path / "ord_mixed_ds"
-    d.mkdir()
-    (d / "good.pb.gz").write_bytes(W.dataset_pb_gz([W.encode_reaction(cxsmiles="C>N>O")]))
-    (d / "bad.pb.gz").write_bytes(b"\x0a\x05ab")
-    register_ord_source(spark)
-
-    with pytest.raises(Exception):
-        spark.read.format("ord").option("path", str(d)).load().collect()
-
-    ok = (spark.read.format("ord").option("path", str(d))
-          .option("on_error", "skip").load().collect())
-    assert [r.extracted_from_file for r in ok] == ["good.pb.gz"]
-
-    with pytest.raises(Exception):
-        (spark.read.format("ord").option("path", str(d))
-         .option("on_error", "quarantine").load().collect())

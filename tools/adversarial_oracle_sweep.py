@@ -681,7 +681,7 @@ def ord_quarantine_scale_check(root: str = "/tmp/sf_med_ord", n_good: int = 160,
     """The corrupt-.pb.gz half of the r12 media sweep, at bench scale:
     200 files (160 good wire-format datasets, 40 corrupt in four
     classes — truncated gzip, LEN-overrun wire, gzip-wrapped corrupt
-    wire, random bytes), pushed through BOTH decode paths.
+    wire, random bytes), pushed through the decode and its audit.
 
     Sweep finding, documented not 'fixed': an EMPTY file is NOT a
     corrupt class — proto3 serializes an empty Dataset to zero bytes,
@@ -695,15 +695,11 @@ def ord_quarantine_scale_check(root: str = "/tmp/sf_med_ord", n_good: int = 160,
       rows (quarantine drops precisely the corrupt set);
     - decode_errors() audits exactly the corrupt files;
     - the r12 total-skip guard does NOT false-fire with good files
-      present, and DOES fire on an all-corrupt many-file task;
-    - the native format('ord') source agrees with the mapInPandas path.
+      present, and DOES fire on an all-corrupt many-file task.
     """
-    from pyspark.sql import functions as F  # noqa: F401
-
     from orderly_spark.session import get_spark
     from orderly_spark.sources import ord as O
     from orderly_spark.sources import ord_wire as W
-    from orderly_spark.sources.ord_datasource import register_ord_source
 
     shutil.rmtree(root, ignore_errors=True)
     os.makedirs(root)
@@ -749,15 +745,8 @@ def ord_quarantine_scale_check(root: str = "/tmp/sf_med_ord", n_good: int = 160,
     errs = {r.file for r in O.decode_errors(files).collect()}
     assert errs == bad, (len(errs), len(bad))
 
-    register_ord_source(spark)
-    native = (
-        spark.read.format("ord").option("path", root).option("on_error", "skip").load()
-    )
-    assert native.count() == n_expected
     # all-corrupt many-file task must trip the total-skip guard
-    only_bad = O.scan_ord_files(spark, root).filter(
-        F.col("path").contains("bad")
-    ).repartition(1)
+    only_bad = O.scan_ord_files(spark, root, name_contains="bad").repartition(1)
     try:
         O.decode_reactions(only_bad, on_error="skip").collect()
         raise AssertionError("total-skip guard did not fire")
@@ -978,9 +967,8 @@ def hostile_ord_wire_check(root: str = "/tmp/sf_ord_wire", n_base: int = 120) ->
       I5 field reorder: stable group-by field number, descending
          (proto field order is free; repeated-field relative order
          preserved).
-    CONSISTENCY (no identity twin; the three decode paths must agree
-    row-for-row: mapInPandas, native format('ord'), driver-side pure
-    python):
+    CONSISTENCY (no identity twin; the two decode paths must agree
+    row-for-row: mapInPandas and driver-side pure python):
       C1 hostile UTF-8 strings from the sweep alphabet in every
          string field; C2 a 1000-reaction file with unknown dataset
          fields interleaved between reactions.
@@ -991,12 +979,9 @@ def hostile_ord_wire_check(root: str = "/tmp/sf_ord_wire", n_base: int = 120) ->
     """
     import gzip as _gz
 
-    from pyspark.sql import functions as F  # noqa: F401
-
     from orderly_spark.session import get_spark
     from orderly_spark.sources import ord as O
     from orderly_spark.sources import ord_wire as W
-    from orderly_spark.sources.ord_datasource import register_ord_source
 
     rng = random.Random(SEED + 15)
 
@@ -1184,7 +1169,7 @@ def hostile_ord_wire_check(root: str = "/tmp/sf_ord_wire", n_base: int = 120) ->
         with open(os.path.join(root, name), "wb") as f:
             f.write(payload)
 
-    # --- drive all three decode paths --------------------------------
+    # --- drive both decode paths -------------------------------------
     spark = get_spark("ord_wire_sweep")
     files = O.scan_ord_files(spark, root)
     rows = O.decode_reactions(files, on_error="skip").collect()
@@ -1228,16 +1213,12 @@ def hostile_ord_wire_check(root: str = "/tmp/sf_ord_wire", n_base: int = 120) ->
     errs = {r.file for r in O.decode_errors(files).collect()}
     assert errs == bad, (sorted(errs - bad)[:3], sorted(bad - errs)[:3])
 
-    register_ord_source(spark)
-    native = (
-        spark.read.format("ord").option("path", root).option("on_error", "skip").load()
-    )
     n_expected_rows = sum(len(v) for v in expected.values())
-    assert native.count() == n_expected_rows == len(rows)
+    assert n_expected_rows == len(rows)
     print(
         f"hostile ORD wire check OK: {n_identity} identity-mutated files + "
         f"1 big consistency file + {len(bad)} corrupt, {n_expected_rows} rows, "
-        f"all three decode paths exact, audit exact"
+        f"both decode paths exact, audit exact"
     )
 
 

@@ -17,9 +17,9 @@ sys.path.insert(0, str(REPO))
 # registered query are covered by unit tests only (noted).
 IMPL: dict[str, tuple[str, str]] = {
     # §2.1 scans/sources/sinks
-    "S1": ("sources/ord.py scan_ord_files + ord_datasource.py (native format 'ord', planning-time pruning)", "tests/test_sources.py"),
-    "S2": ("sources/ord_wire.py pure-Python protobuf wire codec + sources/ord.py decode_reactions + ord_datasource.py per-partition decode", "tests/test_ord_wire.py"),
-    "S3": ("sources/ord.py scan_ord_files(skip_substring) + ord_datasource skip/contains options + functions/rxn.py filename_contains", "tests/test_sources.py"),
+    "S1": ("sources/ord.py scan_ord_files (binaryFile + glob)", "tests/test_sources.py"),
+    "S2": ("sources/ord_wire.py pure-Python protobuf wire codec + sources/ord.py decode_reactions (mapInPandas)", "tests/test_ord_wire.py"),
+    "S3": ("sources/ord.py scan_ord_files(name_contains, inverse) → functions/rxn.py filename_contains on the file's basename", "tests/test_sources.py"),
     "S4": ("functions/rxn.py grant_date_from_filename", "tests/test_extract.py"),
     "S5": ("sources/ord.py write_extracted (partitionBy source file)", "tests/test_sources.py"),
     "S6": ("operators/cleaning.py merge_extracted + schema.py wide_to_array", "tests/test_cleaning.py"),
