@@ -1,1 +1,1 @@
-"""Scalar/array function library: chem UDFs (RDKit-gated), hashing."""
+"""Scalar/array function library: chem UDFs (pure-Python SMILES kernels), hashing."""

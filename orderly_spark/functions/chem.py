@@ -1,20 +1,19 @@
 """Chemistry UDFs (SURVEY §2.10 / M2): SMILES canonicalisation,
 atom-map detection, transition-metal test, Morgan fingerprints.
 
-RDKit is not part of the harness image. Since r11 the TM test and the
-Morgan fingerprint run REAL chemistry on the pure-Python SMILES graph
-parser (functions/smiles.py) for the parseable subset; since r12
-canonicalisation (F3) does too — a canonical atom ranking (Morgan
-relaxation + exhaustive tie-break) and deterministic SMILES writer
-over the same parsed graph, with Hückel aromaticity perception since
-r13 (Kekulé and aromatic spellings of one molecule collapse to one
-canonical string AND one fingerprint, like the reference's RDKit
-path). Only inputs outside the grammar
-(plain-text names, exotic stereo tags) fall to the clearly-marked
-fallbacks (identity pass-through for canonicalisation). The
-Spark-side plumbing (pandas UDFs, Arrow batching, per-batch memo
-cache, two-phase distinct→broadcast application) is real in every
-path.
+Every function has one kernel, the pure-Python SMILES graph parser in
+:mod:`orderly_spark.functions.smiles`, so its output depends only on
+its input, never on which packages an executor can import. On the
+parser's SMILES subset the kernels do real chemistry: a canonical atom
+ranking (Morgan relaxation + exhaustive tie-break) and deterministic
+SMILES writer with Hückel aromaticity perception (Kekulé and aromatic
+spellings of one molecule collapse to one canonical string and one
+fingerprint), an atomic-number walk for the TM test, and counted
+Morgan environments for fingerprints. Inputs outside the grammar
+(plain-text names, exotic stereo tags) take input-selected fallbacks:
+identity for canonicalisation, a symbol scan for the TM test, zeros
+for fingerprints. RDKit agreement is checked by skip-gated parity
+tests (tests/test_smiles.py), not by a second program path.
 
 Reference behaviours mirrored:
 - canonicalise: orderly/extract/canonicalise.py:12-72 (strip atom
@@ -42,14 +41,6 @@ from pyspark.sql import types as T
 
 from orderly_spark.session import barrier
 
-try:  # pragma: no cover - rdkit not in harness image
-    from rdkit import Chem  # type: ignore
-
-    HAVE_RDKIT = True
-except Exception:  # pragma: no cover
-    Chem = None
-    HAVE_RDKIT = False
-
 # transition metals: atomic numbers 22-29, 40-47, 72-79 (defaults.py:10-39)
 _TM_SYMBOLS = (
     "Ti V Cr Mn Fe Co Ni Cu "
@@ -58,25 +49,28 @@ _TM_SYMBOLS = (
 ).split()
 
 
-def _parsed_canonicalise_one(smiles: str, is_mapped: bool) -> str:
-    """F3 kernel on the pure-Python parsed graph (r12; aromaticity
-    perception r13): canonical atom ranking (Morgan relaxation +
-    exhaustive tie-break) and a deterministic SMILES writer
-    (functions/smiles.py canonical_smiles). The retry on parse failure
-    takes the SHAPE of the reference's bracket quirk
-    (canonicalise.py:66-72) without matching its branch structure
-    exactly: the reference returns None for inputs starting with '['
-    but not ending with ']' (raw name kept) and retries the
-    map-RETAINING canonicalise, while this wraps bare names to
-    ``[x]`` / unwraps ``[x]`` to inner and retries with the same
-    strip_atom_map flag. The divergence is observably equivalent only
-    because FAILED retries collapse to identity on both sides; a
-    SUCCESSFUL retry is visible here where the reference would keep
-    the raw name (e.g. bare ``Pd`` → ``[Pd]``) — a deliberate,
-    documented delta (ADVICE r12; pinned by
-    test_parsed_canonicalise_one_retry_quirk)."""
+def _canonicalise_one(smiles: str | None, is_mapped: bool) -> str | None:
+    """F3 kernel: canonical SMILES from the parsed graph
+    (functions/smiles.py canonical_smiles), atom maps stripped when
+    ``is_mapped``; None for None. Input that does not parse, even after
+    the bracket retry below, is returned unchanged, so digit-string and
+    name members pass through.
+
+    The retry on parse failure takes the SHAPE of the reference's
+    bracket quirk (canonicalise.py:66-72) without matching its branch
+    structure exactly: the reference returns None for inputs starting
+    with '[' but not ending with ']' (raw name kept) and retries the
+    map-RETAINING canonicalise, while this wraps bare names to ``[x]``
+    / unwraps ``[x]`` to inner and retries with the same
+    strip_atom_map flag. The two agree wherever the retry fails (both
+    keep the input); a SUCCESSFUL retry is visible here where the
+    reference would keep the raw name (e.g. bare ``Pd`` → ``[Pd]``) —
+    a documented delta, pinned by
+    test_parsed_canonicalise_one_retry_quirk."""
     from orderly_spark.functions.smiles import canonical_smiles
 
+    if smiles is None:
+        return None
     c = canonical_smiles(smiles, strip_atom_map=is_mapped)
     if c is not None:
         return c
@@ -87,64 +81,29 @@ def _parsed_canonicalise_one(smiles: str, is_mapped: bool) -> str:
     return c if c is not None else smiles
 
 
-def _canonicalise_one(smiles: str, is_mapped: bool) -> str | None:
-    """Single-molecule canonicalisation; memoised per batch by the UDF."""
-    if smiles is None:
-        return None
-    if not HAVE_RDKIT:
-        # No RDKit in image (r12, F3 partial-close): REAL canonical
-        # SMILES from the pure-Python parser/writer for the parseable
-        # subset; identity pass-through only for inputs outside the
-        # grammar (names). RDKit-vs-parser string equality is NOT
-        # claimed (different canonical orderings) — equality CLASSES
-        # agree, pinned by the skip-gated parity tests.
-        return _parsed_canonicalise_one(smiles, is_mapped)
-    mol = Chem.MolFromSmiles(smiles)
-    if mol is None and "[" in smiles:
-        # bracket-retry quirk (canonicalise.py:37-47)
-        mol = Chem.MolFromSmiles(smiles.replace("[", "").replace("]", ""))
-    if mol is None:
-        return None
-    if is_mapped:
-        for atom in mol.GetAtoms():
-            atom.SetAtomMapNum(0)
-    return Chem.MolToSmiles(mol)
-
-
-def _has_tm_one(smiles: str) -> bool:
+def _has_tm_one(smiles: str | None) -> bool:
+    """F5 kernel: an exact atomic-number walk over the parsed graph
+    (functions/smiles.py molecule_has_tm). Only input outside the
+    parser's SMILES subset (e.g. plain-text names) takes the symbol
+    scan, whose measured false-positive surface is pinned by
+    tests/test_chem.py."""
     if smiles is None:
         return False
-    if HAVE_RDKIT:
-        mol = Chem.MolFromSmiles(smiles)
-        if mol is None:
-            return False
-        return any(
-            22 <= a.GetAtomicNum() <= 29 or 40 <= a.GetAtomicNum() <= 47 or 72 <= a.GetAtomicNum() <= 79
-            for a in mol.GetAtoms()
-        )
-    # No RDKit: EXACT atomic-number walk on the pure-Python parsed
-    # graph (functions/smiles.py — r11, F5 partial-close). Only inputs
-    # OUTSIDE the parser's SMILES subset (e.g. plain-text names) fall
-    # through to the legacy symbol scan, whose measured false-positive
-    # surface is pinned by tests/test_chem.py.
     from orderly_spark.functions.smiles import molecule_has_tm
 
     parsed = molecule_has_tm(smiles)
     if parsed is not None:
         return parsed
-    # FALLBACK (unparseable only): symbol scan — two-letter symbols
-    # first so 'Pd' is not read as phosphorus+deuterium.
-    for sym in _TM_SYMBOLS:
-        if sym in smiles:
-            return True
-    return False
+    # symbol scan, unparseable input only
+    return any(sym in smiles for sym in _TM_SYMBOLS)
 
 
 @F.pandas_udf(T.StringType())
 def canonical_smiles_udf(it: Iterator[pd.DataFrame]) -> Iterator[pd.Series]:
-    """Scalar-iterator pandas UDF with an executor-local memo dict —
-    molecule strings repeat heavily, so the cache turns O(rows) RDKit
-    calls into O(distinct) per batch stream (SURVEY §4 'custom')."""
+    """F3 over ``struct(smiles, is_mapped)``: :func:`_canonicalise_one`
+    per row, behind an executor-local memo dict — molecule strings
+    repeat heavily, so the cache turns O(rows) kernel calls into
+    O(distinct) per batch stream (SURVEY §4 'custom')."""
     memo: dict[tuple[str, bool], str | None] = {}
     for pdf in it:
         # struct-column call → DataFrame batch; two-arg call (e.g. the
@@ -178,20 +137,17 @@ def has_transition_metal_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
 
 
 def has_atom_map(col: Column) -> Column:
-    """F4 (extractor.py:249-253) as a pure expression FALLBACK: an
-    atom-map annotation is a ':<n>' suffix inside a bracket atom
-    (``[CH3:1]``) — detectable by regex without parsing. The RDKit
-    property check (molAtomMapNumber via ``canonical_smiles_udf``)
-    supersedes this when the library is present; the regex is exact
-    for well-formed SMILES since ':digits]' occurs only as a map.
+    """F4 (extractor.py:249-253) as a pure expression: an atom-map
+    annotation is a ':<n>' suffix inside a bracket atom (``[CH3:1]``),
+    detectable by regex without parsing; the regex is exact for
+    well-formed SMILES since ':digits]' occurs only as a map.
     MAP CLASS 0 (``[CH3:0]``, any all-zero digit run) counts as
-    UNMAPPED (r14, closing the r13-ledgered divergence): the parser
-    and RDKit's GetAtomMapNum()==0 convention — which the reference's
-    property check uses — both treat map 0 as no map, so the regex now
-    requires a nonzero digit. NOTE the REFERENCE'S regex fallback
-    (extractor.py) disagrees: it reads ':0]' as mapped, diverging from
-    its own RDKit path; we side with the property-check convention.
-    Pinned by test_atom_map_regex_cross_exam_hostile_corpora."""
+    UNMAPPED: the parser and RDKit's GetAtomMapNum()==0 convention —
+    which the reference's property check uses — both treat map 0 as no
+    map, so the regex requires a nonzero digit. NOTE the REFERENCE'S
+    regex fallback (extractor.py) disagrees: it reads ':0]' as mapped,
+    diverging from its own property check; we side with the property
+    check. Pinned by test_atom_map_regex_cross_exam_hostile_corpora."""
     return F.coalesce(col.rlike(":0*[1-9][0-9]*\\]"), F.lit(False))
 
 
@@ -200,7 +156,7 @@ def canonicalise_via_dimension(df: DataFrame, array_col: str, is_mapped_col: str
     distinct (molecule, mapped) pairs → UDF over the distinct set →
     broadcast-join the small dimension back → reassemble arrays.
 
-    Versus a per-row UDF this reduces RDKit work from Σ|arr| to
+    Versus a per-row UDF this reduces kernel work from Σ|arr| to
     |distinct molecules| and keeps the expensive stage off the fact
     shuffle path."""
     # - rows group by a synthetic UNIQUE row id, not by all non-array
@@ -262,24 +218,13 @@ def tm_first_order(arr: Column, tm_set: Column) -> Column:
     return F.concat(tm, rest)
 
 
-def _morgan_fp_one(smiles: str | None, n_bits: int, radius: int, engine: str = "auto") -> np.ndarray:
+def _morgan_fp_one(smiles: str | None, n_bits: int, radius: int) -> np.ndarray:
     """F14 per-molecule kernel (fingerprints.py:76-99): a counted,
-    hashed Morgan fingerprint as an int32 vector, zeros for null or
-    unparseable input in every engine. ``engine="auto"`` uses RDKit
-    when importable and the pure-Python parsed-graph kernel
-    (functions/smiles.py) otherwise; ``"parsed"`` always uses the
-    parser, so its values are identical in every environment."""
+    hashed Morgan fingerprint from the parsed graph
+    (functions/smiles.py morgan_fingerprint) as an int32 vector, zeros
+    for null or unparseable input."""
     out = np.zeros(n_bits, dtype=np.int32)
     if smiles is None:
-        return out
-    if HAVE_RDKIT and engine == "auto":
-        from rdkit.Chem import AllChem  # type: ignore
-
-        mol = Chem.MolFromSmiles(smiles)
-        if mol is not None:
-            fp = AllChem.GetHashedMorganFingerprint(mol, radius, nBits=n_bits)
-            for idx, v in fp.GetNonzeroElements().items():
-                out[idx] = v
         return out
     from orderly_spark.functions.smiles import morgan_fingerprint
 
@@ -289,7 +234,7 @@ def _morgan_fp_one(smiles: str | None, n_bits: int, radius: int, engine: str = "
     return out
 
 
-def _memoized_fp(n_bits: int, radius: int, engine: str = "auto"):
+def _memoized_fp(n_bits: int, radius: int):
     """Per-UDF-instance memo over :func:`_morgan_fp_one`: molecule
     strings repeat heavily, so one kernel call per distinct molecule.
     The cached vectors are shared between rows and slots, hence
@@ -299,41 +244,26 @@ def _memoized_fp(n_bits: int, radius: int, engine: str = "auto"):
     def fp(smiles: str | None) -> np.ndarray:
         v = memo.get(smiles)
         if v is None:
-            v = memo[smiles] = _morgan_fp_one(smiles, n_bits, radius, engine)
+            v = memo[smiles] = _morgan_fp_one(smiles, n_bits, radius)
             v.flags.writeable = False
         return v
 
     return fp
 
 
-def _fp_column_udf(n_bits: int, radius: int, engine: str):
+def morgan_fingerprint_udf(n_bits: int = 2048, radius: int = 3):
+    """Morgan fingerprint pandas UDF factory → ArrayType(IntegerType)
+    over one molecule column: :func:`_morgan_fp_one`, memoised per
+    distinct molecule. Zeros on null or unparseable input, matching the
+    reference's contract (fingerprints.py:92-99)."""
+
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def fp_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        fp = _memoized_fp(n_bits, radius, engine)
+        fp = _memoized_fp(n_bits, radius)
         for s in it:
             yield s.map(fp)
 
     return fp_udf
-
-
-def morgan_fingerprint_udf(n_bits: int = 2048, radius: int = 3):
-    """Morgan fingerprint pandas UDF factory → ArrayType(IntegerType)
-    over one molecule column: :func:`_morgan_fp_one` (RDKit when
-    importable, else the parsed-graph kernel), memoised per distinct
-    molecule. Zeros on null or unparseable input, matching the
-    reference's contract (fingerprints.py:92-99)."""
-    return _fp_column_udf(n_bits, radius, "auto")
-
-
-def parsed_morgan_fp_udf(n_bits: int = 2048, radius: int = 3):
-    """Engine-PINNED Morgan fingerprint pandas UDF: always the
-    pure-Python parser kernel (functions/smiles.py), never RDKit, so
-    the values are identical in every environment — the variant the
-    DuckDB value oracles replay (x_morgan_fp_parsed /
-    m_fp_matrix_sink). Zeros on parse failure, like the reference
-    (fingerprints.py:92-99). RDKit agreement is the skip-gated parity
-    tests' job, not this UDF's."""
-    return _fp_column_udf(n_bits, radius, "parsed")
 
 
 _REACTION_FP_TYPE = T.StructType(
@@ -375,33 +305,6 @@ def reaction_fingerprint_udf(n_bits: int = 2048, radius: int = 3):
             yield pd.DataFrame({"product_fp": product_fps, "rxn_diff_fp": diffs})
 
     return rxn_fp_udf
-
-
-@F.pandas_udf(T.StringType())
-def parsed_canonical_smiles_udf(it: Iterator[pd.DataFrame]) -> Iterator[pd.Series]:
-    """Engine-PINNED canonical-SMILES pandas UDF: always the
-    pure-Python parser/writer kernel (_parsed_canonicalise_one), never
-    RDKit, so values are identical in every environment — the variant
-    the DuckDB value oracle replays (x_canonical_smiles). Takes
-    ``struct(smiles, is_mapped)`` like canonical_smiles_udf; identity
-    pass-through outside the parser subset. RDKit agreement is the
-    skip-gated parity tests' job, not this UDF's."""
-    memo: dict[tuple[str, bool], str] = {}
-    for pdf in it:
-        if isinstance(pdf, tuple):
-            smiles, mapped = pdf
-        else:
-            smiles, mapped = pdf.iloc[:, 0], pdf.iloc[:, 1]
-        out = []
-        for s, m in zip(smiles, mapped):
-            if s is None:
-                out.append(None)
-                continue
-            k = (s, bool(m))
-            if k not in memo:
-                memo[k] = _parsed_canonicalise_one(s, bool(m))
-            out.append(memo[k])
-        yield pd.Series(out, dtype="object")
 
 
 def export_fingerprint_matrix_npy(

@@ -1,12 +1,9 @@
-"""Pure-Python SMILES graph parser + Morgan fingerprint (F5/F14
-partial-close, r10 verdict item 2 — the S2 playbook applied to the
-RDKit gap).
+"""Pure-Python SMILES graph parser, canonical writer and Morgan
+fingerprint: the one kernel behind every chem function
+(functions/chem.py), with no chemistry-library dependency.
 
-RDKit is absent from the harness image, so the chem kernels ran on
-honest fallbacks (symbol scan for the transition-metal test, a
-deterministic fake fingerprint). This module closes the gap for the
-PARSEABLE subset of SMILES with a dependency-free parser built from
-the public OpenSMILES grammar:
+The parser covers the PARSEABLE subset of SMILES, built from the
+public OpenSMILES grammar:
 
 - bracket atoms ``[isotope? SYMBOL chiral? Hcount? charge? :map?]``
 - the organic subset ``B C N O P S F Cl Br I`` and aromatic
@@ -37,7 +34,7 @@ What the parsed graph powers:
   the caller). Engine-independent and deterministic: the hash is
   blake2b, never Python's randomised ``hash()``.
 
-Correctness strategy without RDKit in the image: (a) hand-checkable
+Correctness strategy: (a) hand-checkable
 graph assertions on curated molecules (atom counts, bond orders, ring
 closure targets); (b) the classic Morgan invariance property —
 renumbering-equivalent SMILES spellings of the SAME molecule must

@@ -12,7 +12,7 @@ Two tiers, matching how each function should execute:
    and never leave the JVM.
 
 2. **Python/pandas UDFs** (``spark.udf.register``): the chem functions
-   that genuinely need RDKit (F3 canonical_smiles, F5
+   that need the parsed SMILES graph (F3 canonical_smiles, F5
    has_transition_metal, F14 morgan_fp). Arrow-batched pandas UDFs
    with executor-local memoisation — the unavoidable slow path, kept
    off the hot path by the distinct→broadcast dimension pattern
@@ -74,8 +74,8 @@ def register_sql_functions(spark: SparkSession) -> list[str]:
     """
     for ddl in _SQL_FUNCTIONS:
         spark.sql(ddl)
-    # Chem tier: Arrow-batched pandas UDFs (RDKit-gated; the UDFs fall
-    # back to deterministic pure-Python kernels when RDKit is absent).
+    # Chem tier: Arrow-batched pandas UDFs over the pure-Python
+    # parsed-graph kernels (functions/chem.py).
     spark.udf.register("canonical_smiles", canonical_smiles_udf)
     spark.udf.register("has_transition_metal", has_transition_metal_udf)
     spark.udf.register("morgan_fp", morgan_fingerprint_udf())

@@ -6,15 +6,15 @@
 ``extract_reactions`` is the per-reaction transformation the reference
 runs row-at-a-time in ``handle_reaction_object``
 (orderly/extract/extractor.py:596-1073), composed from the pure
-Catalyst expression builders in :mod:`orderly_spark.functions.rxn` and
-the chem dimension pattern in :mod:`orderly_spark.functions.chem` —
-one codegen'd pass over the decoded rows, no Python in the hot path
-except the (optional) canonicalisation dimension build.
+Catalyst expression builders in :mod:`orderly_spark.functions.rxn` —
+one codegen'd pass over the decoded rows, no Python in the hot path.
+Molecules stay as the decoder wrote them: extract does not
+canonicalise (that is :func:`orderly_spark.functions.chem.
+canonicalise_via_dimension`, a separate step).
 
 Pipeline shape at scale: decode fans out one task per file; the
 transform is map-only; the single shuffle is the molecule-name
-distinct; canonicalisation touches only the distinct-molecule
-dimension (broadcast back).
+distinct.
 """
 
 from __future__ import annotations
@@ -25,8 +25,10 @@ from pyspark.sql import functions as F
 from orderly_spark.functions import rxn as R
 
 # bracketed transition-metal symbol scan (atomic № 22-29, 40-47, 72-79
-# — defaults.py:10-39), allowing an isotope prefix ([99Tc], [106Pd]);
-# the RDKit-backed dimension supersedes this when the library is present
+# — defaults.py:10-39), allowing an isotope prefix ([99Tc], [106Pd]).
+# It reads bracketed symbols only, so unlike functions/chem._has_tm_one
+# (whose symbol scan for unparseable input flags names such as 'Water')
+# it does not flag unbracketed names
 TM_SYMBOL_REGEX = (
     "\\[[0-9]*(Ti|V|Cr|Mn|Fe|Co|Ni|Cu|Zr|Nb|Mo|Tc|Ru|Rh|Pd|Ag|Hf|Ta|W|Re|Os|Ir|Pt|Au)"
 )
@@ -134,8 +136,7 @@ def extract_reactions(
         # catalysts to reagents)
         df = _with_sql(df, {"catalysts": _tm_first("catalysts")})
 
-    # P12: Pd/C support carbon (TM detection via bracket-symbol scan —
-    # the chem-UDF TM dimension can replace this flag when RDKit is on).
+    # P12: Pd/C support carbon (TM detection via the bracket-symbol scan).
     # P13: ice → 0 °C; removing 'C'/'[C]' never changes whether an ice
     # member is present, so both read the agents before P12.
     return _with_sql(df, {
@@ -154,9 +155,9 @@ def _is_unresolved_name(name: str) -> str:
 
 
 def molecule_name_side_output(df: DataFrame) -> DataFrame:
-    """S7/A1: identifiers that canonicalisation could not parse —
-    with RDKit absent this degrades to 'numeric or empty', keeping the
-    distinct+sort plumbing (main.py:54-89) testable."""
+    """S7/A1: identifiers that did not resolve to a molecule, read as
+    'numeric or empty' members (decode keeps identifiers as written),
+    distinct and sorted (main.py:54-89)."""
     names = df.selectExpr(f"explode({_name_members()}) AS name").where(_is_unresolved_name("name"))
     from orderly_spark.sources.ord import merge_molecule_names
 

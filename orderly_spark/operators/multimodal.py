@@ -2,14 +2,13 @@
 video as opaque ``binary`` columns with typed metadata, processed by
 Arrow-batched Pandas UDFs over ``mapInPandas``.
 
-The decode step is STUBBED — image/audio codec libraries (PIL,
-ffmpeg, torchaudio…) are not in this container. Every operator is
-split into
+Media are read in one container format, the fake one below; there is
+no codec (PIL, ffmpeg, torchaudio…) path, so every kernel's output
+depends only on its input. Every operator is split into
   (a) the Spark-side plumbing — schema, batching, partitioning, UDF
       signature, null handling — which is REAL and tested, and
-  (b) a ``_decode_*`` kernel, import-gated: real library if present,
-      else a deterministic parser of the fake container format below
-      (or NotImplementedError where no sensible fake exists).
+  (b) a deterministic kernel over the container header and payload;
+      any other bytes are invalid media.
 
 Fake container format (for tests/fixtures): ``b"OSMM" + json header
 + b"\\0" + payload`` — enough structure that header parsing, frame
@@ -34,13 +33,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-try:  # pragma: no cover - not in harness image
-    from PIL import Image  # type: ignore  # noqa: F401
-
-    HAVE_PIL = True
-except Exception:  # pragma: no cover
-    HAVE_PIL = False
 
 MAGIC = b"OSMM"
 
@@ -117,32 +109,6 @@ def _parse_fake(content: bytes) -> dict | None:
         return None
 
 
-def _image_meta_real_pil(blob: bytes) -> dict | None:  # pragma: no cover
-    """Real-codec metadata (runs only where PIL exists): width/height
-    from the actual image header. None = not an image PIL can read."""
-    import io
-
-    from PIL import Image  # type: ignore
-
-    try:
-        with Image.open(io.BytesIO(blob)) as im:
-            w, h = im.size
-            # animated formats (GIF, multi-frame TIFF) expose n_frames;
-            # single-frame formats default to 1 (r13, ADVICE r12)
-            frames = int(getattr(im, "n_frames", 1))
-        return {
-            "media_type": "image",
-            "width": int(w),
-            "height": int(h),
-            "n_frames": frames,
-            "sample_rate": None,
-            "n_bytes": len(blob),
-            "valid": True,
-        }
-    except Exception:
-        return None
-
-
 def decode_media_meta(df: DataFrame, content_col: str = "content") -> DataFrame:
     """Decode → typed metadata struct, appended as ``media_meta``.
 
@@ -151,10 +117,8 @@ def decode_media_meta(df: DataFrame, content_col: str = "content") -> DataFrame:
     yield valid=false rows instead of failing the task — at 100 TB a
     per-mille of corrupt blobs is certain and must not kill stages.
 
-    Kernel: fake-container header parse; with PIL installed (r12),
-    raw image bytes take the REAL codec branch first — actual
-    width/height from the image header — and only fall to the fake
-    parse when undecodable."""
+    Kernel: the container header parse; bytes that are not a
+    well-formed container yield valid=false."""
     out_schema = T.StructType(
         list(df.schema.fields) + [T.StructField("media_meta", MEDIA_META_SCHEMA)]
     )
@@ -164,15 +128,6 @@ def decode_media_meta(df: DataFrame, content_col: str = "content") -> DataFrame:
             metas = []
             for content in pdf[content_col]:
                 blob = bytes(content) if content is not None else None
-                if HAVE_PIL and blob is not None and not blob.startswith(MAGIC):  # pragma: no cover
-                    # real-codec branch (r12, skip-gate tested where
-                    # PIL exists): raw image bytes yield real header
-                    # dims; undecodable blobs fall through to the
-                    # fake-container parse → valid=false
-                    real = _image_meta_real_pil(blob)
-                    if real is not None:
-                        metas.append(real)
-                        continue
                 parsed = _parse_fake(blob)
                 if parsed is None:
                     metas.append(
@@ -289,38 +244,13 @@ def sample_frames(df: DataFrame, every_n: int, content_col: str = "content") -> 
     return df.mapInPandas(kernel, out_schema)
 
 
-def _resize_real_pil(blob: bytes, width: int, height: int) -> bytes | None:  # pragma: no cover
-    """Real-codec resize (runs only where PIL exists — skip-gate tested
-    there, never in this image): decode raw image bytes, LANCZOS-resize
-    to (width, height), re-encode PNG (deterministic given the same PIL
-    build). None = not decodable as an image → caller falls back."""
-    import io
-
-    from PIL import Image  # type: ignore
-
-    try:
-        with Image.open(io.BytesIO(blob)) as im:
-            resized = im.resize((width, height), Image.LANCZOS)
-            buf = io.BytesIO()
-            resized.save(buf, format="PNG")
-            return buf.getvalue()
-    except Exception:
-        return None
-
-
 def resize_images(df: DataFrame, width: int, height: int, content_col: str = "content") -> DataFrame:
-    """Image resize. Kernel import-gated on PIL: with the library
-    present, raw image bytes (PNG/JPEG/…) are really decoded, LANCZOS
-    resized and re-encoded PNG; blobs PIL cannot decode fall through
-    to the fake-container stub (header dims rewritten, payload
-    truncated by the area ratio — deterministic, shape-preserving).
-    Without PIL (this image) only the stub path runs. r12: the
-    PIL-present branch used to raise NotImplementedError — the first
-    image with a real codec flipped the operator from working to
-    crashing; it now runs the real kernel with the stub as fallback.
-    Plumbing real either way: mapInPandas, same schema out, invalid
-    rows pass through unchanged (resize is best-effort, not a
-    filter)."""
+    """Image resize over the container format: header dims rewritten,
+    payload truncated by the area ratio (deterministic,
+    shape-preserving). Plumbing: mapInPandas, same schema out; rows
+    that are not container images (other media, invalid or header-
+    incomplete blobs) pass through unchanged — resize is best-effort,
+    not a filter."""
     schema = df.schema
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -328,11 +258,6 @@ def resize_images(df: DataFrame, width: int, height: int, content_col: str = "co
             out = []
             for content in pdf[content_col]:
                 blob = bytes(content) if content is not None else None
-                if HAVE_PIL and blob is not None and not blob.startswith(MAGIC):  # pragma: no cover
-                    real = _resize_real_pil(blob, width, height)
-                    if real is not None:
-                        out.append(real)
-                        continue
                 parsed = _parse_fake(blob)
                 # header-incomplete blobs pass through unchanged too —
                 # parsed["width"] etc. raised KeyError and killed the

@@ -542,24 +542,22 @@ def c_full_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "c_canonicalise_dimension_roundtrip",
-    # without RDKit the chem UDF is an identity fallback, so the oracle
-    # is the unchanged scaffold — what the gate then certifies is the
-    # explode → distinct → UDF → broadcast-join → positional-reassembly
-    # plumbing (SURVEY §7.3.2, the 100 TB canonicalisation pattern)
-    oracle=(
-        f"""
+    # the scaffold's reactants are digit strings, which the parser
+    # canonicaliser returns unchanged (outside the SMILES grammar), so
+    # the oracle is the unchanged scaffold — what the gate certifies is
+    # the explode → distinct → UDF → broadcast-join → positional-
+    # reassembly plumbing (SURVEY §7.3.2, the 100 TB canonicalisation
+    # pattern)
+    oracle=f"""
     WITH {RX_SQL}
     SELECT rid, COALESCE(array_to_string(reactants, '.'), '') AS r
     FROM rx
-    """
-        if not chem.HAVE_RDKIT
-        else None
-    ),
+    """,
     category="chem",
     survey="F3",
 )
 def c_canonicalise_dimension_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F3 (canonicalise.py:12-72) at scale: NEVER one RDKit call per
+    """F3 (canonicalise.py:12-72) at scale: NEVER one kernel call per
     fact row — distinct (molecule, is_mapped) pairs are canonicalised
     once and broadcast-joined back (reduces UDF work from Σ|arr| to
     |distinct|, keeping the expensive stage off the fact shuffle)."""

@@ -614,14 +614,13 @@ def x_morgan_fp_parsed(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature count) per the no-array-outputs oracle discipline. The
     oracle replays the kernel at registration time into a VALUES
     table (see _fp_literal_rows for what that does and does not
-    certify). The UDF is engine-PINNED (parsed_morgan_fp_udf): values
-    identical with or without RDKit in the image."""
-    from orderly_spark.functions.chem import parsed_morgan_fp_udf
+    certify)."""
+    from orderly_spark.functions.chem import morgan_fingerprint_udf
 
     p = load(spark, sf_dir, "part").filter((F.col("p_partkey") % 5) == 0)
     tpl = F.array(*[F.lit(t) for t in FP_TEMPLATES])
     mol = F.element_at(tpl, (F.col("p_partkey") % len(FP_TEMPLATES) + 1).cast("int"))
-    fp = parsed_morgan_fp_udf(n_bits=128, radius=2)(mol)
+    fp = morgan_fingerprint_udf(n_bits=128, radius=2)(mol)
     return p.select(
         F.col("p_partkey").alias("pk"),
         mol.alias("mol"),
@@ -751,7 +750,7 @@ def _canon_literal_rows() -> str:
     parity) — and the oracle's ``idem``/``n_canon_grp`` columns are
     hard-coded PROPERTY constants, so a non-idempotent or
     non-invariant kernel fails the driver gate outright."""
-    from orderly_spark.functions.chem import _parsed_canonicalise_one
+    from orderly_spark.functions.chem import _canonicalise_one
     from orderly_spark.functions.smiles import canonical_smiles
 
     rows = []
@@ -759,7 +758,7 @@ def _canon_literal_rows() -> str:
         # templates are inside the parser subset by construction — the
         # canon must come from the WRITER, never the identity fallback
         assert canonical_smiles(mol, strip_atom_map=mapped) is not None, mol
-        canon = _parsed_canonicalise_one(mol, mapped)
+        canon = _canonicalise_one(mol, mapped)
         rows.append(f"({vid}, '{gid}', '{mol}', '{canon}')")
     return ",\n      ".join(rows)
 
@@ -792,11 +791,10 @@ def x_canonical_smiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicalisation pass must be a fixed point) and ``n_canon_grp``
     (every spelling of a group must collapse to exactly one canonical
     string — including the atom-mapped group, canonicalised with map
-    stripping). The UDF is engine-PINNED (parsed_canonical_smiles_udf):
-    values identical with or without RDKit in the image."""
+    stripping)."""
     from pyspark.sql import Window
 
-    from orderly_spark.functions.chem import parsed_canonical_smiles_udf
+    from orderly_spark.functions.chem import canonical_smiles_udf
 
     p = load(spark, sf_dir, "part").filter((F.col("p_partkey") % 7) == 0)
     gids = F.array(*[F.lit(g) for g, _m, _s in CANON_VARIANTS])
@@ -809,9 +807,9 @@ def x_canonical_smiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.element_at(mols, vid).alias("mol"),
         F.element_at(maps, vid).alias("strip"),
     )
-    canon = parsed_canonical_smiles_udf(F.struct(F.col("mol"), F.col("strip")))
+    canon = canonical_smiles_udf(F.struct(F.col("mol"), F.col("strip")))
     df = df.withColumn("canon", canon)
-    canon2 = parsed_canonical_smiles_udf(F.struct(F.col("canon"), F.lit(False)))
+    canon2 = canonical_smiles_udf(F.struct(F.col("canon"), F.lit(False)))
     return df.select(
         "pk",
         "gid",

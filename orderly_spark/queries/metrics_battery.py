@@ -301,12 +301,12 @@ def m_fp_matrix_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     VALUE-GATED since r11 (was rows-only): the scaffold's numeric
     molecule ids map onto the curated parseable SMILES templates and
-    the engine-pinned pure-Python Morgan kernel replaces the r10-era
+    the pure-Python Morgan kernel replaces the r10-era
     md5 pseudo-fingerprint, so the oracle can replay per-template
     totals (see _fp_sink_oracle)."""
     import tempfile
 
-    from orderly_spark.functions.chem import parsed_morgan_fp_udf
+    from orderly_spark.functions.chem import morgan_fingerprint_udf
     from orderly_spark.queries.extract_battery import FP_TEMPLATES
 
     rx = _reactions(spark, sf_dir)
@@ -314,7 +314,7 @@ def m_fp_matrix_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     tpl = F.array(*[F.lit(t) for t in FP_TEMPLATES])
     mols = rx.select(F.explode("reactants").alias("m")).distinct()
     mol_smiles = F.element_at(tpl, (F.col("m").cast("int") % len(FP_TEMPLATES) + 1).cast("int"))
-    fps = mols.withColumn("fp", parsed_morgan_fp_udf(n_bits=n_bits, radius=2)(mol_smiles))
+    fps = mols.withColumn("fp", morgan_fingerprint_udf(n_bits=n_bits, radius=2)(mol_smiles))
     root = tempfile.mkdtemp(prefix="orderly_fp_sink_")
     d = root + "/fp_matrix"
     fps.write.parquet(d)

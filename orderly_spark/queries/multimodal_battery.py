@@ -206,8 +206,7 @@ def mm_resize_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewritten, payload truncated by the area ratio — deterministic, so
     DuckDB re-derives the post-resize byte budget). Corrupt blobs pass
     through unchanged and are excluded here by the valid flag; what
-    the gate certifies is the transform's byte-level contract, the
-    shape a real PIL kernel would honour."""
+    the gate certifies is the transform's byte-level contract."""
     from orderly_spark.operators.multimodal import resize_images
 
     docs = load(spark, sf_dir, "documents", fan_out=True)

@@ -13,19 +13,20 @@ One read path, one format: gzipped ORD ``Dataset`` protobufs become
       -> write parquet (partitionBy file)  # S5
 
 The file-name filter is :func:`orderly_spark.functions.rxn.
-filename_contains` on each file's basename, applied to the scan, so
-excluded datasets are never decoded. Decode parallelism is one task per
-file (or per file split), replacing joblib's process fan-out.
+filename_contains` on each file's basename, applied to the listing, so
+excluded datasets are neither read nor decoded. Decode parallelism is
+one task per file (or per file split), replacing joblib's process
+fan-out.
 
 The per-file decoder is the pure-Python wire codec in
-:mod:`orderly_spark.sources.ord_wire`; ord-schema is not needed, and
-its generated classes serve only as a skip-gated parity cross-check
-when importable.
+:mod:`orderly_spark.sources.ord_wire`; the program does not import
+ord-schema.
 """
 
 from __future__ import annotations
 
 import gzip
+import re
 from collections.abc import Callable, Iterator
 
 import pandas as pd
@@ -34,13 +35,6 @@ from pyspark.sql import functions as F
 
 from orderly_spark.functions.rxn import filename_contains
 from orderly_spark.schema import REACTION_SCHEMA
-
-try:  # pragma: no cover - not in harness image
-    import ord_schema  # type: ignore  # noqa: F401
-
-    HAVE_ORD_SCHEMA = True
-except Exception:  # pragma: no cover
-    HAVE_ORD_SCHEMA = False
 
 # decoder: (filename, file_bytes) -> iterator of row dicts keyed by
 # REACTION_SCHEMA field names
@@ -59,17 +53,23 @@ def scan_ord_files(
     ``name_contains``, keep only files whose normalised NAME contains
     it (case-insensitive, '.' read as '-'; extractor.py:84-95), or,
     with ``inverse``, only files whose name does not. Directory names
-    never match. Returns (path, modificationTime, length, content)."""
-    df = (
+    never match. The filter runs on a path-only listing (a binaryFile
+    scan that does not select ``content`` reads no file bytes), and
+    only the kept files are scanned, so a dropped file's bytes are
+    never read. Returns (path, modificationTime, length, content)."""
+    reader = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)
         .option("recursiveFileLookup", "true")
-        .load(root)
     )
-    if name_contains:
-        basename = "substring_index(path, '/', -1)"
-        df = df.filter(filename_contains(basename, name_contains, inverse=inverse))
-    return df
+    if not name_contains:
+        return reader.load(root)
+    basename = "substring_index(path, '/', -1)"
+    listing = reader.load(root).select("path").filter(
+        filename_contains(basename, name_contains, inverse=inverse)
+    )
+    # load() globs every path it is given; the kept names are literal
+    return reader.load([re.sub(r"([\[\]{}*?\\])", r"\\\1", r.path) for r in listing.collect()])
 
 
 def proto_decoder(filename: str, content: bytes) -> Iterator[dict]:

@@ -294,40 +294,24 @@ def iter_dataset_reactions(data: bytes) -> Iterator[dict]:
 
 # --------------------------------------------------------------------------
 # extractor semantics: parsed reaction → REACTION_SCHEMA row
-# (mirrors orderly/extract/extractor.py; canonicalisation falls back to
-# identity when RDKit is absent — the documented F3 fallback)
+# (mirrors orderly/extract/extractor.py; SMILES identifiers are kept as
+# written, the decode does not canonicalise them)
 # --------------------------------------------------------------------------
-
-try:  # pragma: no cover - not in harness image
-    from rdkit import Chem as _Chem  # type: ignore
-
-    def _canonicalise(smi: str) -> str | None:
-        mol = _Chem.MolFromSmiles(smi)
-        return _Chem.MolToSmiles(mol) if mol is not None else None
-
-except Exception:  # pragma: no cover
-
-    def _canonicalise(smi: str) -> str | None:  # identity fallback (F3)
-        return smi
 
 
 def _find_smiles(
     identifiers: list[tuple[int, str]], consider_molecule_names: bool
 ) -> str | None:
-    """extractor.py:113-159 find_smiles: first SMILES identifier
-    (type 2), canonicalised (identity fallback keeps the raw string —
-    same row value, only the non-SMILES side list degrades, and that
-    list is not part of the decode schema); else, when
-    ``consider_molecule_names``, the first NAME identifier (type 6)."""
+    """extractor.py:113-159 find_smiles: the first SMILES identifier
+    (type 2) as written; else, when ``consider_molecule_names``, the
+    first NAME identifier (type 6)."""
     for itype, value in identifiers:
         if itype == 2:
-            canon = _canonicalise(value)
-            return canon if canon is not None else value
+            return value
     if consider_molecule_names:
         for itype, value in identifiers:
             if itype == 6:
-                canon = _canonicalise(value)
-                return canon if canon is not None else value
+                return value
     return None
 
 

@@ -1,14 +1,11 @@
-"""Chem-UDF plumbing tests (SURVEY §2.10/M2). RDKit is absent in the
-harness image; since r12 canonicalisation runs the REAL pure-Python
-ranking+writer kernel on the parseable subset (functions/smiles.py —
-its chemistry is proven in tests/test_smiles.py). What these tests pin
-is the Spark-side machinery: pandas UDF batching, the
-distinct→broadcast dimension pattern, array reassembly order, and
-zip_with arithmetic."""
+"""Chem-UDF plumbing tests (SURVEY §2.10/M2). The kernels are the
+pure-Python parsed-graph ones (functions/smiles.py — their chemistry is
+proven in tests/test_smiles.py). What these tests pin is the Spark-side
+machinery: pandas UDF batching, the distinct→broadcast dimension
+pattern, array reassembly order, and zip_with arithmetic."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from orderly_spark.functions import chem
@@ -20,24 +17,26 @@ def test_canonicalise_via_dimension_roundtrip(spark):
             (1, ["CCO", "N", "CCO"], True),
             (2, ["O"], False),
             (3, ["N", "CC"], True),
+            (4, ["123", "CCO"], False),
         ],
         "rid int, reactants array<string>, is_mapped boolean",
     )
     out = chem.canonicalise_via_dimension(df, "reactants")
     got = {r.rid: r.reactants for r in out.collect()}
-    if not chem.HAVE_RDKIT:
-        # r12: the parsed-graph writer kernel, applied per distinct
-        # (molecule, is_mapped) pair and reassembled in position order
-        # incl. duplicates
-        c = chem._parsed_canonicalise_one
-        assert got == {
-            1: [c("CCO", True), c("N", True), c("CCO", True)],
-            2: [c("O", False)],
-            3: [c("N", True), c("CC", True)],
-        }
-        assert got[1][0] == "C(C)O"  # pinned: the writer is live here
-    else:
-        assert set(got) == {1, 2, 3} and len(got[1]) == 3
+    # the parsed-graph writer kernel, applied per distinct (molecule,
+    # is_mapped) pair and reassembled in position order incl. duplicates
+    c = chem._canonicalise_one
+    assert got == {
+        1: [c("CCO", True), c("N", True), c("CCO", True)],
+        2: [c("O", False)],
+        3: [c("N", True), c("CC", True)],
+        4: [c("123", False), c("CCO", False)],
+    }
+    assert got[1][0] == "C(C)O"  # pinned: the writer is live here
+    # digit strings (the registry scaffold's molecule ids) are outside
+    # the grammar and come back unchanged — what lets
+    # c_canonicalise_dimension_roundtrip's oracle be the raw scaffold
+    assert got[4][0] == "123"
 
 
 def test_canonical_udf_null_passthrough(spark):
@@ -192,22 +191,7 @@ def test_has_tm_fallback_name_surface_is_measured():
     (including the lowercase-symbol miss) agrees. If the fallback
     changes, this count moves and the ceiling gets re-documented —
     that is the point of pinning it."""
-    from orderly_spark.functions.chem import HAVE_RDKIT, _has_tm_one
-
-    if HAVE_RDKIT:
-        pytest.skip("fallback path only (RDKit routes through atoms)")
-    diverging = sorted(s for s, want in _TM_NAME_CASES if _has_tm_one(s) != want)
-    assert diverging == ["Feldspar", "Regent street", "Vinegar", "Water"]
-
-
-@pytest.mark.skipif(
-    not __import__("orderly_spark.functions.chem", fromlist=["HAVE_RDKIT"]).HAVE_RDKIT,
-    reason="RDKit not installed",
-)
-def test_has_tm_rdkit_exact_on_full_curated_list():  # pragma: no cover
-    """With RDKit present the atomic-number walk must match ground
-    truth on BOTH classes (names fail MolFromSmiles → False)."""
     from orderly_spark.functions.chem import _has_tm_one
 
-    for s, want in _TM_SMILES_CASES + _TM_NAME_CASES:
-        assert _has_tm_one(s) == want, s
+    diverging = sorted(s for s, want in _TM_NAME_CASES if _has_tm_one(s) != want)
+    assert diverging == ["Feldspar", "Regent street", "Vinegar", "Water"]

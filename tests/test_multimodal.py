@@ -125,41 +125,6 @@ def test_resize_survives_hostile_headers(spark):
     assert out.count() == 11
 
 
-import pytest
-
-
-@pytest.mark.skipif(not MM.HAVE_PIL, reason="PIL not installed")
-def test_decode_meta_real_pil_kernel(spark):  # pragma: no cover
-    """r12: wherever PIL exists, raw image bytes yield REAL header
-    dims through decode_media_meta."""
-    import io
-
-    from PIL import Image  # type: ignore
-
-    buf = io.BytesIO()
-    Image.new("RGB", (123, 45)).save(buf, format="PNG")
-    df = spark.createDataFrame([(1, buf.getvalue())], "media_id int, content binary")
-    got = MM.decode_media_meta(df).collect()[0].media_meta
-    assert got.valid and got.media_type == "image"
-    assert (got.width, got.height) == (123, 45)
-
-
-@pytest.mark.skipif(not MM.HAVE_PIL, reason="PIL not installed")
-def test_resize_real_pil_kernel(spark):  # pragma: no cover
-    """r12: wherever PIL exists, raw image bytes really resize (the
-    stub remains the fallback for non-image blobs)."""
-    import io
-
-    from PIL import Image  # type: ignore
-
-    buf = io.BytesIO()
-    Image.new("RGB", (100, 80), (10, 20, 30)).save(buf, format="PNG")
-    df = spark.createDataFrame([(1, buf.getvalue())], "media_id int, content binary")
-    out = MM.resize_images(df, 10, 8).collect()[0].content
-    with Image.open(io.BytesIO(bytes(out))) as im:
-        assert im.size == (10, 8)
-
-
 def test_resize_non_image_passthrough(spark):
     df = media_df(spark)
     before = {r.media_id: (bytes(r.content) if r.content is not None else None) for r in df.collect()}

@@ -18,7 +18,7 @@ import gzip
 import pytest
 
 from orderly_spark.sources import ord_wire as W
-from orderly_spark.sources.ord import HAVE_ORD_SCHEMA, proto_decoder
+from orderly_spark.sources.ord import proto_decoder
 
 
 def _decode_one(rxn_bytes: bytes, **kw) -> dict:
@@ -300,9 +300,8 @@ def test_dataset_pb_gz_deterministic():
 # --------------------------------------------------------------------------
 
 
-@pytest.mark.skipif(not HAVE_ORD_SCHEMA, reason="ord-schema not installed")
-def test_parity_with_ord_schema_generated_classes():  # pragma: no cover
-    from ord_schema.proto import dataset_pb2  # type: ignore
+def test_parity_with_ord_schema_generated_classes():
+    dataset_pb2 = pytest.importorskip("ord_schema.proto.dataset_pb2")
 
     rxn = W.encode_reaction(
         cxsmiles="CC>O>CCO |f|",

@@ -317,16 +317,16 @@ def test_fp_templates_all_parseable_and_distinct():
     assert len(set(fps.values())) == len(FP_TEMPLATES)
 
 
-def test_parsed_udf_matches_kernel(spark):
-    """parsed_morgan_fp_udf is the kernel, batched — values identical
+def test_morgan_fp_udf_matches_kernel(spark):
+    """morgan_fingerprint_udf is the kernel, batched — values identical
     to direct morgan_fingerprint calls, zeros for unparseable."""
     from pyspark.sql import functions as F
 
-    from orderly_spark.functions.chem import parsed_morgan_fp_udf
+    from orderly_spark.functions.chem import morgan_fingerprint_udf
 
     mols = ["CCO", "CC(=O)O[Cu]OC(C)=O", "not-a-molecule", "c1ccccc1"]
     df = spark.createDataFrame([(m,) for m in mols], "m string")
-    got = {r.m: list(r.fp) for r in df.withColumn("fp", parsed_morgan_fp_udf(n_bits=64)(F.col("m"))).collect()}
+    got = {r.m: list(r.fp) for r in df.withColumn("fp", morgan_fingerprint_udf(n_bits=64)(F.col("m"))).collect()}
     for m in mols:
         want = morgan_fingerprint(m, 3, 64) or [0] * 64
         assert got[m] == want, m
@@ -702,28 +702,25 @@ def test_canonical_crash_freedom_fuzz():
     assert 0 < canonical_ok < 2000, canonical_ok
 
 
-def test_parsed_canonical_udf_null_and_unparseable(spark):
-    """The engine-pinned canon UDF: NULL→NULL, unparseable→identity,
-    parseable→writer output — batched exactly like the kernel."""
+def test_canonical_udf_null_and_unparseable(spark):
+    """The canon UDF: NULL→NULL, unparseable→identity, parseable→writer
+    output — batched exactly like the kernel."""
     from pyspark.sql import functions as F
 
-    from orderly_spark.functions.chem import (
-        _parsed_canonicalise_one,
-        parsed_canonical_smiles_udf,
-    )
+    from orderly_spark.functions.chem import _canonicalise_one, canonical_smiles_udf
 
     rows = [(None, False), ("CCO", False), ("Water", False), ("[CH3:1]O", True)]
     df = spark.createDataFrame(rows, "s string, m boolean")
     got = [
         r.c
         for r in df.select(
-            parsed_canonical_smiles_udf(F.struct(F.col("s"), F.col("m"))).alias("c")
+            canonical_smiles_udf(F.struct(F.col("s"), F.col("m"))).alias("c")
         ).collect()
     ]
     assert got[0] is None
-    assert got[1] == _parsed_canonicalise_one("CCO", False) == "C(C)O"
+    assert got[1] == _canonicalise_one("CCO", False) == "C(C)O"
     assert got[2] == "Water"
-    assert got[3] == _parsed_canonicalise_one("[CH3:1]O", True) == canonical_smiles("CO")
+    assert got[3] == _canonicalise_one("[CH3:1]O", True) == canonical_smiles("CO")
 
 
 def test_atom_map_regex_matches_parser_ground_truth():
@@ -816,8 +813,8 @@ def test_atom_map_regex_cross_exam_hostile_corpora():
 def test_parsed_canonicalise_one_retry_quirk():
     """The reference's bracket-retry (canonicalise.py:66-72) mirrored:
     bare metal names wrap to brackets; failed brackets unwrap; names
-    keep identity (the no-RDKit observable for reference None)."""
-    from orderly_spark.functions.chem import _parsed_canonicalise_one as one
+    keep identity (the observable for the reference's None)."""
+    from orderly_spark.functions.chem import _canonicalise_one as one
 
     assert one("Pd", False) == "[Pd]"
     assert one("[Water]", False) == "[Water]"   # both attempts fail → identity

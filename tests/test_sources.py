@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import shutil
 from pathlib import Path
+from urllib.parse import unquote
 
 import pytest
 from pyspark.sql import functions as F
@@ -89,6 +90,25 @@ def _names(files) -> set[str]:
 def test_scan_name_filter_matches_file_name_only(spark, named_root, substring, inverse, want):
     files = O.scan_ord_files(spark, named_root, name_contains=substring, inverse=inverse)
     assert _names(files) == want
+
+
+def test_scan_name_filter_drops_files_before_the_byte_scan(spark, tmp_path):
+    """The name filter runs on a path-only listing, so a dropped file
+    is not among the byte scan's input files; kept names with glob
+    characters are read as written; dropping every file leaves an
+    empty scan, not an error."""
+    one = W.dataset_pb_gz([W.encode_reaction(cxsmiles="C>N>O")])
+    for rel in ("a/keep.pb.gz", "a/keep[1].pb.gz", "a/keep1.pb.gz", "b/skip_big.pb.gz"):
+        (tmp_path / rel).parent.mkdir(exist_ok=True)
+        (tmp_path / rel).write_bytes(one)
+    files = O.scan_ord_files(spark, str(tmp_path), name_contains="skip_", inverse=True)
+    kept = ["keep.pb.gz", "keep1.pb.gz", "keep[1].pb.gz"]
+    assert sorted(unquote(p.rsplit("/", 1)[-1]) for p in files.inputFiles()) == kept
+    assert sorted(r.path.rsplit("/", 1)[-1] for r in files.select("path").collect()) == kept
+    none = O.scan_ord_files(spark, str(tmp_path), name_contains="no_such_name")
+    assert none.inputFiles() == []
+    assert none.columns == files.columns
+    assert O.decode_reactions(none).count() == 0
 
 
 def test_decode_reactions_roundtrip(spark, ord_dir):

@@ -26,7 +26,7 @@ IMPL: dict[str, tuple[str, str]] = {
     "S7": ("sources/ord.py merge_molecule_names", "tests/test_sources.py"),
     "S8": ("sources/solvents.py (packaged 615-row dimension, CSV loader, name map, smiles set)", "tests/test_sources.py"),
     "S9": ("operators/cleaning.py train_test_split + DataFrame.write.parquet", "tests/test_cleaning.py"),
-    "S10": ("functions/chem.py morgan_fingerprint_udf → ArrayType column (npy export = collect-side util)", "tests/test_chem.py"),
+    "S10": ("functions/chem.py morgan_fingerprint_udf (parsed-graph kernel) → ArrayType column; export_fingerprint_matrix_npy (collect-side .npy)", "tests/test_chem.py"),
     "S11": ("out-of-engine utility by design (SURVEY S11)", ""),
     "S12": ("config json sink/source (lineage metadata; cli.py _dump_config)", ""),
     # §2.2 projections/filters
@@ -90,9 +90,9 @@ IMPL: dict[str, tuple[str, str]] = {
     # §2.8 scalar functions
     "F1": ("functions/rxn.py strip_filename", "tests/test_extract.py"),
     "F2": ("functions/rxn.py rxn_segments/rxn_is_valid/rxn_role", "tests/test_extract.py"),
-    "F3": ("functions/chem.py canonical_smiles_udf + canonicalise_via_dimension", "tests/test_chem.py"),
+    "F3": ("functions/chem.py _canonicalise_one (parsed-graph canonical writer; identity outside the grammar) via canonical_smiles_udf + canonicalise_via_dimension", "tests/test_chem.py, tests/test_smiles.py"),
     "F4": ("functions/chem.py (atom-map strip inside canonical UDF via is_mapped)", "tests/test_chem.py"),
-    "F5": ("functions/chem.py has_transition_metal_udf", "tests/test_chem.py"),
+    "F5": ("functions/chem.py _has_tm_one (parsed-graph atomic-number walk; symbol scan for unparseable input) via has_transition_metal_udf; extract's P12/O3 use operators/extract.py TM_SYMBOL_REGEX (bracketed symbols)", "tests/test_chem.py, tests/test_smiles.py"),
     "F6": ("functions/rxn.py temperature_to_celsius", "tests/test_extract.py"),
     "F7": ("functions/rxn.py time_to_hours", "tests/test_extract.py"),
     "F8": ("functions/rxn.py yield_percentage", "tests/test_extract.py"),
@@ -101,7 +101,7 @@ IMPL: dict[str, tuple[str, str]] = {
     "F11": ("sources/solvents.py lower-cased name keys", "tests/test_sources.py"),
     "F12": ("contains/isin predicates (charcoal, uspto, ice)", "tests/test_extract.py"),
     "F13": ("operators/cleaning.py reaction_hash (sha256)", "tests/test_cleaning.py"),
-    "F14": ("functions/chem.py _morgan_fp_one kernel, one memo per UDF: reaction_fingerprint_udf (gen-fp, fused per row), morgan_fingerprint_udf / parsed_morgan_fp_udf (one column)", "tests/test_chem.py, tests/test_cli.py"),
+    "F14": ("functions/chem.py _morgan_fp_one parsed-graph kernel, one memo per UDF: reaction_fingerprint_udf (gen-fp, fused per row), morgan_fingerprint_udf (one column)", "tests/test_chem.py, tests/test_smiles.py, tests/test_cli.py"),
     "F15": ("functions/chem.py reaction_fingerprint_udf (gen-fp: product − Σ reactants in the fused kernel) + fingerprint_difference (zip_with over fingerprint columns)", "tests/test_chem.py, tests/test_cli.py"),
     "F16": ("operators/cleaning.py scramble_role_lists", "tests/test_cleaning.py"),
     "F17": ("operators/metrics.py ohe_vocab + encode_with_vocab", "tests/test_metrics.py"),
