@@ -32,24 +32,10 @@ def _registry():
     return ordered_registry()
 
 
-# Runtime-settable session confs every query assumes (the engine's
-# own get_spark sets them at build time; the DRIVER's session may not
-# have them, so the adapter pins them per call — all are idempotent
-# no-ops on a session that already complies):
-# - UTC session timezone: timestamp-literal casts and date_trunc must
-#   match the DuckDB oracle's naive-timestamp semantics;
-# - nanosAsLong: events.parquet stores TIMESTAMP(NANOS), which the
-#   vectorized reader otherwise rejects (tables.load converts back);
-# - Arrow: the pandas-UDF paths (chem/multimodal) batch via Arrow.
-_SESSION_CONTRACT = (
-    ("spark.sql.session.timeZone", "UTC"),
-    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-    ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-)
-
-
 def _pin_session(spark: SparkSession) -> None:
-    for k, v in _SESSION_CONTRACT:
+    from orderly_spark.session import SESSION_CONTRACT
+
+    for k, v in SESSION_CONTRACT:
         try:
             spark.conf.set(k, v)
         except Exception:

@@ -1,5 +1,7 @@
 """Chemistry UDFs (SURVEY §2.10 / M2): SMILES canonicalisation,
-atom-map detection, transition-metal test, Morgan fingerprints.
+atom-map detection, Morgan fingerprints. The transition-metal test
+(F5) and TM-first ordering (O3) are SQL expressions in
+:mod:`orderly_spark.functions.rxn`.
 
 Every function has one kernel, the pure-Python SMILES graph parser in
 :mod:`orderly_spark.functions.smiles`, so its output depends only on
@@ -8,18 +10,15 @@ parser's SMILES subset the kernels do real chemistry: a canonical atom
 ranking (Morgan relaxation + exhaustive tie-break) and deterministic
 SMILES writer with Hückel aromaticity perception (Kekulé and aromatic
 spellings of one molecule collapse to one canonical string and one
-fingerprint), an atomic-number walk for the TM test, and counted
-Morgan environments for fingerprints. Inputs outside the grammar
-(plain-text names, exotic stereo tags) take input-selected fallbacks:
-identity for canonicalisation, a symbol scan for the TM test, zeros
-for fingerprints. RDKit agreement is checked by skip-gated parity
-tests (tests/test_smiles.py), not by a second program path.
+fingerprint), and counted Morgan environments for fingerprints. Inputs
+outside the grammar (plain-text names, exotic stereo tags) take
+input-selected fallbacks: identity for canonicalisation, zeros for
+fingerprints. RDKit agreement is checked by skip-gated parity tests
+(tests/test_smiles.py), not by a second program path.
 
 Reference behaviours mirrored:
 - canonicalise: orderly/extract/canonicalise.py:12-72 (strip atom
   maps when mapped, [x]-bracket retry, None on unparseable)
-- transition metal: orderly/extract/defaults.py:10-39 (atomic number
-  in 22–29, 40–47, 72–79)
 - fingerprints: orderly/gen_fp/fingerprints.py:76-99 (Morgan r=3,
   2048 bits, zeros on failure)
 
@@ -40,13 +39,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from orderly_spark.session import barrier
-
-# transition metals: atomic numbers 22-29, 40-47, 72-79 (defaults.py:10-39)
-_TM_SYMBOLS = (
-    "Ti V Cr Mn Fe Co Ni Cu "
-    "Zr Nb Mo Tc Ru Rh Pd Ag "
-    "Hf Ta W Re Os Ir Pt Au"
-).split()
 
 
 def _canonicalise_one(smiles: str | None, is_mapped: bool) -> str | None:
@@ -81,23 +73,6 @@ def _canonicalise_one(smiles: str | None, is_mapped: bool) -> str | None:
     return c if c is not None else smiles
 
 
-def _has_tm_one(smiles: str | None) -> bool:
-    """F5 kernel: an exact atomic-number walk over the parsed graph
-    (functions/smiles.py molecule_has_tm). Only input outside the
-    parser's SMILES subset (e.g. plain-text names) takes the symbol
-    scan, whose measured false-positive surface is pinned by
-    tests/test_chem.py."""
-    if smiles is None:
-        return False
-    from orderly_spark.functions.smiles import molecule_has_tm
-
-    parsed = molecule_has_tm(smiles)
-    if parsed is not None:
-        return parsed
-    # symbol scan, unparseable input only
-    return any(sym in smiles for sym in _TM_SYMBOLS)
-
-
 @F.pandas_udf(T.StringType())
 def canonical_smiles_udf(it: Iterator[pd.DataFrame]) -> Iterator[pd.Series]:
     """F3 over ``struct(smiles, is_mapped)``: :func:`_canonicalise_one`
@@ -119,21 +94,6 @@ def canonical_smiles_udf(it: Iterator[pd.DataFrame]) -> Iterator[pd.Series]:
                 memo[k] = _canonicalise_one(s, bool(m))
             out.append(memo[k])
         yield pd.Series(out, dtype="object")
-
-
-@F.pandas_udf(T.BooleanType())
-def has_transition_metal_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    memo: dict[str, bool] = {}
-    for s in it:
-        # setdefault would EVALUATE _has_tm_one on every row (args are
-        # computed before the call) — explicit lookup keeps the memo's
-        # O(distinct) promise (review finding)
-        def _memoized_tm(x):
-            if x not in memo:
-                memo[x] = _has_tm_one(x)
-            return memo[x]
-
-        yield s.map(lambda x: _memoized_tm(x) if x is not None else False)
 
 
 def has_atom_map(col: Column) -> Column:
@@ -206,16 +166,6 @@ def canonicalise_via_dimension(df: DataFrame, array_col: str, is_mapped_col: str
         .drop("__rid", "__canon_arr")
     )
     return out.select(*df.columns)
-
-
-def tm_first_order(arr: Column, tm_set: Column) -> Column:
-    """O3 (extractor.py:586-590, 1052-1056): stable reorder with
-    transition-metal-containing molecules first. ``tm_set`` is a
-    sorted array of known-TM molecules (a computed dimension —
-    broadcastable at any scale)."""
-    tm = F.filter(arr, lambda x: F.array_contains(tm_set, x))
-    rest = F.filter(arr, lambda x: ~F.array_contains(tm_set, x))
-    return F.concat(tm, rest)
 
 
 def _morgan_fp_one(smiles: str | None, n_bits: int, radius: int) -> np.ndarray:

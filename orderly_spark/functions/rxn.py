@@ -250,6 +250,54 @@ def yields_to_longest_product(products: str, single_yield: str) -> str:
 
 
 # ---------------------------------------------------------------------------
+# F5/O3 — transition metals
+# ---------------------------------------------------------------------------
+
+#: F5 (defaults.py:10-39): a bracket atom whose symbol has atomic number
+#: 22-29, 40-47 or 72-79, after an optional isotope prefix ([106Pd]).
+#: Every transition metal lies outside SMILES's organic subset, so it is
+#: always written in brackets: on SMILES this equals the atomic-number
+#: walk (tests/test_chem.py checks it against functions/smiles.py
+#: molecule_has_tm), and it flags no plain-text name.
+TM_SYMBOL_REGEX = (
+    "\\[[0-9]*(Ti|V|Cr|Mn|Fe|Co|Ni|Cu|Zr|Nb|Mo|Tc|Ru|Rh|Pd|Ag|Hf|Ta|W|Re|Os|Ir|Pt|Au)"
+)
+_TM = sql_string(TM_SYMBOL_REGEX)
+
+
+def has_tm(mol: str) -> str:
+    """F5: molecule ``mol`` contains a transition metal; NULL for NULL.
+    ``mol`` is spliced bare, so pass a column name, parameter or lambda
+    variable."""
+    return f"{mol} RLIKE {_TM}"
+
+
+def tm_first(arr: str, is_tm=has_tm) -> str:
+    """O3 (extractor.py:586-590, 1052-1056): stable reorder with the
+    members satisfying ``is_tm`` (a builder from a member expression to
+    a predicate) first, relative order otherwise preserved, as the
+    reference's stable sorted(key=has_tm, reverse=True)."""
+    return f"concat(filter({arr}, _x -> {is_tm('_x')}), filter({arr}, _x -> NOT ({is_tm('_x')})))"
+
+
+# ---------------------------------------------------------------------------
+# F13 — reaction hash
+# ---------------------------------------------------------------------------
+
+
+def reaction_hash(reactants: str, products: str) -> str:
+    """F13 (cleaner.py:913-924): '.'-join of the sorted reactants and
+    the sorted products (null member → 'NULL', null list → empty),
+    sha256'd for a fixed-width shuffle key (the reference keeps the raw
+    string; hashing bounds the key size). The lambda bodies read no
+    operand, so the variable ``x`` cannot capture a column."""
+    roles = ", ".join(
+        f"array_sort(transform({arr_safe(r)}, x -> coalesce(x, 'NULL')))" for r in (reactants, products)
+    )
+    return f"sha2(concat_ws('.', concat({roles})), 256)"
+
+
+# ---------------------------------------------------------------------------
 # P12/P13 — chemistry-knowledge exceptions
 # ---------------------------------------------------------------------------
 

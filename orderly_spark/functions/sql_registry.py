@@ -5,18 +5,20 @@ Two tiers, matching how each function should execute:
 
 1. **SQL scalar functions** (``CREATE OR REPLACE TEMPORARY FUNCTION …
    RETURN <expr>``, Spark 4 SQL UDFs): the pure-expression reference
-   functions (F1 strip_filename, F6/F7 unit conversions, F10
-   is_number, F13 reaction_hash, S4 grant-date parse). These inline
-   into the calling query's plan at analysis time — they stay inside
-   whole-stage codegen, cost nothing over hand-written expressions,
-   and never leave the JVM.
+   functions (F1 strip_filename, F5 has_transition_metal, F6/F7 unit
+   conversions, F10 is_number, F13 reaction_hash, S4 grant-date
+   parse). Each body is the builder of :mod:`orderly_spark.functions.rxn`
+   that the pipelines run, so a SQL caller and a pipeline run one
+   implementation of each rule. They inline into the calling query's
+   plan at analysis time — they stay inside whole-stage codegen, cost
+   nothing over hand-written expressions, and never leave the JVM.
 
 2. **Python/pandas UDFs** (``spark.udf.register``): the chem functions
-   that need the parsed SMILES graph (F3 canonical_smiles, F5
-   has_transition_metal, F14 morgan_fp). Arrow-batched pandas UDFs
-   with executor-local memoisation — the unavoidable slow path, kept
-   off the hot path by the distinct→broadcast dimension pattern
-   (functions/chem.py canonicalise_via_dimension).
+   that need the parsed SMILES graph (F3 canonical_smiles, F14
+   morgan_fp). Arrow-batched pandas UDFs with executor-local
+   memoisation — the unavoidable slow path, kept off the hot path by
+   the distinct→broadcast dimension pattern (functions/chem.py
+   canonicalise_via_dimension).
 
 Register once per session with :func:`register_sql_functions`; the
 functions are session-scoped temporary functions (at 100 TB these
@@ -29,32 +31,24 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from orderly_spark.functions import rxn as R
-from orderly_spark.functions.chem import (
-    canonical_smiles_udf,
-    has_transition_metal_udf,
-    morgan_fingerprint_udf,
-)
+from orderly_spark.functions.chem import canonical_smiles_udf, morgan_fingerprint_udf
 
 
-def _sql_function(name: str, params: str, returns: str, body: str) -> str:
-    return f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({params}) RETURNS {returns} RETURN {body}"
+def _sql_function(name: str, params: str, returns: str, body: str) -> tuple[str, str]:
+    return name, f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({params}) RETURNS {returns} RETURN {body}"
 
 
-# F13 (cleaner.py:913-924) — mirrors operators/cleaning.reaction_hash.
-_REACTION_HASH = """
-CREATE OR REPLACE TEMPORARY FUNCTION reaction_hash(
-    reactants ARRAY<STRING>, products ARRAY<STRING>) RETURNS STRING
-RETURN sha2(concat_ws('.', concat(
-  array_sort(transform(coalesce(reactants, array()), x -> coalesce(x, 'NULL'))),
-  array_sort(transform(coalesce(products,  array()), x -> coalesce(x, 'NULL'))))), 256)
-"""
-
-# The extraction rules are the expressions of functions/rxn, so a SQL
-# caller and the extract pipeline run one implementation of each.
 _SQL_FUNCTIONS = (
     _sql_function("strip_filename", "s STRING", "STRING", R.strip_filename("s")),
     _sql_function("is_number", "s STRING", "BOOLEAN", R.is_number("s")),
-    _REACTION_HASH,
+    # NULL is not a transition-metal molecule
+    _sql_function("has_transition_metal", "s STRING", "BOOLEAN", f"coalesce({R.has_tm('s')}, false)"),
+    _sql_function(
+        "reaction_hash",
+        "reactants ARRAY<STRING>, products ARRAY<STRING>",
+        "STRING",
+        R.reaction_hash("reactants", "products"),
+    ),
     _sql_function(
         "temp_to_celsius",
         "value DOUBLE, unit STRING, control_type STRING",
@@ -72,21 +66,11 @@ def register_sql_functions(spark: SparkSession) -> list[str]:
     Returns the list of registered function names. Safe to call
     repeatedly (CREATE OR REPLACE / re-register are idempotent).
     """
-    for ddl in _SQL_FUNCTIONS:
+    for _, ddl in _SQL_FUNCTIONS:
         spark.sql(ddl)
     # Chem tier: Arrow-batched pandas UDFs over the pure-Python
     # parsed-graph kernels (functions/chem.py).
-    spark.udf.register("canonical_smiles", canonical_smiles_udf)
-    spark.udf.register("has_transition_metal", has_transition_metal_udf)
-    spark.udf.register("morgan_fp", morgan_fingerprint_udf())
-    return [
-        "strip_filename",
-        "is_number",
-        "reaction_hash",
-        "temp_to_celsius",
-        "time_to_hours",
-        "grant_date_from_filename",
-        "canonical_smiles",
-        "has_transition_metal",
-        "morgan_fp",
-    ]
+    udfs = {"canonical_smiles": canonical_smiles_udf, "morgan_fp": morgan_fingerprint_udf()}
+    for name, udf in udfs.items():
+        spark.udf.register(name, udf)
+    return [name for name, _ in _SQL_FUNCTIONS] + list(udfs)

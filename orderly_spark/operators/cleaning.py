@@ -27,6 +27,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from orderly_spark.functions import rxn as R
 from orderly_spark.schema import MISSING, wide_to_array
 from orderly_spark.session import barrier
 
@@ -539,17 +540,10 @@ def scramble_role_lists(df: DataFrame, cfg: CleanConfig, roles: Sequence[str] = 
 # ---------------------------------------------------------------------------
 
 def reaction_hash(df: DataFrame) -> Column:
-    """F13 (cleaner.py:913-924): '.'-join of sorted reactants +
-    sorted products (null→'NULL'), sha256'd for a fixed-width shuffle
-    key (the reference keeps the raw string; hashing bounds key size
-    at 100 TB)."""
-    # r16: one SQL-parsed expression (identical tree; see _arr)
-    sort_roles = ", ".join(
-        f"array_sort(transform(coalesce({_quote(r)}, CAST(array() AS array<string>)), "
-        "x -> coalesce(x, 'NULL')))"
-        for r in ("reactants", "products")
-    )
-    return F.expr(f"sha2(concat_ws('.', concat({sort_roles})), 256)")
+    """F13 over ``df``'s ``reactants`` and ``products``: the
+    :func:`orderly_spark.functions.rxn.reaction_hash` expression, which
+    the ``reaction_hash`` SQL function runs too."""
+    return F.expr(R.reaction_hash(_quote("reactants"), _quote("products")))
 
 
 def train_test_split_routed(df: DataFrame, cfg: CleanConfig) -> DataFrame:

@@ -24,28 +24,8 @@ from pyspark.sql import functions as F
 
 from orderly_spark.functions import rxn as R
 
-# bracketed transition-metal symbol scan (atomic № 22-29, 40-47, 72-79
-# — defaults.py:10-39), allowing an isotope prefix ([99Tc], [106Pd]).
-# It reads bracketed symbols only, so unlike functions/chem._has_tm_one
-# (whose symbol scan for unparseable input flags names such as 'Water')
-# it does not flag unbracketed names
-TM_SYMBOL_REGEX = (
-    "\\[[0-9]*(Ti|V|Cr|Mn|Fe|Co|Ni|Cu|Zr|Nb|Mo|Tc|Ru|Rh|Pd|Ag|Hf|Ta|W|Re|Os|Ir|Pt|Au)"
-)
-_TM = R.sql_string(TM_SYMBOL_REGEX)
 _UNPAIRED_ROLES = ("reactants", "agents", "reagents", "solvents", "catalysts")
 _ALL_ROLES = (*_UNPAIRED_ROLES, "products")
-
-
-def _has_tm(arr: str) -> str:
-    return f"exists({arr}, _x -> _x RLIKE {_TM})"
-
-
-def _tm_first(arr: str) -> str:
-    """O3 stable reorder: TM-containing members first, relative order
-    otherwise preserved (merge_to_agents sorted(key=has_tm,
-    reverse=True) is a stable sort over the alphabetical list)."""
-    return f"concat(filter({arr}, _x -> _x RLIKE {_TM}), filter({arr}, _x -> NOT (_x RLIKE {_TM})))"
 
 
 def _with_sql(df: DataFrame, exprs: dict[str, str]) -> DataFrame:
@@ -126,7 +106,7 @@ def extract_reactions(
         )
         df = _with_sql(df, {
             "solvents": sv,
-            "agents": _tm_first(ag),
+            "agents": R.tm_first(ag),
             "reagents": R.EMPTY_STRINGS,
             "catalysts": R.EMPTY_STRINGS,
         }).drop("__solvent_set")
@@ -134,13 +114,13 @@ def extract_reactions(
         # labelled path keeps the roles; catalysts still get TM-first
         # (extractor.py:1052-1056 — useful when the cleaner renames
         # catalysts to reagents)
-        df = _with_sql(df, {"catalysts": _tm_first("catalysts")})
+        df = _with_sql(df, {"catalysts": R.tm_first("catalysts")})
 
     # P12: Pd/C support carbon (TM detection via the bracket-symbol scan).
     # P13: ice → 0 °C; removing 'C'/'[C]' never changes whether an ice
     # member is present, so both read the agents before P12.
     return _with_sql(df, {
-        "agents": R.remove_pd_c_carbon("agents", _has_tm("agents"), "procedure_details"),
+        "agents": R.remove_pd_c_carbon("agents", f"exists(agents, _x -> {R.has_tm('_x')})", "procedure_details"),
         "temperature": R.impute_ice_temperature("temperature", "concat(agents, solvents)"),
     })
 

@@ -2,9 +2,9 @@
 label-propagation communities.
 
 Reference: none (the reference repo has no graph surface); [abs]
-operators for the 100 TB north star, complementing the connected-
-components pair in ``operators/dedup.py`` (min-label propagation +
-large-star/small-star) and the triangle census in the dedup battery.
+operators for the 100 TB north star, complementing connected
+components in ``operators/dedup.py`` (min-label propagation) and the
+triangle census in the dedup battery.
 
 Determinism contract: ranks live in INTEGER fixed-point (scaled by
 ``scale``), every step is integer +,*,div — `div` truncates the same

@@ -303,10 +303,7 @@ def d_simhash4_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
 
 
-# ONE oracle shared verbatim by both clustering queries: the exact
-# transitive closure via recursive CTE. Keeping a single constant means
-# the two gates can never silently drift apart (they are deliberately a
-# three-way agreement: two algorithms, two engines, one closure).
+# the exact transitive closure via recursive CTE
 _CLUSTERS_ORACLE = f"""
     WITH RECURSIVE pairs AS (
       {_minhash_sql()}
@@ -341,26 +338,6 @@ def d_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents", fan_out=True)
     pairs = D.lsh_candidate_pairs(d, "doc_id", "text", shingle_n=3, num_hashes=16, bands=4)
     return D.duplicate_clusters(pairs)
-
-
-@query(
-    "d_duplicate_clusters_star",
-    oracle=_CLUSTERS_ORACLE,
-    category="dedup",
-    survey="connected-components[abs],minhash-lsh[abs]",
-)
-def d_duplicate_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME clustering as d_duplicate_clusters, computed by
-    alternating large-star/small-star contraction (Kiveris et al.
-    2014) instead of min-label propagation — O(log² n) rounds
-    regardless of component diameter, the variant you run when dup
-    chains are long (version histories, crawl chains). Sharing the
-    exact-transitive-closure oracle with the propagation query makes
-    the gate a three-way proof: both engines AND both algorithms
-    agree."""
-    d = load(spark, sf_dir, "documents", fan_out=True)
-    pairs = D.lsh_candidate_pairs(d, "doc_id", "text", shingle_n=3, num_hashes=16, bands=4)
-    return D.duplicate_clusters_star(pairs)
 
 
 def _lpa_round_sql(prev: str, cur: str) -> str:

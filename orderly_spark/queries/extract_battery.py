@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from orderly_spark.functions import rxn as R
+from orderly_spark.functions.sql_registry import register_sql_functions
 from orderly_spark.queries.clean_battery import RX_SQL, _reactions
 from orderly_spark.registry import DBROUND, DROUND, query
 from orderly_spark.sources import solvents as SV
@@ -332,14 +333,14 @@ def x_tm_first_and_pd_c(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = rx.join(F.broadcast(tm)).withColumn(
         "agents_c", F.concat(F.col("agents"), F.array(F.lit("C")))
     )
-    has_tm = "exists(agents, _x -> array_contains(ts, _x))"
-    procedure = "CASE WHEN rid % 5 = 0 THEN 'heated over charcoal' END"
-    cleaned = F.expr(R.remove_pd_c_carbon("agents_c", has_tm, procedure))
-    from orderly_spark.functions.chem import tm_first_order
 
-    return df.select(
-        "rid", F.concat_ws(",", tm_first_order(cleaned, F.col("ts"))).alias("agents_out")
-    )
+    def in_ts(m: str) -> str:
+        return f"array_contains(ts, {m})"
+
+    has_tm = f"exists(agents, _x -> {in_ts('_x')})"
+    procedure = "CASE WHEN rid % 5 = 0 THEN 'heated over charcoal' END"
+    cleaned = R.remove_pd_c_carbon("agents_c", has_tm, procedure)
+    return df.select("rid", F.expr(f"concat_ws(',', {R.tm_first(cleaned, in_ts)})").alias("agents_out"))
 
 
 @query(
@@ -520,16 +521,13 @@ _ELEMS_SQL = "['Ti','Pd','Fe','W','Na','K','C','Rh']"
     survey="F5,O3",
 )
 def x_tm_isotope_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F5 EXACT (defaults.py:10-39), r11: the transition-metal test now
-    runs the pure-Python SMILES parser's atomic-number walk
-    (functions/smiles.py via has_transition_metal_udf) — isotope
-    prefixes ([106Pd]) included. The oracle keeps the INDEPENDENT
-    check: a SQL regex over the same synthesised molecules, so regex-
-    in-DuckDB cross-examines parser-in-Python. Scaffold synthesises
-    bracket molecules over a TM/non-TM symbol mix with isotope
-    prefixes on every third key."""
-    from orderly_spark.functions.chem import has_transition_metal_udf
-
+    """F5 (defaults.py:10-39) through the ``has_transition_metal`` SQL
+    function, the predicate extract's P12/O3 run (functions/rxn.py
+    has_tm) — isotope prefixes ([106Pd]) included. Scaffold
+    synthesises bracket molecules over a TM/non-TM symbol mix with
+    isotope prefixes on every third key; the oracle writes the rule as
+    DuckDB's regex over the same molecules."""
+    register_sql_functions(spark)
     p = load(spark, sf_dir, "part").filter((F.col("p_partkey") % 11) == 0)
     elems = F.array(*[F.lit(s) for s in ["Ti", "Pd", "Fe", "W", "Na", "K", "C", "Rh"]])
     iso = F.when(
@@ -541,7 +539,7 @@ def x_tm_isotope_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return p.select(
         F.col("p_partkey").alias("pk"),
         mol.alias("mol"),
-        has_transition_metal_udf(mol).alias("has_tm"),
+        F.call_function("has_transition_metal", mol).alias("has_tm"),
     )
 
 

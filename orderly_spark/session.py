@@ -38,6 +38,23 @@ CODEGEN_CACHE_ENTRIES = 1000
 AQE_MIN_PARTITION_SIZE = "16k"
 
 
+#: Runtime-settable confs every query assumes. ``get_spark`` builds its
+#: session with them; ``__spark_entry__`` pins them on a session it did
+#: not build (setting each is a no-op on a session that complies):
+#: - UTC session timezone: timestamp-literal casts and date_trunc must
+#:   match the DuckDB oracle's naive-timestamp semantics;
+#: - nanosAsLong: events.parquet stores TIMESTAMP(NANOS), which the
+#:   vectorized reader rejects; it reads as long and the loader converts
+#:   back (values are microsecond-aligned, so lossless);
+#: - Arrow: the pandas-UDF paths (chem, multimodal, protobuf decode)
+#:   batch via Arrow, never row-at-a-time pickling.
+SESSION_CONTRACT = (
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+    ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+)
+
+
 def _cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "") or os.cpu_count() or 8)
 
@@ -51,8 +68,7 @@ def get_spark(app_name: str = "orderly_spark", *, shuffle_partitions: int | None
       ceiling, not a tuning knob that must be re-derived per dataset.
     - ``files.maxPartitionBytes`` kept at the 128m default: at 100 TB a
       scan yields ~800k input splits, which is the intended granularity.
-    - Arrow enabled for the pandas-UDF slow path (chem UDFs, protobuf
-      decode) — Arrow batches, never row-at-a-time pickling.
+    - :data:`SESSION_CONTRACT` (UTC, nanosAsLong, Arrow).
     """
     cpus = _cpus()
     builder = (
@@ -64,15 +80,10 @@ def get_spark(app_name: str = "orderly_spark", *, shuffle_partitions: int | None
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", AQE_MIN_PARTITION_SIZE)
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # testdata events.parquet stores TIMESTAMP(NANOS), which the
-        # vectorized reader rejects; read as long and convert in the
-        # loader (values are microsecond-aligned, so lossless).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config(map=dict(SESSION_CONTRACT))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

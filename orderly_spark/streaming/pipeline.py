@@ -134,28 +134,22 @@ def sessionized_events(
     )
 
 
-def _stream_state_partitions() -> int:
-    """Number of shuffle partitions — and therefore state-store
-    instances per stateful operator — a stream STARTED BY THIS MODULE
-    runs with (``SPARK_GRAFT_STREAM_STATE_PARTITIONS``, default 8; a
-    value that is not an integer raises ``ValueError``).
-
-    State partitioning is a STREAM-LIFETIME property — Spark pins it
-    into the checkpoint at first start — so it is chosen for the state
-    volume, never inherited from the batch session's
-    ``spark.sql.shuffle.partitions``: every state store pays per-BATCH
-    delta-file and commit I/O (the stream-stream full outer join ran
-    8.7 s with 32 stores, 3.1 s with 8). Results are
-    partition-independent (watermark, dedup, join and emission
-    semantics do not read the partition count)."""
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "") or 8)
+#: Shuffle partitions — and therefore state-store instances per stateful
+#: operator — of a stream STARTED BY THIS MODULE when the caller passes
+#: no ``state_partitions``. State partitioning is a STREAM-LIFETIME
+#: property — Spark pins it into the checkpoint at first start — so it
+#: is chosen for the state volume, never inherited from the batch
+#: session's ``spark.sql.shuffle.partitions``: every state store pays
+#: per-BATCH delta-file and commit I/O (the stream-stream full outer
+#: join ran 8.7 s with 32 stores, 3.1 s with 8). Results are
+#: partition-independent (watermark, dedup, join and emission semantics
+#: do not read the partition count).
+STATE_PARTITIONS = 8
 
 
 #: serialises the session-conf override window below: concurrent
 #: drains (or a drain racing another drain's restore) could otherwise
-#: interleave enter/exit and restore a wrong value (r16, ADVICE r15)
+#: interleave enter/exit and restore a wrong value
 import threading as _threading
 
 _STATE_CONF_LOCK = _threading.Lock()
@@ -168,7 +162,7 @@ class _state_sized_shuffle:
     original value is restored once the drain completes so batch
     queries in the same session are untouched.
 
-    CONCURRENCY CONTRACT (r16, ADVICE r15): the override mutates the
+    CONCURRENCY CONTRACT: the override mutates the
     SESSION-global ``spark.sql.shuffle.partitions`` for the duration of
     the drain — a batch query planned on the same SparkSession from
     another thread DURING ``awaitTermination`` would silently inherit
@@ -188,7 +182,7 @@ class _state_sized_shuffle:
             self._old = self._conf.get("spark.sql.shuffle.partitions")
             self._conf.set(
                 "spark.sql.shuffle.partitions",
-                str(self._n if self._n else _stream_state_partitions()),
+                str(self._n or STATE_PARTITIONS),
             )
         except BaseException:
             # __exit__ does not run when __enter__ raises: release here,
@@ -212,8 +206,8 @@ def run_to_memory(
     """Drain a stream with trigger(availableNow) into an in-memory
     table (tests / smoke checks). Returns after completion.
 
-    ``state_partitions`` overrides the env/default state-store count
-    for THIS stream (r16: state sizing is per-operator — a gate whose
+    ``state_partitions`` overrides :data:`STATE_PARTITIONS` for THIS
+    stream (state sizing is per-operator — a gate whose
     state is a handful of keys wants fewer stores than one carrying
     every user_id; results are partition-independent either way)."""
     with _state_sized_shuffle(stream.sparkSession, state_partitions):

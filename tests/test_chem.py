@@ -2,13 +2,23 @@
 pure-Python parsed-graph ones (functions/smiles.py — their chemistry is
 proven in tests/test_smiles.py). What these tests pin is the Spark-side
 machinery: pandas UDF batching, the distinct→broadcast dimension
-pattern, array reassembly order, and zip_with arithmetic."""
+pattern, array reassembly order, and zip_with arithmetic; and the F5
+transition-metal predicate (functions/rxn.py), checked against the
+parser's atomic-number walk."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from orderly_spark.functions import chem
+from orderly_spark.functions import rxn as R
+from orderly_spark.functions.sql_registry import register_sql_functions
+
+
+def _spark_tm(spark, mols):
+    """rxn.has_tm evaluated in Spark, per distinct molecule."""
+    df = spark.createDataFrame([(m,) for m in dict.fromkeys(mols)], "m string")
+    return {r.m: r.t for r in df.select("m", F.expr(R.has_tm("m")).alias("t")).collect()}
 
 
 def test_canonicalise_via_dimension_roundtrip(spark):
@@ -49,18 +59,23 @@ def test_canonical_udf_null_passthrough(spark):
 
 
 def test_tm_first_order(spark):
-    df = spark.createDataFrame(
-        [(["CC", "[Pd]", "O", "[Fe]"],)], "agents array<string>"
-    ).withColumn("tm", F.array(F.lit("[Pd]"), F.lit("[Fe]")))
-    out = df.select(chem.tm_first_order(F.col("agents"), F.col("tm")).alias("a")).collect()[0].a
+    df = spark.createDataFrame([(["CC", "[Pd]", "O", "[Fe]"],)], "agents array<string>")
+    out = df.select(F.expr(R.tm_first("agents")).alias("a")).collect()[0].a
     # TM molecules first, both groups keeping original relative order
     assert out == ["[Pd]", "[Fe]", "CC", "O"]
+    # a caller-supplied membership predicate replaces the TM test
+    df = df.withColumn("tm", F.array(F.lit("O"), F.lit("[Fe]")))
+    out = df.select(F.expr(R.tm_first("agents", lambda m: f"array_contains(tm, {m})")).alias("a")).collect()[0].a
+    assert out == ["O", "[Fe]", "CC", "[Pd]"]
 
 
 def test_has_transition_metal_fallback(spark):
-    df = spark.createDataFrame([("[Pd]",), ("CCO",), ("[Fe+2]",)], "s string")
-    got = [r.t for r in df.select(chem.has_transition_metal_udf(F.col("s")).alias("t")).collect()]
-    assert got == [True, False, True]
+    """The SQL function is rxn.has_tm with NULL mapped to false; a
+    plain-text name is not flagged."""
+    register_sql_functions(spark)
+    df = spark.createDataFrame([("[Pd]",), ("CCO",), ("[Fe+2]",), (None,), ("Water",)], "s string")
+    got = [r.t for r in df.selectExpr("has_transition_metal(s) AS t").collect()]
+    assert got == [True, False, True, False, False]
 
 
 def test_morgan_fingerprint_shape_and_determinism(spark):
@@ -135,10 +150,8 @@ def test_npy_export_matches_reference_artifact_shape(spark, tmp_path):
 
 
 # Curated F5 ground truth (TM present by actual chemistry), split by
-# input class — the _has_tm_one symbol-scan fallback's ceiling is
-# MEASURED against it (r10, verdict item 8), not just asserted.
-#: bracket-atom SMILES / organometallics: the class the fallback is
-#: documented adequate for — zero divergences allowed.
+# input class.
+#: bracket-atom SMILES / organometallics — zero divergences allowed.
 _TM_SMILES_CASES = [
     ("[Pd]", True), ("[Pd+2]", True), ("[106Pd]", True),          # isotope prefix
     ("[Fe+2].[O-]S([O-])(=O)=O", True), ("[W]", True), ("[V]", True),
@@ -150,48 +163,69 @@ _TM_SMILES_CASES = [
     ("[Sc+3]", False),                                             # Sc (21) excluded by design
 ]
 #: plain-text molecule NAMES (the consider_molecule_names path can
-#: route these through the same predicate): the scan's KNOWN
-#: false-positive surface — TM symbols hiding inside words.
+#: route these through the same predicate): TM symbols hiding inside
+#: words, which a bare symbol scan would flag.
 _TM_NAME_CASES = [
     ("Water", False),        # 'W'
     ("Feldspar", False),     # 'Fe'
     ("Vinegar", False),      # 'V'
     ("Regent street", False),# 'Re'
     ("sodium chloride", False),
-    ("palladium on carbon", False),  # scan MISSES (lowercase 'pd')
+    ("palladium on carbon", False),  # a name, not a bracket atom
     ("acetone", False),
 ]
 
 
-def test_has_tm_exact_on_bracket_smiles():
-    """Since r11 this class routes through the pure-Python SMILES
-    parser's atomic-number walk (functions/smiles.py) — exact by
-    chemistry, not regex adequacy; every curated SMILES must agree
-    with ground truth."""
-    from orderly_spark.functions.chem import _has_tm_one
-
-    diverging = [s for s, want in _TM_SMILES_CASES if _has_tm_one(s) != want]
+def test_has_tm_exact_on_bracket_smiles(spark):
+    """Every curated SMILES agrees with ground truth."""
+    got = _spark_tm(spark, [s for s, _ in _TM_SMILES_CASES])
+    diverging = [s for s, want in _TM_SMILES_CASES if got[s] != want]
     assert diverging == []
 
 
 def test_has_tm_smiles_cases_all_route_through_parser():
-    """Every curated SMILES case is INSIDE the parser subset — none
-    falls back to the symbol scan — so the exactness above is the
-    parser's, not the scan's."""
+    """Every curated SMILES case is INSIDE the parser subset, so the
+    parser's atomic-number walk is a reference for each of them."""
     from orderly_spark.functions.smiles import molecule_has_tm
 
     unrouted = [s for s, _ in _TM_SMILES_CASES if molecule_has_tm(s) is None]
     assert unrouted == []
 
 
-def test_has_tm_fallback_name_surface_is_measured():
-    """The MEASURED ceiling on name strings (which fail the SMILES
-    parser and fall to the symbol scan): exactly the four
-    W/Fe/V/Re-containing words false-positive; everything else
-    (including the lowercase-symbol miss) agrees. If the fallback
-    changes, this count moves and the ceiling gets re-documented —
-    that is the point of pinning it."""
-    from orderly_spark.functions.chem import _has_tm_one
+def test_has_tm_fallback_name_surface_is_measured(spark):
+    """Names fail the SMILES parser; the predicate reads bracketed
+    symbols only, so no name diverges from ground truth — none of the
+    W/Fe/V/Re-containing words is flagged."""
+    got = _spark_tm(spark, [s for s, _ in _TM_NAME_CASES])
+    diverging = sorted(s for s, want in _TM_NAME_CASES if got[s] != want)
+    assert diverging == []
 
-    diverging = sorted(s for s, want in _TM_NAME_CASES if _has_tm_one(s) != want)
-    assert diverging == ["Feldspar", "Regent street", "Vinegar", "Water"]
+
+def test_tm_predicate_equals_parser_walk(spark):
+    """rxn.has_tm evaluated in Spark equals smiles.molecule_has_tm on
+    every parseable molecule of the curated corpora and of the random
+    two-spelling sweep (tests/test_smiles.py, same seeds): transition
+    metals sit outside SMILES's organic subset, so they are always
+    bracket atoms and the bracketed-symbol regex is the walk."""
+    import random
+
+    from orderly_spark.functions.smiles import molecule_has_tm
+    from tests.test_smiles import (
+        _DIFFERENT_MOLECULES,
+        _SAME_MOLECULE_SPELLINGS,
+        _random_molecule,
+        _serialize,
+    )
+
+    mols = [s for s, _ in _TM_SMILES_CASES]
+    mols += [s for pair in _SAME_MOLECULE_SPELLINGS + _DIFFERENT_MOLECULES for s in pair]
+    rng = random.Random(1106)
+    for trial in range(300):
+        tokens, edges, _zs = _random_molecule(rng)
+        mols.append(_serialize(tokens, edges, 0, random.Random(trial)))
+        mols.append(_serialize(tokens, edges, rng.randrange(len(tokens)), random.Random(trial + 7919)))
+    want = {m: molecule_has_tm(m) for m in mols}
+    want = {m: t for m, t in want.items() if t is not None}
+    # 581 distinct parseable molecules, both classes present
+    assert len(want) > 550 and 0 < sum(want.values()) < len(want)
+    assert _spark_tm(spark, list(want)) == want

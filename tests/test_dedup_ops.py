@@ -167,11 +167,28 @@ def test_duplicate_clusters_empty_pairs_terminates_immediately(spark):
     assert out == []
 
 
-def test_star_contraction_equals_label_propagation(spark):
-    """duplicate_clusters_star (large-star/small-star, the O(log²n)
-    planet-scale variant) must produce EXACTLY the labelling of
-    min-label propagation on every graph shape: path (worst case for
-    propagation), cliques joined by a bridge, and random graphs."""
+def _union_find_labels(edges):
+    """Pure-Python connected components: node → min id of its component."""
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_duplicate_clusters_equals_union_find(spark):
+    """Min-label propagation labels every node with the min id of its
+    component, as a union-find does, on every graph shape: path (the
+    worst case for propagation: 20 rounds), cliques joined by a
+    bridge, a single edge and random graphs."""
     import random
 
     cases = {
@@ -189,27 +206,8 @@ def test_star_contraction_equals_label_propagation(spark):
         cases[f"random-{t}"] = [(a, b) for a, b in edges if a != b]
     for name, edges in cases.items():
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        a = {r.doc_id: r.cluster_id for r in D.duplicate_clusters(pairs, 50).collect()}
-        b = {r.doc_id: r.cluster_id for r in D.duplicate_clusters_star(pairs).collect()}
-        assert a == b, name
-
-
-def test_star_contraction_empty_pairs(spark):
-    pairs = spark.createDataFrame([], "id_a long, id_b long")
-    assert D.duplicate_clusters_star(pairs).collect() == []
-
-
-def test_star_contraction_raises_on_non_convergence(spark):
-    """An iteration budget that ends before the edge set stops changing
-    fails loudly, as duplicate_clusters does: the labels of the last
-    round split a 41-node chain into many clusters."""
-    chain = [(i, i + 1) for i in range(40)]
-    pairs = spark.createDataFrame(chain, "id_a long, id_b long")
-    with pytest.raises(ValueError, match="did not converge"):
-        D.duplicate_clusters_star(pairs, max_iterations=1)
-    # the default budget converges to one component labelled 0
-    got = {r.doc_id: r.cluster_id for r in D.duplicate_clusters_star(pairs).collect()}
-    assert len(got) == 41 and set(got.values()) == {0}
+        got = {r.doc_id: r.cluster_id for r in D.duplicate_clusters(pairs, 50).collect()}
+        assert got == _union_find_labels(edges), name
 
 
 def test_prefix_filter_jaccard_equals_bruteforce(spark, docs):
@@ -284,12 +282,11 @@ def test_prefix_filter_prunes_candidates(spark):
 
 
 def test_duplicate_clusters_string_ids_converge(spark):
-    """String doc ids (the normal corpus case) must cluster correctly
-    (review finding, r8): the old decimal(38,0) convergence cast threw
-    under ANSI / NULLed the sum otherwise, breaking the loop after two
-    rounds with intermediate labels. A diameter-3 chain needs 3
-    propagation rounds, so it distinguishes real convergence from the
-    broken early exit."""
+    """String doc ids (the normal corpus case) must cluster correctly:
+    a decimal(38,0) convergence cast throws under ANSI or NULLs the
+    sum, which would end the loop after two rounds with intermediate
+    labels. A diameter-3 chain needs 3 propagation rounds, so it
+    distinguishes real convergence from an early exit."""
     from orderly_spark.operators.dedup import duplicate_clusters
 
     pairs = spark.createDataFrame(
@@ -302,7 +299,7 @@ def test_duplicate_clusters_string_ids_converge(spark):
 
 def test_duplicate_clusters_raises_on_non_convergence(spark):
     """max_iterations exhaustion must FAIL LOUD, not silently return
-    intermediate labels (review finding, r8)."""
+    intermediate labels."""
     import pytest as _pytest
 
     from orderly_spark.operators.dedup import duplicate_clusters

@@ -107,8 +107,7 @@ def test_lpa_empty_pairs_returns_empty(spark):
 def test_malformed_env_sizes_raise(monkeypatch):
     """A size in the environment that is not an integer fails loudly
     instead of silently becoming the default: the PageRank broadcast
-    cap at import, the streaming state-store count when a stream
-    starts, the session's core count when a session is built."""
+    cap at import, the session's core count when a session is built."""
     proc = subprocess.run(
         [sys.executable, "-c", "import orderly_spark.operators.graph"],
         cwd=Path(__file__).resolve().parent.parent,
@@ -116,12 +115,6 @@ def test_malformed_env_sizes_raise(monkeypatch):
         capture_output=True, text=True, timeout=120,
     )
     assert proc.returncode != 0 and "ValueError" in proc.stderr, proc.stderr[-2000:]
-
-    from orderly_spark.streaming import pipeline as SP
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "eight")
-    with pytest.raises(ValueError):
-        SP._stream_state_partitions()
 
     from orderly_spark.session import _cpus
 

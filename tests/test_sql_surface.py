@@ -74,6 +74,17 @@ class TestSqlScalarFunctions:
         assert (got.year, got.month, got.day) == (1995, 11, 1)
         assert _one(spark, "SELECT grant_date_from_filename('no-date-here')") is None
 
+    def test_rule_functions_plan_without_python(self, spark):
+        # F5 and F13 are SQL-bodied: they inline into the JVM plan
+        from orderly_spark.plans.audit import audit
+
+        df = spark.sql(
+            "SELECT has_transition_metal(s) AS t, reaction_hash(array(s), array(s)) AS h "
+            "FROM VALUES ('[Pd]'), (NULL) AS v(s)"
+        )
+        assert not audit(df).has_python_udf
+        assert [r.t for r in df.collect()] == [True, False]
+
     def test_chem_udfs_callable_from_sql(self, spark):
         # the SQL call path reaches the same kernels as the DataFrame UDFs
         row = spark.sql(

@@ -346,9 +346,8 @@ def test_latest_state_argmax_total_order_on_conflicting_writes(spark):
 
 
 def test_stream_state_partitions_set_and_restored(spark, events_dir):
-    """r15 (optimization round): streams started by run_to_memory run
-    with the parameterised state-store partition count
-    (SPARK_GRAFT_STREAM_STATE_PARTITIONS, default 8) — state
+    """Streams started by run_to_memory run with the module's
+    state-store partition count (STATE_PARTITIONS) — state
     partitioning is a stream-lifetime property sized to state volume,
     not inherited from the batch session — and the session's batch
     setting must be restored after the drain."""
@@ -368,7 +367,7 @@ def test_stream_state_partitions_set_and_restored(spark, events_dir):
         assert out.count() > 0
     finally:
         SP._state_sized_shuffle = orig
-    assert seen["during"] == str(SP._stream_state_partitions())
+    assert seen["during"] == str(SP.STATE_PARTITIONS)
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 

@@ -77,7 +77,7 @@ IMPL: dict[str, tuple[str, str]] = {
     "W-ntile[abs]": ("ntile() bucketing windows", ""),
     "O1": ("orderBy(input_file_name) — source ordering", ""),
     "O2": ("array_sort per role list", ""),
-    "O3": ("functions/chem.py tm_first_order", "tests/test_chem.py"),
+    "O3": ("functions/rxn.py tm_first (stable TM-first reorder over rxn.has_tm or a caller's membership predicate)", "tests/test_chem.py"),
     "O4": ("array model (nulls removed; arrays_zip alignment)", "tests/test_cleaning.py"),
     "O5": ("functions/rxn.py sort_products_longest_first + yields_to_longest_product", "tests/test_extract.py"),
     "O6": ("schema.py array_to_wide column ordering", "tests/test_cleaning.py"),
@@ -92,7 +92,7 @@ IMPL: dict[str, tuple[str, str]] = {
     "F2": ("functions/rxn.py rxn_segments/rxn_is_valid/rxn_role", "tests/test_extract.py"),
     "F3": ("functions/chem.py _canonicalise_one (parsed-graph canonical writer; identity outside the grammar) via canonical_smiles_udf + canonicalise_via_dimension", "tests/test_chem.py, tests/test_smiles.py"),
     "F4": ("functions/chem.py (atom-map strip inside canonical UDF via is_mapped)", "tests/test_chem.py"),
-    "F5": ("functions/chem.py _has_tm_one (parsed-graph atomic-number walk; symbol scan for unparseable input) via has_transition_metal_udf; extract's P12/O3 use operators/extract.py TM_SYMBOL_REGEX (bracketed symbols)", "tests/test_chem.py, tests/test_smiles.py"),
+    "F5": ("functions/rxn.py has_tm (TM_SYMBOL_REGEX over bracket atoms; equals the parser's atomic-number walk on SMILES): extract's P12/O3 and the has_transition_metal SQL function", "tests/test_chem.py, tests/test_smiles.py"),
     "F6": ("functions/rxn.py temperature_to_celsius", "tests/test_extract.py"),
     "F7": ("functions/rxn.py time_to_hours", "tests/test_extract.py"),
     "F8": ("functions/rxn.py yield_percentage", "tests/test_extract.py"),
@@ -100,7 +100,7 @@ IMPL: dict[str, tuple[str, str]] = {
     "F10": ("functions/rxn.py is_number (Python float() semantics incl. underscores)", "tests/test_extract.py"),
     "F11": ("sources/solvents.py lower-cased name keys", "tests/test_sources.py"),
     "F12": ("contains/isin predicates (charcoal, uspto, ice)", "tests/test_extract.py"),
-    "F13": ("operators/cleaning.py reaction_hash (sha256)", "tests/test_cleaning.py"),
+    "F13": ("functions/rxn.py reaction_hash (sha256): operators/cleaning.py reaction_hash and the reaction_hash SQL function", "tests/test_cleaning.py, tests/test_sql_surface.py"),
     "F14": ("functions/chem.py _morgan_fp_one parsed-graph kernel, one memo per UDF: reaction_fingerprint_udf (gen-fp, fused per row), morgan_fingerprint_udf (one column)", "tests/test_chem.py, tests/test_smiles.py, tests/test_cli.py"),
     "F15": ("functions/chem.py reaction_fingerprint_udf (gen-fp: product − Σ reactants in the fused kernel) + fingerprint_difference (zip_with over fingerprint columns)", "tests/test_chem.py, tests/test_cli.py"),
     "F16": ("operators/cleaning.py scramble_role_lists", "tests/test_cleaning.py"),
@@ -128,7 +128,7 @@ IMPL: dict[str, tuple[str, str]] = {
     "fingerprint[abs]": ("operators/text.py document fingerprinting", "tests/test_text_ops.py"),
     "multimodal": ("operators/multimodal.py decode/resize/frame-sample/embed (kernels stubbed, plumbing real)", "tests/test_multimodal.py"),
     # round-3 additions
-    "connected-components[abs]": ("operators/dedup.py duplicate_clusters (iterative min-label propagation; recursive-CTE oracle)", "tests/test_dedup_ops.py"),
+    "connected-components[abs]": ("operators/dedup.py duplicate_clusters (iterative min-label propagation, checked against union-find; recursive-CTE oracle)", "tests/test_dedup_ops.py"),
     "sampling[abs]": ("queries/text_battery.py deterministic hash-threshold stratified sampling", ""),
     "mixture[abs]": ("queries/text_battery.py weighted corpus mixing (explode replication)", ""),
     "pii-scrub[abs]": ("queries/text_battery.py regex PII redaction (pure regexp_replace)", ""),
