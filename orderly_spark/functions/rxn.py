@@ -276,7 +276,9 @@ def tm_first(arr: str, is_tm=has_tm) -> str:
     """O3 (extractor.py:586-590, 1052-1056): stable reorder with the
     members satisfying ``is_tm`` (a builder from a member expression to
     a predicate) first, relative order otherwise preserved, as the
-    reference's stable sorted(key=has_tm, reverse=True)."""
+    reference's stable sorted(key=has_tm, reverse=True). A member whose
+    predicate is NULL (a NULL member) falls out of both halves; extract
+    reorders lists that hold none."""
     return f"concat(filter({arr}, _x -> {is_tm('_x')}), filter({arr}, _x -> NOT ({is_tm('_x')})))"
 
 

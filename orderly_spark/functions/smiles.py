@@ -26,7 +26,9 @@ the ceiling is explicit, not hidden.
 What the parsed graph powers:
 - :func:`molecule_has_tm` — the reference's transition-metal test
   (``orderly/extract/defaults.py:10-39``: atomic number in 22–29,
-  40–47, 72–79) as an exact atomic-number walk instead of a regex.
+  40–47, 72–79) as an exact atomic-number walk: the reference the
+  engine's regex predicate (functions/rxn.py ``has_tm``) is tested
+  against.
 - :func:`morgan_fingerprint` — a real radius-limited Morgan/ECFP
   fingerprint (Rogers & Hahn 2010) over the parsed graph, mirroring
   the reference's ``orderly/gen_fp/fingerprints.py:76-99`` contract
@@ -824,8 +826,7 @@ def _is_tm(z: int) -> bool:
 
 def molecule_has_tm(s: str) -> bool | None:
     """Exact atomic-number transition-metal test on the parsed graph;
-    ``None`` when ``s`` is outside the parser's subset (caller falls
-    back to the documented symbol scan)."""
+    ``None`` when ``s`` is outside the parser's subset."""
     try:
         mol = parse_smiles(s)
     except SmilesParseError:
