@@ -108,6 +108,7 @@ def cmd_extract(args: argparse.Namespace) -> int:
     from orderly_spark.sources import solvents as SV
     from orderly_spark.sources.ord import (
         decode_reactions,
+        name_list_frame,
         save_name_list,
         scan_ord_files,
         write_extracted,
@@ -122,12 +123,11 @@ def cmd_extract(args: argparse.Namespace) -> int:
         inverse=args.inverse_substring,
     )
     decoded = decode_reactions(files)
-    dim = (
-        SV.load_solvents_csv(spark, args.solvents_path)
+    sset = (
+        SV.solvent_set_literal(SV.load_solvents_csv(spark, args.solvents_path))
         if args.solvents_path
-        else SV.default_solvents(spark)
+        else SV.smiles_set_literal(SV.packaged_solvent_smiles())
     )
-    sset = SV.solvent_set_literal(dim)
     names = None
     if args.consider_molecule_names:
         # the name list is taken from the DECODED (pre-filter) rows, which
@@ -143,8 +143,7 @@ def cmd_extract(args: argparse.Namespace) -> int:
     )
     if names is not None:
         save_name_list(
-            spark.createDataFrame([(n,) for n in names.get["names"]], "name string"),
-            f"{args.output_path}/molecule_names",
+            name_list_frame(spark, names.get["names"]), f"{args.output_path}/molecule_names"
         )
     _dump_config(args, args.output_path, "extract_config.json")
     print(f"extracted {written.get['n']} reactions -> {args.output_path}/extracted_ords")

@@ -27,13 +27,13 @@ from __future__ import annotations
 
 import gzip
 import re
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from orderly_spark.functions.rxn import filename_contains
+from orderly_spark.functions.rxn import filename_contains, sql_string
 from orderly_spark.schema import REACTION_SCHEMA
 
 # decoder: (filename, file_bytes) -> iterator of row dicts keyed by
@@ -249,6 +249,14 @@ def merge_molecule_names(names: DataFrame, col: str = "name") -> DataFrame:
     small-cardinality column; the sort is one final stage over the
     already-distinct set."""
     return names.select(col).where(F.col(col).isNotNull()).distinct().orderBy(col)
+
+
+def name_list_frame(spark: SparkSession, names: Iterable[str], col: str = "name") -> DataFrame:
+    """A name list the driver holds, as a one-column string frame: one
+    exploded SQL array literal, so no Python worker deserialises rows
+    (``createDataFrame`` over a list does)."""
+    arr = f"CAST(array({', '.join(map(sql_string, names))}) AS array<string>)"
+    return spark.range(1).select(F.explode(F.expr(arr)).alias(col))
 
 
 def save_name_list(df: DataFrame, path: str, col: str = "name") -> None:

@@ -11,14 +11,19 @@ broadcast hash join, set membership a broadcast array/semi-join.
 The full 615-row dimension ships with the engine
 (``orderly_spark/data/solvents.csv``) — it is public DATA from the
 public reference repo (rows sourced from doi.org/10.1039/C9SC01844A,
-per its ``source`` column), not code; ``default_solvents`` loads it.
+per its ``source`` column), not code; ``default_solvents`` loads it,
+and ``packaged_solvent_smiles`` parses its SMILES set on the driver
+(the set extract ships is then a literal built with no Spark job).
 `SAMPLE_SOLVENTS` remains as a tiny in-code seed for unit tests, and
 `load_solvents_csv` reads any CSV with the reference's column layout.
 """
 
 from __future__ import annotations
 
+import csv
+import functools
 import os
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -95,14 +100,29 @@ def solvent_smiles_set(solvents: DataFrame) -> DataFrame:
     )
 
 
-def solvent_set_literal(solvents: DataFrame) -> Column | None:
-    """The J1 membership set collected once and shipped as ONE literal
-    array expression (None when the dimension has no SMILES). The set is
-    written as SQL text and parsed JVM-side, so building it costs O(1)
-    py4j round trips whatever its size; a Column built one ``F.lit`` per
-    member costs ~4 per member."""
-    smiles = solvent_smiles_set(solvents).collect()[0].solvent_set
+@functools.cache
+def packaged_solvent_smiles() -> tuple[str, ...]:
+    """The packaged dimension's J1 membership set, parsed on the driver:
+    the same sorted distinct SMILES that ``solvent_smiles_set`` collects
+    from ``default_solvents`` (an empty field is NULL to Spark's CSV
+    reader, and ``collect_set`` drops it; Python's code-point order is
+    Spark's UTF-8 byte order), without the read and collect jobs."""
+    with open(PACKAGED_SOLVENTS_CSV, newline="", encoding="utf-8") as fh:
+        return tuple(sorted({r["smiles"] for r in csv.DictReader(fh) if r["smiles"]}))
+
+
+def smiles_set_literal(smiles: Sequence[str]) -> Column | None:
+    """A J1 membership set shipped as ONE literal array expression (None
+    when the set is empty). The set is written as SQL text and parsed
+    JVM-side, so building it costs O(1) py4j round trips whatever its
+    size; a Column built one ``F.lit`` per member costs ~4 per member."""
     return F.expr(f"array({', '.join(map(sql_string, smiles))})") if smiles else None
+
+
+def solvent_set_literal(solvents: DataFrame) -> Column | None:
+    """The J1 membership set of a dimension frame, collected once and
+    shipped by :func:`smiles_set_literal`."""
+    return smiles_set_literal(solvent_smiles_set(solvents).collect()[0].solvent_set)
 
 
 def apply_name_replacements(

@@ -342,12 +342,13 @@ def test_cli_job_counts_and_name_list(spark, tmp_path):
             "gen-fp", "--clean-data-path", str(cl / "train.parquet"),
             "--output-path", str(tmp_path / "fp"), "--fp-size", "64"]),
     }
-    # extract: solvents CSV read, solvent-set collect (2), the write, the
-    # name-list CSV (2: the one-partition exchange, then the sorted
-    # write; no range-partitioning sample job). clean: its pipeline
-    # and split barriers plus the two writes; no job decides a plan
-    # shape. gen-fp: the input schema read and the write.
-    assert jobs == {"extract": 6, "clean": 17, "gen-fp": 2}
+    # extract: the write, and the name-list CSV (2: the one-partition
+    # exchange, then the sorted write; no range-partitioning sample job).
+    # The packaged solvent set and the observed names are driver-held,
+    # so neither costs a job. clean: its pipeline and split barriers
+    # plus the two writes; no job decides a plan shape. gen-fp: the
+    # input schema read and the write.
+    assert jobs == {"extract": 3, "clean": 17, "gen-fp": 2}
 
     decoded = O.decode_reactions(O.scan_ord_files(spark, str(data)))
     want = molecule_name_side_output(decoded)

@@ -50,6 +50,7 @@ def test_probe_scaled_corpus_and_stage_attribution(spark, sf_smoke, tmp_path):
     assert 0 <= rec["build_jobs"] <= stages["jobs"], rec
     assert rec["build_s"] > 0 and rec["exec_s"] > 0
     assert len(rec["calib_py"]) == len(rec["calib_jvm"]) == 2
+    assert rec["cds"] in ("mapped", "building", "none"), rec
     # the first rep compiles the slot's generated classes; the second
     # finds every one of them in the cache
     codegen = rec["codegen"]

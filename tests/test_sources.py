@@ -211,6 +211,31 @@ def test_packaged_solvents_full_dimension(spark):
     assert "O" in sset and len(sset) > 500
 
 
+def test_packaged_solvent_smiles_match_spark_reader(spark):
+    """The driver-side parse of the packaged solvents.csv is the set
+    Spark's CSV reader collects, in the same order, and ships as the same
+    literal."""
+    want = SV.solvent_smiles_set(SV.default_solvents(spark)).collect()[0].solvent_set
+    got = SV.packaged_solvent_smiles()
+    assert len(got) == 561
+    assert list(got) == want
+    literal = SV.smiles_set_literal(got)
+    assert spark.range(1).select(literal.alias("s")).collect()[0].s == want
+
+
+def test_name_list_frame_writes_the_same_csv(spark, tmp_path):
+    """A driver-held name list written through ``name_list_frame`` gives
+    the bytes a ``createDataFrame`` frame gives, odd characters and the
+    empty list included."""
+    def csv_text(d):
+        return "".join(f.read_text() for f in sorted(d.glob("*.csv")))
+
+    for names in (["", "123", "a'b", "C${x}", "\\n", "ü"], []):
+        O.save_name_list(O.name_list_frame(spark, names), str(tmp_path / "lit"))
+        O.save_name_list(spark.createDataFrame([(n,) for n in names], "name string"), str(tmp_path / "cdf"))
+        assert csv_text(tmp_path / "lit") == csv_text(tmp_path / "cdf"), names
+
+
 def test_write_extracted_reextract_keeps_other_partitions(spark, ord_dir):
     """Review regression (data loss): re-extracting ONE dataset must
     overwrite only its own partition — Spark's default STATIC

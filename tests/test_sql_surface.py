@@ -143,6 +143,7 @@ class TestApproxSketches:
         function of the data — two independent evaluations must agree
         bit-for-bit, so the rows-only gate still pins a stable
         surface, not noise."""
+        import orderly_spark.queries  # noqa: F401  (fills the registry)
         from orderly_spark.registry import REGISTRY
 
         q = REGISTRY["a_approx_sketches"].fn

@@ -40,7 +40,9 @@ fastest rep, ``stages`` (tasks, run/CPU seconds, shuffle and spill MB,
 jobs and stages of that rep's Spark jobs, read from the event log),
 ``build_jobs`` (the jobs of that rep started while its DataFrame was
 built: its eager barriers, see ``orderly_spark.session.barrier``),
-``plan`` (facts from ``orderly_spark.plans.audit``), ``codegen`` (the
+``plan`` (facts from ``orderly_spark.plans.audit``), ``cds`` (whether
+the session's JVM mapped the class-data archive, was building one or ran
+without one: ``orderly_spark.session.archive_state``), ``codegen`` (the
 classes each rep compiled and its seconds of compiling, one value per
 rep, from Spark's CodegenMetrics: a rep that reuses every generated
 class compiles 0; seconds are null past the first 1028 classes the JVM
@@ -131,13 +133,14 @@ def run(sf_dir: str, slots: list[str], reps: int, plans: Path | None, work: Path
 
     from orderly_spark.plans.audit import audit
     from orderly_spark.registry import REGISTRY
-    from orderly_spark.session import codegen_compiles, get_spark
+    from orderly_spark.session import archive_state, codegen_compiles, get_spark
     from orderly_spark.tables import TABLES, load
 
     if plans is not None:
         plans.mkdir(parents=True, exist_ok=True)
 
     spark = get_spark("orderly_spark_probe")
+    cds = archive_state(spark)
     tr = Tracer("probe", spark.sparkContext)
     best: dict[str, dict] = {}
     try:
@@ -192,6 +195,7 @@ def run(sf_dir: str, slots: list[str], reps: int, plans: Path | None, work: Path
             "build_jobs": build_jobs,
             "stages": {k: round(v, 4) for k, v in stages.items()},
             "plan": r["plan"],
+            "cds": cds,
             "codegen": r["codegen"],
             "calib_py": [round(c[0], 4) for c in calib],
             "calib_jvm": [round(c[1], 4) for c in calib],
