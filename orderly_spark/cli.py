@@ -67,11 +67,8 @@ def build_parser() -> argparse.ArgumentParser:
         "--reactant-slots",
         type=int,
         default=None,
-        help="max reactants per row to fingerprint. Default: read the "
-        "clean stage's --num-reactant cap from the clean_config.json "
-        "written next to the data (falls back to 5 if absent); an "
-        "explicit value overrides. Under-sized slots are detected and "
-        "reported (see gen-fp guard)",
+        help="fingerprint only the first N reactants of each row (default: "
+        "every reactant); rows that had more are counted in a warning",
     )
     g.add_argument(
         "--npy-output-path",
@@ -123,10 +120,8 @@ def cmd_extract(args: argparse.Namespace) -> int:
         inverse=args.inverse_substring,
     )
     decoded = decode_reactions(files)
-    sset = (
-        SV.solvent_set_literal(SV.load_solvents_csv(spark, args.solvents_path))
-        if args.solvents_path
-        else SV.smiles_set_literal(SV.packaged_solvent_smiles())
+    sset = SV.smiles_set_literal(
+        SV.packaged_solvent_smiles(args.solvents_path or SV.PACKAGED_SOLVENTS_CSV)
     )
     names = None
     if args.consider_molecule_names:
@@ -158,12 +153,18 @@ def cmd_clean(args: argparse.Namespace) -> int:
     from orderly_spark.session import get_spark
     from orderly_spark.sources.ord import load_name_list
 
+    # the reference's three unresolved-name flags, mapped onto the one
+    # mode they select (exclusivity assert, cleaner.py:89-95)
     modes = [
-        args.set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn,
-        args.remove_rxn_with_unresolved_names,
-        args.set_unresolved_names_to_none,
+        mode
+        for mode, on in zip(C.UNRESOLVED_NAME_MODES, (
+            args.set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn,
+            args.remove_rxn_with_unresolved_names,
+            args.set_unresolved_names_to_none,
+        ))
+        if on
     ]
-    if sum(modes) != 1:  # mode exclusivity assert, cleaner.py:89-95
+    if len(modes) != 1:
         print("exactly one unresolved-name mode must be set", file=sys.stderr)
         return 2
     spark = get_spark("orderly_spark.clean")
@@ -177,9 +178,7 @@ def cmd_clean(args: argparse.Namespace) -> int:
         consistent_yield=args.consistent_yield,
         min_frequency_of_occurrence=args.min_frequency_of_occurrence,
         map_rare_molecules_to_other=args.map_rare_molecules_to_other,
-        set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn=modes[0],
-        remove_rxn_with_unresolved_names=modes[1],
-        set_unresolved_names_to_none=modes[2],
+        unresolved_names=modes[0],
         drop_duplicates=args.drop_duplicates,
         scramble=args.scramble,
         train_test_split_fraction=args.train_test_split_fraction,
@@ -203,23 +202,6 @@ def cmd_clean(args: argparse.Namespace) -> int:
     return 0
 
 
-def _clean_stage_reactant_cap(clean_data_path: str) -> int | None:
-    """Read the clean stage's --num-reactant cap from the
-    clean_config.json that cmd_clean writes next to its train/test
-    parquet (the S12 lineage record). Returns None when no config is
-    findable (data produced outside this CLI)."""
-    p = Path(clean_data_path)
-    for d in (p, p.parent):
-        cfg = d / "clean_config.json"
-        try:
-            return int(json.loads(cfg.read_text())["num_reactant"])
-        except (OSError, ValueError, KeyError, TypeError, json.JSONDecodeError):
-            # TypeError: valid JSON of the wrong shape, e.g.
-            # {"num_reactant": null} or a top-level list
-            continue
-    return None
-
-
 def cmd_gen_fp(args: argparse.Namespace) -> int:
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
@@ -230,39 +212,22 @@ def cmd_gen_fp(args: argparse.Namespace) -> int:
     spark = get_spark("orderly_spark.gen_fp")
     df = spark.read.parquet(args.clean_data_path)
     # Invariants (fingerprints.py:59-74):
-    # - rxn_diff_fp = product_fp − Σ fp(reactants[i]) over EVERY slot up
-    #   to the cap, and rxn_fp = concat(rxn_diff_fp, product_fp), 2·fp_size
-    #   wide; a null slot contributes zeros, so over-sizing only costs time.
-    # - The slot cap defaults to the --num-reactant the clean stage ran
-    #   with (its clean_config.json lineage record), so no reactant the
-    #   cleaned data can hold is silently dropped; --reactant-slots
-    #   overrides it.
-    # - Rows with more reactants than the cap are counted on the SAME job
-    #   that writes the output (an Observation, no extra pass). The count
-    #   is known only after the write, so a violation under the derived
-    #   cap removes the output (a consumer that ignores rc=2 must not read
-    #   it) and returns rc=2; under an explicit cap it warns.
-    explicit = args.reactant_slots is not None
-    if explicit:
-        slots = args.reactant_slots
-    else:
-        cap = _clean_stage_reactant_cap(args.clean_data_path)
-        if cap is None:
-            print(
-                "gen-fp: no clean_config.json next to the data; "
-                "defaulting --reactant-slots to 5",
-                file=sys.stderr,
-            )
-        slots = cap if cap is not None else 5
-    max_r = max(slots, 0)
-    guard = Observation("genfp_slot_guard")
-    df = df.observe(
-        guard,
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count(F.when(F.size("reactants") > max_r, 1)).alias("n_over"),
-    )
+    # - rxn_diff_fp = product_fp − Σ fp(r) over every reactant r, and
+    #   rxn_fp = concat(rxn_diff_fp, product_fp), 2·fp_size wide; a null
+    #   member contributes zeros.
+    # - --reactant-slots N truncates each row's reactants to the first N.
+    #   Rows it cut are counted on the SAME job that writes the output
+    #   (an Observation, no extra pass), and a warning names them.
+    reactants = F.col("reactants")
+    counts = [F.count(F.lit(1)).alias("n_rows")]
+    if args.reactant_slots is not None:
+        slots = max(args.reactant_slots, 0)
+        reactants = F.slice(reactants, 1, slots)
+        counts.append(F.count(F.when(F.size("reactants") > slots, 1)).alias("n_over"))
+    guard = Observation("genfp_rows")
+    df = df.observe(guard, *counts)
     fps = chem.reaction_fingerprint_udf(n_bits=args.fp_size, radius=args.radius)(
-        F.col("products"), F.col("reactants"), F.lit(max_r)
+        F.col("products"), reactants
     )
     out = (
         df.select("*", fps.alias("__fp"))
@@ -270,26 +235,13 @@ def cmd_gen_fp(args: argparse.Namespace) -> int:
         .withColumn("rxn_fp", F.concat(F.col("rxn_diff_fp"), F.col("product_fp")))
     )
     out.write.mode("overwrite").parquet(args.output_path)
-    over = guard.get["n_over"]
-    if over:
-        msg = (
-            f"gen-fp: {over} rows have more than {max_r} reactants; "
-            "their extra reactants were OMITTED from the fingerprint "
-            "difference"
+    if guard.get.get("n_over"):
+        print(
+            f"WARNING: gen-fp: {guard.get['n_over']} rows have more than {slots} "
+            "reactants; --reactant-slots OMITTED their extra reactants from the "
+            "fingerprint difference",
+            file=sys.stderr,
         )
-        if explicit:
-            print(f"WARNING: {msg} (explicit --reactant-slots)", file=sys.stderr)
-        else:
-            import shutil
-
-            shutil.rmtree(args.output_path, ignore_errors=True)
-            print(
-                f"ERROR: {msg}; the mis-fingerprinted output at "
-                f"{args.output_path} was removed — pass --reactant-slots "
-                "to override",
-                file=sys.stderr,
-            )
-            return 2
     n = guard.get["n_rows"]
     print(f"fingerprints ({2 * args.fp_size} wide) for {n} rows -> {args.output_path}")
     if args.npy_output_path:

@@ -226,28 +226,26 @@ _REACTION_FP_TYPE = T.StructType(
 
 def reaction_fingerprint_udf(n_bits: int = 2048, radius: int = 3):
     """F14 + F15 fused (fingerprints.py:59-99): pandas UDF factory over
-    ``(products, reactants, n_reactants)`` → ``struct<product_fp,
-    rxn_diff_fp>`` where ``product_fp`` is the fingerprint of
-    ``products[0]`` and ``rxn_diff_fp = product_fp − Σ`` the
-    fingerprints of the first ``n_reactants`` reactants.
+    ``(products, reactants)`` → ``struct<product_fp, rxn_diff_fp>``
+    where ``product_fp`` is the fingerprint of ``products[0]`` and
+    ``rxn_diff_fp = product_fp − Σ`` the fingerprints of every reactant.
 
     Invariants: the per-molecule kernel is :func:`_morgan_fp_one`, the
     same as :func:`morgan_fingerprint_udf`'s, with one memo shared by
-    every slot; a null or empty product, a null reactant array or
-    member, and an unparseable molecule all contribute zeros; reactants
-    past ``n_reactants`` are ignored (the caller counts them)."""
+    every member; a null or empty product, a null reactant array or
+    member, and an unparseable molecule all contribute zeros."""
 
     @F.pandas_udf(_REACTION_FP_TYPE)
     def rxn_fp_udf(
-        it: Iterator[tuple[pd.Series, pd.Series, pd.Series]],
+        it: Iterator[tuple[pd.Series, pd.Series]],
     ) -> Iterator[pd.DataFrame]:
         fp = _memoized_fp(n_bits, radius)
-        for products, reactants, n_reactants in it:
+        for products, reactants in it:
             product_fps, diffs = [], []
-            for prods, reacts, n in zip(products, reactants, n_reactants):
+            for prods, reacts in zip(products, reactants):
                 product = fp(prods[0] if prods is not None and len(prods) else None)
                 diff = product.copy()
-                for m in reacts[:n] if reacts is not None else ():
+                for m in reacts if reacts is not None else ():
                     if m is not None:
                         diff -= fp(m)
                 product_fps.append(product)
@@ -281,9 +279,9 @@ def export_fingerprint_matrix_npy(
 def fingerprint_difference(product_fp: Column, *reactant_fps: Column) -> Column:
     """F15 (fingerprints.py:63-74): product_fp − Σ reactant_fps,
     element-wise via zip_with (JVM-side, no UDF). A NULL fingerprint
-    ARRAY contributes zeros (review finding, r8: zip_with(out, NULL)
-    returned NULL, poisoning the whole difference — the per-element
-    coalesce guarded only NULL members)."""
+    ARRAY contributes zeros, as does a NULL element: zip_with(out, NULL)
+    would be NULL for the whole difference, so each reactant array is
+    coalesced to zeros before the per-element coalesce."""
     zeros = F.transform(product_fp, lambda x: F.lit(0))
     out = product_fp
     for r in reactant_fps:

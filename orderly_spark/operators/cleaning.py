@@ -35,6 +35,14 @@ CONDITION_ROLES = ("agents", "solvents", "reagents", "catalysts")
 ALL_ROLES = ("reactants", "agents", "reagents", "solvents", "catalysts", "products")
 
 
+#: P11's unresolved-name modes (cleaner.py:572-657; see
+#: :func:`handle_unresolved_names`), in the order of the reference CLI
+#: flags that select them:
+#: ``--set-unresolved-names-to-none-if-mapped-rxn-str-exists-else-del-rxn``,
+#: ``--remove-rxn-with-unresolved-names``, ``--set-unresolved-names-to-none``
+UNRESOLVED_NAME_MODES = ("none_if_mapped_else_remove_rxn", "remove_rxn", "none")
+
+
 @dataclass
 class CleanConfig:
     """Knobs mirroring the reference CLI (cleaner.py:948-1196)."""
@@ -48,9 +56,7 @@ class CleanConfig:
     consistent_yield: bool = True
     min_frequency_of_occurrence: int = 100
     map_rare_molecules_to_other: bool = False  # False → remove rows (cleaner.py:370-396)
-    set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn: bool = True
-    remove_rxn_with_unresolved_names: bool = False
-    set_unresolved_names_to_none: bool = False
+    unresolved_names: str = "none_if_mapped_else_remove_rxn"  # one of UNRESOLVED_NAME_MODES
     drop_duplicates: bool = True
     scramble: bool = True
     train_test_split_fraction: float = 0.9
@@ -58,6 +64,13 @@ class CleanConfig:
     dedup_subset_roles: Sequence[str] = field(
         default_factory=lambda: ["reactants", "agents", "reagents", "solvents", "catalysts", "products"]
     )
+
+    def __post_init__(self) -> None:
+        if self.unresolved_names not in UNRESOLVED_NAME_MODES:
+            raise ValueError(
+                f"unresolved_names must be one of {UNRESOLVED_NAME_MODES}, "
+                f"got {self.unresolved_names!r}"
+            )
 
 
 # ---------------------------------------------------------------------------
@@ -92,35 +105,33 @@ def merge_extracted(spark, parquet_dir: str) -> DataFrame:
         # restore real (microsecond) timestamps
         if dtypes.get(c) == "bigint":
             # floor division, not DIV (truncation): a pre-1970 value
-            # like -1500 ns must become -2 us, not -1 (review finding;
-            # pmod keeps the arithmetic exact integers — a double
-            # division would lose precision at 1e18-scale nanos)
+            # like -1500 ns must become -2 us, not -1; pmod keeps the
+            # arithmetic exact integers (a double division would lose
+            # precision at 1e18-scale nanos)
             df = df.withColumn(
                 c, F.timestamp_micros(F.expr(f"({c} - pmod({c}, 1000)) DIV 1000"))
             )
     # P9 on SCALAR string columns (arrays are cleaned inside
-    # wide_to_array) — this call was documented but never wired
-    # (review finding): a '<missing>' rxn_str previously flowed
-    # through as a real string, diverging from cleaner.py:129-134
+    # wide_to_array): a '<missing>' rxn_str is NULL, not a real string
+    # (cleaner.py:129-134)
     scalar_strings = [
         c for c, t in df.dtypes if t == "string" and c != "extracted_from_file"
     ]
     df = normalize_sentinels(df, scalar_strings)
     df = wide_to_array(df)
     # full-row fingerprint tiebreak: rows sharing rxn_str within a
-    # file (USPTO repeats reactions) previously tied on the order
-    # key and row_number broke the tie by physical partition order
-    # — nondeterministic original_index (review finding). The JSON
-    # fingerprint makes the total order a pure function of the
-    # data; exact duplicates of ENTIRE rows remain interchangeable
-    # (identical fingerprints -> identical downstream behaviour
-    # whichever ordinal each copy gets). Timestamp columns enter the
-    # fingerprint as unix MICROS, not rendered strings (r9, closing
-    # the r8 ledgered ceiling): to_json renders timestamps in the
-    # session timeZone, so the survivor choice was conf-dependent
-    # across sessions — epoch micros are the same integers under any
-    # timeZone. to_json omits null fields either way, so null
-    # timestamps keep their old (absent) representation. Exact dtype
+    # file (USPTO repeats reactions) tie on the order key, and
+    # row_number alone would break the tie by physical partition order
+    # (a nondeterministic original_index). The JSON fingerprint makes
+    # the total order a pure function of the data; exact duplicates of
+    # ENTIRE rows remain interchangeable (identical fingerprints ->
+    # identical downstream behaviour whichever ordinal each copy gets).
+    # Timestamp columns enter the fingerprint as unix MICROS, not
+    # rendered strings: to_json renders timestamps in the session
+    # timeZone, which would make the survivor choice conf-dependent
+    # across sessions, while epoch micros are the same integers under
+    # any timeZone. to_json omits null fields, so a null timestamp is
+    # absent from the fingerprint. Exact dtype
     # match: unix_micros accepts only TIMESTAMP — a timestamp_ntz
     # column (e.g. a microsecond pandas/pyarrow parquet read under
     # inferTimestampNTZ=true) would raise DATATYPE_MISMATCH, and NTZ
@@ -239,11 +250,12 @@ def _member_hits(df: DataFrame, roles: Sequence[str], dim: DataFrame, agg: Colum
 
 
 def handle_unresolved_names(df: DataFrame, names: DataFrame, cfg: CleanConfig) -> DataFrame:
-    """P11 (cleaner.py:572-657), three mutually exclusive modes:
+    """P11 (cleaner.py:572-657), one of three modes (``cfg.unresolved_names``):
 
-    a) set→NULL if the row has a mapped rxn_str, else drop the row;
-    b) drop any row containing an unresolved name;
-    c) set→NULL everywhere.
+    a) ``none_if_mapped_else_remove_rxn``: set→NULL if the row has a
+       mapped rxn_str, else drop the row;
+    b) ``remove_rxn``: drop any row containing an unresolved name;
+    c) ``none``: set→NULL everywhere.
 
     ``names`` is one string column ``name`` (a dimension table; NULL
     and repeated names are ignored). Membership is one broadcast hash
@@ -265,24 +277,16 @@ def handle_unresolved_names(df: DataFrame, names: DataFrame, cfg: CleanConfig) -
       keeps a row when ``is_mapped`` is true or it had none (a NULL
       ``is_mapped`` row survives only if it had none).
     """
-    modes = [
-        cfg.set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn,
-        cfg.remove_rxn_with_unresolved_names,
-        cfg.set_unresolved_names_to_none,
-    ]
-    if sum(bool(m) for m in modes) != 1:
-        raise ValueError("exactly one unresolved-name mode must be set (cleaner.py:89-95)")
-
     names_d = names.select(F.col("name").alias("__hit")).where(F.col("__hit").isNotNull()).distinct()
 
-    if cfg.remove_rxn_with_unresolved_names:
+    if cfg.unresolved_names == "remove_rxn":
         flagged = _member_hits(
             df, ALL_ROLES, names_d, F.max(F.col("__hit").isNotNull()).alias("__has_bad")
         )
         return _unpack_row(flagged.filter(~F.col("__has_bad")), df.columns)
 
     hits = _member_hits(df, ALL_ROLES, names_d, F.collect_set("__hit").alias("__hits"))
-    if cfg.set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn:
+    if cfg.unresolved_names == "none_if_mapped_else_remove_rxn":
         hits = hits.filter(F.expr("__row.is_mapped OR size(__hits) = 0"))
 
     # SQL-parsed expressions over the packed row, two selectExpr calls
@@ -449,14 +453,13 @@ def reaction_key(df: DataFrame, roles: Sequence[str], include_yields: bool = Fal
     rows there and stay distinct here."""
     # members are md5'd BEFORE joining: fixed-width encodings make the
     # '.'/'|' separators collision-free even when molecule strings
-    # themselves contain '.' (SMILES salts like 'Cl.NCCN' — review
-    # finding: ['CC.O'] and ['CC','O'] used to produce the same key;
-    # the reference compares slot columns pairwise and has no such
-    # collision)
-    # r16: one SQL-parsed expression per role (identical tree to the
-    # previous Column-builder form — same implicit string→binary cast
-    # inside md5, same coalesce/transform nesting) to cut py4j round
-    # trips during plan construction; see _arr.
+    # themselves contain '.' (SMILES salts like 'Cl.NCCN': ['CC.O'] and
+    # ['CC','O'] must differ, as they do in the reference, which
+    # compares slot columns pairwise)
+    # One SQL-parsed expression per role (the same tree as the
+    # Column-builder form: implicit string→binary cast inside md5,
+    # coalesce/transform nesting), for few py4j round trips during plan
+    # construction; see _arr.
     parts = [
         F.expr(
             f"concat_ws('.', transform(coalesce({_quote(r)}, CAST(array() AS array<string>)), "
@@ -484,22 +487,17 @@ def dedup_reactions(df: DataFrame, cfg: CleanConfig, include_yields: bool = Fals
     cleaner.py:483)."""
     key = reaction_key(df, cfg.dedup_subset_roles, include_yields)
     order = F.md5(F.concat_ws(":", F.lit(str(cfg.seed)), F.col("original_index").cast("string")))
-    # r16 (optimization round 2, guide §2.3/§8 re-measured at 10×):
-    # back to the row_number-window shape. r15 switched to a min_by
-    # argmin for its map-side partial aggregation, A/B'd a wash at
-    # sf0.1 — but at sf0.1 BOTH shapes are driver/overhead-bound. The
-    # 10×-sf0.1 corpus (``tools/probe.py --gen --scale 10``) is
-    # compute-bound and separates them: the min_by full-row struct
-    # buffer is not hash-mutable, so it plans as SortAggregate —
+    # A row_number window, not a min_by argmin: the min_by full-row
+    # struct buffer is not hash-mutable, so it plans as SortAggregate,
     # sorting the full-width rows TWICE (partial + final) around the
-    # key exchange — while the window sorts them once after it
-    # (min_by 10.3 s vs window 7.0 s for the same upstream at 10×,
-    # identical 725,450 survivors; sf0.1 wash re-confirmed, 3.3 vs
-    # 3.5 s). min_by's partial collapse only pays when duplicates of
-    # one key co-locate within map partitions — at ~50% global dup
-    # rate it still lost. A two-phase decide-on-narrow-rows variant
-    # (guide §8) lost too (13.0 s): its winner relation is a second
-    # consumer of the upstream plan, re-running the scaffold.
+    # key exchange, while the window sorts them once after it. On the
+    # compute-bound 10×-sf0.1 corpus (``tools/probe.py --gen --scale
+    # 10``): min_by 10.3 s, window 7.0 s, identical 725,450 survivors
+    # (at sf0.1 both are overhead-bound: 3.3 vs 3.5 s). min_by's partial
+    # collapse pays only when duplicates of one key co-locate within map
+    # partitions, and at ~50% global dup rate it still lost. Deciding on
+    # narrow rows first lost too (13.0 s): its winner relation is a
+    # second consumer of the upstream plan, re-running the scaffold.
     w = Window.partitionBy(key).orderBy(order, F.col("original_index"))
     return (
         df.withColumn("__rn", F.row_number().over(w))
@@ -517,9 +515,9 @@ def scramble_role_lists(df: DataFrame, cfg: CleanConfig, roles: Sequence[str] = 
     Agents are excluded (transition-metal-first order must survive,
     cleaner.py:497-500); products/yields excluded (alignment).
     Permutation key: md5(seed:original_index:member) — deterministic."""
-    # r16: one SQL-parsed expression per role (identical tree to the
-    # previous Column-builder form; cfg.seed is an int, inlined as the
-    # same string literal F.lit(str(seed)) produced) — see _arr for the
+    # One SQL-parsed expression per role (the same tree as the
+    # Column-builder form; cfg.seed is an int, inlined as the string
+    # literal F.lit(str(seed)) produces); see _arr for the
     # py4j-round-trip rationale.
     out = df
     for r in roles:
@@ -551,12 +549,11 @@ def train_test_split_routed(df: DataFrame, cfg: CleanConfig) -> DataFrame:
     deterministic pseudo-random split, then every row whose reaction
     hash co-occurs with a train row routes to train (leakage repair).
 
-    r15 (optimization round, guide §2.4): the repair is ONE
-    whole-partition window over the content hash — ``any train row in
-    my hash group?`` — so the caller's upstream plan is consumed
-    exactly ONCE (the earlier semi+anti and single-join shapes each
-    re-ran the upstream scaffold per consumer branch; AQE's stage
-    cache does not dedupe the copies, profiled on c_split_fullscale).
+    The repair is ONE whole-partition window over the content hash
+    (``any train row in my hash group?``), so the caller's upstream
+    plan is consumed exactly ONCE (semi+anti or join shapes re-run the
+    upstream scaffold per consumer branch, and AQE's stage cache does
+    not dedupe the copies; profiled on c_split_fullscale).
     One exchange on the 32-byte hash is the standard exact-dedup
     shuffle any leakage repair must pay; the reference's 15-minute
     row-loop hash matching (BASELINE.md) is this same exchange.

@@ -18,8 +18,6 @@ rank mass per edge per iteration — the deliberate price of exactness.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -30,13 +28,11 @@ DEFAULT_SCALE = 10**12
 
 #: rank/contrib relations at or under this many nodes are broadcast in
 #: the iteration joins (16 B of data per row; ~64 B/row as a built hash
-#: relation, so the 1M default ~= 64 MB — safe even on default-sized
-#: (1g) drivers and executors). Deployments with big drivers raise it
-#: via SPARK_GRAFT_PR_BROADCAST_NODES; a value that is not an integer
-#: fails the import. Above the cap the shuffle plan is kept: at
+#: relation, so 1M nodes ~= 64 MB — safe even on default-sized (1g)
+#: drivers and executors). Above the cap the shuffle plan is kept: at
 #: billions of nodes the rank table is fact-sized and broadcasting it
 #: would be the classic driver-OOM anti-pattern.
-BROADCAST_NODES_MAX = int(os.environ.get("SPARK_GRAFT_PR_BROADCAST_NODES", "") or 1_000_000)
+BROADCAST_NODES_MAX = 1_000_000
 
 
 def pagerank_fixed_point(
@@ -45,7 +41,6 @@ def pagerank_fixed_point(
     iterations: int = 3,
     damping_pct: int = 85,
     scale: int = DEFAULT_SCALE,
-    broadcast_nodes_max: int = BROADCAST_NODES_MAX,
 ) -> DataFrame:
     """PageRank over directed ``edges(src, dst)`` in integer
     fixed-point; returns (node, rank_fp).
@@ -86,26 +81,22 @@ def pagerank_fixed_point(
     if n == 0:
         # empty graph → empty (node, rank_fp) result with the output
         # schema, instead of the base term's integer division by zero
-        # (found by the r10 empty-input sweep over all 211 queries).
-        # For n > 0 this branch never fires and the built expression
-        # tree is byte-identical to the pre-fix version.
         return nodes.select("node", F.lit(0).cast("long").alias("rank_fp"))
     base = ((100 - damping_pct) * scale) // (100 * n)
     ranks = nodes.withColumn("rank_fp", F.lit(scale // n).cast("long"))
-    # r15 (optimization round, guide §3.1): the rank/contrib relations
-    # are exactly n rows of (long, long) — and n is ALREADY a driver
-    # scalar here, so the join strategy can be picked from the true
-    # size instead of Catalyst's estimates. Un-hinted, the planner
-    # broadcast the EDGE side of the rank join (backwards at scale:
-    # edges are the fact table) and ran the nodes⟕contrib update as a
-    # SortMergeJoin — per iteration that was one edge-table broadcast,
-    # two exchanges and two sorts (measured plan, plans/r15/
-    # g_pagerank_part_supplier_before.txt). With n known small, hint
-    # both node-sized sides: edges then stream map-side through every
-    # iteration and the only per-iteration shuffle left is the dst
-    # partial-aggregation — the minimal shape for distributed PageRank.
-    # Above the cap the original shuffle plan is kept unchanged.
-    small = n <= broadcast_nodes_max
+    # The rank/contrib relations are exactly n rows of (long, long), and
+    # n is a driver scalar here, so the join strategy is picked from the
+    # true size, not Catalyst's estimates. Un-hinted, the planner
+    # broadcasts the EDGE side of the rank join (backwards at scale:
+    # edges are the fact table) and runs the nodes⟕contrib update as a
+    # SortMergeJoin: per iteration one edge-table broadcast, two
+    # exchanges and two sorts (plans/r15/
+    # g_pagerank_part_supplier_before.txt). At or under the cap both
+    # node-sized sides are hinted: edges stream map-side through every
+    # iteration and the only per-iteration shuffle is the dst partial
+    # aggregation, the minimal shape for distributed PageRank. Above the
+    # cap the shuffle plan is kept.
+    small = n <= BROADCAST_NODES_MAX
 
     def _hint(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small else df
@@ -155,8 +146,8 @@ def label_propagation_communities(
     groups" — on a dup graph polluted by a few spurious LSH candidate
     edges, components chain everything together while LPA keeps the
     near-clique dup families apart (the spurious bridge loses the
-    vote). The r10 verdict's sanctioned r11 op, pairing with
-    d_duplicate_clusters.
+    vote). Its registry query, g_label_prop_communities, runs on the
+    same LSH dup graph as d_duplicate_clusters.
 
     Determinism (the property that makes this value-gateable): classic
     LPA breaks vote ties randomly and updates asynchronously; here

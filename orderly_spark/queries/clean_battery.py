@@ -67,10 +67,10 @@ def _reactions(spark: SparkSession, sf_dir: str, max_rid: int | None = MAX_RID) 
     l = load(spark, sf_dir, "lineitem", fan_out=True)
     if max_rid is not None:
         l = l.filter(F.col("l_orderkey") < max_rid)
-    # r16: the aggregate and projection expressions ship as SQL-parsed
-    # strings (identical trees — same CASE/collect_list/array_sort
-    # defaults the Column builders produced; c_reactions_build's exact
-    # oracle pins the values) — the Column-builder form cost ~0.3 s of
+    # the aggregate and projection expressions ship as SQL-parsed
+    # strings (the same trees the Column builders produce: CASE,
+    # collect_list and array_sort defaults; c_reactions_build's exact
+    # oracle pins the values); the Column-builder form costs ~0.3 s of
     # py4j round trips per query construction (see cleaning._arr).
     g = l.groupBy(F.col("l_orderkey").alias("rid")).agg(
         F.expr(
@@ -174,8 +174,7 @@ def c_unresolved_drop_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     back by row id."""
     rx = _reactions(spark, sf_dir)
     cfg = C.CleanConfig(
-        set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn=False,
-        remove_rxn_with_unresolved_names=True,
+        unresolved_names="remove_rxn",
     )
     out = C.handle_unresolved_names(rx, _bad_names(spark, sf_dir), cfg)
     return out.select("rid", _j("reactants").alias("r"))
@@ -527,8 +526,7 @@ def c_full_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg = C.CleanConfig(
         num_reactant=5, num_product=5, num_solv=2, num_agent=3,
         min_frequency_of_occurrence=4,
-        set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn=False,
-        remove_rxn_with_unresolved_names=True,
+        unresolved_names="remove_rxn",
     )
     out = C.clean_pipeline(rx, _bad_names(spark, sf_dir), cfg)
     return out.select(
@@ -585,8 +583,7 @@ def c_clean_pipeline_fullscale(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg = C.CleanConfig(
         num_reactant=5, num_product=5, num_solv=2, num_agent=3,
         min_frequency_of_occurrence=4,
-        set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn=False,
-        remove_rxn_with_unresolved_names=True,
+        unresolved_names="remove_rxn",
     )
     out = C.clean_pipeline(rx, _bad_names(spark, sf_dir), cfg)
     return out.select(
@@ -605,15 +602,14 @@ def c_split_fullscale(spark: SparkSession, sf_dir: str) -> DataFrame:
     leakage-matching hot spot (cleaner.py:885) as one hash semi-join
     over the whole table.
 
-    r15 (optimization round, guide §2.3/§2.4): the split decision
-    reads only (reactants, products) — via the reaction hash — and
-    original_index; this query's output is only (rid, split), so the
-    scaffold is projected down BEFORE the split (drops the
-    agents/solvents/yields collect_lists from the scaffold
-    aggregation) and the routed single-relation core emits the label
-    directly — one scaffold pass, one hash exchange, no filter/union
-    fan-out (the union-of-filters shape re-ran the scaffold
-    aggregation per branch; AQE stage reuse did not dedupe it)."""
+    The split decision reads only (reactants, products), via the
+    reaction hash, and original_index; this query's output is only
+    (rid, split), so the scaffold is projected down BEFORE the split
+    (dropping the agents/solvents/yields collect_lists from the
+    scaffold aggregation) and the routed single-relation core emits
+    the label directly: one scaffold pass, one hash exchange, no
+    filter/union fan-out (a union of filters re-runs the scaffold
+    aggregation per branch, and AQE stage reuse does not dedupe it)."""
     rx = _reactions(spark, sf_dir, max_rid=None).select(
         "rid", "reactants", "products", "original_index"
     )

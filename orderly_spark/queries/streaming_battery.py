@@ -18,12 +18,11 @@ from orderly_spark.tables import load, materialize_then_clean
 
 def _finish(df: DataFrame, tmp: str, view: str | None = None) -> DataFrame:
     """Materialise a streaming query's (small) result and remove its
-    scratch directory (now the shared tables.materialize_then_clean
-    contract — this battery pioneered it). ``view`` names the memory
-    sink's temp table: it is dropped AFTER the barrier materialises
-    the result, releasing the sink's buffered rows from
-    driver memory (r9 hygiene — each gate run used to leave its whole
-    streamed table pinned in the session for the session's lifetime)."""
+    scratch directory (the tables.materialize_then_clean contract).
+    ``view`` names the memory sink's temp table: it is dropped AFTER
+    the barrier materialises the result, releasing the sink's buffered
+    rows from driver memory, so no gate run leaves its streamed table
+    pinned for the session's lifetime."""
     out = materialize_then_clean(df, tmp)
     if view is not None:
         df.sparkSession.catalog.dropTempView(view)
@@ -33,9 +32,8 @@ def _finish(df: DataFrame, tmp: str, view: str | None = None) -> DataFrame:
 def _stage_drops(e: DataFrame, kind: str, *, dirname: str = "drops") -> tuple[str, str]:
     """Write an events frame to a scratch file-arrival directory (8
     parquet files — enough splits to exercise maxFilesPerTrigger) and
-    return (tmp_root, source_dir). Every streaming gate repeated this
-    scaffold verbatim (r9 ledger item); one helper keeps the drop
-    layout and the _finish cleanup contract in one place."""
+    return (tmp_root, source_dir). One helper keeps every streaming
+    gate's drop layout and the _finish cleanup contract in one place."""
     import os
     import tempfile
 
@@ -60,15 +58,12 @@ def _stage_drops(e: DataFrame, kind: str, *, dirname: str = "drops") -> tuple[st
     survey="streaming-window",
 )
 def s_windowed_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour event-time windows — the batch run of
-    streaming.windowed_event_counts' expression (epoch-aligned windows
-    == date_trunc for 1h)."""
-    e = load(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n")
-    )
+    """Tumbling 1-hour event-time windows: streaming.windowed_event_counts
+    run in batch (epoch-aligned windows == date_trunc for 1h; the
+    optimizer drops the watermark from a batch plan)."""
+    from orderly_spark.streaming.pipeline import windowed_event_counts
+
+    return windowed_event_counts(load(spark, sf_dir, "events"))
 
 
 @query(
@@ -100,31 +95,18 @@ def s_windowed_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="streaming-session",
 )
 def s_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session windows (30-min inactivity gap) per user — the batch
-    run of streaming.sessionized_events. The oracle is the classic
+    """Session windows (30-min inactivity gap) per user:
+    streaming.sessionized_events run in batch (the optimizer drops the
+    watermark from a batch plan). The oracle is the classic
     gaps-and-islands rewrite; Spark's session_window ends at
     last_event + gap, and an event EXACTLY at the boundary MERGES into
-    the session (adjacent windows coalesce: next_ts <= prev_end joins;
-    strict > in the oracle's new-session flag). r13: the ninth
-    (streaming) adversarial corpus caught the oracle flagging >= here
-    — a real twin gap invisible on microsecond-noisy testdata, pinned
-    by tests/test_streaming.py::test_session_window_exact_gap_boundary
+    the session (adjacent windows coalesce: next_ts <= prev_end joins),
+    hence the strict > in the oracle's new-session flag, pinned by
+    tests/test_streaming.py::test_session_window_exact_gap_boundary
     and the sf_stream exact-tie session runs."""
-    e = load(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum("value").alias("total_value"),
-        )
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-            "total_value",
-        )
-    )
+    from orderly_spark.streaming.pipeline import sessionized_events
+
+    return sessionized_events(load(spark, sf_dir, "events"))
 
 
 @query(
@@ -151,14 +133,15 @@ def s_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the DISTINCT event ids per type (duplicates from the second
     drop removed).
 
-    Dedup key (r14, found by the tenth — hostile-lakehouse — corpus):
-    keying on event_id ALONE made the per-type attribution of an id
-    re-emitted under a DIFFERENT type depend on micro-batch arrival
-    order (the survivor's type was whichever copy arrived first,
-    while the oracle counts the id under every type it appears with).
-    (event_id, event_type) makes the streamed outcome a pure function
-    of the data: same-type re-emissions still collapse (the sf_stream
-    corpus class), conflicting-type re-emissions are distinct records.
+    Dedup key (event_id, event_type), not event_id ALONE: keyed on the
+    id, the per-type attribution of an id re-emitted under a DIFFERENT
+    type would depend on micro-batch arrival order (the survivor's type
+    is whichever copy arrives first, while the oracle counts the id
+    under every type it appears with; the hostile-lakehouse corpus
+    holds such ids). With both keys the streamed outcome is a pure
+    function of the data: same-type re-emissions still collapse (the
+    sf_stream corpus class), conflicting-type re-emissions are
+    distinct records.
 
     Scale shape: file-arrival micro-batches — maxFilesPerTrigger=4
     really bounds batch size here (16 files → 4 batches), so the dedup
@@ -183,9 +166,9 @@ def s_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "event_type")
     )
     name = "dedup_ingest_" + uuid.uuid4().hex[:8]
-    # r16: state = (event_id, event_type) keys within one drain — 4
-    # stores beat 8/16 on the min-of-3 state-scale table (3.02 /
-    # 3.29 / 3.43 s); per-operator sizing, OPTIMIZATION_r16.md
+    # state = (event_id, event_type) keys within one drain: 4 stores
+    # beat 8/16 on the min-of-3 state-scale table (3.02 / 3.29 /
+    # 3.43 s); per-operator sizing, OPTIMIZATION_r16.md
     run_to_memory(deduped, name, state_partitions=4)
     return _finish(
         spark.table(name)
@@ -251,8 +234,8 @@ def s_stream_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="3650 days",
     )
     name = "click_attr_" + uuid.uuid4().hex[:8]
-    # r16: two join state stores, horizon-bounded state — 4 beats
-    # 8/16 (2.87 / 3.67 / 4.33 s min-of-N)
+    # two join state stores, horizon-bounded state: 4 beats 8/16
+    # (2.87 / 3.67 / 4.33 s min-of-N)
     run_to_memory(joined, name, state_partitions=4)
     return _finish(spark.table(name), tmp, view=name)
 
@@ -319,7 +302,7 @@ def s_stream_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         join_type="left_outer",
     )
     name = "outer_attr_" + uuid.uuid4().hex[:8]
-    # r16: 4 beats 8/16 (2.41 / 3.57 / 4.44 s min-of-3)
+    # 4 state stores beat 8/16 (2.41 / 3.57 / 4.44 s min-of-3)
     run_to_memory(joined, name, state_partitions=4)
     return _finish(spark.table(name), tmp, view=name)
 
@@ -366,11 +349,11 @@ def s_stream_upsert_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_batch: dict[str, int] = {"id": -1}
 
     def upsert(batch_df, batch_id: int) -> None:
-        # r14: the argmax total order covers every payload column (the
-        # LATEST_STATE_ORACLE fix) — and totality is what makes the
-        # merge genuinely associative: under the old (ts, event_id)
-        # order, same-key same-tick writes with different payloads made
-        # argmax-of-argmaxes batch-decomposition-DEPENDENT.
+        # the argmax total order covers every payload column (as
+        # LATEST_STATE_ORACLE does), and totality is what makes the
+        # merge associative: under a (ts, event_id) order alone,
+        # same-key same-tick writes with different payloads would make
+        # argmax-of-argmaxes depend on the batch decomposition.
         w = Window.partitionBy("user_id").orderBy(
             F.desc("ts"), F.desc("event_id"),
             F.desc_nulls_last("event_type"), F.desc_nulls_last("value"),
@@ -470,9 +453,9 @@ def s_stream_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp, src = _stage_drops(e, "state", dirname="in")
     stream = running_user_totals(stream_events(spark, src))
     name = "running_totals_" + uuid.uuid4().hex[:8]
-    # r16: update-mode per-user aggregation carries every user_id —
-    # the one gate whose state WANTS width: 16 beats 8/4 (2.15 /
-    # 2.87 / 2.86 s min-of-3)
+    # update-mode per-user aggregation carries every user_id, the one
+    # gate whose state WANTS width: 16 stores beat 8/4 (2.15 / 2.87 /
+    # 2.86 s min-of-3)
     run_to_memory(stream, name, output_mode="update", state_partitions=16)
     from pyspark.sql import Window
 
@@ -483,11 +466,10 @@ def s_stream_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("__rn") == 1)
         .select("user_id", "n_events", "total_micro")
     )
-    # EXACT integer comparison (review finding, r8): the state side
-    # accumulates floor(value*1e6) micro-units, so the batch twin
-    # applies the identical per-element transform and the totals are
-    # equal as integers — no order-dependent double sums, no 1e-6
-    # tolerance that was simultaneously too loose and too tight
+    # EXACT integer comparison: the state side accumulates
+    # floor(value*1e6) micro-units, so the batch twin applies the
+    # identical per-element transform and the totals are equal as
+    # integers; no order-dependent double sums, and no float tolerance
     batch = (
         spark.read.parquet(src)
         .groupBy("user_id")
@@ -640,6 +622,6 @@ def s_stream_full_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFra
         join_type="full_outer",
     )
     name = "fouter_attr_" + uuid.uuid4().hex[:8]
-    # r16: 4 beats 8/16 (4.22 / 4.35 / 5.29 s min-of-2)
+    # 4 state stores beat 8/16 (4.22 / 4.35 / 5.29 s min-of-2)
     run_to_memory(joined, name, state_partitions=4)
     return _finish(spark.table(name), tmp, view=name)

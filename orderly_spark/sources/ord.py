@@ -89,18 +89,7 @@ def proto_decoder(filename: str, content: bytes) -> Iterator[dict]:
         yield ord_wire.reaction_to_row(rxn)
 
 
-# minimum batch size before an all-files-skipped batch is treated as a
-# systemic decoder failure instead of co-located corrupt data
-_TOTAL_SKIP_GUARD = 8
-
-
-def decode_reactions(
-    files: DataFrame,
-    decoder: Decoder | None = None,
-    *,
-    on_error: str = "raise",
-    total_skip_guard: int | None = _TOTAL_SKIP_GUARD,
-) -> DataFrame:
+def decode_reactions(files: DataFrame, decoder: Decoder | None = None) -> DataFrame:
     """S2 as a one-to-many mapInPandas: each file's bytes expand to
     reaction rows in REACTION_SCHEMA (the reference's per-file joblib
     worker, main.py:612-623, re-expressed as task parallelism).
@@ -111,115 +100,26 @@ def decode_reactions(
     main.py:36-38) is handled by scheduling, not memory, since the
     decode streams rows per batch.
 
-    ``on_error``: ``"raise"`` (default, reference-faithful — a corrupt
-    file aborts the job LOUDLY, never silently drops data) or
-    ``"skip"`` (quarantine mode for 100 TB fleets where one truncated
-    ``.pb.gz`` must not kill a week-long extract: corrupt files yield
-    zero rows here; pair with :func:`decode_errors` over the SAME scan
-    to audit exactly which files were skipped and why — skip without
-    the audit is how data loss hides). Even in skip mode a task whose
-    files ALL fail (≥ ``total_skip_guard`` of them) raises: a
-    100%-skip is a systemic decoder bug wearing a quarantine, and must
-    not masquerade as an empty corpus.
-
-    ``total_skip_guard``: the all-failed task size at
-    which skip mode aborts (default ``_TOTAL_SKIP_GUARD``); pass a
-    larger value or ``None`` to tolerate bigger all-corrupt tasks.
-    CAVEAT: binaryFile packs co-located files into one task, so
-    DIRECTORY-CLUSTERED genuine corruption wider than the guard will
-    abort the job even though the decoder is healthy — for that
-    triage, either raise/disable the guard here (keeping the
-    decode_errors audit as the safety net) or run ``on_error='raise'``
-    on the suspect directory alone."""
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
-    if total_skip_guard is not None and total_skip_guard < 2:
-        raise ValueError("total_skip_guard must be >= 2 or None")
+    A file that does not decode fails the job, naming the decoder's
+    error: corrupt input is never dropped silently (the reference's
+    behaviour)."""
     dec = decoder if decoder is not None else proto_decoder
     field_names = [f.name for f in REACTION_SCHEMA.fields]
-    skip = on_error == "skip"
 
     def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n_files = 0
-        n_skipped = 0
-        last_err: Exception | None = None
         for pdf in batches:
             out: list[dict] = []
-            n_files += len(pdf)
             for path, content in zip(pdf["path"], pdf["content"]):
                 fname = str(path).rsplit("/", 1)[-1]
-                try:
-                    rows = list(dec(fname, bytes(content)))
-                except Exception as ex:
-                    if skip:
-                        n_skipped += 1
-                        last_err = ex
-                        continue
-                    raise
-                for row in rows:
+                for row in dec(fname, bytes(content)):
                     full = {k: row.get(k) for k in field_names}
                     full["extracted_from_file"] = fname
                     out.append(full)
             yield pd.DataFrame(out, columns=field_names) if out else pd.DataFrame(
                 columns=field_names
             )
-        # total-skip guard: quarantine mode exists to drop the rare
-        # corrupt TAIL, not to swallow a systemic decoder bug — if EVERY
-        # file of a many-file TASK failed, the likely culprit is the
-        # decoder, and an empty DataFrame would masquerade as an empty
-        # corpus. Counted across the whole task (at scale a task packs
-        # many files); the total_skip_guard threshold keeps a few
-        # co-located corrupt files from false-aborting a quarantined
-        # fleet (None disables it, see docstring). A systemic bug on a
-        # big corpus always crosses the threshold in some task.
-        if (
-            skip
-            and total_skip_guard is not None
-            and n_files >= total_skip_guard
-            and n_skipped == n_files
-        ):
-            raise RuntimeError(
-                f"decode_reactions(on_error='skip'): all {n_files} files in "
-                f"this task failed to decode — refusing to return an empty "
-                f"result for what looks like a systemic decoder bug, not "
-                f"data corruption (last error: {last_err!r}). Audit with "
-                f"decode_errors(); use on_error='raise' to see the first "
-                f"failure."
-            )
 
     return files.select("path", "content").mapInPandas(expand, REACTION_SCHEMA)
-
-
-def decode_errors(files: DataFrame) -> DataFrame:
-    """The quarantine audit for ``decode_reactions(on_error='skip')``:
-    one row per file whose decode RAISES — (file, error_class,
-    error). Files that decode cleanly produce no row, so at scale the
-    OUTPUT is tiny (the corrupt tail) — but the audit's COST is a full
-    second decode of every file (validity here is only known by
-    decoding; there is no cheaper checker for the wire format), so run
-    it as a separate audit pass, not inline with the data pass. Same
-    per-file task shape as the decode (mapInPandas over
-    (path, content))."""
-    cols = ["file", "error_class", "error"]
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[dict] = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                fname = str(path).rsplit("/", 1)[-1]
-                try:
-                    for _ in proto_decoder(fname, bytes(content)):
-                        pass
-                except Exception as ex:  # noqa: BLE001 — the audit's whole job
-                    out.append(
-                        {"file": fname, "error_class": type(ex).__name__,
-                         "error": str(ex)[:500]}
-                    )
-            yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(columns=cols)
-
-    return files.select("path", "content").mapInPandas(
-        probe, "file string, error_class string, error string"
-    )
 
 
 def write_extracted(df: DataFrame, out_dir: str) -> None:
@@ -229,7 +129,7 @@ def write_extracted(df: DataFrame, out_dir: str) -> None:
     partitionOverwriteMode=dynamic is load-bearing: Spark's default
     STATIC overwrite truncates the whole out_dir first, so the
     documented single-dataset re-extract would silently destroy every
-    other dataset's partitions (review finding — data loss)."""
+    other dataset's partitions."""
     (
         df.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

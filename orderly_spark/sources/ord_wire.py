@@ -22,7 +22,7 @@ Decoded-subset map (message → fields read by the extractor):
 - ``Compound``           identifiers = 1, reaction_role = 3
                          (roles 1..8; extractor.py:309-376)
 - ``CompoundIdentifier`` type = 1, value = 3
-                         (2 = SMILES, 6 = NAME; extractor.py:113-159)
+                         (2 = SMILES; extractor.py:113-159)
 - ``ReactionConditions`` temperature = 1
 - ``TemperatureConditions`` control = 1, setpoint = 2
 - ``TemperatureControl`` type = 1 (2 AMBIENT / 6 ICE_BATH /
@@ -299,19 +299,14 @@ def iter_dataset_reactions(data: bytes) -> Iterator[dict]:
 # --------------------------------------------------------------------------
 
 
-def _find_smiles(
-    identifiers: list[tuple[int, str]], consider_molecule_names: bool
-) -> str | None:
-    """extractor.py:113-159 find_smiles: the first SMILES identifier
-    (type 2) as written; else, when ``consider_molecule_names``, the
-    first NAME identifier (type 6)."""
+def _find_smiles(identifiers: list[tuple[int, str]]) -> str | None:
+    """extractor.py:113-159 find_smiles with the reference's default
+    ``consider_molecule_names=False``: the first SMILES identifier
+    (type 2) as written, else None. NAME identifiers (type 6) are not
+    read."""
     for itype, value in identifiers:
         if itype == 2:
             return value
-    if consider_molecule_names:
-        for itype, value in identifiers:
-            if itype == 6:
-                return value
     return None
 
 
@@ -336,7 +331,7 @@ def _rxn_string_and_is_mapped(rxn: dict) -> tuple[str | None, bool | None]:
 _ROLE_BUCKETS = {1: "reactants", 2: "reagents", 3: "solvents", 4: "catalysts", 8: "products_in"}
 
 
-def _inputs_to_roles(rxn: dict, consider_molecule_names: bool) -> dict[str, list[str]]:
+def _inputs_to_roles(rxn: dict) -> dict[str, list[str]]:
     """extractor.py:309-376 rxn_input_extractor: role-bucketed,
     dot-split, sorted. Roles 5/6/7 (workup / internal / authentic
     standard) are skipped; role 8 products-in-inputs are decoded but
@@ -348,16 +343,14 @@ def _inputs_to_roles(rxn: dict, consider_molecule_names: bool) -> dict[str, list
             bucket = _ROLE_BUCKETS.get(comp["reaction_role"])
             if bucket is None:
                 continue
-            smiles = _find_smiles(comp["identifiers"], consider_molecule_names)
+            smiles = _find_smiles(comp["identifiers"])
             if smiles is None:
                 continue
             buckets[bucket] += smiles.split(".")
     return {k: sorted(v) for k, v in buckets.items()}
 
 
-def _outcomes_to_products(
-    rxn: dict, consider_molecule_names: bool
-) -> tuple[list[str], list[float | None]]:
+def _outcomes_to_products(rxn: dict) -> tuple[list[str], list[float | None]]:
     """extractor.py:378-423 rxn_outcomes_extractor on outcomes[0]:
     per product, YIELD measurement (type 3) percentage rounded to 2;
     dotted product strings sorted longest-first with the yield pinned
@@ -368,7 +361,7 @@ def _outcomes_to_products(
     products: list[str] = []
     yields: list[float | None] = []
     for product in rxn["outcomes"][0]["products"]:
-        smiles = _find_smiles(product["identifiers"], consider_molecule_names)
+        smiles = _find_smiles(product["identifiers"])
         if smiles is None:
             continue
         y: float | None = None
@@ -438,15 +431,15 @@ def _date_of_experiment(rxn: dict) -> _dt.datetime | None:
         return None
 
 
-def reaction_to_row(rxn: dict, consider_molecule_names: bool = False) -> dict:
+def reaction_to_row(rxn: dict) -> dict:
     """Parsed reaction → labelled REACTION_SCHEMA row (the S2 decode
     surface; role re-derivation from the rxn string is downstream in
     :func:`orderly_spark.operators.extract.extract_reactions`).
     ``agents`` stays None here — the reference only creates agents in
     merge_to_agents (extractor.py:546-593), after decoding."""
     rxn_str, is_mapped = _rxn_string_and_is_mapped(rxn)
-    roles = _inputs_to_roles(rxn, consider_molecule_names)
-    products, yields = _outcomes_to_products(rxn, consider_molecule_names)
+    roles = _inputs_to_roles(rxn)
+    products, yields = _outcomes_to_products(rxn)
     return {
         "rxn_str": rxn_str,
         "reactants": roles["reactants"],

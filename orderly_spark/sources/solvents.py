@@ -12,8 +12,9 @@ The full 615-row dimension ships with the engine
 (``orderly_spark/data/solvents.csv``) — it is public DATA from the
 public reference repo (rows sourced from doi.org/10.1039/C9SC01844A,
 per its ``source`` column), not code; ``default_solvents`` loads it,
-and ``packaged_solvent_smiles`` parses its SMILES set on the driver
-(the set extract ships is then a literal built with no Spark job).
+and ``packaged_solvent_smiles`` parses the SMILES set of it, or of a
+``--solvents-path`` CSV, on the driver (the set extract ships is then a
+literal built with no Spark job).
 `SAMPLE_SOLVENTS` remains as a tiny in-code seed for unit tests, and
 `load_solvents_csv` reads any CSV with the reference's column layout.
 """
@@ -21,7 +22,6 @@ and ``packaged_solvent_smiles`` parses its SMILES set on the driver
 from __future__ import annotations
 
 import csv
-import functools
 import os
 from collections.abc import Sequence
 
@@ -100,14 +100,14 @@ def solvent_smiles_set(solvents: DataFrame) -> DataFrame:
     )
 
 
-@functools.cache
-def packaged_solvent_smiles() -> tuple[str, ...]:
-    """The packaged dimension's J1 membership set, parsed on the driver:
-    the same sorted distinct SMILES that ``solvent_smiles_set`` collects
-    from ``default_solvents`` (an empty field is NULL to Spark's CSV
+def packaged_solvent_smiles(path: str = PACKAGED_SOLVENTS_CSV) -> tuple[str, ...]:
+    """The J1 membership set of a reference-layout solvents CSV (by
+    default the packaged dimension), parsed on the driver: the same
+    sorted distinct SMILES that ``solvent_smiles_set`` collects from
+    ``load_solvents_csv`` (an empty field is NULL to Spark's CSV
     reader, and ``collect_set`` drops it; Python's code-point order is
     Spark's UTF-8 byte order), without the read and collect jobs."""
-    with open(PACKAGED_SOLVENTS_CSV, newline="", encoding="utf-8") as fh:
+    with open(path, newline="", encoding="utf-8") as fh:
         return tuple(sorted({r["smiles"] for r in csv.DictReader(fh) if r["smiles"]}))
 
 
@@ -117,12 +117,6 @@ def smiles_set_literal(smiles: Sequence[str]) -> Column | None:
     JVM-side, so building it costs O(1) py4j round trips whatever its
     size; a Column built one ``F.lit`` per member costs ~4 per member."""
     return F.expr(f"array({', '.join(map(sql_string, smiles))})") if smiles else None
-
-
-def solvent_set_literal(solvents: DataFrame) -> Column | None:
-    """The J1 membership set of a dimension frame, collected once and
-    shipped by :func:`smiles_set_literal`."""
-    return smiles_set_literal(solvent_smiles_set(solvents).collect()[0].solvent_set)
 
 
 def apply_name_replacements(

@@ -100,8 +100,8 @@ def test_fingerprint_difference(spark):
 def test_reaction_fingerprint_udf_matches_column_kernels(spark):
     """The fused gen-fp kernel equals the per-column path it replaced:
     morgan_fingerprint_udf per slot, then fingerprint_difference in the
-    JVM — over a null product array, a null reactant member, reactants
-    past the slot cap and a repeated molecule."""
+    JVM — over a null product array, a null reactant member, three
+    reactants and a repeated molecule."""
     df = spark.createDataFrame(
         [
             (0, ["CCO"], ["CC", "O"]),
@@ -111,7 +111,7 @@ def test_reaction_fingerprint_udf_matches_column_kernels(spark):
         ],
         "i int, products array<string>, reactants array<string>",
     )
-    n_bits, slots = 32, 2
+    n_bits, slots = 32, 3
     fp = chem.morgan_fingerprint_udf(n_bits=n_bits)
     want = df.withColumn("p", fp(F.get(F.col("products"), 0)))
     for k in range(slots):
@@ -122,7 +122,7 @@ def test_reaction_fingerprint_udf_matches_column_kernels(spark):
     got = df.select(
         "i",
         chem.reaction_fingerprint_udf(n_bits=n_bits)(
-            F.col("products"), F.col("reactants"), F.lit(slots)
+            F.col("products"), F.col("reactants")
         ).alias("x"),
     ).select("i", F.col("x.product_fp").alias("p"), F.col("x.rxn_diff_fp").alias("d"))
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
@@ -162,9 +162,9 @@ _TM_SMILES_CASES = [
     ("C[Si](C)(C)Cl", False),                                      # Si is not a TM
     ("[Sc+3]", False),                                             # Sc (21) excluded by design
 ]
-#: plain-text molecule NAMES (the consider_molecule_names path can
-#: route these through the same predicate): TM symbols hiding inside
-#: words, which a bare symbol scan would flag.
+#: plain-text molecule NAMES (members that are not SMILES, such as
+#: unresolved names, reach the same predicate): TM symbols hiding
+#: inside words, which a bare symbol scan would flag.
 _TM_NAME_CASES = [
     ("Water", False),        # 'W'
     ("Feldspar", False),     # 'Fe'

@@ -107,8 +107,7 @@ def test_unresolved_names_modes(spark):
     df = rx_rows(spark, rows)
     # mode (b): drop rows containing an unresolved name
     cfg_b = C.CleanConfig(
-        set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn=False,
-        remove_rxn_with_unresolved_names=True,
+        unresolved_names="remove_rxn",
     )
     assert ids(C.handle_unresolved_names(df, names, cfg_b)) == [2]
 
@@ -119,22 +118,25 @@ def test_unresolved_names_modes(spark):
 
     # mode (c): everyone kept, bad removed
     cfg_c = C.CleanConfig(
-        set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn=False,
-        set_unresolved_names_to_none=True,
+        unresolved_names="none",
     )
     out_c = C.handle_unresolved_names(df, names, cfg_c)
     got = {r.original_index: r.reactants for r in out_c.collect()}
     assert got == {0: ["a"], 1: ["a"], 2: ["a"]}
 
+    # one field, three values: the default is mode (a), anything else raises
+    assert C.CleanConfig().unresolved_names == C.UNRESOLVED_NAME_MODES[0]
+    with pytest.raises(ValueError, match="unresolved_names"):
+        C.CleanConfig(unresolved_names="remove_rxn_with_unresolved_names")
+
 
 def test_unresolved_drop_single_pass_edges(spark):
-    """r16: mode (b) is a single pass (explode_outer + broadcast flag
-    join + collapse-by-id) — pin the edge rows the old explode→semi→
-    anti shape handled implicitly: a row with NO members anywhere
-    (explode_outer must still emit it), NULL role arrays, and a NULL
-    member inside an array (never matches the name set) all survive;
-    a bad member in ANY role still drops the whole row. Also pin that
-    the collapse preserves every column value byte-for-byte."""
+    """Mode (b) is a single pass (explode_outer + broadcast flag join
+    + collapse-by-id). A row with NO members anywhere (explode_outer
+    must still emit it), NULL role arrays, and a NULL member inside an
+    array (never matches the name set) all survive; a bad member in
+    ANY role still drops the whole row. Also pin that the collapse
+    preserves every column value byte-for-byte."""
     rows = [
         {},  # zero members in every role — must survive the explode
         {"reactants": None, "products": None},  # NULL arrays
@@ -144,8 +146,7 @@ def test_unresolved_drop_single_pass_edges(spark):
     ]
     names = spark.createDataFrame([("bad",)], "name string")
     cfg_b = C.CleanConfig(
-        set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn=False,
-        remove_rxn_with_unresolved_names=True,
+        unresolved_names="remove_rxn",
     )
     df = rx_rows(spark, rows)
     out = C.handle_unresolved_names(df, names, cfg_b)
@@ -254,7 +255,7 @@ def test_observation_telemetry_no_extra_action(spark):
 
 
 def test_reaction_key_member_boundaries_cannot_collide(spark):
-    """Review regression: ['CC.O'] vs ['CC','O'] — SMILES salts contain
+    """['CC.O'] vs ['CC','O'] — SMILES salts contain
     '.', so the key must encode member boundaries, not rely on the
     separator. The reference compares slot columns pairwise and has no
     such collision; neither may the key."""
@@ -274,10 +275,10 @@ def test_reaction_key_member_boundaries_cannot_collide(spark):
 
 
 def test_merge_extracted_index_deterministic_with_duplicate_rxn(spark, tmp_path):
-    """Review regression: rows sharing rxn_str within one file used to
-    tie on the order key, leaving original_index to physical partition
-    order. The full-row fingerprint tiebreak makes the index a pure
-    function of the data across partitionings."""
+    """Rows sharing rxn_str within one file tie on the order key, which
+    alone would leave original_index to physical partition order. The
+    full-row fingerprint tiebreak makes the index a pure function of
+    the data across partitionings."""
     import pyspark.sql.functions as F
 
     from orderly_spark.operators import cleaning as C
@@ -304,9 +305,9 @@ def test_merge_extracted_index_deterministic_with_duplicate_rxn(spark, tmp_path)
 
 
 def test_wide_to_array_pairs_yields_by_suffix(spark):
-    """Review regression: with yield_000 absent (dropped by a writer),
-    yield_001 must still attach to product_001 — positional zip of the
-    two sorted lists attributed it to product_000."""
+    """With yield_000 absent (dropped by a writer), yield_001 still
+    attaches to product_001, not to product_000 as a positional zip of
+    the two sorted lists would have it."""
     from orderly_spark.schema import wide_to_array
 
     df = spark.createDataFrame(
@@ -320,10 +321,9 @@ def test_wide_to_array_pairs_yields_by_suffix(spark):
 
 def test_wide_to_array_merges_mixed_layout_rows(spark):
     """mergeSchema over a directory mixing array-model and wide-model
-    files yields BOTH layouts with per-row NULLs (review finding, r8:
-    the old code silently dropped the wide rows' data whenever the
-    array column existed). Each row must keep whichever model its
-    source file wrote."""
+    files yields BOTH layouts with per-row NULLs: the wide rows' data
+    survives beside an existing array column. Each row keeps whichever
+    model its source file wrote."""
     from pyspark.sql import functions as F
 
     from orderly_spark.schema import wide_to_array
@@ -354,7 +354,7 @@ def test_wide_to_array_merges_mixed_layout_rows(spark):
 def test_array_to_wide_pads_absent_roles_and_avoids_collisions(spark):
     """Absent roles emit NULL-padded slots (the export schema never
     silently shrinks) and pre-existing wide names cannot collide with
-    generated columns (review finding, r8)."""
+    generated columns."""
     from orderly_spark.schema import array_to_wide
 
     df = spark.createDataFrame(
@@ -369,10 +369,10 @@ def test_array_to_wide_pads_absent_roles_and_avoids_collisions(spark):
 
 
 def test_array_to_wide_preserves_existing_wide_data_without_array(spark):
-    """r9 advice fix: a role listed in counts whose ARRAY column is
-    absent but whose wide column already carries data must pass that
-    column through — the r8 collision exclusion removed it from
-    passthrough and re-emitted NULL over it, silently destroying it."""
+    """A role listed in counts whose ARRAY column is absent but whose
+    wide column already carries data passes that column through: the
+    collision exclusion must not drop it from passthrough and re-emit
+    NULL over it."""
     from orderly_spark.schema import array_to_wide
 
     df = spark.createDataFrame(
@@ -419,10 +419,8 @@ _MEMBERSHIP_SCHEMA = (
 )
 _MODES = {
     "a": {},
-    "b": dict(set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn=False,
-              remove_rxn_with_unresolved_names=True),
-    "c": dict(set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn=False,
-              set_unresolved_names_to_none=True),
+    "b": dict(unresolved_names="remove_rxn"),
+    "c": dict(unresolved_names="none"),
 }
 
 
@@ -638,10 +636,8 @@ def test_unresolved_nullout_join_equals_literal_path(spark):
     bad = set(bad_names)
 
     for mode, mode_kw in (
-        ("a", dict(set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn=True,
-                   remove_rxn_with_unresolved_names=False, set_unresolved_names_to_none=False)),
-        ("c", dict(set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn=False,
-                   remove_rxn_with_unresolved_names=False, set_unresolved_names_to_none=True)),
+        ("a", dict(unresolved_names="none_if_mapped_else_remove_rxn")),
+        ("c", dict(unresolved_names="none")),
     ):
         got = _as_rows(C.handle_unresolved_names(df, names, C.CleanConfig(**mode_kw)))
         want = {r["rid"]: o for r in rows if (o := _ref_unresolved(r, bad, mode)) is not None}

@@ -130,31 +130,42 @@ def test_cli_extract_clean_genfp_roundtrip(workdir, spark, capsys):
     assert mat.dtype == np.int64 and mat.shape == (fp.count(), 128)
 
 
-def test_cli_genfp_slot_cap_from_config_and_guard(workdir, spark, capsys):
-    """gen-fp derives --reactant-slots from the clean stage's
-    clean_config.json; under-sized slots are loud (review finding r5:
-    a fixed default of 5 silently omitted reactants beyond slot 5
-    when clean ran with a bigger --num-reactant)."""
-    d = workdir / "genfp_guard"
+def test_cli_genfp_fingerprints_every_reactant(workdir, spark, capsys):
+    """gen-fp subtracts every reactant of a row, whatever cap a
+    clean_config.json next to the data records, and says nothing;
+    --reactant-slots truncates to the first N and warns."""
+    from orderly_spark.functions import chem
+
+    d = workdir / "genfp_every_reactant"
+    reactants = ["CC", "OO", "CN"]
     df = spark.createDataFrame(
-        [(["CC", "OO", "CN"], ["CCO"])], "reactants array<string>, products array<string>"
+        [(reactants, ["CCO"])], "reactants array<string>, products array<string>"
     )
     df.write.mode("overwrite").parquet(str(d / "train.parquet"))
-    # lineage record claims the clean cap was 2 — data disagrees (3
-    # reactants), so the config-derived default must FAIL loudly
     (d / "clean_config.json").write_text(json.dumps({"num_reactant": 2}))
     args = ["gen-fp", "--clean-data-path", str(d / "train.parquet"),
             "--output-path", str(d / "fp.parquet"), "--fp-size", "16"]
-    assert main(args) == 2
-    assert "OMITTED" in capsys.readouterr().err
-    # explicit under-size = informed choice -> warn but proceed
-    assert main([*args, "--reactant-slots", "2"]) == 0
-    assert "WARNING" in capsys.readouterr().err
-    # config cap covering the data -> clean run, no guard output
-    (d / "clean_config.json").write_text(json.dumps({"num_reactant": 3}))
+    single = spark.createDataFrame([(m,) for m in [*reactants, "CCO"]], "m string").select(
+        "m", chem.morgan_fingerprint_udf(n_bits=16)(F.col("m")).alias("fp")
+    )
+    fp_of = {r.m: list(r.fp) for r in single.collect()}
+
+    def diff(members):
+        out = fp_of["CCO"]
+        for m in members:
+            out = [a - b for a, b in zip(out, fp_of[m])]
+        return out
+
+    assert diff(reactants) != diff(reactants[:2])
     assert main(args) == 0
-    err = capsys.readouterr().err
-    assert "OMITTED" not in err and "defaulting" not in err
+    assert "WARNING" not in capsys.readouterr().err
+    got = spark.read.parquet(str(d / "fp.parquet")).first()
+    assert list(got.rxn_diff_fp) == diff(reactants)
+
+    assert main([*args, "--reactant-slots", "2"]) == 0
+    assert "WARNING: gen-fp: 1 rows have more than 2" in capsys.readouterr().err
+    got = spark.read.parquet(str(d / "fp.parquet")).first()
+    assert list(got.rxn_diff_fp) == diff(reactants[:2])
 
 
 def test_cli_unresolved_mode_exclusivity(workdir):

@@ -1,12 +1,11 @@
 """Twin-parity tests: every (Spark Column, DuckDB SQL) expression pair
 in operators/text.py is evaluated on the SAME rows in both engines and
 compared value-for-value — the direct guard behind the twins' reason
-to exist (hand-synced copies drifting is how the r6 driver-vs-local
-divergence started).
+to exist (hand-synced copies drift apart, and a driver-side hash then
+disagrees with the local one).
 
-Covers the digitless-source edge the r6 TRY_CAST review item was
-about: a source with no digits must yield 0 in BOTH engines, not
-Spark-NULL vs DuckDB cast error.
+Covers the digitless-source TRY_CAST edge: a source with no digits
+must yield 0 in BOTH engines, not Spark-NULL vs DuckDB cast error.
 """
 
 from __future__ import annotations
@@ -114,8 +113,8 @@ def test_dup_ratio_twins(spark, duck):
     )
     # strict equality, not approx: the driver hashes stringified
     # values, so a last-ulp drift that approx tolerates is exactly the
-    # local-green/driver-red class this suite exists to prevent
-    # (review r7). The operands are identical integer-derived doubles
+    # local-green/driver-red class this suite exists to prevent.
+    # The operands are identical integer-derived doubles
     # in both engines, so bit-identity is the right bar.
     assert got == want
     assert got[0] == 1 / 3 and got[2] == 0.0
@@ -171,7 +170,7 @@ def test_tokens_twins_on_adversarial_whitespace(spark):
 
 
 def test_punct_class_twins_on_unicode_texts(spark):
-    """The r9 Unicode punct class is ONE literal string fed to both
+    """The Unicode punct class is ONE literal string fed to both
     engines, so parity is by construction — this pins it empirically on
     the scripts the old ASCII-\\w class misgraded (CJK, accented Latin,
     Cyrillic, Devanagari, emoji) plus the \\x0B edge where Java \\s and
@@ -260,7 +259,7 @@ def test_dsum_dround_twins_on_awkward_doubles(spark):
 
 
 def test_bround_dbround_twins_on_tie_boundaries(spark):
-    """F.bround ↔ DBROUND (r9): shortest-repr HALF_EVEN on both
+    """F.bround ↔ DBROUND: shortest-repr HALF_EVEN on both
     engines. The FLOOR+parity SQL construction exists because DuckDB
     1.0.0's round_even is inconsistent at DECIMAL ties (1.005 → 1.01
     but 2.005 → 2.0, verified live) — pin the twin on exactly the tie
@@ -303,7 +302,7 @@ def test_epoch_us_twins_across_dst_shaped_timestamps(spark):
     UTC test session, zone-interpreting arithmetic (unix_micros) and
     the required ntz field arithmetic are indistinguishable, so a UTC-
     only assertion would be vacuous for exactly the regression it
-    claims to pin (review r7) — the driver replica runs in
+    claims to pin — the driver replica runs in
     America/New_York, where the two differ by the zone offset across
     the DST rows below."""
     from orderly_spark.operators.relational import epoch_us
@@ -350,7 +349,7 @@ def test_seeded_md5_twin(spark):
 
 
 # ---------------------------------------------------------------------------
-# Round-8 twins: BM25 tf-normalisation, Z-order bucket/interleave,
+# BM25 tf-normalisation, Z-order bucket/interleave,
 # SimHash majority-vote bits, and the sessionisation pair
 # ---------------------------------------------------------------------------
 
@@ -471,24 +470,17 @@ def test_simhash_sh_twins_on_adversarial_texts(spark):
 
 
 def test_session_total_value_uses_shared_dsum_expression(spark):
-    """r9 hygiene pin: s_session_windows and sessionized_events both
-    aggregate total_value through the SHARED registry.dsum helper —
-    pinned by expression-text equality with the decimal form their
-    oracles mirror (DSUM), so a future helper change cannot silently
-    drift one twin (the seeded_md5 pin pattern from r8 pass 6)."""
-    import inspect
-
-    import orderly_spark.queries.streaming_battery as B
-    import orderly_spark.streaming.pipeline as P
+    """s_session_windows runs streaming.sessionized_events, which
+    aggregates total_value through the shared registry.dsum helper:
+    pinned by expression-text equality with the decimal form the
+    oracle mirrors (DSUM), so a helper change cannot drift the twin
+    from its oracle."""
     from orderly_spark.registry import dsum
 
     # the helper IS the hand-rolled expression the DSUM oracle mirrors
     assert str(dsum("value")) == str(
         F.sum(F.col("value").cast("decimal(38,6)")).cast("double")
     )
-    # and both call sites actually route through it
-    assert 'dsum("value")' in inspect.getsource(B.s_session_windows)
-    assert 'dsum("value")' in inspect.getsource(P.sessionized_events)
 
 
 def test_session_twins_on_gap_edges(spark):
@@ -558,7 +550,7 @@ def test_session_twins_on_gap_edges(spark):
 
 
 # ---------------------------------------------------------------------------
-# Sessionize-oracle variant parity (review finding, r8 pass 3): the
+# Sessionize-oracle variant parity: the
 # 30-min gap rule appears in THREE oracle strings in two textual
 # variants — epoch_us subtraction (e_sessionized_counts) and
 # timestamp INTERVAL comparison (j_interval_overlap_join,
@@ -649,11 +641,11 @@ def test_sessionize_variant_pins_match_live_oracles():
 
 
 def test_json_k_cast_twins_on_malformed_props(spark):
-    """try_cast/TRY_CAST parity for the JSON-k twins (review finding,
-    r8 pass 3): a non-numeric, missing, or NULL props payload must
-    drop to NULL in BOTH engines — previously Spark's plain
-    cast('long') threw under default ANSI and DuckDB's plain CAST
-    raised ConversionException, so one bad row crashed the gate."""
+    """try_cast/TRY_CAST parity for the JSON-k twins: a non-numeric,
+    missing, or NULL props payload drops to NULL in BOTH engines (a
+    plain cast('long') throws under Spark's default ANSI mode and a
+    plain DuckDB CAST raises ConversionException, so one bad row would
+    crash the gate)."""
     rows = [
         (0, '{"k": "7"}'),
         (1, '{"k": "x"}'),       # non-numeric → NULL both sides
@@ -687,8 +679,8 @@ def test_json_k_cast_twins_on_malformed_props(spark):
 
 
 def test_davg_composition_association_parity(spark):
-    """q17's threshold twin (review finding, r8 pass 4; macro
-    self-parenthesized in r9): Spark computes ``0.2 * davg(x)`` =
+    """q17's threshold twin (the DAVG macro is self-parenthesized):
+    Spark computes ``0.2 * davg(x)`` =
     0.2 * (S/C); an UNparenthesized SUM/COUNT composed as
     ``0.2 * SUM/COUNT`` re-associates to (0.2*S)/C — off by one ulp
     on real groups (measured 506/2000 part keys at sf0.01). DAVG now
@@ -728,8 +720,8 @@ def test_davg_composition_association_parity(spark):
 
 
 def test_is_number_python_semantics_three_way():
-    """is_number must follow Python int()/float() rules (review
-    finding, r8): Spark's cast accepts the Java-isms '1d'/'2.5f'/
+    """is_number must follow Python int()/float() rules: Spark's
+    cast accepts the Java-isms '1d'/'2.5f'/
     '0x1p3' that Python and DuckDB reject. Pin all three surfaces —
     the Column fn, the Spark-SQL registry fn, and DuckDB TRY_CAST
     (the oracle side) — against Python's own verdict."""

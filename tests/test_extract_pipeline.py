@@ -101,7 +101,7 @@ def test_extract_plan_builds_in_few_py4j_round_trips(spark, decoded, monkeypatch
         return send(command, *args, **kwargs)
 
     monkeypatch.setattr(client, "send_command", counted)
-    solvent_set = SV.solvent_set_literal(SV.default_solvents(spark))
+    solvent_set = SV.smiles_set_literal(SV.packaged_solvent_smiles())
     extract_reactions(decoded, solvent_set=solvent_set)
     monkeypatch.undo()
     assert solvent_set is not None
@@ -119,8 +119,7 @@ def test_extract_then_clean_then_split(spark, decoded):
     with_idx = extracted.withColumn("original_index", F.monotonically_increasing_id())
     cfg = C.CleanConfig(
         min_frequency_of_occurrence=0,
-        set_unresolved_names_to_none_if_mapped_rxn_str_exists_else_del_rxn=False,
-        remove_rxn_with_unresolved_names=True,
+        unresolved_names="remove_rxn",
         scramble=False,
     )
     names = spark.createDataFrame([("junk",)], "name string")

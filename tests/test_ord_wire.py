@@ -21,10 +21,10 @@ from orderly_spark.sources import ord_wire as W
 from orderly_spark.sources.ord import proto_decoder
 
 
-def _decode_one(rxn_bytes: bytes, **kw) -> dict:
+def _decode_one(rxn_bytes: bytes) -> dict:
     rxns = list(W.iter_dataset_reactions(W.encode_dataset([rxn_bytes])))
     assert len(rxns) == 1
-    return W.reaction_to_row(rxns[0], **kw)
+    return W.reaction_to_row(rxns[0])
 
 
 # --------------------------------------------------------------------------
@@ -118,17 +118,16 @@ def test_roles_bucketed_dot_split_sorted():
     assert row["agents"] is None  # agents only exist post merge_to_agents
 
 
-def test_name_identifier_gated_on_consider_molecule_names():
+def test_name_identifier_is_not_read():
+    """As the reference's default (consider_molecule_names=False): a
+    compound with only a NAME identifier contributes no member."""
     rxn = W.encode_reaction(inputs=[("m", [W.encode_compound([(6, "aqua regia")], 2)])])
-    assert _decode_one(rxn)["reagents"] == []  # default False, as the reference
-    assert _decode_one(rxn, consider_molecule_names=True)["reagents"] == ["aqua regia"]
+    assert _decode_one(rxn)["reagents"] == []
 
 
 def test_smiles_preferred_over_name():
     comp = W.encode_compound([(6, "ethanol"), (2, "CCO")], 1)
-    row = _decode_one(
-        W.encode_reaction(inputs=[("m", [comp])]), consider_molecule_names=True
-    )
+    row = _decode_one(W.encode_reaction(inputs=[("m", [comp])]))
     assert row["reactants"] == ["CCO"]
 
 
@@ -233,8 +232,7 @@ def test_proto3_accessor_defaults_mirrored():
     """The reference reads .value accessors that default to 0.0 when
     the submessage/field is absent (proto3): a YIELD measurement with
     no Percentage reads as 0.0%, and a set temperature/time units with
-    no value reads as 0.0 — all three mirrored here (r10 faithfulness
-    review)."""
+    no value reads as 0.0 — all three mirrored here."""
     # type-3 measurement, Percentage submessage entirely absent
     pc = W._enc_len(1, W._enc_varint_field(1, 2) + W._enc_str(3, "CC"))
     pc += W._enc_len(3, W._enc_varint_field(2, 3))  # measurement: type only

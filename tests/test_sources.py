@@ -4,6 +4,7 @@ parquet sink, name-list merge, solvent dimension builders."""
 
 from __future__ import annotations
 
+import random
 import shutil
 from pathlib import Path
 from urllib.parse import unquote
@@ -211,16 +212,31 @@ def test_packaged_solvents_full_dimension(spark):
     assert "O" in sset and len(sset) > 500
 
 
-def test_packaged_solvent_smiles_match_spark_reader(spark):
-    """The driver-side parse of the packaged solvents.csv is the set
-    Spark's CSV reader collects, in the same order, and ships as the same
-    literal."""
+def test_packaged_solvent_smiles_match_spark_reader(spark, tmp_path):
+    """The driver-side parse of a solvents CSV (the packaged one, or a
+    ``--solvents-path`` file with a multi-line quoted name, an empty
+    SMILES field, a repeated SMILES and stereo backslashes) is the set
+    Spark's CSV reader collects, in the same order, and ships as the
+    same literal."""
+    import csv
+
     want = SV.solvent_smiles_set(SV.default_solvents(spark)).collect()[0].solvent_set
     got = SV.packaged_solvent_smiles()
     assert len(got) == 561
     assert list(got) == want
     literal = SV.smiles_set_literal(got)
     assert spark.range(1).select(literal.alias("s")).collect()[0].s == want
+
+    user = tmp_path / "solvents.csv"
+    with user.open("w", newline="", encoding="utf-8") as fh:
+        w = csv.writer(fh)
+        w.writerow(["solvent_name_1", "cas_number", "smiles"])
+        w.writerows([
+            ["two\nlines, quoted", "1-2-3", "ClCCl"], ["empty", "", ""],
+            ["again", "4", "ClCCl"], ["stereo", "5", "C/C=C\\C"], ["ünï", "6", "O"],
+        ])
+    want = SV.solvent_smiles_set(SV.load_solvents_csv(spark, str(user))).collect()[0].solvent_set
+    assert list(SV.packaged_solvent_smiles(str(user))) == want == ["C/C=C\\C", "ClCCl", "O"]
 
 
 def test_name_list_frame_writes_the_same_csv(spark, tmp_path):
@@ -237,9 +253,9 @@ def test_name_list_frame_writes_the_same_csv(spark, tmp_path):
 
 
 def test_write_extracted_reextract_keeps_other_partitions(spark, ord_dir):
-    """Review regression (data loss): re-extracting ONE dataset must
-    overwrite only its own partition — Spark's default STATIC
-    partition-overwrite truncates the whole output directory first."""
+    """Re-extracting ONE dataset overwrites only its own partition
+    (no data loss): Spark's default STATIC partition-overwrite would
+    truncate the whole output directory first."""
     out = str(FIXDIR / "out_reextract")
     files = O.scan_ord_files(spark, ord_dir)
     full = O.decode_reactions(files)
@@ -253,74 +269,24 @@ def test_write_extracted_reextract_keeps_other_partitions(spark, ord_dir):
     assert back.filter(F.col("extracted_from_file") == "b.pb.gz").count() == 1
 
 
-def test_corrupt_wire_quarantine_and_audit(spark, tmp_path):
-    """r11: corrupt .pb.gz handling at fleet scale. The DEFAULT is the
-    reference-faithful LOUD abort (one corrupt file fails the job —
-    never silent data loss); on_error='skip' quarantines corrupt files
-    and decode_errors() over the same scan names each one with its
-    error class, so skip + audit together lose nothing silently."""
-    d = tmp_path / "ord_mixed"
-    d.mkdir()
-    good = W.dataset_pb_gz([W.encode_reaction(cxsmiles="C>N>O")])
-    (d / "good.pb.gz").write_bytes(good)
-    (d / "truncated.pb.gz").write_bytes(good[:20])          # mid-gzip EOF
-    (d / "badwire.pb.gz").write_bytes(b"\x0a\x05ab")        # LEN overruns
-    files = O.scan_ord_files(spark, str(d))
+_GOOD_PB_GZ = W.dataset_pb_gz([W.encode_reaction(cxsmiles="C>N>O")])
 
-    # default: loud abort
-    with pytest.raises(Exception):
+
+@pytest.mark.parametrize(
+    "payload, error",
+    [
+        (_GOOD_PB_GZ[:20], "EOFError"),  # gzip stream ends mid-member
+        (b"\x0a\x05ab", "truncated length-delimited field"),  # LEN overruns the bytes
+        (bytes(random.Random(7).randrange(256) for _ in range(64)), "varint too long"),
+    ],
+    ids=["truncated-gzip", "len-overrun", "random-bytes"],
+)
+def test_corrupt_wire_aborts_loudly(spark, tmp_path, payload, error):
+    """One corrupt file among good ones fails the whole decode with the
+    decoder's error, as the reference's extract does: corrupt input is
+    never dropped silently."""
+    (tmp_path / "good.pb.gz").write_bytes(_GOOD_PB_GZ)
+    (tmp_path / "corrupt.pb.gz").write_bytes(payload)
+    files = O.scan_ord_files(spark, str(tmp_path))
+    with pytest.raises(Exception, match=error):
         O.decode_reactions(files).collect()
-
-    # skip: the good file's row survives, corrupt files yield nothing
-    rows = O.decode_reactions(files, on_error="skip").collect()
-    assert [r.extracted_from_file for r in rows] == ["good.pb.gz"]
-    assert rows[0].rxn_str == "C>N>O"
-
-    # audit: exactly the corrupt files, with their error classes
-    errs = {r.file: r.error_class for r in O.decode_errors(files).collect()}
-    assert set(errs) == {"truncated.pb.gz", "badwire.pb.gz"}
-    assert errs["badwire.pb.gz"] == "ValueError"
-    assert errs["truncated.pb.gz"] in ("EOFError", "BadGzipFile")
-
-    with pytest.raises(ValueError):
-        O.decode_reactions(files, on_error="quarantine")  # unknown mode
-
-
-def test_total_skip_guard(spark, tmp_path):
-    """r12 advice: on_error='skip' must not let a systemic decoder bug
-    masquerade as an empty corpus — a task whose ≥8 files ALL fail
-    raises; below the threshold (or with any good file present) the
-    quarantine stays quiet."""
-    d = tmp_path / "ord_all_bad"
-    d.mkdir()
-    for i in range(8):
-        (d / f"bad{i}.pb.gz").write_bytes(b"\x0a\x05ab")
-    files = O.scan_ord_files(spark, str(d)).repartition(1)
-    with pytest.raises(Exception, match="systemic decoder bug"):
-        O.decode_reactions(files, on_error="skip").collect()
-
-    # one good file in the task → quarantine proceeds quietly
-    (d / "good.pb.gz").write_bytes(
-        W.dataset_pb_gz([W.encode_reaction(cxsmiles="C>N>O")])
-    )
-    files = O.scan_ord_files(spark, str(d)).repartition(1)
-    rows = O.decode_reactions(files, on_error="skip").collect()
-    assert [r.extracted_from_file for r in rows] == ["good.pb.gz"]
-
-    # below the threshold, all-corrupt is accepted as (audited) tail
-    d2 = tmp_path / "ord_small_bad"
-    d2.mkdir()
-    for i in range(7):
-        (d2 / f"bad{i}.pb.gz").write_bytes(b"\x0a\x05ab")
-    files2 = O.scan_ord_files(spark, str(d2)).repartition(1)
-    assert O.decode_reactions(files2, on_error="skip").count() == 0
-
-    # r13 (ADVICE): the guard is configurable for directory-clustered
-    # genuine corruption — raised past the cluster size or disabled,
-    # the 8-file all-corrupt task quarantines quietly instead of
-    # aborting; a nonsense threshold is rejected at plan time
-    files8 = O.scan_ord_files(spark, str(d), name_contains="good", inverse=True).repartition(1)
-    assert O.decode_reactions(files8, on_error="skip", total_skip_guard=None).count() == 0
-    assert O.decode_reactions(files8, on_error="skip", total_skip_guard=20).count() == 0
-    with pytest.raises(ValueError, match="total_skip_guard"):
-        O.decode_reactions(files8, on_error="skip", total_skip_guard=1)

@@ -1,4 +1,4 @@
-"""Adversarial ORACLE sweep (r10-r13, NINE corpora): rebuild hostile tables
+"""Adversarial ORACLE sweep (NINE corpora): rebuild hostile tables
 from a hostile-string corpus and run the full Spark↔DuckDB comparator
 over it — unlike the degenerate-input sweep (which only checks that
 queries RUN), this checks that both engines still AGREE on values.
@@ -29,12 +29,12 @@ the matching ORACLE_SF):
   Spark's ANSI divide threw on zero quantity while DuckDB silently
   produced inf — both twins now NULL such lines via
   try_divide/NULLIF).
-- /tmp/sf_evt  — adversarial EVENTS (r11, verdict item 4): clock skew
+- /tmp/sf_evt  — adversarial EVENTS: clock skew
   (timestamps shuffled out of ingest order), heavy duplicate
   timestamps (ties in every window/session/asof path), epoch-boundary
   rows (1970-01-01 00:00:00.000000 and .999999 microsecond edges,
   pre-epoch 1969 rows), hostile props JSON (empty/garbage/nested —
-  the r8 props-raise class), negative and re-used user_ids, ±0.0 and
+  the props-raise class), negative and re-used user_ids, ±0.0 and
   large (in-envelope) event values.
   First run found ONE real twin gap, fixed: w_hopping_window_counts'
   oracle used DuckDB's toward-zero '//' where Spark's window() floor-
@@ -56,7 +56,7 @@ the matching ORACLE_SF):
       --deselect tests/test_oracle.py::test_oracle_match[s_stream_dedup_ingest] \\
       --deselect tests/test_oracle.py::test_oracle_match[s_stream_outer_attribution] \\
       --deselect "tests/test_oracle.py::test_oracle_match[s_stream_full_outer_attribution]"
-- /tmp/sf_rel  — adversarial RELATIONAL (r11): the seven TPC-H-ish
+- /tmp/sf_rel  — adversarial RELATIONAL: the seven TPC-H-ish
   tables rebuilt with dangling FKs, duplicate PKs, NULLs in
   aggregable/ordering columns, boundary dates (epoch/1969/leap-day/
   2250), hostile strings, case/whitespace flag variants, and
@@ -76,7 +76,7 @@ the matching ORACLE_SF):
     Pinned ceiling, not a twin bug: the corpus keeps extremes at
     ±9e4 (the dsum-cap precedent) and the envelope is now stated
     with numbers in the query docstring.
-- /tmp/sf_stream — hostile STREAMING events (r13, the NINTH corpus):
+- /tmp/sf_stream — hostile STREAMING events (the NINTH corpus):
   post-epoch-only hostile events the stateful-streaming queries CAN
   legitimately run on — watermark-frontier exact ties (±10ms + the
   exact tie, on BOTH outer-join expiry rules), attribution-horizon
@@ -86,13 +86,13 @@ the matching ORACLE_SF):
   point of the corpus: the three sf_evt deselects are pre-epoch-only
   envelopes, so every sf_stream divergence is a real twin gap.
   First run found THREE real issues:
-  - s_session_windows ORACLE TWIN GAP (fixed + regraded r13): Spark's
+  - s_session_windows ORACLE TWIN GAP (fixed + regraded): Spark's
     session_window MERGES an event landing exactly at the previous
     session's end (next_ts <= prev_end coalesces); the oracle's
     new-session flag used >= — invisible on µs-noisy testdata, caught
     by the exact-tie session runs, fixed to strict > (pinned by
     tests/test_streaming.py::test_session_window_exact_gap_boundary).
-  - asof_nearest_click ORACLE TWIN GAP (fixed + regraded r13): the
+  - asof_nearest_click ORACLE TWIN GAP (fixed + regraded): the
     oracle recombined its two directional ASOF passes with
     b JOIN f USING (event_id), fanning out 2x2 on duplicate view
     event_ids while the as-of contract (and the Spark side) emits one
@@ -104,14 +104,14 @@ the matching ORACLE_SF):
     at ±10ms accordingly.
   The three sf_evt deselects stay re-justified AS pre-epoch
   envelopes: they apply to sf_evt/sf_all only, never here.
-- /tmp/sf_emb  — adversarial EMBEDDINGS (r11): denormal components
+- /tmp/sf_emb  — adversarial EMBEDDINGS: denormal components
   (±1e-40), ±0.0, huge magnitudes (±1e30), all-zero vectors (norm 0 —
-  the cosine-division edge), NULL vectors (the r10 trainer-filter
+  the cosine-division edge), NULL vectors (the trainer-filter
   regression check), constant vectors. Dimensions stay 64 — a
   ragged-width table is a schema violation upstream ingest must
   reject, not an operator input (documented ceiling).
 
-- /tmp/sf_all  — EVERYTHING HOSTILE AT ONCE (r11 capstone): documents
+- /tmp/sf_all  — EVERYTHING HOSTILE AT ONCE: documents
   from sf_adv, events from sf_evt, embeddings from sf_emb, the seven
   relational tables from sf_rel — the cross-table interaction run
   (queries that JOIN hostile documents against hostile orders, etc.).
@@ -197,7 +197,7 @@ def build_siblings() -> None:
 
 
 def build_events(dst: str = "/tmp/sf_evt") -> None:
-    """Adversarial events corpus (r11): every other table copied from
+    """Adversarial events corpus: every other table copied from
     sf0.001; events rebuilt with the hostile timestamp/props/value mix
     from the module docstring. Same row count class as the original so
     window/session queries exercise their real paths."""
@@ -266,7 +266,7 @@ def build_events(dst: str = "/tmp/sf_evt") -> None:
 
 
 def build_stream_events(dst: str = "/tmp/sf_stream") -> None:
-    """NINTH corpus (r13, VERDICT item 5): hostile STREAMING events the
+    """NINTH corpus: hostile STREAMING events the
     stateful-streaming queries CAN legitimately run on — every
     timestamp strictly post-epoch (the sf_evt deselects exist ONLY
     because pre-epoch rows are late-by-birth against Spark's epoch-0
@@ -294,9 +294,8 @@ def build_stream_events(dst: str = "/tmp/sf_stream") -> None:
       emitted (event_id, event_type) projection is order-independent);
     - session-gap exact ties: per-user event runs with consecutive
       gaps of exactly 30 min (SAME session — the exact boundary
-      merges, strict-> splits; the r13-pinned semantics) and
-      30 min + 1µs (new session — the split side of the boundary,
-      r14 ADVICE: the old -1µs runs probed only the merge side);
+      merges, strict-> splits) and 30 min + 1µs (new session — the
+      split side of the boundary, which -1µs runs would not probe);
     - tumbling-window edges: rows at hh:00:00.000000 and
       hh:59:59.999999, plus a 150-row same-tick burst;
     - the sf_evt hostile props/type/value pools (post-epoch rows only).
@@ -401,9 +400,9 @@ def build_stream_events(dst: str = "/tmp/sf_stream") -> None:
 
 
 def build_embeddings(dst: str = "/tmp/sf_emb") -> None:
-    """Adversarial embeddings corpus (r11): 64-dim vectors with
+    """Adversarial embeddings corpus: 64-dim vectors with
     denormals, ±0.0, huge magnitudes, all-zero vectors, constant
-    vectors, and NULL vectors (the r10 trainer-filter class)."""
+    vectors, and NULL vectors (the trainer-filter class)."""
     import duckdb
 
     os.makedirs(dst, exist_ok=True)
@@ -448,7 +447,7 @@ def build_embeddings(dst: str = "/tmp/sf_emb") -> None:
 
 
 def build_relational(dst: str = "/tmp/sf_rel") -> None:
-    """Adversarial RELATIONAL corpus (r11): the seven TPC-H-ish tables
+    """Adversarial RELATIONAL corpus: the seven TPC-H-ish tables
     rebuilt with the hostile-warehouse mix; documents/events/embeddings
     copied unchanged. Targets the twin-discipline surfaces the other
     corpora cannot reach:
@@ -602,8 +601,7 @@ def build_relational(dst: str = "/tmp/sf_rel") -> None:
 
 
 def build_media(dst: str = "/tmp/sf_med") -> None:
-    """Adversarial MEDIA/BINARY corpus (r12, verdict item 4 — the one
-    hostile-input surface without a sweep corpus): the documents table
+    """Adversarial MEDIA/BINARY corpus: the documents table
     rebuilt from media-hostile strings so the mm_* container fixtures
     see every corrupt-wrapper shape through BOTH branches of
     _with_fake_containers — as raw corrupt blobs (every 7th doc) and
@@ -611,7 +609,7 @@ def build_media(dst: str = "/tmp/sf_med") -> None:
 
     - container-shaped text: bare magic, truncated headers (no NUL
       terminator), non-JSON headers, JSON-array headers, FULLY VALID
-      OSMM containers inside the text (the shape that exposed the r12
+      OSMM containers inside the text (the shape that exposed a
       fixture gap: a 'corrupt-branch' doc whose raw text IS a valid
       container decoded valid on the Spark side while the oracle
       assumed every 7th doc invalid — both twins now corrupt that
@@ -621,7 +619,7 @@ def build_media(dst: str = "/tmp/sf_med") -> None:
       sample_frames cap), deeply nested JSON;
     - payload hostility: embedded NUL bytes (the container separator),
       empty and whitespace-only docs (zero-payload frames), long
-      binary-ish runs, non-ASCII payloads (the r10 BLOB-unnest class).
+      binary-ish runs, non-ASCII payloads (the BLOB-unnest class).
 
     First run: 213/215 — TWO real twin gaps, both fixed + regraded:
     the fixture gap above (mm_media_meta_decode) and the declared-
@@ -677,92 +675,11 @@ def build_media(dst: str = "/tmp/sf_med") -> None:
     print(f"  ORACLE_SF={dst} python -m pytest tests/test_oracle.py -q")
 
 
-def ord_quarantine_scale_check(root: str = "/tmp/sf_med_ord", n_good: int = 160, n_bad: int = 40) -> None:
-    """The corrupt-.pb.gz half of the r12 media sweep, at bench scale:
-    200 files (160 good wire-format datasets, 40 corrupt in four
-    classes — truncated gzip, LEN-overrun wire, gzip-wrapped corrupt
-    wire, random bytes), pushed through the decode and its audit.
-
-    Sweep finding, documented not 'fixed': an EMPTY file is NOT a
-    corrupt class — proto3 serializes an empty Dataset to zero bytes,
-    so the decoder (like the reference's message_helpers.load_message)
-    reads it as a valid dataset with no reactions. The first corpus
-    draft counted empty files as corrupt and the audit 'missed' them;
-    the audit was right.
-
-    Asserts, loudly:
-    - decode_reactions(on_error='skip') yields exactly the good files'
-      rows (quarantine drops precisely the corrupt set);
-    - decode_errors() audits exactly the corrupt files;
-    - the r12 total-skip guard does NOT false-fire with good files
-      present, and DOES fire on an all-corrupt many-file task.
-    """
-    from orderly_spark.session import get_spark
-    from orderly_spark.sources import ord as O
-    from orderly_spark.sources import ord_wire as W
-
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root)
-    rng = random.Random(SEED + 13)
-    good = set()
-    for i in range(n_good):
-        name = f"good{i:03d}.pb.gz"
-        good.add(name)
-        rxns = [
-            W.encode_reaction(
-                cxsmiles=f"C{'C' * (i % 5)}>N>O", procedure_details=f"r{i}-{j}"
-            )
-            for j in range(1 + i % 4)
-        ]
-        with open(os.path.join(root, name), "wb") as f:
-            f.write(W.dataset_pb_gz(rxns))
-    bad = set()
-    sample = W.dataset_pb_gz([W.encode_reaction(cxsmiles="C>N>O")])
-    for i in range(n_bad):
-        name = f"bad{i:03d}.pb.gz"
-        bad.add(name)
-        kind = i % 4
-        if kind == 0:
-            payload = sample[: max(4, len(sample) // 3)]     # truncated gzip
-        elif kind == 1:
-            payload = b"\x0a\x05ab"                           # LEN overruns
-        elif kind == 2:
-            import gzip as _gz
-
-            payload = _gz.compress(b"\x0a\x05ab")            # good gzip, bad wire
-        else:
-            payload = bytes(rng.randrange(256) for _ in range(64))
-        with open(os.path.join(root, name), "wb") as f:
-            f.write(payload)
-
-    spark = get_spark("ord_quarantine_sweep")
-    files = O.scan_ord_files(spark, root)
-    rows = O.decode_reactions(files, on_error="skip").collect()
-    seen_files = {r.extracted_from_file for r in rows}
-    n_expected = sum(1 + i % 4 for i in range(n_good))
-    assert seen_files == good, (len(seen_files), len(good))
-    assert len(rows) == n_expected, (len(rows), n_expected)
-    errs = {r.file for r in O.decode_errors(files).collect()}
-    assert errs == bad, (len(errs), len(bad))
-
-    # all-corrupt many-file task must trip the total-skip guard
-    only_bad = O.scan_ord_files(spark, root, name_contains="bad").repartition(1)
-    try:
-        O.decode_reactions(only_bad, on_error="skip").collect()
-        raise AssertionError("total-skip guard did not fire")
-    except Exception as ex:  # noqa: BLE001 — asserting the guard class
-        assert "systemic decoder bug" in str(ex), str(ex)[:200]
-    print(
-        f"ord quarantine scale check OK: {n_good} good / {n_bad} corrupt files, "
-        f"{n_expected} rows, audit and guard exact"
-    )
-
-
 def build_lakehouse(dst: str = "/tmp/sf_lake") -> None:
-    """Hostile LAKEHOUSE state corpus (r14, the TENTH corpus — VERDICT
-    item 3): the one modality family whose sweeps rode synthetic happy
-    paths. Targets the table-maintenance surfaces on the tables they
-    actually derive state from; every other table copied from sf0.001.
+    """Hostile LAKEHOUSE state corpus (the TENTH corpus). Targets the
+    table-maintenance surfaces, which no other corpus reaches, on the
+    tables they actually derive state from; every other table copied
+    from sf0.001.
     All envelopes respected by construction (post-epoch timestamps for
     the div-bucketing queries, |value| ≤ 9e4 for the dsum cap,
     whole-second spacing away from sub-ms streaming frontiers).
@@ -950,10 +867,8 @@ def build_lakehouse(dst: str = "/tmp/sf_lake") -> None:
 
 
 def hostile_ord_wire_check(root: str = "/tmp/sf_ord_wire", n_base: int = 120) -> None:
-    """ELEVENTH corpus (r15, VERDICT r14 item 4): hostile ORD WIRE
-    BYTES through the native decode surface at scale. Every other
-    input shape has a corpus; the protobuf decode surface rode only
-    the quarantine check. Three assertion classes:
+    """Hostile ORD WIRE BYTES through the native decode surface at
+    scale. Three assertion classes:
 
     IDENTITY (the strong oracle — mutated bytes must decode to rows
     IDENTICAL to their clean twin, because proto3 says so):
@@ -972,10 +887,11 @@ def hostile_ord_wire_check(root: str = "/tmp/sf_ord_wire", n_base: int = 120) ->
       C1 hostile UTF-8 strings from the sweep alphabet in every
          string field; C2 a 1000-reaction file with unknown dataset
          fields interleaved between reactions.
-    CORRUPT (quarantine must catch, audit exactly complementary):
+    CORRUPT (each file alone must fail the default decode loudly):
       X1 non-UTF8 bytes inside a string field; X2 wire truncation
          (LEN overrun) re-gzipped; X3 truncated gzip stream;
       X4 random bytes.
+    The identity and consistency halves decode only the good files.
     """
     import gzip as _gz
 
@@ -1171,8 +1087,8 @@ def hostile_ord_wire_check(root: str = "/tmp/sf_ord_wire", n_base: int = 120) ->
 
     # --- drive both decode paths -------------------------------------
     spark = get_spark("ord_wire_sweep")
-    files = O.scan_ord_files(spark, root)
-    rows = O.decode_reactions(files, on_error="skip").collect()
+    files = O.scan_ord_files(spark, root, name_contains="bad", inverse=True)
+    rows = O.decode_reactions(files).collect()
 
     def spark_key(r) -> tuple:
         d = r.asDict()
@@ -1210,15 +1126,22 @@ def hostile_ord_wire_check(root: str = "/tmp/sf_ord_wire", n_base: int = 120) ->
             print("  expect:", norm_expected(exp)[:1])
     assert n_row_mismatch == 0, f"{n_row_mismatch} files decoded wrong"
 
-    errs = {r.file for r in O.decode_errors(files).collect()}
-    assert errs == bad, (sorted(errs - bad)[:3], sorted(bad - errs)[:3])
-
     n_expected_rows = sum(len(v) for v in expected.values())
     assert n_expected_rows == len(rows)
+
+    silent = []
+    for name_ in sorted(bad):
+        one = spark.read.format("binaryFile").load(os.path.join(root, name_))
+        try:
+            O.decode_reactions(one).collect()
+            silent.append(name_)
+        except Exception:  # noqa: BLE001 — any decode failure is the loud abort
+            pass
+    assert silent == [], f"corrupt files decoded without an error: {silent[:3]}"
     print(
         f"hostile ORD wire check OK: {n_identity} identity-mutated files + "
-        f"1 big consistency file + {len(bad)} corrupt, {n_expected_rows} rows, "
-        f"both decode paths exact, audit exact"
+        f"1 big consistency file, {n_expected_rows} rows, both decode paths "
+        f"exact; {len(bad)} corrupt files each abort the decode"
     )
 
 
@@ -1248,5 +1171,4 @@ if __name__ == "__main__":
     build_media()
     build_lakehouse()
     build_combined()
-    ord_quarantine_scale_check()
     hostile_ord_wire_check()

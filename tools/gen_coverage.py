@@ -102,7 +102,7 @@ IMPL: dict[str, tuple[str, str]] = {
     "F12": ("contains/isin predicates (charcoal, uspto, ice)", "tests/test_extract.py"),
     "F13": ("functions/rxn.py reaction_hash (sha256): operators/cleaning.py reaction_hash and the reaction_hash SQL function", "tests/test_cleaning.py, tests/test_sql_surface.py"),
     "F14": ("functions/chem.py _morgan_fp_one parsed-graph kernel, one memo per UDF: reaction_fingerprint_udf (gen-fp, fused per row), morgan_fingerprint_udf (one column)", "tests/test_chem.py, tests/test_smiles.py, tests/test_cli.py"),
-    "F15": ("functions/chem.py reaction_fingerprint_udf (gen-fp: product − Σ reactants in the fused kernel) + fingerprint_difference (zip_with over fingerprint columns)", "tests/test_chem.py, tests/test_cli.py"),
+    "F15": ("functions/chem.py reaction_fingerprint_udf (gen-fp: product − Σ every reactant in the fused kernel; --reactant-slots N truncates to the first N with a warning) + fingerprint_difference (zip_with over fingerprint columns)", "tests/test_chem.py, tests/test_cli.py"),
     "F16": ("operators/cleaning.py scramble_role_lists", "tests/test_cleaning.py"),
     "F17": ("operators/metrics.py ohe_vocab + encode_with_vocab", "tests/test_metrics.py"),
     "F18": ("operators/metrics.py set_equality_match", "tests/test_metrics.py"),
@@ -127,7 +127,6 @@ IMPL: dict[str, tuple[str, str]] = {
     "tokencount[abs]": ("operators/text.py token counting", "tests/test_text_ops.py"),
     "fingerprint[abs]": ("operators/text.py document fingerprinting", "tests/test_text_ops.py"),
     "multimodal": ("operators/multimodal.py decode/resize/frame-sample/embed (kernels stubbed, plumbing real)", "tests/test_multimodal.py"),
-    # round-3 additions
     "connected-components[abs]": ("operators/dedup.py duplicate_clusters (iterative min-label propagation, checked against union-find; recursive-CTE oracle)", "tests/test_dedup_ops.py"),
     "sampling[abs]": ("queries/text_battery.py deterministic hash-threshold stratified sampling", ""),
     "mixture[abs]": ("queries/text_battery.py weighted corpus mixing (explode replication)", ""),
@@ -135,7 +134,6 @@ IMPL: dict[str, tuple[str, str]] = {
     "packing[abs]": ("queries/text_battery.py sequential token-budget packing (per-shard prefix sum)", ""),
     "resample[abs]": ("queries/relational.py 1-hour grid resample + forward fill", ""),
     "streaming-state": ("streaming/pipeline.py running_user_totals (applyInPandasWithState)", "tests/test_streaming.py"),
-    # round-4 additions
     "repetition[abs]": ("queries/curation_battery.py Gopher-style dup-token / top-bigram repetition signals", ""),
     "chunking[abs]": ("queries/curation_battery.py sliding-window token chunking (doc → training sequences)", ""),
     "tfidf[abs]": ("queries/curation_battery.py per-doc salient terms (tf × rareness, log-free)", ""),
@@ -177,7 +175,6 @@ IMPL: dict[str, tuple[str, str]] = {
     "hist-quantile[abs]": ("queries/curation_battery.py mergeable 64-bin histogram quantile sketch (deterministic, value-gated)", ""),
     "kfold[abs]": ("queries/curation_battery.py deterministic hash k-fold CV assignment census", ""),
     "drift[abs]": ("queries/curation_battery.py chi-square token-distribution drift between corpus generations", ""),
-    # round 6
     "prefix-filter[abs]": ("operators/dedup.py prefix_filter_jaccard_pairs (AllPairs/PPJoin exact set-similarity join)", "tests/test_dedup_ops.py"),
     "bloom[abs]": ("queries/relational.py deterministic Bloom filter build + probe (md5 positions, broadcast state)", "tests/test_plans.py"),
     "compaction[abs]": ("queries/relational.py size-targeted compaction bin-packing planner (window over per-hour stats)", "tests/test_storage_layout.py"),
@@ -188,7 +185,6 @@ IMPL: dict[str, tuple[str, str]] = {
     "semantic-dedup[abs]": ("queries/similarity_battery.py SemDeDup-style within-cell greedy pruning over IVF cells", "tests/test_plans.py"),
     "J-asof-nearest[abs]": ("operators/asof.py asof_join_nearest (one union, two window passes, pick-nearer on whole-row structs)", "tests/test_properties.py"),
     "UDTF[abs]": ("operators/text.py token_runs_udtf — Python UDTF (Spark 4 table function), map-side stateful one-to-many RLE", "tests/test_text_ops.py"),
-    # round 7
     "prefix-filter-skew[abs]": ("queries/dedup_battery.py prefix filtering on the df-skewed (boilerplate) regime, full corpus, t=1/2", ""),
     "containment[abs]": ("operators/dedup.py containment_pairs — directed |A∩B|/|A| gate from one symmetric co-occurrence join", "tests/test_analytics_ops.py"),
     "twa[abs]": ("queries/analytics_battery.py per-key time-weighted average (lead-segment window + rounded-product dsum)", "tests/test_analytics_ops.py"),
@@ -248,8 +244,8 @@ def main() -> None:
         qcell = ", ".join(f"`{q}`" for q in qs) if qs else "—"
         tcell = f"`{test}`" if test else "—"
         # escape literal pipes so notes like |A∩B|/|A| can't split the
-        # markdown columns (r7 verdict #7 — this file is parsed by
-        # tooling as the §2-id → gating-query audit trail)
+        # markdown columns (this file is parsed by tooling as the
+        # §2-id → gating-query audit trail)
         impl = impl.replace("|", "\\|")
         lines.append(f"| {sid} | {impl} | {qcell} | {tcell} |")
 
