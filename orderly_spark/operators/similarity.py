@@ -144,6 +144,14 @@ def _hyperplane(dim: int, seed: int, plane: int) -> list[float]:
     return out
 
 
+def _double_array(xs: list[float]) -> Column:
+    """``xs`` as one SQL array literal of doubles. ``repr`` of a float
+    parses back to the same double, so the values equal those of
+    ``F.array(*[F.lit(x) for x in xs])``; the literal is built in one
+    py4j call instead of one per component."""
+    return F.expr(f"array({', '.join(f'{x!r}D' for x in xs)})")
+
+
 def sign_sketch(vec: Column, dim: int, *, num_planes: int = 16, seed: int = 11) -> Column:
     """Random-hyperplane sign sketch as an int (bit p = sign of
     <vec, plane_p>). Hyperplanes are literals — broadcast once, no
@@ -152,7 +160,7 @@ def sign_sketch(vec: Column, dim: int, *, num_planes: int = 16, seed: int = 11) 
     for p in range(num_planes):
         plane = _hyperplane(dim, seed, p)
         dot = F.aggregate(
-            F.zip_with(vec, F.array(*[F.lit(x) for x in plane]), lambda v, h: v.cast("double") * h),
+            F.zip_with(vec, _double_array(plane), lambda v, h: v.cast("double") * h),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
@@ -235,9 +243,7 @@ def _cell_dots(vec: Column, cents: list[list[float]]) -> Column:
     return F.array(
         *[
             F.aggregate(
-                F.zip_with(
-                    vec, F.array(*[F.lit(x) for x in c]), lambda v, h: v.cast("double") * h
-                ),
+                F.zip_with(vec, _double_array(c), lambda v, h: v.cast("double") * h),
                 F.lit(0.0),
                 lambda acc, x: acc + x,
             )

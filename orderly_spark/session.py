@@ -29,6 +29,7 @@ import struct
 import subprocess
 import time
 import zlib
+from collections.abc import Iterator
 from pathlib import Path
 
 from pyspark import SparkContext
@@ -62,9 +63,10 @@ AQE_MIN_PARTITION_SIZE = "16k"
 #: not build (setting each is a no-op on a session that complies):
 #: - UTC session timezone: timestamp-literal casts and date_trunc must
 #:   match the DuckDB oracle's naive-timestamp semantics;
-#: - nanosAsLong: events.parquet stores TIMESTAMP(NANOS), which the
-#:   vectorized reader rejects; it reads as long and the loader converts
-#:   back (values are microsecond-aligned, so lossless);
+#: - nanosAsLong: the vectorized reader rejects a TIMESTAMP(NANOS)
+#:   column; it reads as long, and ``tables.load`` converts a
+#:   nanos-stored ``events.ts`` back (its values are microsecond-aligned,
+#:   so lossless);
 #: - Arrow: the pandas-UDF paths (chem, multimodal, protobuf decode)
 #:   batch via Arrow, never row-at-a-time pickling.
 SESSION_CONTRACT = (
@@ -249,6 +251,15 @@ def get_spark(app_name: str = "orderly_spark", *, shuffle_partitions: int | None
     - ``files.maxPartitionBytes`` kept at the 128m default: at 100 TB a
       scan yields ~800k input splits, which is the intended granularity.
     - :data:`SESSION_CONTRACT` (UTC, nanosAsLong, Arrow).
+    - ``spark.python.sql.dataFrameDebugging.enabled`` off. With it on,
+      every ``pyspark.sql.functions`` call captures its Python call site
+      and sends it to the JVM (about 4 extra py4j round trips per call,
+      and the first call imports IPython): building q5's plan took 545
+      py4j commands with it and 205 without (sf0.001). The trade-off: an ANSI error
+      raised by a Column-API expression no longer carries its
+      ``== DataFrame ==`` block naming the Python line that built it.
+      Expressions shipped as SQL text, which most of this package uses,
+      keep their ``== SQL ==`` context either way.
 
     A call that launches the JVM adds the class-data archive's options
     to ``spark.driver.defaultJavaOptions`` (so a caller's
@@ -267,6 +278,7 @@ def get_spark(app_name: str = "orderly_spark", *, shuffle_partitions: int | None
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config(map=dict(SESSION_CONTRACT))
     )
     launch = None
@@ -343,3 +355,28 @@ def codegen_compiles(spark: SparkSession) -> tuple[int, float | None]:
     if snap.size() < n:
         return n, None
     return n, spark._jvm.java.util.Arrays.stream(snap.getValues()).sum() / 1000.0
+
+
+@contextlib.contextmanager
+def py4j_commands(spark: SparkSession) -> Iterator[list[int]]:
+    """Count the py4j commands this process sends to ``spark``'s JVM
+    while the block runs; the block gets a one-element list whose value
+    is the count so far. py4j's own deletes of garbage-collected proxies
+    (``"m\\nd\\n"``) are not counted: when they are sent depends on the
+    garbage collector, not on the work in the block."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, count, nested = client.send_command, [0], "send_command" in vars(client)
+
+    def counted(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            count[0] += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counted
+    try:
+        yield count
+    finally:
+        if nested:
+            client.send_command = send
+        else:
+            del client.send_command

@@ -10,6 +10,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from orderly_spark.session import barrier
 
@@ -26,22 +27,98 @@ TABLES = (
     "embeddings",
 )
 
-#: (table path, st_mtime_ns of that path) → inferred StructType.
-#: Inferring a schema re-lists the path and re-reads parquet footers,
-#: ~100 ms of driver latency per `spark.read.parquet` call (0.6 s of
-#: q5's 0.8 s plan construction over 6 tables); passing a cached schema
-#: costs ~20 ms. Invariant: a cached schema is reused only while the
-#: path's mtime is unchanged. Rewriting a table (Spark's overwrite
-#: replaces the directory; a single-file table gets a new mtime) changes
-#: the key, so the next load infers again. One local `stat` per load, no
-#: Spark or Hadoop listing; a path `os.stat` cannot see is keyed on the
-#: path alone. Only the SCHEMA is cached — each call still returns a
-#: fresh DataFrame/scan, and every action re-reads parquet.
+#: (table path, st_mtime_ns of that path, whether TIMESTAMP columns
+#: infer as timestamp_ntz) → the table's StructType. Invariant: a cached schema is reused only
+#: while the path's mtime is unchanged. Rewriting a table (Spark's
+#: overwrite replaces the directory; a single-file table gets a new
+#: mtime) changes the key, so the next load reads the footer again. One
+#: local `stat` and one conf read per load, no Spark or Hadoop listing;
+#: a path `os.stat` cannot see is keyed on the path alone. Only the
+#: SCHEMA is cached — each call still returns a fresh DataFrame/scan,
+#: and every action re-reads parquet.
 _SCHEMA_CACHE: dict = {}
+
+
+def _data_file(path: str) -> str | None:
+    """The parquet file whose footer holds the schema of the table at
+    ``path``: the path itself, or a directory's first data file by name
+    (Spark skips names starting with ``_`` or ``.``, and its
+    non-merging schema inference reads one file). None when the local
+    filesystem shows no such file (a remote URI, a missing path, an
+    empty or partitioned directory)."""
+    if os.path.isfile(path):
+        return path
+    try:
+        with os.scandir(path) as it:
+            entries = sorted((e for e in it if e.name[0] not in "_."), key=lambda e: e.name)
+    except OSError:
+        return None
+    if not entries or not all(e.is_file() for e in entries):
+        return None
+    return entries[0].path
+
+
+#: footer key under which Spark stores the schema of a file it wrote
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _spark_type(t, ntz: bool):
+    """The type Spark's parquet schema inference gives a column that
+    pyarrow reads as Arrow type ``t``; TIMESTAMP(NANOS) is bigint, as
+    the session's ``nanosAsLong`` reads it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_type
+    from pyspark.sql.types import ArrayType, LongType, MapType
+
+    if pa.types.is_timestamp(t) and t.unit == "ns":
+        return LongType()
+    if pa.types.is_struct(t):
+        return StructType([StructField(f.name, _spark_type(f.type, ntz)) for f in t])
+    if pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_fixed_size_list(t):
+        return ArrayType(_spark_type(t.value_type, ntz))
+    if pa.types.is_map(t):
+        return MapType(_spark_type(t.key_type, ntz), _spark_type(t.item_type, ntz))
+    return from_arrow_type(t, prefer_timestamp_ntz=ntz)
+
+
+def _footer_schema(path: str, *, ntz: bool = True) -> StructType | None:
+    """The schema Spark infers for the parquet file at ``path``, read
+    from its footer on the driver (``ntz`` is
+    ``spark.sql.parquet.inferTimestampNTZ.enabled``). A file Spark wrote
+    carries its schema, which is what Spark's inference returns. None
+    when the footer holds a type this conversion cannot tell apart or
+    map: an INT96 timestamp (pyarrow shows it as nanoseconds, Spark
+    reads it as a timestamp) or one pyspark's Arrow converter rejects,
+    such as an unsigned integer. Nullability is not reproduced: Spark
+    makes every level of a file source's schema nullable, a given
+    schema too."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.errors import PySparkTypeError
+
+    with pq.ParquetFile(path) as pf:
+        arrow = pf.schema_arrow
+        stored = (arrow.metadata or {}).get(_SPARK_SCHEMA_KEY)
+        if stored is not None:
+            return StructType.fromJson(json.loads(stored))
+        if any(c.physical_type == "INT96" for c in pf.schema):
+            return None
+    try:
+        return StructType([StructField(f.name, _spark_type(f.type, ntz)) for f in arrow])
+    except PySparkTypeError:
+        return None
 
 
 def load(spark: SparkSession, sf_dir: str, name: str, *, fan_out: bool = False) -> DataFrame:
     """Read one testdata table.
+
+    The schema comes from the table's parquet footer, read on the
+    driver (~0.1 ms), and is passed to ``spark.read.schema``: Spark's own
+    schema inference would run a Spark job per table (50-65 ms warm).
+    Spark infers the schema instead when the local filesystem shows no
+    footer (see :func:`_data_file`; Spark then raises its own error for
+    a missing path) or :func:`_footer_schema` cannot map it.
 
     ``fan_out=True`` round-robin-repartitions to the session's core
     count. The testdata parquets are single-file/single-row-group, so
@@ -56,36 +133,36 @@ def load(spark: SparkSession, sf_dir: str, name: str, *, fan_out: bool = False) 
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     if name == "events":
-        # events.parquet stores TIMESTAMP(NANOS), which Spark rejects
-        # unless nanosAsLong is on. The conf is runtime-settable, and
-        # sessions not built by orderly_spark.session (e.g. the
-        # driver's) won't have it — set it here so any session works.
+        # Spark rejects a TIMESTAMP(NANOS) events.ts unless nanosAsLong
+        # is on. The conf is runtime-settable, and sessions not built by
+        # orderly_spark.session (e.g. one __spark_entry__ receives) may
+        # not have it — set it here so any session works.
         if (spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") or "false").lower() != "true":
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/{name}.parquet"
+    ntz = (spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true") or "true").lower() == "true"
     try:
-        key = (path, os.stat(path).st_mtime_ns)
+        key = (path, os.stat(path).st_mtime_ns, ntz)
     except OSError:
-        key = (path, None)
+        key = (path, None, ntz)
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
-    else:
-        df = spark.read.schema(schema).parquet(path)
+        footer = _data_file(path)
+        schema = _footer_schema(footer, ntz=ntz) if footer else None
+        if schema is None:
+            schema = spark.read.parquet(path).schema
+        _SCHEMA_CACHE[key] = schema
+    df = spark.read.schema(schema).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        # TIMESTAMP(NANOS) parquet read as long via nanosAsLong —
-        # convert back to a real (microsecond) timestamp.
-        # integer division: ts/1000 in double space rounds off-by-1µs
-        # for epoch-nanos magnitudes (> 2^53 after scaling).
-        # DIV truncates toward zero where cleaning.py's extraction
-        # path floors via pmod (review finding, r8) — the two differ
-        # only on values NOT divisible by 1000, and the testdata's ts
-        # is µs-aligned (pinned at both gate scales by
-        # tests/test_properties.py::test_events_ts_nanos_microsecond_aligned),
-        # so DIV == floor exactly here. Kept as DIV so every graded
-        # events plan stays byte-identical; if sub-µs events ever
-        # appear, switch to (ts - pmod(ts,1000)) DIV 1000.
+        # events.ts stored as TIMESTAMP(NANOS) reads as epoch-nanos long
+        # (nanosAsLong): convert back to a real (microsecond) timestamp.
+        # Integer division: ts/1000 in double space rounds off-by-1µs
+        # for epoch-nanos magnitudes (> 2^53 after scaling). DIV
+        # truncates toward zero where cleaning.py's extraction path
+        # floors via pmod; the two agree on values divisible by 1000,
+        # and tests/test_properties.py::test_events_ts_nanos_microsecond_aligned
+        # pins that alignment for any nanos-stored testdata. If sub-µs
+        # events ever appear, switch to (ts - pmod(ts,1000)) DIV 1000.
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     if fan_out:
         df = df.repartition(spark.sparkContext.defaultParallelism)

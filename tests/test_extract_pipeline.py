@@ -84,28 +84,19 @@ def test_extract_end_to_end(spark, decoded):
     assert spark.read.parquet(sink).count() == 3
 
 
-def test_extract_plan_builds_in_few_py4j_round_trips(spark, decoded, monkeypatch):
+def test_extract_plan_builds_in_few_py4j_round_trips(spark, decoded):
     """Building extract's plan over the packaged 615-row solvent set
     stays within a fixed py4j budget: each stage ships SQL text, and the
     whole set is one literal expression. Built node by node, with one
     Column per set member, the same plan took ~6,800 round trips."""
+    from orderly_spark.session import py4j_commands
     from orderly_spark.sources import solvents as SV
 
-    client = spark.sparkContext._gateway._gateway_client
-    send, sent = client.send_command, []
-
-    def counted(command, *args, **kwargs):
-        # py4j's own deletes of garbage-collected proxies are not plan work
-        if not command.startswith("m\nd\n"):
-            sent.append(command)
-        return send(command, *args, **kwargs)
-
-    monkeypatch.setattr(client, "send_command", counted)
-    solvent_set = SV.smiles_set_literal(SV.packaged_solvent_smiles())
-    extract_reactions(decoded, solvent_set=solvent_set)
-    monkeypatch.undo()
+    with py4j_commands(spark) as sent:
+        solvent_set = SV.smiles_set_literal(SV.packaged_solvent_smiles())
+        extract_reactions(decoded, solvent_set=solvent_set)
     assert solvent_set is not None
-    assert len(sent) <= 300, len(sent)
+    assert sent[0] <= 300, sent[0]
 
 
 def test_molecule_name_side_output(spark, decoded):

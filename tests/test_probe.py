@@ -48,6 +48,10 @@ def test_probe_scaled_corpus_and_stage_attribution(spark, sf_smoke, tmp_path):
     assert stages["jobs"] >= 1 and stages["tasks"] >= 1 and stages["cpu_s"] > 0, stages
     # jobs started while the slot's DataFrame was built (its barriers)
     assert 0 <= rec["build_jobs"] <= stages["jobs"], rec
+    # py4j round trips of that build, counted as the build budget counts them
+    from tests.test_build_budget import BUDGET, PY4J_HEADROOM
+
+    assert isinstance(rec["py4j"], int) and 0 < rec["py4j"] <= BUDGET[SLOT][0] * (1 + PY4J_HEADROOM), rec
     assert rec["build_s"] > 0 and rec["exec_s"] > 0
     assert len(rec["calib_py"]) == len(rec["calib_jvm"]) == 2
     assert rec["cds"] in ("mapped", "building", "none"), rec

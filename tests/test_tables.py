@@ -1,0 +1,108 @@
+"""tables.load reads each table's schema from its parquet footer: the
+schema must equal the one Spark's own inference gives (that loading
+starts no Spark job is checked per slot by test_build_budget.py)."""
+
+from __future__ import annotations
+
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from orderly_spark import tables
+from orderly_spark.tables import TABLES, load
+
+
+def _fresh_load(spark, sf_dir: str, name: str):
+    tables._SCHEMA_CACHE.clear()
+    return load(spark, sf_dir, name)
+
+
+@pytest.mark.parametrize("scale", ["sf0.001", "sf0.01", "sf0.1"])
+def test_footer_schema_equals_spark_inference(spark, sf_smoke, scale):
+    sf_dir = os.path.join(os.path.dirname(sf_smoke), scale)
+    if not os.path.isdir(sf_dir):
+        pytest.skip(f"{sf_dir} not generated")
+    for name in TABLES:
+        path = f"{sf_dir}/{name}.parquet"
+        if name == "events" and dict(spark.read.parquet(path).dtypes)["ts"] == "bigint":
+            continue  # load converts a nanos-stored ts; see the nanos test below
+        assert _fresh_load(spark, sf_dir, name).schema == spark.read.parquet(path).schema, name
+
+
+def test_footer_schema_of_generated_and_spark_written_tables(spark, tmp_path):
+    """The benchmark's generated tables (pandas-written), and a table
+    Spark wrote as a directory of part files: its timestamps are INT96,
+    which pyarrow shows as nanoseconds, and its footer carries Spark's
+    own schema."""
+    from benchmark.gen import write_registry_tables
+
+    gen = tmp_path / "gen"
+    write_registry_tables(gen, 7, 1)
+    for name in TABLES:
+        got = _fresh_load(spark, str(gen), name).schema
+        assert got == spark.read.parquet(f"{gen}/{name}.parquet").schema, name
+
+    written = tmp_path / "written"
+    spark.sql(
+        "SELECT id AS o_orderkey, timestamp_seconds(id) AS o_ts, timestamp_ntz'2020-01-01' AS o_ntz, "
+        "array(id) AS o_arr, map('k', id) AS o_map, named_struct('x', id) AS o_st FROM range(8)"
+    ).repartition(3).write.parquet(f"{written}/orders.parquet")
+    got = _fresh_load(spark, str(written), "orders")
+    assert got.schema == spark.read.parquet(f"{written}/orders.parquet").schema
+    assert dict(got.dtypes)["o_ts"] == "timestamp"
+    assert got.count() == 8
+
+
+def test_footer_schema_follows_timestamp_ntz_inference(spark, sf_smoke):
+    """With ``inferTimestampNTZ`` off, Spark infers a timezone-less
+    timestamp as TIMESTAMP; the footer path does too."""
+    conf = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    saved = spark.conf.get(conf, None)
+    spark.conf.set(conf, "false")
+    try:
+        got = _fresh_load(spark, sf_smoke, "orders").schema
+        assert got == spark.read.parquet(f"{sf_smoke}/orders.parquet").schema
+        assert got["o_orderdate"].dataType.typeName() == "timestamp"
+    finally:
+        if saved is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, saved)
+    tables._SCHEMA_CACHE.clear()
+
+
+def test_unmapped_footer_types_are_inferred_by_spark(spark, tmp_path):
+    """An unsigned column (pyspark's Arrow converter rejects it) and a
+    pyarrow-written INT96 timestamp (pyarrow shows it as nanoseconds)
+    get the schema Spark infers."""
+    path = tmp_path / "part.parquet"
+    pq.write_table(
+        pa.table({"p_partkey": pa.array([1, 2], pa.uint32()), "p_ts": pa.array([1, 2], pa.timestamp("us"))}),
+        path,
+        use_deprecated_int96_timestamps=True,
+    )
+    got = _fresh_load(spark, str(tmp_path), "part").schema
+    assert got == spark.read.parquet(str(path)).schema
+    assert [f.dataType.typeName() for f in got] == ["long", "timestamp"]
+
+
+def test_load_converts_nanos_stored_events_ts(spark, tmp_path):
+    """An ``events.parquet`` whose ``ts`` is TIMESTAMP(NANOS) loads with
+    ``ts`` as the microsecond timestamps: the footer maps the column to
+    bigint, as nanosAsLong reads it, and load converts it back. Mapped
+    to timestamp_ntz instead, the column would not be read as these
+    values."""
+    micros = [0, 1_600_000_000_123_456, 1_700_000_000_000_001, -86_400_000_000]
+    ts = pa.array([m * 1000 for m in micros], pa.timestamp("ns"))
+    pq.write_table(
+        pa.table({"event_id": pa.array(range(len(micros)), pa.int64()), "ts": ts}),
+        tmp_path / "events.parquet",
+        version="2.6",
+    )
+    assert "nanoseconds" in str(pq.ParquetFile(tmp_path / "events.parquet").schema.column(1).logical_type)
+    df = _fresh_load(spark, str(tmp_path), "events")
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    got = {r.event_id: r.us for r in df.selectExpr("event_id", "unix_micros(ts) AS us").collect()}
+    assert got == dict(enumerate(micros))

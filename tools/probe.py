@@ -40,6 +40,10 @@ fastest rep, ``stages`` (tasks, run/CPU seconds, shuffle and spill MB,
 jobs and stages of that rep's Spark jobs, read from the event log),
 ``build_jobs`` (the jobs of that rep started while its DataFrame was
 built: its eager barriers, see ``orderly_spark.session.barrier``),
+``py4j`` (the py4j round trips of that rep's build, counted by
+``orderly_spark.session.py4j_commands`` as tests/test_build_budget.py
+counts them; tables are loaded once before the slots, so a build's
+schemas come from the cache),
 ``plan`` (facts from ``orderly_spark.plans.audit``), ``cds`` (whether
 the session's JVM mapped the class-data archive, was building one or ran
 without one: ``orderly_spark.session.archive_state``), ``codegen`` (the
@@ -133,7 +137,7 @@ def run(sf_dir: str, slots: list[str], reps: int, plans: Path | None, work: Path
 
     from orderly_spark.plans.audit import audit
     from orderly_spark.registry import REGISTRY
-    from orderly_spark.session import archive_state, codegen_compiles, get_spark
+    from orderly_spark.session import archive_state, codegen_compiles, get_spark, py4j_commands
     from orderly_spark.tables import TABLES, load
 
     if plans is not None:
@@ -157,7 +161,7 @@ def run(sf_dir: str, slots: list[str], reps: int, plans: Path | None, work: Path
             for _ in range(reps):
                 before = codegen_compiles(spark)
                 with tr.span(name) as span:
-                    with tr.span(f"{name}.build") as b:
+                    with tr.span(f"{name}.build") as b, py4j_commands(spark) as sent:
                         df = REGISTRY[name].fn(spark, sf_dir)
                     with tr.span(f"{name}.exec") as e:
                         rows = df.count()
@@ -171,7 +175,7 @@ def run(sf_dir: str, slots: list[str], reps: int, plans: Path | None, work: Path
                 # checkpoints it pins) stays alive while the next rep runs
                 del df
                 runs.append({"build_s": b.duration, "exec_s": e.duration, "rows": rows, "span": span,
-                             "build_span": b, "plan": plan_facts(a)})
+                             "build_span": b, "py4j": sent[0], "plan": plan_facts(a)})
             if plans is not None:
                 (plans / f"{name}.txt").write_text(a.text)
             best[name] = r = min(runs, key=lambda run: run["span"].duration)
@@ -193,6 +197,7 @@ def run(sf_dir: str, slots: list[str], reps: int, plans: Path | None, work: Path
             "exec_s": round(r["exec_s"], 4),
             "rows": r["rows"],
             "build_jobs": build_jobs,
+            "py4j": r["py4j"],
             "stages": {k: round(v, 4) for k, v in stages.items()},
             "plan": r["plan"],
             "cds": cds,
