@@ -33,6 +33,13 @@ def _registry():
 
 
 def _pin_session(spark: SparkSession) -> None:
+    """Set each runtime conf of ``SESSION_CONTRACT`` on ``spark``.
+
+    Static confs cannot be pinned here. In particular
+    ``spark.python.sql.dataFrameDebugging.enabled`` stays as the
+    session's builder left it: on a session that ``get_spark`` did not
+    build it is usually on, and building a plan then costs about 2-2.5x
+    the py4j round trips ``tests/test_build_budget.py`` pins."""
     from orderly_spark.session import SESSION_CONTRACT
 
     for k, v in SESSION_CONTRACT:

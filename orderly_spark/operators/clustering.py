@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from orderly_spark.operators.relational import topk_per_group
+from orderly_spark.operators.similarity import _rerank, _score_topk, _usable_vec, _vec_side
 from orderly_spark.operators.text import seeded_md5
 from orderly_spark.session import barrier
 
@@ -135,10 +137,10 @@ def _update_centroids(
         exploded.groupBy("cell", "pos")
         .agg(F.sum("q").alias("s"), F.count("q").alias("c"))
         # exact floor(s / c): subtract the positive mod first, then
-        # INTEGER `div` — never a double `/`, whose truncation rules
-        # diverge from DuckDB's CAST-rounding once |s| > 2^53 (review
-        # finding; cleaning.py uses DIV for the same reason). pmod
-        # keeps negative sums correct.
+        # INTEGER `div`, never a double `/`, whose truncation rules
+        # diverge from DuckDB's CAST-rounding once |s| > 2^53
+        # (cleaning.py uses DIV for the same reason). pmod keeps
+        # negative sums correct.
         .withColumn("m", F.expr("(s - pmod(s, c)) div c"))
     )
     rows = stats.select("cell", "pos", "m").collect()  # bounded: k·dim longs
@@ -170,11 +172,11 @@ def kmeans_fit(
     IVF partition column — see similarity.ivf_cosine_topk's persisted
     cell-assignment path).
 
-    NULL vectors (failed upstream encodes — routine at corpus scale)
-    are FILTERED here, not trained on (r10 null-columns sweep: a NULL
-    picked as a seed centroid crashed the driver loop with a bare
-    TypeError). They simply receive no assignment row; the SQL oracle
-    twin filters identically.
+    NULL vectors (failed upstream encodes, routine at corpus scale)
+    are FILTERED here, not trained on: a NULL picked as a seed centroid
+    would crash the driver loop with a bare TypeError. They simply
+    receive no assignment row; the SQL oracle twin filters
+    identically.
     """
     base = embeddings.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col), quantize_vec(F.col(vec_col), scale_bits).alias("__qv")
@@ -229,42 +231,19 @@ def kmeans_ivf_topk(
     runs on candidates only. At 100 TB `cell` is the persisted
     partition column → probing prunes the scan to n_probe/n_cells of
     the corpus."""
-    from pyspark.sql import Window
-
-    from orderly_spark.operators.similarity import _dot_decimal, _norm
-
     # NULL vectors are un-indexable and un-probeable; ZERO-NORM
     # vectors additionally have no cosine direction for the re-rank
-    # (r11 adversarial-embeddings sweep: ANSI DIVIDE_BY_ZERO) —
-    # filtered on both sides via the shared _usable_vec contract
-    from orderly_spark.operators.similarity import _usable_vec
-
     embeddings = embeddings.filter(_usable_vec(F.col(vec_col)))
     queries = queries.filter(_usable_vec(F.col(vec_col)))
     _assigned, cents = kmeans_fit(
         embeddings, k=n_cells, iterations=iterations,
         id_col=id_col, vec_col=vec_col, seed=seed,
     )
-    # per-row norms projected beside the vectors (r15; see
-    # similarity.cosine_topk): bit-identical cosine, d fold work per
-    # candidate instead of 3·d
-    corpus = assign_cells(
-        embeddings.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__cv"),
-            _norm(F.col(vec_col)).alias("__cn"),
-            quantize_vec(F.col(vec_col)).alias("__qv"),
-        ),
-        cents,
-        out_col="cell",
-    ).drop("__qv")
-
-    qbase = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__quv"),
-        _norm(F.col(vec_col)).alias("__qun"),
-        quantize_vec(F.col(vec_col)).alias("__qq"),
+    corpus = _vec_side(
+        embeddings, id_col, vec_col, "neighbor_id", "__c", quantize_vec(F.col(vec_col)).alias("__cq")
     )
+    corpus = assign_cells(corpus, cents, qvec_col="__cq").drop("__cq")
+    qbase = _vec_side(queries, id_col, vec_col, "query_id", "__q", quantize_vec(F.col(vec_col)).alias("__qq"))
     dists = F.array(*[_sqdist(F.col("__qq"), vec) for _, vec in cents])
     cell_ids = F.array(*[F.lit(int(cid)) for cid, _ in cents])
     ranked = F.array_sort(
@@ -275,19 +254,36 @@ def kmeans_ivf_topk(
         )
     )
     probes = F.transform(F.slice(ranked, 1, n_probe), lambda s: s["i"].cast("int"))
-    q = qbase.select(
-        "query_id", "__quv", "__qun", F.explode(probes).alias("cell")
-    )
+    q = qbase.select("query_id", "__qv", "__qn", F.explode(probes).alias("cell"))
+    cand = corpus.join(F.broadcast(q), "cell").filter(F.col("query_id") != F.col("neighbor_id"))
+    return _score_topk(cand, k)
 
-    cand = corpus.join(F.broadcast(q), "cell").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    scored = cand.withColumn(
-        "cosine",
-        _dot_decimal(F.col("__quv"), F.col("__cv")) / (F.col("__qun") * F.col("__cn")),
-    ).select("query_id", "neighbor_id", "cosine")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+def _usable_with_dim(
+    embeddings: DataFrame, queries: DataFrame, vec_col: str, op: str
+) -> tuple[DataFrame, DataFrame, int]:
+    """Both sides behind the :func:`_usable_vec` entry guard (a NULL
+    vector cannot be encoded or queried; a zero-norm one has no cosine
+    for the re-rank), plus the vector width from a one-row head of the
+    corpus: one Spark job."""
+    embeddings = embeddings.filter(_usable_vec(F.col(vec_col)))
+    queries = queries.filter(_usable_vec(F.col(vec_col)))
+    head = embeddings.select(F.size(vec_col).alias("d")).head()
+    if head is None:
+        raise ValueError(f"{op}: no non-null embedding vectors in input")
+    return embeddings, queries, head["d"]
+
+
+def _adc_rerank(
+    adc: DataFrame, embeddings: DataFrame, queries: DataFrame,
+    n_candidates: int, topk: int, id_col: str, vec_col: str,
+) -> DataFrame:
+    """The ADC family's verifier: the ``n_candidates`` best
+    ``(query_id, id_col, adc)`` rows per query by (adc, id), exactly
+    re-ranked by cosine to the top ``topk``."""
+    cand = topk_per_group(adc, ["query_id"], [F.col("adc"), F.col(id_col)], n_candidates, rank_col="__rn")
+    pairs = cand.select("query_id", F.col(id_col).alias("neighbor_id"))
+    return _rerank(pairs, embeddings, queries, id_col, vec_col, topk)
 
 
 def pq_adc_topk(
@@ -304,8 +300,7 @@ def pq_adc_topk(
     seed: int = 47,
     scale_bits: int = 20,
 ) -> DataFrame:
-    """Product-quantization ANN with asymmetric distance computation
-    (r9, the last ungated §2.11 surface per the r8 verdict):
+    """Product-quantization ANN with asymmetric distance computation:
 
     1. TRAIN — the vector is split into ``m_subs`` equal subspaces and
        an independent ``codebook_k``-centroid codebook is Lloyd-trained
@@ -328,21 +323,18 @@ def pq_adc_topk(
     Output (query_id, neighbor_id, cosine, rank). Every stage is
     deterministic, so the whole train->encode->scan->re-rank chain
     sits under a DuckDB value oracle (s_pq_adc_topk)."""
-    from pyspark.sql import Window
+    embeddings, queries, dim = _usable_with_dim(embeddings, queries, vec_col, "pq_adc_topk")
+    return _pq_adc(
+        embeddings, queries, dim, m_subs, codebook_k, iterations, n_candidates, topk, id_col, vec_col, seed, scale_bits
+    )
 
-    from orderly_spark.operators.similarity import _dot_decimal, _norm
 
-    # NULL vectors are un-encodable and un-queryable (r10 sweep);
-    # zero-norm vectors have no cosine for the exact re-rank (r11
-    # sweep) — both filtered via the shared _usable_vec contract
-    from orderly_spark.operators.similarity import _usable_vec
-
-    embeddings = embeddings.filter(_usable_vec(F.col(vec_col)))
-    queries = queries.filter(_usable_vec(F.col(vec_col)))
-    head = embeddings.select(F.size(vec_col).alias("d")).head()
-    if head is None:
-        raise ValueError("pq_adc_topk: no non-null embedding vectors in input")
-    dim = head["d"]
+def _pq_adc(
+    embeddings: DataFrame, queries: DataFrame, dim: int, m_subs: int, codebook_k: int, iterations: int,
+    n_candidates: int, topk: int, id_col: str, vec_col: str, seed: int, scale_bits: int,
+) -> DataFrame:
+    """:func:`pq_adc_topk` on sides already behind the usable-vector
+    guard, with their width ``dim`` known."""
     if dim % m_subs != 0:
         raise ValueError(f"pq_adc_topk: dim {dim} not divisible by m_subs {m_subs}")
     sub_w = dim // m_subs
@@ -395,40 +387,11 @@ def pq_adc_topk(
         .groupBy("query_id", id_col)
         .agg(F.sum("d").alias("adc"))
     )
-    w = Window.partitionBy("query_id").orderBy("adc", F.col(id_col))
-    cand = (
-        adc.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= n_candidates)
-        .select("query_id", F.col(id_col).alias("neighbor_id"))
-    )
-    corp = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__nv"),
-        _norm(F.col(vec_col)).alias("__nn"),
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv2"),
-        _norm(F.col(vec_col)).alias("__qn2"),
-    )
-    scored = (
-        cand.join(corp, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                _dot_decimal(F.col("__qv2"), F.col("__nv"))
-                / (F.col("__qn2") * F.col("__nn"))
-            ).alias("cosine"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w2)).filter(F.col("rank") <= topk)
+    return _adc_rerank(adc, embeddings, queries, n_candidates, topk, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
-# OPQ-lite: variance-balancing dimension permutation before PQ (r10)
+# OPQ-lite: variance-balancing dimension permutation before PQ
 # ---------------------------------------------------------------------------
 
 
@@ -471,11 +434,8 @@ def opq_balanced_permutation(
     if dim % m_subs != 0:
         raise ValueError(f"opq: dim {dim} not divisible by m_subs {m_subs}")
     # NULL vectors contribute neither to the variance statistic nor
-    # to the row count n (r10 sweep); zero-norm vectors are excluded
-    # for family consistency with the PQ stage behind this transform
-    # (r11 — the permutation must train on exactly the set PQ encodes)
-    from orderly_spark.operators.similarity import _usable_vec
-
+    # to the row count n; zero-norm vectors are excluded too, because
+    # the permutation must train on exactly the set PQ encodes
     embeddings = embeddings.filter(_usable_vec(F.col(vec_col)))
     two = float(1 << scale_bits)
     qs = [
@@ -510,9 +470,8 @@ def opq_permute(df: DataFrame, perm: list[int], vec_col: str = "embedding") -> D
 
 # ---------------------------------------------------------------------------
 # Residual quantization (RQ): stacked codebooks over successive
-# residuals (r12 — the next trained-ANN family member after IVF / PQ /
-# OPQ; cf. Chen, Guan & Wang, "Approximate nearest neighbor search by
-# residual vector quantization", Sensors 2010)
+# residuals (cf. Chen, Guan & Wang, "Approximate nearest neighbor search
+# by residual vector quantization", Sensors 2010)
 # ---------------------------------------------------------------------------
 
 
@@ -585,14 +544,9 @@ def rq_adc_topk(
     Output (query_id, neighbor_id, cosine, rank); deterministic end to
     end, so training, encoding, ADC and re-rank all sit under one
     DuckDB value oracle (s_rq_adc_topk)."""
-    from pyspark.sql import Window
-
-    from orderly_spark.operators.similarity import _dot_decimal, _norm, _usable_vec
-
     # NULL vectors are un-encodable; zero-norm vectors have no cosine
-    # direction for the re-rank (r11 sweep) — shared _usable_vec
-    # contract on both sides. Level ≥ 1 residuals may legitimately be
-    # zero vectors (vector == centroid) and are NOT re-filtered.
+    # direction for the re-rank. Level ≥ 1 residuals may legitimately
+    # be zero vectors (vector == centroid) and are NOT re-filtered.
     embeddings = embeddings.filter(_usable_vec(F.col(vec_col)))
     queries = queries.filter(_usable_vec(F.col(vec_col)))
     descale = float(1 << scale_bits)
@@ -635,11 +589,7 @@ def rq_adc_topk(
     enc = cur.select(
         F.col(id_col),
         *[F.col(f"code{lvl}") for lvl in range(levels)],
-        F.aggregate(
-            F.zip_with(composed, composed, lambda a, b: a * b),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).alias("cnorm"),
+        _idot(composed, composed).alias("cnorm"),
     )
 
     # per-query (level, code) → inner-product table + query norm
@@ -688,36 +638,7 @@ def rq_adc_topk(
             (F.first("qnorm") - 2 * F.sum("ip") + F.first("cnorm")).alias("adc")
         )
     )
-    w = Window.partitionBy("query_id").orderBy("adc", F.col(id_col))
-    cand = (
-        adc.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= n_candidates)
-        .select("query_id", F.col(id_col).alias("neighbor_id"))
-    )
-    corp = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__nv"),
-        _norm(F.col(vec_col)).alias("__nn"),
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv2"),
-        _norm(F.col(vec_col)).alias("__qn2"),
-    )
-    scored = (
-        cand.join(corp, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                _dot_decimal(F.col("__qv2"), F.col("__nv"))
-                / (F.col("__qn2") * F.col("__nn"))
-            ).alias("cosine"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w2)).filter(F.col("rank") <= topk)
+    return _adc_rerank(adc, embeddings, queries, n_candidates, topk, id_col, vec_col)
 
 
 def opq_pq_adc_topk(
@@ -744,30 +665,14 @@ def opq_pq_adc_topk(
     by the oracle). Completes the trained-ANN family: coarse (IVF),
     compressed (PQ/ADC), and now the space transform in front of the
     codebooks."""
-    # NULL vectors filtered up front (r10 sweep); zero-norm vectors
-    # too (r11 — no cosine direction for the final re-rank, and the
-    # permutation/codebooks must train on exactly the encoded set)
-    from orderly_spark.operators.similarity import _usable_vec
-
-    embeddings = embeddings.filter(_usable_vec(F.col(vec_col)))
-    queries = queries.filter(_usable_vec(F.col(vec_col)))
-    head = embeddings.select(F.size(vec_col).alias("d")).head()
-    if head is None:
-        raise ValueError("opq_pq_adc_topk: no non-null embedding vectors in input")
-    dim = head["d"]
+    # the usable-vector filter and the width probe run once, here;
+    # the PQ chain behind the permutation reuses both
+    embeddings, queries, dim = _usable_with_dim(embeddings, queries, vec_col, "opq_pq_adc_topk")
     perm = opq_balanced_permutation(
         embeddings, m_subs=m_subs, dim=dim, vec_col=vec_col, scale_bits=var_scale_bits
     )
-    return pq_adc_topk(
+    return _pq_adc(
         opq_permute(embeddings, perm, vec_col),
         opq_permute(queries, perm, vec_col),
-        m_subs=m_subs,
-        codebook_k=codebook_k,
-        iterations=iterations,
-        n_candidates=n_candidates,
-        topk=topk,
-        id_col=id_col,
-        vec_col=vec_col,
-        seed=seed,
-        scale_bits=scale_bits,
+        dim, m_subs, codebook_k, iterations, n_candidates, topk, id_col, vec_col, seed, scale_bits,
     )

@@ -8,72 +8,131 @@
   candidates from bucket equality (multi-probe via bands), exact
   re-rank within candidates only.
 
+Every ANN operator here (and in ``operators/clustering``) is a
+candidate generator in front of one verifier, :func:`_score_topk`:
+exact cosine of each candidate pair, then the per-query top-k by
+(cosine desc, neighbor_id). :func:`_rerank` feeds it a bare
+``(query_id, neighbor_id)`` candidate relation.
+
 Float discipline: dot products are a sequential left-fold over double
-products in a FIXED index order (see _dot_decimal) — deterministic
-across partitionings and mirrored exactly by DuckDB's list_reduce;
-the final cosine is one double division + sqrt.
+products in a FIXED index order (see :func:`_dot`), deterministic
+across partitionings and mirrored exactly by DuckDB's list_reduce
+(:func:`_dot_sql`); the final cosine is one double division + sqrt.
+Each Spark helper has its DuckDB twin beside it (``COSINE_SQL``,
+``TOPK_SQL``, ``USABLE_VEC_SQL``), so the fold-order and tie-order
+contract the oracle gate depends on has one home per engine.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from orderly_spark.operators.text import seeded_md5
+from orderly_spark.operators.relational import topk_per_group
 
 
-def _dot_decimal(a: Column, b: Column) -> Column:
+def _dot(a: Column, b: Column) -> Column:
     """Deterministic dot product of two float arrays: a sequential
     left-fold in index order over double products. The fold order is
     fixed (not partition-dependent), so the result is bit-identical
-    everywhere — and DuckDB's ``list_reduce`` performs the same fold.
-    (A decimal accumulator would be order-independent too, but the
-    double→decimal rounding mode differs between engines.)
-
-    NAME NOTE: '_decimal' is historical — the arithmetic is double,
-    and correctness depends on the FIXED FOLD ORDER, not on decimal
-    exactness. Do not parallelize/reorder this fold; renaming is
-    deferred because the symbol appears inside many graded fn spans
-    (review finding, r8)."""
+    everywhere, and DuckDB's ``list_reduce`` (:func:`_dot_sql`)
+    performs the same fold. Correctness depends on that order, so the
+    fold must never be parallelised or reordered. (A decimal
+    accumulator would be order-independent too, but the double→decimal
+    rounding mode differs between engines.)"""
     prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
     return F.aggregate(prods, F.lit(0.0), lambda acc, p: acc + p)
 
 
 def _dot_sql(a: str, b: str) -> str:
-    """DuckDB twin of :func:`_dot_decimal` — lives HERE, beside its
-    Spark half, so the fold-order parity contract has one home
-    (review finding, r8: it used to live in queries/similarity_battery
-    and was imported battery-to-battery)."""
-    # sequential left-fold in index order — mirrors the Spark-side
-    # F.aggregate fold bit-for-bit ((0.0 + p1) == p1 in IEEE, so the
-    # missing explicit zero accumulator is immaterial)
+    """DuckDB twin of :func:`_dot`, kept beside it so the fold-order
+    contract has one home per engine. ``(0.0 + p1) == p1`` in IEEE, so
+    starting the fold at the first product instead of an explicit zero
+    accumulator gives the same bits."""
     return (
         f"list_reduce(list_transform(range(1, len({a}) + 1), "
         f"i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (x, y) -> x + y)"
     )
 
 
-def _norm(a: Column) -> Column:
-    return F.sqrt(_dot_decimal(a, a))
+def COSINE_SQL(a: str, b: str) -> str:
+    """DuckDB twin of :func:`_cosine`: the cosine of the vector
+    expressions ``a`` and ``b``, one double division of fixed-order
+    folds."""
+    return f"{_dot_sql(a, b)} / (sqrt({_dot_sql(a, a)}) * sqrt({_dot_sql(b, b)}))"
+
+
+def TOPK_SQL(
+    scored: str, k: int, score: str = "cosine", cols: str = "query_id, neighbor_id, cosine, rank"
+) -> str:
+    """DuckDB twin of :func:`_rank`: ``cols`` of the top ``k`` rows of
+    relation ``scored`` per ``query_id`` by (``score`` desc,
+    ``neighbor_id``), with ``rank`` as BIGINT."""
+    return f"""SELECT {cols} FROM (
+      SELECT *, CAST(ROW_NUMBER() OVER (
+        PARTITION BY query_id ORDER BY {score} DESC, neighbor_id) AS BIGINT) AS rank
+      FROM {scored}) WHERE rank <= {k}"""
 
 
 def _usable_vec(col: Column) -> Column:
-    """Entry guard for every cosine-scoring op (r11 adversarial-
-    embeddings sweep): NULL vectors (failed upstream encodes — the r10
-    class) and ZERO-NORM vectors (all-zero / all-negative-zero — e.g.
-    a zeroed buffer from a crashed encoder) are filtered at op entry.
-    A zero vector has no cosine direction; under ANSI the norm
-    division raised DIVIDE_BY_ZERO and one corrupt row aborted the
-    whole job at any scale. IEEE note: ``x != 0.0`` is false for
-    -0.0, so an all-negative-zero vector is correctly treated as
-    zero-norm — in both engines."""
+    """Entry guard of every cosine-scoring op: NULL vectors (failed
+    upstream encodes) and ZERO-NORM vectors (all-zero or
+    all-negative-zero, e.g. a zeroed buffer from a crashed encoder) are
+    filtered at op entry. A zero vector has no cosine direction; under
+    ANSI its norm division raises DIVIDE_BY_ZERO, so one corrupt row
+    would abort the whole job. IEEE note: ``x != 0.0`` is false for
+    -0.0, so an all-negative-zero vector counts as zero-norm in both
+    engines."""
     return col.isNotNull() & F.exists(col, lambda x: x != F.lit(0.0))
 
 
-#: DuckDB twin of :func:`_usable_vec` — keep beside the Spark half so
-#: the parity contract has one home (the _dot_sql convention). Format
-#: with the column name, e.g. ``USABLE_VEC_SQL.format(c="embedding")``.
+#: DuckDB twin of :func:`_usable_vec`. Format with the column name,
+#: e.g. ``USABLE_VEC_SQL.format(c="embedding")``.
 USABLE_VEC_SQL = "({c} IS NOT NULL AND len(list_filter({c}, x -> x <> 0)) > 0)"
+
+
+def _vec_side(df: DataFrame, id_col: str, vec_col: str, id_as: str, p: str, *extra: Column) -> DataFrame:
+    """One side of a cosine pair: ``id_as``, the vector as ``{p}v``,
+    its norm as ``{p}n``, then ``extra``. The norm is a per-row
+    quantity, so it is folded once per input row here rather than once
+    per scored pair; the cosine's operands, and so its bits, are the
+    same either way."""
+    v = F.col(vec_col)
+    norm = F.sqrt(_dot(v, v))
+    return df.select(F.col(id_col).alias(id_as), v.alias(f"{p}v"), norm.alias(f"{p}n"), *extra)
+
+
+def _cosine(a: str = "__q", b: str = "__c") -> Column:
+    """Cosine of a pair whose sides :func:`_vec_side` projected with
+    prefixes ``a`` and ``b``."""
+    return _dot(F.col(f"{a}v"), F.col(f"{b}v")) / (F.col(f"{a}n") * F.col(f"{b}n"))
+
+
+def _rank(scored: DataFrame, k: int, score: str = "cosine") -> DataFrame:
+    """Top ``k`` rows of ``scored`` per ``query_id`` by (``score``
+    desc, ``neighbor_id``), numbered in ``rank``. ``neighbor_id`` is
+    unique per query, so ties on the score resolve the same way in
+    every partitioning and in the oracle (:func:`TOPK_SQL`)."""
+    return topk_per_group(scored, ["query_id"], [F.desc(score), F.col("neighbor_id")], k, rank_col="rank")
+
+
+def _score_topk(cand: DataFrame, k: int) -> DataFrame:
+    """The verifier every ANN operator ends in: exact cosine of each
+    candidate pair of ``cand`` (``query_id``/``__qv``/``__qn`` beside
+    ``neighbor_id``/``__cv``/``__cn``), then the per-query top ``k``.
+    Output (query_id, neighbor_id, cosine, rank)."""
+    return _rank(cand.select("query_id", "neighbor_id", _cosine().alias("cosine")), k)
+
+
+def _rerank(
+    pairs: DataFrame, embeddings: DataFrame, queries: DataFrame, id_col: str, vec_col: str, k: int
+) -> DataFrame:
+    """Exact re-rank of a ``(query_id, neighbor_id)`` candidate
+    relation: both ids meet their vectors (the query side broadcast),
+    then :func:`_score_topk`."""
+    corpus = _vec_side(embeddings, id_col, vec_col, "neighbor_id", "__c")
+    q = _vec_side(queries, id_col, vec_col, "query_id", "__q")
+    return _score_topk(pairs.join(corpus, "neighbor_id").join(F.broadcast(q), "query_id"), k)
 
 
 def cosine_topk(
@@ -98,38 +157,14 @@ def cosine_topk(
     never scored then discarded."""
     embeddings = embeddings.filter(_usable_vec(F.col(vec_col)))
     queries = queries.filter(_usable_vec(F.col(vec_col)))
-    # r15 (optimization round, guide §1.2 "per-task work"): norms are
-    # per-ROW quantities — computing them inside the pair expression
-    # re-folds each vector once per PAIR (3·d fold work per candidate
-    # instead of d). Projected onto each side before the join, the
-    # cosine denominator is a double multiply; the value is
-    # bit-identical (same fixed-order fold, same operands). Applied to
-    # every per-pair cosine site in this module.
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        _norm(F.col(vec_col)).alias("__qn"),
-        *[F.col(c).alias(f"__q_{c}") for c in match_cols],
+    q = _vec_side(
+        queries, id_col, vec_col, "query_id", "__q", *[F.col(mc).alias(f"__q_{mc}") for mc in match_cols]
     )
-    c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        _norm(F.col(vec_col)).alias("__cn"),
-        *match_cols,
-    )
+    c = _vec_side(embeddings, id_col, vec_col, "neighbor_id", "__c", *[F.col(mc) for mc in match_cols])
     cond = F.col("query_id") != F.col("neighbor_id")
     for mc in match_cols:
         cond = cond & (F.col(f"__q_{mc}") == F.col(mc))
-    scored = (
-        c.join(F.broadcast(q), cond)
-        .withColumn(
-            "cosine",
-            _dot_decimal(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")),
-        )
-        .select("query_id", "neighbor_id", "cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _score_topk(c.join(F.broadcast(q), cond), k)
 
 
 def _hyperplane(dim: int, seed: int, plane: int) -> list[float]:
@@ -193,43 +228,27 @@ def lsh_cosine_topk(
     bits_per_band = num_planes // bands
     mask = (1 << bits_per_band) - 1
 
-    def banded(df: DataFrame, idc: str) -> DataFrame:
+    def banded(df: DataFrame, idc: str, p: str) -> DataFrame:
         sk = sign_sketch(F.col(vec_col), dim, num_planes=num_planes, seed=seed)
-        # per-row norm projected beside the vector (see cosine_topk) —
-        # computed once per input row, carried through the band explode
-        d = df.select(
-            F.col(id_col).alias(idc),
-            F.col(vec_col).alias(f"__v_{idc}"),
-            _norm(F.col(vec_col)).alias(f"__n_{idc}"),
-            sk.alias("__sk"),
-        )
+        d = _vec_side(df, id_col, vec_col, idc, p, sk.alias("__sk"))
         return d.select(
             idc,
-            f"__v_{idc}",
-            f"__n_{idc}",
+            f"{p}v",
+            f"{p}n",
             F.posexplode(
                 F.array(*[F.shiftright(F.col("__sk"), b * bits_per_band).bitwiseAND(F.lit(mask)) for b in range(bands)])
             ).alias("band_idx", "band_bits"),
         )
 
-    qb = banded(queries, "query_id")
-    cb = banded(embeddings, "neighbor_id")
+    qb = banded(queries, "query_id", "__q")
+    cb = banded(embeddings, "neighbor_id", "__c")
     cand = (
         cb.join(F.broadcast(qb), ["band_idx", "band_bits"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id", "neighbor_id",
-            "__v_query_id", "__v_neighbor_id", "__n_query_id", "__n_neighbor_id",
-        )
+        .select("query_id", "neighbor_id", "__qv", "__cv", "__qn", "__cn")
         .distinct()
     )
-    scored = cand.withColumn(
-        "cosine",
-        _dot_decimal(F.col("__v_query_id"), F.col("__v_neighbor_id"))
-        / (F.col("__n_query_id") * F.col("__n_neighbor_id")),
-    ).select("query_id", "neighbor_id", "cosine")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _score_topk(cand, k)
 
 
 def pseudo_centroids(dim: int, n_cells: int, seed: int = 23) -> list[list[float]]:
@@ -284,25 +303,14 @@ def ivf_cosine_topk(
     embeddings = embeddings.filter(_usable_vec(F.col(vec_col)))
     queries = queries.filter(_usable_vec(F.col(vec_col)))
     cents = pseudo_centroids(dim, n_cells, seed)
-    # r16 (VERDICT r15 item 4) — per-row corpus norms KEPT (the r15
-    # shape), after a 3-variant × 3-regime A/B at sf0.1 AND the 10×
-    # probe corpus (1 / 5 / 400 queries; identical outputs everywhere;
-    # quiet-host min-of-3, OPTIMIZATION_r16.md has the table):
-    #   A (norm per corpus row, below the join — this shape): flat at
-    #     low/bench volume, BEST at high volume (2.4-2.7 s vs 3.0-3.8).
-    #   B (norm inside the cosine, per candidate): ~0.1 s better at
-    #     low volume, ~25% worse at high volume (refolds per match).
-    #   C (broadcast semi join on the probed cells, then norm): never
-    #     best — the extra broadcast stage costs more than the skipped
-    #     folds save at every measured regime.
-    # The r15→r15-driver "regression" on this slot was host drift (the
-    # driver's own 8-core run timed it flat), not the norm projection.
-    c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        _norm(F.col(vec_col)).alias("__cn"),
-        ivf_cell(F.col(vec_col), cents).alias("cell"),
-    )
+    # Corpus norms are projected per corpus row, below the join: at low
+    # query volume this costs about the same as folding them per
+    # candidate, and at high volume it is clearly cheaper, because a
+    # corpus row meets every query probing its cell. A broadcast semi
+    # join on the probed cells ahead of the norm measured slower at
+    # every volume.
+    cell = ivf_cell(F.col(vec_col), cents).alias("cell")
+    c = _vec_side(embeddings, id_col, vec_col, "neighbor_id", "__c", cell)
     qdots = _cell_dots(F.col(vec_col), cents)
     ranked = F.array_sort(
         F.zip_with(
@@ -316,19 +324,9 @@ def ivf_cosine_topk(
         .otherwise(1),
     )
     probes = F.transform(F.slice(ranked, 1, n_probe), lambda s: s["i"])
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        _norm(F.col(vec_col)).alias("__qn"),
-        F.explode(probes).alias("cell"),
-    )
+    q = _vec_side(queries, id_col, vec_col, "query_id", "__q", F.explode(probes).alias("cell"))
     cand = c.join(F.broadcast(q), "cell").filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = cand.withColumn(
-        "cosine",
-        _dot_decimal(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")),
-    ).select("query_id", "neighbor_id", "cosine")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _score_topk(cand, k)
 
 
 def semantic_dedup_stats(
@@ -350,16 +348,11 @@ def semantic_dedup_stats(
     pair volume by ~k, the SemDeDup design point; raise k (k-means-
     trained centroids via operators/clustering.kmeans_fit) for sharper
     balls with the SAME plan shape."""
-    cells = embeddings.filter(_usable_vec(F.col(vec_col))).select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("ev"),
-        _norm(F.col(vec_col)).alias("en"),
-        ivf_cell(F.col(vec_col), cents).alias("cell"),
-    )
+    usable = embeddings.filter(_usable_vec(F.col(vec_col)))
+    cell = ivf_cell(F.col(vec_col), cents).alias("cell")
+    cells = _vec_side(usable, id_col, vec_col, "vec_id", "e", cell)
     a, b = cells.alias("a"), cells.alias("b")
-    cos = _dot_decimal(F.col("a.ev"), F.col("b.ev")) / (
-        F.col("a.en") * F.col("b.en")
-    )
+    cos = _cosine("a.e", "b.e")
     dropped = (
         a.join(b, (F.col("a.cell") == F.col("b.cell")) & (F.col("a.vec_id") < F.col("b.vec_id")))
         .filter(cos >= tau)
@@ -372,13 +365,10 @@ def semantic_dedup_stats(
         F.max("idb").alias("max_dropped"),
     )
     s = cells.groupBy("cell").agg(F.count(F.lit(1)).alias("n_vecs"))
-    # r15 (optimization round): both aggregates are CELL-count-sized —
-    # bounded by len(cents), a driver-known list — but d derives from
-    # the within-cell self-join, whose inflated size estimate made
-    # Catalyst plan this tail join as a SortMergeJoin (2 sorts + an
-    # exchange on each side, seen in the registry-wide plan sweep).
-    # Broadcasting the k-row side is safe at ANY corpus scale because
-    # k is the centroid count, not a data-dependent quantity.
+    # Both aggregates have one row per cell, so at most len(cents)
+    # rows at any corpus scale. d derives from the within-cell self
+    # join, whose inflated size estimate would otherwise plan this tail
+    # join as a sort-merge join; the broadcast states the bound.
     return s.join(F.broadcast(d), "cell", "left").select(
         "cell",
         "n_vecs",

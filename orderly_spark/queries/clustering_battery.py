@@ -1,7 +1,10 @@
 """Clustering battery: k-means (Lloyd's) over the embeddings table,
 value-gated — the DuckDB oracle replays the exact same quantized
 integer iterations (init → assign → update, twice → final assign), so
-the driver hash-compares a full clustering, not just row counts.
+the driver hash-compares a full clustering, not just row counts — and
+the trained-index ANN family on top of it (IVF, PQ, OPQ, RQ), whose
+oracles end in the same ``COSINE_SQL`` re-rank and ``TOPK_SQL`` rank
+as the similarity battery's.
 """
 
 from __future__ import annotations
@@ -9,7 +12,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from orderly_spark.operators.clustering import DIST_SQL, QUANTIZE_SQL, kmeans_fit
+from orderly_spark.operators.clustering import (
+    DIST_SQL,
+    IDOT_SQL,
+    QUANTIZE_SQL,
+    kmeans_fit,
+    kmeans_ivf_topk,
+    opq_pq_adc_topk,
+    pq_adc_topk,
+    rq_adc_topk,
+)
+from orderly_spark.operators.similarity import COSINE_SQL, TOPK_SQL, USABLE_VEC_SQL
 from orderly_spark.registry import query
 from orderly_spark.tables import load
 
@@ -21,11 +34,9 @@ _DIM = 64
 
 def _assign_cte(src_cents: str, out: str, p: str = "") -> str:
     """One assignment pass: nearest centroid, ties to smallest cell.
-    ``p`` prefixes the source-rows CTE name (r9: lets the PQ oracle
-    train per-subspace codebooks from the same chain; the prefixed
-    relation is re-aliased to ``q`` so the column qualifiers are
-    shared, and the default emits byte-identical text to the
-    pre-parameter version — pinned by test)."""
+    ``p`` prefixes the source-rows CTE name, so the PQ oracle trains
+    per-subspace codebooks from the same chain; the prefixed relation
+    is re-aliased to ``q`` so the column qualifiers are shared."""
     frm = f"{p}q q" if p else "q"
     return f"""{out} AS (
       SELECT vec_id, qv, cell FROM (
@@ -40,10 +51,10 @@ def _assign_cte(src_cents: str, out: str, p: str = "") -> str:
 def _update_cte(src_assign: str, out: str, dim: int = _DIM) -> str:
     """One centroid update: exact integer floor-mean per (cell, dim).
     ``(s - pmod(s, c))`` is exactly divisible by ``c``, and the
-    division stays INTEGER (`//`) end-to-end — mirroring Spark's
-    ``div`` — so the two engines agree at any magnitude, not just
-    below 2^53 (review finding: the old DOUBLE `/` + CAST relied on
-    rounding behaviour that differs between engines past 2^53)."""
+    division stays INTEGER (`//`) end-to-end, mirroring Spark's
+    ``div``, so the two engines agree at any magnitude, not just
+    below 2^53 (a DOUBLE `/` + CAST would rely on rounding behaviour
+    that differs between engines past 2^53)."""
     return f"""{out} AS (
       SELECT cell, list(m ORDER BY pos) AS cv FROM (
         SELECT cell, pos,
@@ -66,20 +77,17 @@ def _training_ctes(
     where: str = "embedding IS NOT NULL",
 ) -> tuple[list[str], str]:
     """The k-means training WITH-chain (quantize -> seeded init ->
-    assign/update x iterations -> final assignment) shared by BOTH
-    oracle builders — one definition so the two gates can never drift
-    (review finding: it used to be duplicated verbatim). The r9
-    parameters let the PQ oracle reuse the chain per subspace
-    (``slice_sql`` carves the subvector, ``p`` prefixes every CTE
-    name); ``src`` (r10) points the chain at a derived corpus CTE —
-    the OPQ oracle trains on the permuted vectors. All defaults emit
-    byte-identical text to the pre-parameter version (pinned by
-    test)."""
+    assign/update x iterations -> final assignment) shared by every
+    trained-index oracle, one definition so the gates cannot drift.
+    ``slice_sql`` carves a subvector and ``p`` prefixes every CTE
+    name, so the PQ oracle reuses the chain per subspace; ``src``
+    points the chain at a derived corpus CTE (the OPQ oracle trains on
+    the permuted vectors, the RQ oracle on residuals)."""
     ctes = [
-        # default `where` mirrors kmeans_fit's r10 null-vector filter
+        # default `where` mirrors kmeans_fit's null-vector filter
         # (un-encodable rows receive no assignment on either side); the
-        # ANN callers pass _USABLE — the r11 zero-norm guard — to match
-        # their ops' _usable_vec entry filters
+        # ANN callers pass _USABLE, the zero-norm guard, to match their
+        # ops' _usable_vec entry filters
         f"""{p}q AS (SELECT vec_id, {QUANTIZE_SQL(slice_sql)} AS qv FROM {src}
       WHERE {where})""",
         f"""{p}c0 AS (
@@ -125,12 +133,8 @@ def s_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     return assigned.select("vec_id", F.col("cell").cast("int").alias("cell"))
 
 
-from orderly_spark.operators.clustering import kmeans_ivf_topk  # noqa: E402
-from orderly_spark.operators.similarity import _dot_sql  # noqa: E402
-from orderly_spark.operators.similarity import USABLE_VEC_SQL  # noqa: E402
-
-#: the r11 zero-norm + null entry predicate, oracle spelling (one home:
-#: operators/similarity.USABLE_VEC_SQL beside its Spark twin)
+#: the null + zero-norm entry predicate, oracle spelling of the
+#: operators' _usable_vec guard
 _USABLE = USABLE_VEC_SQL.format(c="embedding")
 
 _NPROBE = 2
@@ -151,22 +155,13 @@ def _ivf_kmeans_oracle() -> str:
         CROSS JOIN {cents} c) t
       WHERE rn <= {_NPROBE})""",
         f"""scored AS (
-      SELECT p.query_id, a.vec_id AS neighbor_id,
-             {_dot_sql('p.quv', 'e2.embedding')}
-               / (sqrt({_dot_sql('p.quv', 'p.quv')}) * sqrt({_dot_sql('e2.embedding', 'e2.embedding')}))
-               AS cosine
+      SELECT p.query_id, a.vec_id AS neighbor_id, {COSINE_SQL('p.quv', 'e2.embedding')} AS cosine
       FROM probes p
       JOIN afinal a USING (cell)
       JOIN embeddings e2 ON a.vec_id = e2.vec_id
       WHERE p.query_id <> a.vec_id)""",
     ])
-    return (
-        "WITH " + ",\n".join(ctes) + "\n"
-        f"""SELECT query_id, neighbor_id, cosine, rank FROM (
-      SELECT *, CAST(ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rank
-      FROM scored) WHERE rank <= {_TOPK}"""
-    )
+    return "WITH " + ",\n".join(ctes) + "\n" + TOPK_SQL("scored", _TOPK)
 
 
 @query(
@@ -192,10 +187,8 @@ def s_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Product quantization + asymmetric distance computation (r9)
+# Product quantization + asymmetric distance computation
 # ---------------------------------------------------------------------------
-
-from orderly_spark.operators.clustering import pq_adc_topk  # noqa: E402
 
 _PQ_M = 2
 _PQ_SUB = _DIM // _PQ_M
@@ -203,27 +196,36 @@ _PQ_SEED = 47
 _PQ_CAND = 10
 
 
+def _shortlist_cte(out: str, adc: str, n: int) -> str:
+    """The ADC shortlist: the ``n`` best ``(query_id, vec_id)`` rows of
+    ``adc`` per query by (adc, vec_id), as ``(query_id,
+    neighbor_id)``; the twin of clustering._adc_rerank's first step."""
+    return f"""{out} AS (
+      SELECT query_id, vec_id AS neighbor_id FROM (
+        SELECT *, ROW_NUMBER() OVER (
+          PARTITION BY query_id ORDER BY adc, vec_id) AS rn
+        FROM {adc}) t
+      WHERE rn <= {n})"""
+
+
 def _pq_oracle(src: str = "embeddings", seed: int = _PQ_SEED, lead_ctes: tuple[str, ...] = ()) -> str:
-    usable = USABLE_VEC_SQL.format(c="embedding")
     """Replays the ENTIRE PQ chain in DuckDB: per-subspace k-means
     training (the shared _training_ctes chain, prefixed per subspace),
     corpus encoding (the final assignment IS the code), the per-query
     (m, code) -> integer distance table, the ADC sum, candidate top-N
     by (adc, id), and the exact-cosine re-rank.
 
-    ``src``/``lead_ctes`` (r10): the OPQ gate prepends its
-    permutation CTEs and points the whole chain — training, queries,
-    AND the re-rank vectors (the cosine fold must run in permuted
-    component order, exactly like the Spark side) — at the permuted
-    corpus. Defaults emit byte-identical text to the r9 version
-    (pinned by test)."""
+    ``src``/``lead_ctes``: the OPQ gate prepends its permutation
+    CTEs and points the whole chain (training, queries, AND the
+    re-rank vectors: the cosine fold must run in permuted component
+    order, exactly like the Spark side) at the permuted corpus."""
     ctes: list[str] = list(lead_ctes)
     cents: list[str] = []
     for m in range(_PQ_M):
         sl = f"list_slice(embedding, {m * _PQ_SUB + 1}, {(m + 1) * _PQ_SUB})"
         ctes_m, cents_m = _training_ctes(
             slice_sql=sl, seed=seed + m, dim=_PQ_SUB, p=f"s{m}_", src=src,
-            where=usable,
+            where=_USABLE,
         )
         ctes.extend(ctes_m)
         cents.append(cents_m)
@@ -250,7 +252,7 @@ def _pq_oracle(src: str = "embeddings", seed: int = _PQ_SEED, lead_ctes: tuple[s
             f"""pq_q AS (
       SELECT vec_id AS query_id, embedding AS qemb,
              {qsubs}
-      FROM {src} WHERE vec_id < 5 AND {usable})""",
+      FROM {src} WHERE vec_id < 5 AND {_USABLE})""",
             f"""pq_dtable AS (
       SELECT y.query_id, c.m, c.cell AS code,
              CASE {dcase} END AS d
@@ -260,29 +262,15 @@ def _pq_oracle(src: str = "embeddings", seed: int = _PQ_SEED, lead_ctes: tuple[s
       FROM pq_codes k JOIN pq_dtable dt ON k.m = dt.m AND k.code = dt.code
       WHERE k.vec_id <> dt.query_id
       GROUP BY dt.query_id, k.vec_id)""",
-            f"""pq_cand AS (
-      SELECT query_id, vec_id AS neighbor_id FROM (
-        SELECT *, ROW_NUMBER() OVER (
-          PARTITION BY query_id ORDER BY adc, vec_id) AS rn
-        FROM pq_adc) t
-      WHERE rn <= {_PQ_CAND})""",
+            _shortlist_cte("pq_cand", "pq_adc", _PQ_CAND),
             f"""pq_scored AS (
-      SELECT p.query_id, p.neighbor_id,
-             {_dot_sql('y.qemb', 'e2.embedding')}
-               / (sqrt({_dot_sql('y.qemb', 'y.qemb')}) * sqrt({_dot_sql('e2.embedding', 'e2.embedding')}))
-               AS cosine
+      SELECT p.query_id, p.neighbor_id, {COSINE_SQL('y.qemb', 'e2.embedding')} AS cosine
       FROM pq_cand p
       JOIN pq_q y USING (query_id)
       JOIN {src} e2 ON p.neighbor_id = e2.vec_id)""",
         ]
     )
-    return (
-        "WITH " + ",\n".join(ctes) + "\n"
-        f"""SELECT query_id, neighbor_id, cosine, rank FROM (
-      SELECT *, CAST(ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rank
-      FROM pq_scored) WHERE rank <= {_TOPK}"""
-    )
+    return "WITH " + ",\n".join(ctes) + "\n" + TOPK_SQL("pq_scored", _TOPK)
 
 
 @query(
@@ -318,10 +306,8 @@ def s_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# OPQ-lite: variance-balanced dimension permutation in front of PQ (r10)
+# OPQ-lite: variance-balanced dimension permutation in front of PQ
 # ---------------------------------------------------------------------------
-
-from orderly_spark.operators.clustering import opq_pq_adc_topk  # noqa: E402
 
 _OPQ_SEED = 53
 _OPQ_VARBITS = 10
@@ -363,10 +349,8 @@ def _opq_oracle() -> str:
 
 # ---------------------------------------------------------------------------
 # Residual quantization: stacked full-width codebooks over successive
-# residuals (r12 — the round's sanctioned new op)
+# residuals
 # ---------------------------------------------------------------------------
-
-from orderly_spark.operators.clustering import IDOT_SQL, rq_adc_topk  # noqa: E402
 
 _RQ_LEVELS = 2
 _RQ_SEED = 59
@@ -385,11 +369,10 @@ def _rq_oracle() -> str:
     ‖q‖² − 2Σ⟨q,c_ℓ⟩ + cnorm from per-level integer inner-product
     tables, candidate top-N by (adc, id), and the exact-cosine
     re-rank."""
-    usable = _USABLE
     ctes: list[str] = []
     cents: list[str] = []
     # level 0: train on embeddings
-    ctes0, cents0 = _training_ctes(p="rq0_", seed=_RQ_SEED, where=usable)
+    ctes0, cents0 = _training_ctes(p="rq0_", seed=_RQ_SEED, where=_USABLE)
     ctes.extend(ctes0)
     cents.append(cents0)
     # residual corpus: qv − assigned centroid, de-scaled to DOUBLE
@@ -420,7 +403,7 @@ def _rq_oracle() -> str:
             f"""rq_q AS (
       SELECT vec_id AS query_id, embedding AS qemb,
              {QUANTIZE_SQL('embedding')} AS qq
-      FROM embeddings WHERE vec_id < 5 AND {usable})""",
+      FROM embeddings WHERE vec_id < 5 AND {_USABLE})""",
             f"""rq_books AS (
       SELECT 0 AS lvl, cell, cv FROM {cents0}
       UNION ALL
@@ -438,29 +421,15 @@ def _rq_oracle() -> str:
       JOIN rq_dtable d0 ON d0.query_id = y.query_id AND d0.lvl = 0 AND d0.code = e.code0
       JOIN rq_dtable d1 ON d1.query_id = y.query_id AND d1.lvl = 1 AND d1.code = e.code1
       WHERE e.vec_id <> y.query_id)""",
-            f"""rq_cand AS (
-      SELECT query_id, vec_id AS neighbor_id FROM (
-        SELECT *, ROW_NUMBER() OVER (
-          PARTITION BY query_id ORDER BY adc, vec_id) AS rn
-        FROM rq_adc) t
-      WHERE rn <= {_RQ_CAND})""",
+            _shortlist_cte("rq_cand", "rq_adc", _RQ_CAND),
             f"""rq_scored AS (
-      SELECT p.query_id, p.neighbor_id,
-             {_dot_sql('y.qemb', 'e2.embedding')}
-               / (sqrt({_dot_sql('y.qemb', 'y.qemb')}) * sqrt({_dot_sql('e2.embedding', 'e2.embedding')}))
-               AS cosine
+      SELECT p.query_id, p.neighbor_id, {COSINE_SQL('y.qemb', 'e2.embedding')} AS cosine
       FROM rq_cand p
       JOIN rq_q y USING (query_id)
       JOIN embeddings e2 ON p.neighbor_id = e2.vec_id)""",
         ]
     )
-    return (
-        "WITH " + ",\n".join(ctes) + "\n"
-        f"""SELECT query_id, neighbor_id, cosine, rank FROM (
-      SELECT *, CAST(ROW_NUMBER() OVER (
-        PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rank
-      FROM rq_scored) WHERE rank <= {_TOPK}"""
-    )
+    return "WITH " + ",\n".join(ctes) + "\n" + TOPK_SQL("rq_scored", _TOPK)
 
 
 @query(
@@ -470,9 +439,7 @@ def _rq_oracle() -> str:
     survey="ann-rq[abs],kmeans[abs]",
 )
 def s_rq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Residual-quantized ANN, end to end (r12, the round's sanctioned
-    new op — the r11 verdict's item 6 named RQ as the next trained-ANN
-    family member): a level-0 codebook (k=4, 2 exact integer Lloyd
+    """Residual-quantized ANN, end to end: a level-0 codebook (k=4, 2 exact integer Lloyd
     iterations) is trained on the full 64-dim vectors, a level-1
     codebook on the exact BIGINT residuals, the corpus is encoded to 2
     stacked codes + one precomputed composed-norm scalar per vector,
@@ -505,13 +472,12 @@ def s_rq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="ann-pq[abs],kmeans[abs]",
 )
 def s_opq_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ/ADC ANN behind an OPQ-lite space transform (r10, the round's
-    one sanctioned new op — the builder's own r9 ledger named OPQ as
-    the missing trained-ANN family member): a variance-balancing
-    dimension PERMUTATION (the structured, integer-exact member of the
-    OPQ family) is trained from corpus statistics in one map-side
-    aggregate, applied map-side to corpus and queries, and the full
-    PQ train->encode->ADC->re-rank chain runs in the permuted space.
+    """PQ/ADC ANN behind an OPQ-lite space transform: a
+    variance-balancing dimension PERMUTATION (the structured,
+    integer-exact member of the OPQ family) is trained from corpus
+    statistics in one map-side aggregate, applied map-side to corpus
+    and queries, and the full PQ train->encode->ADC->re-rank chain
+    runs in the permuted space.
     The oracle replays permutation training too — the learned space
     transform itself is hash-compared, same discipline as the k-means
     and PQ gates."""

@@ -1,10 +1,12 @@
 """Similarity-search battery over ``embeddings`` (array<float>):
 brute-force cosine top-k with a value-level DuckDB oracle (dot
-products as ORDER-FIXED sequential double folds — bit-identical
+products as ORDER-FIXED sequential double folds, bit-identical
 across engines because the fold order is pinned, NOT because the
-arithmetic is decimal; see operators/similarity._dot_decimal), plus
-the LSH-bucketed scale path (rows-only check — approximate by
-design) and an embedding near-dup query.
+arithmetic is decimal; see operators/similarity._dot), the LSH- and
+IVF-bucketed scale paths, int8-quantized scoring, an embedding
+near-dup query and semantic dedup. Every oracle spells its cosine
+with ``COSINE_SQL`` and its final rank with ``TOPK_SQL``, the DuckDB
+twins of the operators' one verifier.
 """
 
 from __future__ import annotations
@@ -12,19 +14,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from orderly_spark.operators.similarity import cosine_topk, lsh_cosine_topk
+from orderly_spark.operators.clustering import IDOT_SQL, _idot
+from orderly_spark.operators.similarity import (
+    COSINE_SQL,
+    TOPK_SQL,
+    USABLE_VEC_SQL,
+    _cosine,
+    _dot_sql,
+    _hyperplane,
+    _rank,
+    _usable_vec,
+    _vec_side,
+    cosine_topk,
+    ivf_cosine_topk,
+    lsh_cosine_topk,
+    pseudo_centroids,
+    semantic_dedup_stats,
+)
 from orderly_spark.registry import query
 from orderly_spark.tables import load
 
-
-# the SQL twin lives beside its Spark half in operators/similarity
-# (moved there in r8; generated oracle texts are byte-identical)
-from orderly_spark.operators.similarity import _dot_sql  # noqa: E402
-from orderly_spark.operators.similarity import USABLE_VEC_SQL  # noqa: E402
-
-#: r11 zero-norm + null entry predicate (oracle spelling; the Spark
-#: twin is operators/similarity._usable_vec, applied at every
-#: cosine-scoring op's entry after the adversarial-embeddings sweep)
+#: the null + zero-norm entry predicate, oracle spelling of the
+#: operators' _usable_vec guard
 _USABLE = USABLE_VEC_SQL.format(c="embedding")
 
 
@@ -35,14 +46,10 @@ _USABLE = USABLE_VEC_SQL.format(c="embedding")
                WHERE vec_id < 5 AND {_USABLE}),
     c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings WHERE {_USABLE}),
     scored AS (
-      SELECT query_id, neighbor_id,
-             {_dot_sql('qv', 'cv')} / (sqrt({_dot_sql('qv', 'qv')}) * sqrt({_dot_sql('cv', 'cv')})) AS cosine
+      SELECT query_id, neighbor_id, {COSINE_SQL('qv', 'cv')} AS cosine
       FROM q, c WHERE query_id != neighbor_id
     )
-    SELECT query_id, neighbor_id, cosine, rank FROM (
-      SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rank
-      FROM scored
-    ) WHERE rank <= 3
+    {TOPK_SQL('scored', 3)}
     """,
     category="similarity",
     survey="ann-bruteforce[abs]",
@@ -50,10 +57,10 @@ _USABLE = USABLE_VEC_SQL.format(c="embedding")
 def s_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-3 for 5 query vectors: broadcast queries, one
     corpus scan, per-query top-k. Dot products are order-FIXED
-    sequential double folds (not decimal — review finding corrected
-    the old claim here): the ranking is bit-identical to the oracle
-    because both engines fold in the same index order, so the fold
-    must never be parallelized or reordered."""
+    sequential double folds (not decimal): the ranking is
+    bit-identical to the oracle because both engines fold in the same
+    index order, so the fold must never be parallelized or
+    reordered."""
     e = load(spark, sf_dir, "embeddings", fan_out=True)
     q = e.filter(F.col("vec_id") < 5)
     out = cosine_topk(e, q, id_col="vec_id", vec_col="embedding", k=3)
@@ -67,10 +74,8 @@ def _lsh_oracle() -> str:
     ``dot >= 0`` is bit-identical because both engines run the same
     fixed-order fold; band bits come off the sketch with integer
     div/mod, exactly Spark's shiftright+mask on a non-negative int.
-    Same replayed-training discipline as _ivf_oracle / the PQ oracle
-    (r10, closing the registry's last never-oracled query)."""
-    from orderly_spark.operators.similarity import _hyperplane
-
+    Same replayed-training discipline as _ivf_oracle / the PQ
+    oracle."""
     planes = [_hyperplane(64, 11, p) for p in range(16)]
     plane_cols = ", ".join(
         f"[{', '.join(repr(x) for x in pl)}]::DOUBLE[] AS p{p}" for p, pl in enumerate(planes)
@@ -97,18 +102,12 @@ def _lsh_oracle() -> str:
       WHERE q.vec_id < 5 AND q.vec_id != c.vec_id
     ),
     scored AS (
-      SELECT query_id, neighbor_id,
-             {_dot_sql('qe.embedding', 'ce.embedding')}
-               / (sqrt({_dot_sql('qe.embedding', 'qe.embedding')})
-                  * sqrt({_dot_sql('ce.embedding', 'ce.embedding')})) AS cosine
+      SELECT query_id, neighbor_id, {COSINE_SQL('qe.embedding', 'ce.embedding')} AS cosine
       FROM cand
       JOIN embeddings qe ON qe.vec_id = cand.query_id
       JOIN embeddings ce ON ce.vec_id = cand.neighbor_id
     )
-    SELECT query_id, neighbor_id, cosine, rank FROM (
-      SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rank
-      FROM scored
-    ) WHERE rank <= 3
+    {TOPK_SQL('scored', 3)}
     """
 
 
@@ -124,7 +123,7 @@ def s_lsh_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The 100 TB path — corpus sketch is map-side, join is equi.
     Approximate vs BRUTE FORCE, but deterministic in itself: the
     seeded buckets and fixed-order folds replay exactly in SQL, so
-    the gate checks exact values (r10 — previously rows-only)."""
+    the gate checks exact values."""
     e = load(spark, sf_dir, "embeddings", fan_out=True)
     q = e.filter(F.col("vec_id") < 5)
     out = lsh_cosine_topk(e, q, dim=64, id_col="vec_id", vec_col="embedding", k=3)
@@ -137,9 +136,9 @@ def s_lsh_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH v AS (SELECT vec_id, label, embedding AS ev FROM embeddings
                WHERE vec_id < 120 AND {_USABLE})
     SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.label AS label_a, b.label AS label_b,
-           {_dot_sql('a.ev', 'b.ev')} / (sqrt({_dot_sql('a.ev', 'a.ev')}) * sqrt({_dot_sql('b.ev', 'b.ev')})) AS cosine
+           {COSINE_SQL('a.ev', 'b.ev')} AS cosine
     FROM v a JOIN v b ON a.vec_id < b.vec_id
-    WHERE {_dot_sql('a.ev', 'b.ev')} / (sqrt({_dot_sql('a.ev', 'a.ev')}) * sqrt({_dot_sql('b.ev', 'b.ev')})) >= 0.90
+    WHERE {COSINE_SQL('a.ev', 'b.ev')} >= 0.90
     """,
     category="similarity",
     survey="embedding-neardup[abs]",
@@ -148,45 +147,26 @@ def s_embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cosine >= 0.90) on a
     bounded id range — the re-rank stage of embedding dedup. (The
     unbounded version goes through the LSH candidate generator.)"""
-    from orderly_spark.operators.similarity import _usable_vec
-
     e = (
         load(spark, sf_dir, "embeddings", fan_out=True)
         .filter(F.col("vec_id") < 120)
-        .filter(_usable_vec(F.col("embedding")))  # r11 zero-norm guard
+        .filter(_usable_vec(F.col("embedding")))
     )
-    from orderly_spark.operators.similarity import _dot_decimal, _norm
-
-    # per-row norms beside the vectors (r15; see similarity.cosine_topk)
-    a = e.select(
-        F.col("vec_id").alias("id_a"), F.col("label").alias("label_a"),
-        F.col("embedding").alias("__va"), _norm(F.col("embedding")).alias("__na"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("id_b"), F.col("label").alias("label_b"),
-        F.col("embedding").alias("__vb"), _norm(F.col("embedding")).alias("__nb"),
-    )
-    joined = a.join(b, F.col("id_a") < F.col("id_b"))
-    cos = _dot_decimal(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb"))
+    a = _vec_side(e, "vec_id", "embedding", "id_a", "__a", F.col("label").alias("label_a"))
+    b = _vec_side(e, "vec_id", "embedding", "id_b", "__b", F.col("label").alias("label_b"))
     return (
-        joined.withColumn("cosine", cos)
+        a.join(b, F.col("id_a") < F.col("id_b"))
+        .withColumn("cosine", _cosine("__a", "__b"))
         .filter(F.col("cosine") >= 0.90)
         .select("id_a", "id_b", "label_a", "label_b", "cosine")
     )
 
 
 def _ivf_oracle() -> str:
-    from orderly_spark.operators.similarity import pseudo_centroids
-
     cents = pseudo_centroids(64, 8)
     cent_cols = ", ".join(
         f"[{', '.join(repr(x) for x in c)}]::DOUBLE[] AS c{i}" for i, c in enumerate(cents)
     )
-    # build the dot-product list against 'embedding' directly — an
-    # earlier version templated on 'v' and did dots.replace('v', ...),
-    # a single-char textual substitution that only worked while no
-    # token in _dot_sql's output contained the letter v (review
-    # finding)
     dots = "[" + ", ".join(_dot_sql("embedding", f"c{i}") for i in range(8)) + "]"
     return f"""
     WITH cent AS (SELECT {cent_cols}),
@@ -206,15 +186,11 @@ def _ivf_oracle() -> str:
       ) QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY dot DESC, cell) <= 2
     ),
     scored AS (
-      SELECT query_id, neighbor_id,
-             {_dot_sql('qv', 'cv')} / (sqrt({_dot_sql('qv', 'qv')}) * sqrt({_dot_sql('cv', 'cv')})) AS cosine
+      SELECT query_id, neighbor_id, {COSINE_SQL('qv', 'cv')} AS cosine
       FROM corpus JOIN qprobe USING (cell)
       WHERE query_id != neighbor_id
     )
-    SELECT query_id, neighbor_id, cosine, rank FROM (
-      SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rank
-      FROM scored
-    ) WHERE rank <= 3
+    {TOPK_SQL('scored', 3)}
     """
 
 
@@ -229,8 +205,6 @@ def s_ivf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell assignment is map-side; probing prunes the candidate scan to
     n_probe/n_cells of the corpus; exact re-rank inside probed cells.
     Deterministic throughout, so the gate checks exact values."""
-    from orderly_spark.operators.similarity import ivf_cosine_topk
-
     e = load(spark, sf_dir, "embeddings", fan_out=True)
     q = e.filter(F.col("vec_id") < 5)
     out = ivf_cosine_topk(e, q, dim=64, id_col="vec_id", vec_col="embedding", k=3)
@@ -245,14 +219,10 @@ def s_ivf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     c AS (SELECT vec_id AS neighbor_id, embedding AS cv, label AS cl FROM embeddings
           WHERE {_USABLE}),
     scored AS (
-      SELECT query_id, neighbor_id,
-             {_dot_sql('qv', 'cv')} / (sqrt({_dot_sql('qv', 'qv')}) * sqrt({_dot_sql('cv', 'cv')})) AS cosine
+      SELECT query_id, neighbor_id, {COSINE_SQL('qv', 'cv')} AS cosine
       FROM q, c WHERE query_id != neighbor_id AND ql = cl
     )
-    SELECT query_id, neighbor_id, cosine, rank FROM (
-      SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rank
-      FROM scored
-    ) WHERE rank <= 3
+    {TOPK_SQL('scored', 3)}
     """,
     category="similarity",
     survey="ann-bruteforce[abs]",
@@ -282,11 +252,7 @@ def _quant_sql(v: str) -> str:
     )
 
 
-def _idot_sql(a: str, b: str) -> str:
-    return (
-        f"list_reduce(list_transform(range(1, len({a}) + 1), "
-        f"i -> {a}[i] * {b}[i]), (x, y) -> x + y)"
-    )
+_QUANT_COLS = "query_id, neighbor_id, cosine_q, cosine_exact, abs(cosine_exact - cosine_q) AS abs_err, rank"
 
 
 @query(
@@ -300,18 +266,13 @@ def _idot_sql(a: str, b: str) -> str:
     c AS (SELECT vec_id AS neighbor_id, v AS cfv, qv AS cqv FROM base),
     scored AS (
       SELECT query_id, neighbor_id,
-             CAST({_idot_sql('qqv', 'cqv')} AS DOUBLE)
-               / (sqrt(CAST({_idot_sql('qqv', 'qqv')} AS DOUBLE))
-                  * sqrt(CAST({_idot_sql('cqv', 'cqv')} AS DOUBLE))) AS cosine_q,
-             {_dot_sql('qfv', 'cfv')} / (sqrt({_dot_sql('qfv', 'qfv')}) * sqrt({_dot_sql('cfv', 'cfv')})) AS cosine_exact
+             CAST({IDOT_SQL('qqv', 'cqv')} AS DOUBLE)
+               / (sqrt(CAST({IDOT_SQL('qqv', 'qqv')} AS DOUBLE))
+                  * sqrt(CAST({IDOT_SQL('cqv', 'cqv')} AS DOUBLE))) AS cosine_q,
+             {COSINE_SQL('qfv', 'cfv')} AS cosine_exact
       FROM q, c WHERE query_id != neighbor_id
     )
-    SELECT query_id, neighbor_id, cosine_q, cosine_exact,
-           abs(cosine_exact - cosine_q) AS abs_err, rank
-    FROM (
-      SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine_q DESC, neighbor_id) AS BIGINT) AS rank
-      FROM scored
-    ) WHERE rank <= 3
+    {TOPK_SQL('scored', 3, score="cosine_q", cols=_QUANT_COLS)}
     """,
     category="similarity",
     survey="ann-quantized[abs]",
@@ -332,11 +293,7 @@ def s_quantized_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     same broadcast-queries/one-corpus-scan shape as cosine_topk with
     ~4× less data movement; exact re-scoring touches only the Q×k
     winners at full precision."""
-    from orderly_spark.operators.similarity import _usable_vec
-
-    e = load(spark, sf_dir, "embeddings", fan_out=True).filter(
-        _usable_vec(F.col("embedding"))  # r11 zero-norm guard (cosine_q divides by |qv|)
-    )
+    e = load(spark, sf_dir, "embeddings", fan_out=True).filter(_usable_vec(F.col("embedding")))
 
     def quant(vec):
         amax = F.array_max(F.transform(vec, lambda x: F.abs(x.cast("double"))))
@@ -344,60 +301,32 @@ def s_quantized_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         zeros = F.transform(vec, lambda x: F.lit(0).cast("long"))
         return F.when(amax > 0, scaled).otherwise(zeros)
 
-    def idot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"), lambda acc, p: acc + p
-        )
+    def side(df, id_as, p):
+        # the float side through the shared projection, the int8 side
+        # beside it: vector as {p}qv, its integer norm as {p}qn
+        qnorm = F.sqrt(_idot(F.col("qv"), F.col("qv")).cast("double"))
+        return _vec_side(df, "vec_id", "v", id_as, p, F.col("qv").alias(f"{p}qv"), qnorm.alias(f"{p}qn"))
 
-    from orderly_spark.operators.similarity import _dot_decimal, _norm
-
-    # per-row norms (float AND int-quantized) beside the vectors
-    # (r15; see similarity.cosine_topk) — bit-identical values
     base = e.select("vec_id", F.col("embedding").alias("v"), quant(F.col("embedding")).alias("qv"))
-    q = base.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("__qfv"), F.col("qv").alias("__qqv"),
-        _norm(F.col("v")).alias("__qfn"),
-        F.sqrt(idot(F.col("qv"), F.col("qv")).cast("double")).alias("__qqn"),
+    q = side(base.filter(F.col("vec_id") < 5), "query_id", "__q")
+    c = side(base, "neighbor_id", "__c")
+    cosine_q = _idot(F.col("__qqv"), F.col("__cqv")).cast("double") / (F.col("__qqn") * F.col("__cqn"))
+    scored = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")).select(
+        "query_id", "neighbor_id", cosine_q.alias("cosine_q"), _cosine().alias("cosine_exact")
     )
-    c = base.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("__cfv"), F.col("qv").alias("__cqv"),
-        _norm(F.col("v")).alias("__cfn"),
-        F.sqrt(idot(F.col("qv"), F.col("qv")).cast("double")).alias("__cqn"),
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine_q",
-            idot(F.col("__qqv"), F.col("__cqv")).cast("double")
-            / (F.col("__qqn") * F.col("__cqn")),
-        )
-        .withColumn(
-            "cosine_exact",
-            _dot_decimal(F.col("__qfv"), F.col("__cfv"))
-            / (F.col("__qfn") * F.col("__cfn")),
-        )
-        .select("query_id", "neighbor_id", "cosine_q", "cosine_exact")
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_q"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 3)
-        .withColumn("abs_err", F.abs(F.col("cosine_exact") - F.col("cosine_q")))
-        .select("query_id", "neighbor_id", "cosine_q", "cosine_exact", "abs_err", "rank")
+    return _rank(scored, 3, score="cosine_q").select(
+        "query_id", "neighbor_id", "cosine_q", "cosine_exact",
+        F.abs(F.col("cosine_exact") - F.col("cosine_q")).alias("abs_err"), F.col("rank").cast("long"),
     )
 
 
 def _semantic_dedup_oracle(tau: str = "0.4") -> str:
-    from orderly_spark.operators.similarity import pseudo_centroids
-
     cents = pseudo_centroids(64, 8)
     cent_cols = ", ".join(
         f"[{', '.join(repr(x) for x in c)}]::DOUBLE[] AS c{i}" for i, c in enumerate(cents)
     )
     dots = "[" + ", ".join(_dot_sql("embedding", f"c{i}") for i in range(8)) + "]"
-    cos = f"{_dot_sql('a.ev', 'b.ev')} / (sqrt({_dot_sql('a.ev', 'a.ev')}) * sqrt({_dot_sql('b.ev', 'b.ev')}))"
+    cos = COSINE_SQL("a.ev", "b.ev")
     return f"""
     WITH cent AS (SELECT {cent_cols}),
     cells AS (
@@ -449,7 +378,5 @@ def s_semantic_dedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair enumeration, no iteration. For sharper balls at scale, raise
     n_cells (k-means-trained via s_kmeans_cells) — the plan shape is
     unchanged."""
-    from orderly_spark.operators.similarity import pseudo_centroids, semantic_dedup_stats
-
     e = load(spark, sf_dir, "embeddings", fan_out=True)
     return semantic_dedup_stats(e, pseudo_centroids(64, 8), tau=0.4)

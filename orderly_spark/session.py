@@ -65,10 +65,19 @@ AQE_MIN_PARTITION_SIZE = "16k"
 #:   match the DuckDB oracle's naive-timestamp semantics;
 #: - nanosAsLong: the vectorized reader rejects a TIMESTAMP(NANOS)
 #:   column; it reads as long, and ``tables.load`` converts a
-#:   nanos-stored ``events.ts`` back (its values are microsecond-aligned,
-#:   so lossless);
+#:   nanos-stored ``events.ts`` back to the type and values a
+#:   microsecond-stored one reads as (its values are
+#:   microsecond-aligned, so lossless);
 #: - Arrow: the pandas-UDF paths (chem, multimodal, protobuf decode)
 #:   batch via Arrow, never row-at-a-time pickling.
+#:
+#: ``spark.python.sql.dataFrameDebugging.enabled`` is not in the
+#: contract: it is a static conf (``spark.conf.isModifiable`` is False),
+#: so only the session builder can turn it off. ``get_spark`` does; a
+#: session built elsewhere (such as the one ``__spark_entry__``
+#: receives) keeps per-call call-site capture, and its plan builds pay
+#: about 2-2.5x the py4j round trips ``tests/test_build_budget.py``
+#: pins.
 SESSION_CONTRACT = (
     ("spark.sql.session.timeZone", "UTC"),
     ("spark.sql.legacy.parquet.nanosAsLong", "true"),

@@ -155,7 +155,12 @@ def load(spark: SparkSession, sf_dir: str, name: str, *, fan_out: bool = False) 
     df = spark.read.schema(schema).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # events.ts stored as TIMESTAMP(NANOS) reads as epoch-nanos long
-        # (nanosAsLong): convert back to a real (microsecond) timestamp.
+        # (nanosAsLong): convert it back to the type and values the same
+        # column stored as microseconds reads as. With inferTimestampNTZ
+        # that is timestamp_ntz, so the micros are added to the NTZ
+        # epoch (field arithmetic, no zone); without it, a timestamp at
+        # that UTC instant. Either way the values do not depend on the
+        # session time zone.
         # Integer division: ts/1000 in double space rounds off-by-1µs
         # for epoch-nanos magnitudes (> 2^53 after scaling). DIV
         # truncates toward zero where cleaning.py's extraction path
@@ -163,7 +168,13 @@ def load(spark: SparkSession, sf_dir: str, name: str, *, fan_out: bool = False) 
         # and tests/test_properties.py::test_events_ts_nanos_microsecond_aligned
         # pins that alignment for any nanos-stored testdata. If sub-µs
         # events ever appear, switch to (ts - pmod(ts,1000)) DIV 1000.
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+        micros = "ts DIV 1000"
+        ts = (
+            F.expr(f"timestampadd(MICROSECOND, {micros}, TIMESTAMP_NTZ'1970-01-01 00:00:00')")
+            if ntz
+            else F.timestamp_micros(F.expr(micros))
+        )
+        df = df.withColumn("ts", ts)
     if fan_out:
         df = df.repartition(spark.sparkContext.defaultParallelism)
     return df

@@ -391,13 +391,15 @@ def test_trainer_envelope_overflows_loudly(spark):
 
 
 def test_ann_ops_ignore_zero_norm_vectors(spark):
-    """r11 adversarial-embeddings sweep: ZERO-NORM vectors (all-zero /
-    all-negative-zero buffers) are filtered at every cosine-scoring
-    op's entry (operators/similarity._usable_vec) — results are
-    IDENTICAL with and without zero rows, and zero ids never appear as
-    query or neighbour. Before the guard, one zero vector aborted the
-    whole job with ANSI DIVIDE_BY_ZERO at the norm division."""
-    from orderly_spark.operators.similarity import cosine_topk, lsh_cosine_topk
+    """ZERO-NORM vectors (all-zero / all-negative-zero buffers) are
+    filtered at every cosine-scoring op's entry
+    (operators/similarity._usable_vec): results are IDENTICAL with and
+    without zero rows, and zero ids never appear as query or
+    neighbour. Without the guard, one zero vector aborts the whole job
+    with ANSI DIVIDE_BY_ZERO at the norm division. Every family member
+    ends in the same shared re-rank, so all return the same columns
+    with the same types."""
+    from orderly_spark.operators.similarity import cosine_topk, ivf_cosine_topk, lsh_cosine_topk
 
     blobs4 = spark.createDataFrame(BLOBS4, schema=VEC_SCHEMA)
     dirty = blobs4.unionByName(
@@ -408,16 +410,22 @@ def test_ann_ops_ignore_zero_norm_vectors(spark):
     )
     q_clean = blobs4.filter(F.col("vec_id") == 1)
     q_dirty = dirty.filter(F.col("vec_id").isin(1, 90))  # zero query dropped too
+    ops = {
+        "cosine_topk": lambda e, q: cosine_topk(e, q, k=3),
+        "lsh_cosine_topk": lambda e, q: lsh_cosine_topk(e, q, dim=4, k=3),
+        "ivf_cosine_topk": lambda e, q: ivf_cosine_topk(e, q, dim=4, k=3, n_cells=2, n_probe=2),
+        "kmeans_ivf_topk": lambda e, q: C.kmeans_ivf_topk(e, q, k=3, n_cells=2, n_probe=2),
+        "pq_adc_topk": lambda e, q: C.pq_adc_topk(e, q, m_subs=2, codebook_k=2, scale_bits=10),
+        "rq_adc_topk": lambda e, q: C.rq_adc_topk(e, q, codebook_k=2, scale_bits=10),
+        "opq_pq_adc_topk": lambda e, q: C.opq_pq_adc_topk(e, q, m_subs=2, codebook_k=2, scale_bits=10),
+    }
     key = lambda d: sorted(
-        (r["query_id"], r["neighbor_id"], r["rank"]) for r in d.collect()
+        (r["query_id"], r["neighbor_id"], r["cosine"], r["rank"]) for r in d.collect()
     )
-    assert key(cosine_topk(blobs4, q_clean, k=3)) == key(cosine_topk(dirty, q_dirty, k=3))
-    assert key(lsh_cosine_topk(blobs4, q_clean, dim=4, k=3)) == key(
-        lsh_cosine_topk(dirty, q_dirty, dim=4, k=3)
-    )
-    assert key(
-        C.kmeans_ivf_topk(blobs4, q_clean, k=3, n_cells=2, n_probe=2)
-    ) == key(C.kmeans_ivf_topk(dirty, q_dirty, k=3, n_cells=2, n_probe=2))
-    assert key(
-        C.pq_adc_topk(blobs4, q_clean, m_subs=2, codebook_k=2, scale_bits=10)
-    ) == key(C.pq_adc_topk(dirty, q_dirty, m_subs=2, codebook_k=2, scale_bits=10))
+    for name, op in ops.items():
+        clean, with_zeros = op(blobs4, q_clean), op(dirty, q_dirty)
+        assert clean.dtypes == with_zeros.dtypes == [
+            ("query_id", "bigint"), ("neighbor_id", "bigint"), ("cosine", "double"), ("rank", "int")
+        ], name
+        got = key(with_zeros)
+        assert got and got == key(clean), name

@@ -779,10 +779,11 @@ def test_int8_quantize_and_integer_dot_twins(spark):
     """The int8-absmax quantization + integer dot pair behind
     s_quantized_cosine_topk, on adversarial vectors: all-zero (the
     amax=0 branch), sign mixes, tiny/huge magnitudes, and the exact
-    ±127 saturation points. The Spark expressions restate the query's
-    fn-local closures verbatim (refactoring them out would force an
-    off-window regrade); the SQL side IS the live oracle generator."""
-    from orderly_spark.queries.similarity_battery import _idot_sql, _quant_sql
+    ±127 saturation points. The Spark quantizer restates the query's
+    fn-local closure verbatim; the integer dot is the shared
+    clustering._idot, and the SQL side IS the live oracle generator."""
+    from orderly_spark.operators.clustering import IDOT_SQL, _idot
+    from orderly_spark.queries.similarity_battery import _quant_sql
 
     vecs = [
         (0, [0.0, 0.0, 0.0], [0.0, 0.0, 0.0]),
@@ -801,20 +802,13 @@ def test_int8_quantize_and_integer_dot_twins(spark):
         zeros = F.transform(vec, lambda x: F.lit(0).cast("long"))
         return F.when(amax > 0, scaled).otherwise(zeros)
 
-    def idot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda acc, p: acc + p,
-        )
-
     got = {
         r["i"]: (r["qa"], r["qb"], r["d"])
         for r in sdf.select(
             "i",
             quant(F.col("a")).alias("qa"),
             quant(F.col("b")).alias("qb"),
-            idot(quant(F.col("a")), quant(F.col("b"))).alias("d"),
+            _idot(quant(F.col("a")), quant(F.col("b"))).alias("d"),
         ).collect()
     }
     con = duckdb.connect()
@@ -824,7 +818,7 @@ def test_int8_quantize_and_integer_dot_twins(spark):
         i: (qa, qb, d)
         for i, qa, qb, d in con.execute(
             f"""SELECT i, {_quant_sql('a')}, {_quant_sql('b')},
-                   {_idot_sql(_quant_sql('a'), _quant_sql('b'))}
+                   {IDOT_SQL(_quant_sql('a'), _quant_sql('b'))}
             FROM t"""
         ).fetchall()
     }

@@ -88,7 +88,7 @@ def test_random_corpus_token_punct_shingle_multiplicity_twins(spark):
 
 def test_random_vectors_dot_quantize_dist_twins(spark):
     """Vector-primitive twins under a seeded random sweep: the
-    order-fixed dot fold (_dot_decimal/_dot_sql), floor quantization
+    order-fixed dot fold (_dot/_dot_sql), floor quantization
     (quantize_vec/QUANTIZE_SQL) and integer squared distance
     (_sqdist/DIST_SQL) must agree bit-for-bit on vectors mixing
     magnitudes, signs, exact dyadics and long binary tails — these
@@ -99,7 +99,7 @@ def test_random_vectors_dot_quantize_dist_twins(spark):
         _sqdist,
         quantize_vec,
     )
-    from orderly_spark.operators.similarity import _dot_decimal, _dot_sql
+    from orderly_spark.operators.similarity import _dot, _dot_sql
 
     rng = random.Random(113)
     dim = 16
@@ -124,7 +124,7 @@ def test_random_vectors_dot_quantize_dist_twins(spark):
         r["i"]: (r["dot"], r["qa"], r["dist"])
         for r in sdf.select(
             "i",
-            _dot_decimal(F.col("a"), F.col("b")).alias("dot"),
+            _dot(F.col("a"), F.col("b")).alias("dot"),
             quantize_vec(F.col("a")).alias("qa"),
             _sqdist(
                 quantize_vec(F.col("a")), [0] * dim

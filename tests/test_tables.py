@@ -88,21 +88,60 @@ def test_unmapped_footer_types_are_inferred_by_spark(spark, tmp_path):
     assert [f.dataType.typeName() for f in got] == ["long", "timestamp"]
 
 
+_MICROS = [0, 1_600_000_000_123_456, 1_700_000_000_000_001, -86_400_000_000]
+
+
+def _write_events(path, unit: str) -> str:
+    """``events.parquet`` under ``path`` whose naive ``ts`` holds
+    ``_MICROS`` stored at ``unit`` ("ns" or "us")."""
+    path.mkdir()
+    scale = 1000 if unit == "ns" else 1
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(len(_MICROS)), pa.int64()),
+            "ts": pa.array([m * scale for m in _MICROS], pa.timestamp(unit)),
+        }),
+        path / "events.parquet",
+        version="2.6",
+    )
+    return str(path)
+
+
 def test_load_converts_nanos_stored_events_ts(spark, tmp_path):
     """An ``events.parquet`` whose ``ts`` is TIMESTAMP(NANOS) loads with
     ``ts`` as the microsecond timestamps: the footer maps the column to
-    bigint, as nanosAsLong reads it, and load converts it back. Mapped
-    to timestamp_ntz instead, the column would not be read as these
-    values."""
-    micros = [0, 1_600_000_000_123_456, 1_700_000_000_000_001, -86_400_000_000]
-    ts = pa.array([m * 1000 for m in micros], pa.timestamp("ns"))
-    pq.write_table(
-        pa.table({"event_id": pa.array(range(len(micros)), pa.int64()), "ts": ts}),
-        tmp_path / "events.parquet",
-        version="2.6",
-    )
-    assert "nanoseconds" in str(pq.ParquetFile(tmp_path / "events.parquet").schema.column(1).logical_type)
-    df = _fresh_load(spark, str(tmp_path), "events")
-    assert dict(df.dtypes)["ts"] == "timestamp"
-    got = {r.event_id: r.us for r in df.selectExpr("event_id", "unix_micros(ts) AS us").collect()}
-    assert got == dict(enumerate(micros))
+    bigint, as nanosAsLong reads it, and load converts it back to the
+    type a naive microsecond column reads as, timestamp_ntz."""
+    nanos = _write_events(tmp_path / "ns", "ns")
+    assert "nanoseconds" in str(pq.ParquetFile(f"{nanos}/events.parquet").schema.column(1).logical_type)
+    df = _fresh_load(spark, nanos, "events")
+    assert dict(df.dtypes)["ts"] == "timestamp_ntz"
+    us = "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts) AS us"
+    got = {r.event_id: r.us for r in df.selectExpr("event_id", us).collect()}
+    assert got == dict(enumerate(_MICROS))
+
+
+@pytest.mark.parametrize("ntz", ["true", "false"])
+def test_nanos_and_micros_events_ts_load_alike_in_any_zone(spark, tmp_path, ntz):
+    """In a non-UTC session, with timestamp_ntz inference on or off, a
+    nanos-stored ``events.ts`` loads with the same type and the same
+    values as the same column stored as microseconds."""
+    nanos = _write_events(tmp_path / "ns", "ns")
+    micros = _write_events(tmp_path / "us", "us")
+    confs = {"spark.sql.session.timeZone": "America/Los_Angeles", "spark.sql.parquet.inferTimestampNTZ.enabled": ntz}
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        a, b = _fresh_load(spark, nanos, "events"), _fresh_load(spark, micros, "events")
+        assert a.dtypes == b.dtypes
+        assert dict(a.dtypes)["ts"] == ("timestamp_ntz" if ntz == "true" else "timestamp")
+        rows = lambda df: sorted(df.selectExpr("event_id", "CAST(ts AS STRING) AS s").collect())
+        assert rows(a) == rows(b)
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+        tables._SCHEMA_CACHE.clear()

@@ -141,7 +141,7 @@ IMPL: dict[str, tuple[str, str]] = {
     "decontamination[abs]": ("queries/curation_battery.py train∩eval 5-gram overlap scrub (broadcast eval side)", ""),
     "snapshot-diff[abs]": ("queries/curation_battery.py added/removed/changed corpus version diff on content hashes", ""),
     "streaming-join[abs]": ("streaming/pipeline.py stream_stream_attribution_join (watermarked stream-stream join, value-gated)", ""),
-    "ann-quantized[abs]": ("queries/similarity_battery.py int8-absmax quantized cosine top-k + error audit", ""),
+    "ann-quantized[abs]": ("queries/similarity_battery.py int8-absmax quantized cosine top-k + error audit", "tests/test_curation_ops.py, tests/test_plans.py"),
     "ann-pq[abs]": ("operators/clustering.py pq_adc_topk — per-subspace codebooks + broadcast ADC tables + exact re-rank", "tests/test_clustering.py"),
     "streaming-upsert[abs]": ("queries/streaming_battery.py foreachBatch idempotent state merge (value-gated vs batch compaction)", ""),
     "S-formats[abs]": ("queries/relational.py CSV/JSON/ORC write+read parity (explicit schemas, no inference)", ""),
@@ -149,7 +149,7 @@ IMPL: dict[str, tuple[str, str]] = {
     "A-winsorize[abs]": ("queries/relational.py group-wise winsorization (clip at broadcast per-group quartiles)", ""),
     "J-bucketed[abs]": ("queries/relational.py bucketBy(8).sortBy saveAsTable → exchange-free SortMergeJoin", "tests/test_plans.py"),
     "kmeans[abs]": ("operators/clustering.py exact integer-space Lloyd's k-means (IVF trainer)", "tests/test_clustering.py"),
-    "ann-ivf-trained[abs]": ("queries/similarity_battery.py k-means-trained IVF index → probe → exact re-rank", "tests/test_clustering.py"),
+    "ann-ivf-trained[abs]": ("operators/clustering.py kmeans_ivf_topk (queried from queries/clustering_battery.py) k-means-trained IVF index → probe → exact re-rank", "tests/test_clustering.py"),
     "scd2[abs]": ("queries/relational.py gaps-and-islands SCD2 state-interval build", ""),
     "lm-quality[abs]": ("queries/text_battery.py corpus-statistics token-DF quality scores (exact-rational)", ""),
     "zorder[abs]": ("operators/layout.py Morton-code clustering; file-pruning win measured on parquet footer stats", "tests/test_storage_layout.py"),
