@@ -4,8 +4,9 @@ data-processing capabilities of the reference ORDerly pipeline
 
 Subpackages
 -----------
-- ``session``    SparkSession factory tuned for the local[32] harness and
-                 for cluster-scale defaults (AQE, Arrow, shuffle sizing).
+- ``session``    SparkSession factory tuned for the local[N] harness (N is
+                 ``SPARK_GRAFT_CPUS`` or the CPU count) and for
+                 cluster-scale defaults (AQE, Arrow, shuffle sizing).
 - ``tables``     Loaders for the driver testdata star schema + view registry.
 - ``schema``     Canonical array-model reaction schema (SURVEY §1.3).
 - ``operators``  Relational + pipeline operators (clean pipeline, dedup,

@@ -34,6 +34,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -225,7 +226,7 @@ _REACTION_FP_TYPE = T.StructType(
 
 
 def reaction_fingerprint_udf(n_bits: int = 2048, radius: int = 3):
-    """F14 + F15 fused (fingerprints.py:59-99): pandas UDF factory over
+    """F14 + F15 fused (fingerprints.py:59-99): Arrow UDF factory over
     ``(products, reactants)`` → ``struct<product_fp, rxn_diff_fp>``
     where ``product_fp`` is the fingerprint of ``products[0]`` and
     ``rxn_diff_fp = product_fp − Σ`` the fingerprints of every reactant.
@@ -233,26 +234,34 @@ def reaction_fingerprint_udf(n_bits: int = 2048, radius: int = 3):
     Invariants: the per-molecule kernel is :func:`_morgan_fp_one`, the
     same as :func:`morgan_fingerprint_udf`'s, with one memo shared by
     every member; a null or empty product, a null reactant array or
-    member, and an unparseable molecule all contribute zeros."""
+    member, and an unparseable molecule all contribute zeros.
 
-    @F.pandas_udf(_REACTION_FP_TYPE)
-    def rxn_fp_udf(
-        it: Iterator[tuple[pd.Series, pd.Series]],
-    ) -> Iterator[pd.DataFrame]:
+    Each batch fills one ``(rows, n_bits)`` int32 buffer per output
+    field and hands it to Arrow as the values of a list array, with no
+    per-cell Python list (pandas' converter builds one per cell, ~1 GB
+    of peak RSS per 10,000-row batch at 2,048 bits). The offsets are
+    int32, which an Arrow batch of ``spark.sql.execution.arrow.
+    maxRecordsPerBatch`` rows (10,000 by default) never overflows at
+    that width; a batch that would overflow fails, it is not wrapped."""
+
+    def rxn_fp_udf(it: Iterator[tuple[pa.Array, pa.Array]]) -> Iterator[pa.Array]:
         fp = _memoized_fp(n_bits, radius)
         for products, reactants in it:
-            product_fps, diffs = [], []
-            for prods, reacts in zip(products, reactants):
-                product = fp(prods[0] if prods is not None and len(prods) else None)
-                diff = product.copy()
-                for m in reacts if reacts is not None else ():
+            n = len(products)
+            product_fps = np.empty((n, n_bits), dtype=np.int32)
+            diffs = np.empty((n, n_bits), dtype=np.int32)
+            for i, (prods, reacts) in enumerate(zip(products.to_pylist(), reactants.to_pylist())):
+                product_fps[i] = diffs[i] = fp(prods[0] if prods else None)
+                for m in reacts or ():
                     if m is not None:
-                        diff -= fp(m)
-                product_fps.append(product)
-                diffs.append(diff)
-            yield pd.DataFrame({"product_fp": product_fps, "rxn_diff_fp": diffs})
+                        diffs[i] -= fp(m)
+            offsets = pa.array(np.arange(n + 1, dtype=np.int64) * n_bits, pa.int32())
+            yield pa.StructArray.from_arrays(
+                [pa.ListArray.from_arrays(offsets, pa.array(buf.ravel())) for buf in (product_fps, diffs)],
+                names=_REACTION_FP_TYPE.names,
+            )
 
-    return rxn_fp_udf
+    return F.arrow_udf(rxn_fp_udf, _REACTION_FP_TYPE)
 
 
 def export_fingerprint_matrix_npy(

@@ -304,11 +304,29 @@ def reaction_hash(reactants: str, products: str) -> str:
 # ---------------------------------------------------------------------------
 
 
+def _fold_ascii(col: str, keyword: str) -> str:
+    """``col`` with the upper-case forms of ``keyword``'s ASCII letters
+    folded to lower case: as good as ``lower(col)`` for matching the
+    lower-case ASCII ``keyword`` (whole-string or substring). Outside
+    ASCII only U+0130 (to 'i' + U+0307) and U+212A (to 'k') lower-case
+    to anything holding ASCII (tests/test_extract.py checks every code
+    point), and neither can spell a keyword here: the one 'i' comes with
+    a combining dot, and no keyword has a 'k'. NULL stays NULL.
+
+    ``lower`` is not used because Spark's first ICU case mapping in a
+    JVM builds a table over every code point (~0.8 s of one core, with
+    the other tasks of the job waiting on it), which every cold extract
+    would pay for these two rules alone."""
+    letters = sorted({c for c in keyword if c.isascii() and c.isalpha()})
+    return f"translate({col}, '{''.join(letters).upper()}', '{''.join(letters)}')"
+
+
 def remove_pd_c_carbon(agents: str, has_tm: str, procedure: str) -> str:
     """P12 (extractor.py:1024-1039): if any agent has a transition
     metal OR the procedure mentions charcoal, 'C'/'[C]' in agents is
-    palladium-on-carbon support, not a reagent — remove it."""
-    cond = f"({has_tm}) OR coalesce(contains(lower({procedure}), 'charcoal'), false)"
+    palladium-on-carbon support, not a reagent — remove it. The match
+    is case-insensitive (see :func:`_fold_ascii`)."""
+    cond = f"({has_tm}) OR coalesce(contains({_fold_ascii(procedure, 'charcoal')}, 'charcoal'), false)"
     return (
         f"CASE WHEN {cond} THEN array_remove(array_remove({agents}, 'C'), '[C]') "
         f"ELSE {agents} END"
@@ -317,8 +335,9 @@ def remove_pd_c_carbon(agents: str, has_tm: str, procedure: str) -> str:
 
 def impute_ice_temperature(temperature: str, identifiers: str) -> str:
     """P13 (extractor.py:341-343,1045-1048): an 'ice' / 'ice water'
-    input with no measured temperature ⇒ 0 °C."""
-    ice = f"exists({identifiers}, _x -> lower(_x) IN ('ice', 'ice water'))"
+    input with no measured temperature ⇒ 0 °C, matched
+    case-insensitively (see :func:`_fold_ascii`)."""
+    ice = f"exists({identifiers}, _x -> {_fold_ascii('_x', 'ice water')} IN ('ice', 'ice water'))"
     return f"coalesce({temperature}, CASE WHEN {ice} THEN 0.0D END)"
 
 

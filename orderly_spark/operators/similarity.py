@@ -193,12 +193,7 @@ def sign_sketch(vec: Column, dim: int, *, num_planes: int = 16, seed: int = 11) 
     per-row randomness."""
     bits = []
     for p in range(num_planes):
-        plane = _hyperplane(dim, seed, p)
-        dot = F.aggregate(
-            F.zip_with(vec, _double_array(plane), lambda v, h: v.cast("double") * h),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        dot = _dot(vec, _double_array(_hyperplane(dim, seed, p)))
         bits.append(F.when(dot >= 0, F.lit(1 << p)).otherwise(F.lit(0)))
     out = bits[0]
     for b in bits[1:]:
@@ -259,16 +254,7 @@ def pseudo_centroids(dim: int, n_cells: int, seed: int = 23) -> list[list[float]
 
 
 def _cell_dots(vec: Column, cents: list[list[float]]) -> Column:
-    return F.array(
-        *[
-            F.aggregate(
-                F.zip_with(vec, _double_array(c), lambda v, h: v.cast("double") * h),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            for c in cents
-        ]
-    )
+    return F.array(*[_dot(vec, _double_array(c)) for c in cents])
 
 
 def ivf_cell(vec: Column, cents: list[list[float]]) -> Column:

@@ -63,7 +63,14 @@ def tokens(text: Column | str) -> Column:
     Both divergences are latent on the graded corpora (ASCII
     space/newline only); documented rather than patched — post-
     processing either engine's hot path to mask standards
-    disagreements isn't worth it."""
+    disagreements isn't worth it.
+
+    Cost: Spark's first ICU case mapping in a JVM (this ``lower``, or
+    any ``upper``/``initcap``/``ilike``) builds a table over every code
+    point, ~0.8 s of one core on a 4-vCPU host, while the job's other
+    tasks wait for it. Text slots pay it once per JVM, by necessity: they
+    need full Unicode case mapping. Extract avoids it (see
+    ``functions/rxn.py`` ``_fold_ascii``)."""
     c = F.col(text) if isinstance(text, str) else text
     return F.filter(F.split(F.lower(c), r"\s+"), lambda t: F.length(t) > 0)
 

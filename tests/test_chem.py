@@ -129,6 +129,14 @@ def test_reaction_fingerprint_udf_matches_column_kernels(spark):
     assert not any(got.filter("i = 3").first().d)  # CC − CC
 
 
+def test_reaction_fingerprint_udf_is_a_scalar_iter_arrow_udf():
+    """gen-fp's kernel takes and returns Arrow arrays batch by batch; its
+    type comes from the kernel's type hints."""
+    from pyspark.util import PythonEvalType
+
+    assert chem.reaction_fingerprint_udf(n_bits=8).evalType == PythonEvalType.SQL_SCALAR_ARROW_ITER_UDF
+
+
 def test_npy_export_matches_reference_artifact_shape(spark, tmp_path):
     """S10 byte-parity: the .npy export is a dense int64 matrix in
     id order (fingerprints.py:41-56)."""

@@ -150,6 +150,11 @@ def test_yields_to_longest_product(spark):
     assert ys == [55.0, None, None]
 
 
+# case and near-miss spellings for P12/P13: the expected value of each
+# comes from Python's full Unicode str.lower(), as the reference matches
+CASE_PROBES = ["CHARCOAL", "ChArCoAl", "ICE WATER", "\u0130ce", "\u0131ce", "ice\n", "ice ", "on \u0130CE"]
+
+
 def test_pd_c_exception(spark):
     df = spark.createDataFrame(
         [
@@ -167,6 +172,12 @@ def test_pd_c_exception(spark):
     ]
     assert got == [["[Pd]", "N"], ["N"], ["C", "N"]]
 
+    procs = [f"with {p} added" for p in CASE_PROBES] + CASE_PROBES
+    cased = spark.createDataFrame([(["C", "N"], False, p) for p in procs], df.schema)
+    got = [r.a for r in cased.select(F.expr(R.remove_pd_c_carbon("agents", "tm", "proc")).alias("a")).collect()]
+    assert got == [["N"] if "charcoal" in p.lower() else ["C", "N"] for p in procs]
+    assert got.count(["N"]) == 4
+
 
 def test_ice_imputation(spark):
     df = spark.createDataFrame(
@@ -178,6 +189,27 @@ def test_ice_imputation(spark):
         for r in df.select(F.expr(R.impute_ice_temperature("t", "ids")).alias("t")).collect()
     ]
     assert got == [0.0, None, 50.0]
+
+    ids = [["x", p] for p in CASE_PROBES] + [[None, p] for p in CASE_PROBES]
+    cased = spark.createDataFrame([(None, i) for i in ids], df.schema)
+    got = [r.t for r in cased.select(F.expr(R.impute_ice_temperature("t", "ids")).alias("t")).collect()]
+    is_ice = [any(m is not None and m.lower() in ("ice", "ice water") for m in i) for i in ids]
+    assert got == [0.0 if ice else None for ice in is_ice]
+    assert got.count(0.0) == 2
+
+
+def test_only_two_non_ascii_code_points_lower_case_to_ascii(spark):
+    """P12/P13 fold only ASCII letters (``rxn._fold_ascii``), which
+    equals ``lower()`` for their ASCII keywords as long as no other
+    character lower-cases to a string holding ASCII. Spark's
+    ``lower()`` over every non-surrogate code point from U+0080 up."""
+    chars = (
+        spark.range(0x80, 0x110000)
+        .where("id < 55296 OR id > 57343")
+        .selectExpr("id", "lower(format_string('%c', CAST(id AS INT))) AS low")
+        .where(F.col("low").rlike(r"[\x00-\x7f]"))
+    )
+    assert {r.id: r.low for r in chars.collect()} == {0x130: "i\u0307", 0x212A: "k"}
 
 
 def test_grant_date_and_experiment_date(spark):

@@ -6,6 +6,7 @@ CLIs cover."""
 
 from __future__ import annotations
 
+import re
 import shutil
 from pathlib import Path
 
@@ -97,6 +98,20 @@ def test_extract_plan_builds_in_few_py4j_round_trips(spark, decoded):
         extract_reactions(decoded, solvent_set=solvent_set)
     assert solvent_set is not None
     assert sent[0] <= 300, sent[0]
+
+
+@pytest.mark.parametrize("trust_labelling", [False, True])
+def test_extract_plan_has_no_case_mapping(spark, decoded, trust_labelling):
+    """No case-mapping function in extract's plan: Spark's first ICU
+    case mapping in a JVM builds a table over every code point, which a
+    cold extract would pay. ``ilike`` is checked too, as the optimizer
+    rewrites it to ``lower``."""
+    out = extract_reactions(decoded, solvent_set=F.array(F.lit("OO")), trust_labelling=trust_labelling)
+    qe = out._jdf.queryExecution()
+    for plan in (qe.analyzed(), qe.optimizedPlan()):
+        text = plan.toString()
+        assert "exists(" in text and "translate(" in text, text
+        assert not re.findall(r"\b(lower|upper|initcap|ilike)\(", text, re.IGNORECASE), text
 
 
 def test_molecule_name_side_output(spark, decoded):

@@ -50,7 +50,10 @@ without one: ``orderly_spark.session.archive_state``), ``codegen`` (the
 classes each rep compiled and its seconds of compiling, one value per
 rep, from Spark's CodegenMetrics: a rep that reuses every generated
 class compiles 0; seconds are null past the first 1028 classes the JVM
-compiled, see ``orderly_spark.session.codegen_compiles``) and the host
+compiled, see ``orderly_spark.session.codegen_compiles``), ``jit_s``
+(the seconds the JVM's JIT compilers spent while each rep ran, one value
+per rep, from ``CompilationMXBean.getTotalCompilationTime``, summed over
+the compiler threads, which run beside the tasks) and the host
 calibrations ``calib_py``/``calib_jvm`` as [before, after] the slots.
 ``--plans DIR`` also writes each slot's formatted plan to DIR/NAME.txt.
 Launcher settings are the benchmark's traced run (event log on, all
@@ -128,6 +131,12 @@ def plan_facts(a) -> dict:
     }
 
 
+def jit_seconds(spark) -> float:
+    """Seconds the driver JVM's JIT compilers have spent so far."""
+    bean = spark._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    return bean.getTotalCompilationTime() / 1000.0
+
+
 def run(sf_dir: str, slots: list[str], reps: int, plans: Path | None, work: Path) -> list[dict]:
     """Time ``slots`` on ``sf_dir`` in one fresh session whose temporary
     files and event log go under ``work``; return one record per slot."""
@@ -158,14 +167,16 @@ def run(sf_dir: str, slots: list[str], reps: int, plans: Path | None, work: Path
         for name in slots:
             runs = []
             codegen = {"classes": [], "compile_s": []}
+            jit = []
             for _ in range(reps):
-                before = codegen_compiles(spark)
+                before, jit_before = codegen_compiles(spark), jit_seconds(spark)
                 with tr.span(name) as span:
                     with tr.span(f"{name}.build") as b, py4j_commands(spark) as sent:
                         df = REGISTRY[name].fn(spark, sf_dir)
                     with tr.span(f"{name}.exec") as e:
                         rows = df.count()
                 after = codegen_compiles(spark)
+                jit.append(round(jit_seconds(spark) - jit_before, 4))
                 codegen["classes"].append(after[0] - before[0])
                 codegen["compile_s"].append(
                     None if None in (before[1], after[1]) else round(after[1] - before[1], 4)
@@ -179,7 +190,7 @@ def run(sf_dir: str, slots: list[str], reps: int, plans: Path | None, work: Path
             if plans is not None:
                 (plans / f"{name}.txt").write_text(a.text)
             best[name] = r = min(runs, key=lambda run: run["span"].duration)
-            r["codegen"] = codegen
+            r["codegen"], r["jit_s"] = codegen, jit
             log(f"{name}: build {r['build_s']:.2f}s exec {r['exec_s']:.2f}s ({r['rows']} rows)")
         calib.append(calibrate(spark))
     finally:
@@ -202,6 +213,7 @@ def run(sf_dir: str, slots: list[str], reps: int, plans: Path | None, work: Path
             "plan": r["plan"],
             "cds": cds,
             "codegen": r["codegen"],
+            "jit_s": r["jit_s"],
             "calib_py": [round(c[0], 4) for c in calib],
             "calib_jvm": [round(c[1], 4) for c in calib],
         })
