@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from orderly_spark.functions import rxn as R
 from orderly_spark.schema import MISSING, wide_to_array
 from orderly_spark.session import barrier
+from orderly_spark.tables import micros_from_nanos
 
 CONDITION_ROLES = ("agents", "solvents", "reagents", "catalysts")
 ALL_ROLES = ("reactants", "agents", "reagents", "solvents", "catalysts", "products")
@@ -104,13 +105,7 @@ def merge_extracted(spark, parquet_dir: str) -> DataFrame:
         # the session's nanosAsLong conf surfaces as epoch-nanos longs —
         # restore real (microsecond) timestamps
         if dtypes.get(c) == "bigint":
-            # floor division, not DIV (truncation): a pre-1970 value
-            # like -1500 ns must become -2 us, not -1; pmod keeps the
-            # arithmetic exact integers (a double division would lose
-            # precision at 1e18-scale nanos)
-            df = df.withColumn(
-                c, F.timestamp_micros(F.expr(f"({c} - pmod({c}, 1000)) DIV 1000"))
-            )
+            df = df.withColumn(c, F.timestamp_micros(micros_from_nanos(c)))
     # P9 on SCALAR string columns (arrays are cleaned inside
     # wide_to_array): a '<missing>' rxn_str is NULL, not a real string
     # (cleaner.py:129-134)
@@ -565,8 +560,6 @@ def train_test_split_routed(df: DataFrame, cfg: CleanConfig) -> DataFrame:
     # md5 hex is uniform: threshold on the first 8 hex digits
     frac_key = F.conv(F.substring(F.col("__r"), 1, 8), 16, 10).cast("double") / float(0xFFFFFFFF)
     keyed = keyed.withColumn("__is_train", frac_key < cfg.train_test_split_fraction)
-    from pyspark.sql import Window
-
     w = Window.partitionBy("__hash")
     return keyed.withColumn(
         "__to_train", F.max(F.col("__is_train").cast("int")).over(w) == 1

@@ -1,12 +1,22 @@
-"""Plan audits: parse ``df.explain('formatted')`` output into facts a
-test can assert — which filters reached the parquet scan, which
-columns are read, whether a join broadcast, how many exchanges
-(shuffles) the plan pays, how wide the codegen spans are.
+"""Plan audits: facts a test can assert about the physical plan Spark
+will run — which filters reached the parquet scan, which columns are
+read, whether a join broadcast, how many exchanges (shuffles) the plan
+pays, how wide the codegen spans are, and which windows run with no
+partition spec.
 
-Why string-parsing: PySpark exposes no stable structured physical
-plan; the formatted explain IS the public surface. Parsers here are
-deliberately tolerant (substring checks, not grammar) so Spark-minor
-formatting drift doesn't break the suite.
+Every fact is read from the JVM plan tree, never from rendered text:
+``audit`` walks ``df._jdf.queryExecution().executedPlan()`` into an
+``AdaptiveSparkPlan``'s current plan, into each query stage's plan,
+and through every node's ``children()`` and ``subqueries()``. A node
+reached only another way (a cached relation's plan) is not audited.
+Before a frame runs, an adaptive plan is its initial plan: exchanges
+and scans are in place, whole-stage codegen is not yet inserted, so
+callers asserting on ``n_codegen_spans`` build the frame with
+``spark.sql.adaptive.enabled=false`` (see tests/test_plans.py). Once
+it has run, an adaptive plan is its final plan, with the joins and
+partitioning adaptive execution chose.
+``PlanAudit.text`` keeps the formatted explain for substring asserts
+and for reading.
 
 These audits run in CI over the registered queries (tests/
 test_plans.py): a regression that silently turns a broadcast join
@@ -18,10 +28,28 @@ hours, and they never show up in small-SF correctness runs.
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
+
+# the node name of every Python-boundary operator Spark 4.1 plans, not
+# just scalar UDFs: a mapInPandas/applyInPandas/applyInArrow, a
+# grouped-agg or window pandas UDF or a Python UDTF in a "codegen-only"
+# query must trip the guard
+_PYTHON_NODES = frozenset({
+    "BatchEvalPython",
+    "ArrowEvalPython",
+    "MapInPandas",
+    "MapInArrow",
+    "FlatMapGroupsInPandas",
+    "FlatMapGroupsInArrow",
+    "FlatMapCoGroupsInPandas",
+    "FlatMapCoGroupsInArrow",
+    "ArrowAggregatePython",
+    "ArrowWindowPython",
+    "BatchEvalPythonUDTF",
+    "ArrowEvalPythonUDTF",
+})
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -46,6 +74,10 @@ class PlanAudit:
     n_sortmerge_joins: int
     n_codegen_spans: int
     has_python_udf: bool
+    # for every Window with an empty partition spec, the name of the
+    # operator it reads (a single-partition funnel unless that child is
+    # already bounded: a top-k or a limit)
+    global_windows: list[str]
     text: str
 
     def scan_for(self, table: str) -> ScanInfo | None:
@@ -55,250 +87,90 @@ class PlanAudit:
         return None
 
 
-def _split_top_level(s: str, openers: str = "([", closers: str = ")]") -> list[str]:
-    """Split on commas at nesting depth 0 only (review finding, r8:
-    naive split fragmented In(col, [a,b]) filters and nested struct
-    fields into phantom entries). Angle brackets are tracked ONLY by
-    the ReadSchema caller — filter expressions contain bare '>='
-    comparisons that would corrupt the depth."""
-    parts: list[str] = []
-    depth = 0
-    buf: list[str] = []
-    for ch in s:
-        if ch in openers:
-            depth += 1
-        elif ch in closers:
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-    if buf:
-        parts.append("".join(buf).strip())
-    return [p for p in parts if p]
+def _seq(s) -> list:
+    """A py4j handle on a Scala ``Seq`` as a Python list."""
+    return [s.apply(i) for i in range(s.size())]
 
 
-def _parse_list(block: str, key: str) -> list[str]:
-    m = re.search(rf"{key}: \[", block)
-    if not m:
-        return []
-    # consume to the MATCHING close bracket, depth-aware (review
-    # finding, r8: the old non-greedy regex stopped at the FIRST ']',
-    # truncating everything after a nested In(col, [..]) entry)
-    i = m.end()
-    depth = 1
-    buf: list[str] = []
-    while i < len(block) and depth:
-        ch = block[i]
-        if ch == "[":
-            depth += 1
-        elif ch == "]":
-            depth -= 1
-        if depth:
-            buf.append(ch)
-        i += 1
-    inner = "".join(buf).strip()
-    if not inner:
-        return []
-    return _split_top_level(inner)
+def _nodes(jvm, node, seen: set[int]):
+    """Yield ``(node, nodeName)`` for every operator Spark runs for the
+    plan rooted at ``node``, the operators of its subqueries included.
+    ``seen`` holds the identity hashes of the adaptive plans walked: two
+    operators can host one adaptive subquery plan, which runs once."""
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        key = jvm.System.identityHashCode(node)
+        if key not in seen:
+            seen.add(key)
+            yield from _nodes(jvm, node.executedPlan(), seen)
+        return
+    yield node, name
+    stage = [node.plan()] if name.endswith("QueryStage") else []
+    for inner in stage + _seq(node.children()) + _seq(node.subqueries()):
+        yield from _nodes(jvm, inner, seen)
 
 
-def _top_level_groups(s: str) -> list[str]:
-    """Split a formatted-plan Arguments line into its top-level
-    ``[...]`` groups. A Window op renders [exprs], [partitionSpec],
-    [orderSpec] when both specs are present; with only one spec the
-    second group is the partitionSpec (plain columns) OR the orderSpec
-    (entries carry ASC/DESC) — disambiguated in _is_unpartitioned."""
-    depth = 0
-    groups: list[str] = []
-    buf: list[str] = []
-    for ch in s:
-        if ch == "[":
-            if depth == 0:
-                buf = []
-            depth += 1
-            if depth > 1:
-                buf.append(ch)
-        elif ch == "]":
-            depth = max(0, depth - 1)
-            if depth == 0:
-                groups.append("".join(buf))
-            else:
-                buf.append(ch)
-        elif depth > 0:
-            buf.append(ch)
-    return groups
-
-
-def _is_unpartitioned_window(args_line: str) -> bool:
-    """True when a Window op's Arguments line shows an EMPTY partition
-    spec — the single-partition WindowExec the 100 TB plan must never
-    contain over a fact-sized relation (r6 verdict finding #3).
-    3 groups = partitioned+ordered; 2 groups = either partition-only
-    (second group has no sort direction → fine) or order-only (second
-    group carries ASC/DESC → global); <2 = global."""
-    groups = _top_level_groups(args_line)
-    if len(groups) >= 3:
-        return False
-    if len(groups) == 2:
-        return bool(re.search(r"\b(ASC|DESC)\b", groups[1]))
-    return True
-
-
-def global_windows(text: str) -> list[str]:
-    """Return, for every UNPARTITIONED Window op in a formatted plan,
-    the name of its immediate child operator in the plan tree. A child
-    of TakeOrderedAndProject / GlobalLimit / CollectLimit means the
-    window runs over an already-bounded relation (top-k re-ranking) —
-    anything else is a potential single-partition funnel at scale."""
-    # which op ids are unpartitioned windows (2 Arguments groups).
-    # Guard against a future explain-format drift making this a silent
-    # false-negative (r7 advice #3): every Window detail block must
-    # carry a parseable Arguments line, and the tree section must show
-    # exactly the same set of Window node ids — a reformat then raises
-    # here instead of letting the bench-set guard test pass vacuously.
-    bad_ids: set[str] = set()
-    window_ids: set[str] = set()
-    for b in re.split(r"\n(?=\(\d+\) )", text):
-        m = re.match(r"\((\d+)\) Window\b", b)
-        if not m:
-            continue
-        window_ids.add(m.group(1))
-        am = re.search(r"Arguments: (.*)", b)
-        if am is None:
-            raise ValueError(
-                f"Window detail block ({m.group(1)}) has no Arguments "
-                "line — explain format changed; update plans/audit.py"
-            )
-        if _is_unpartitioned_window(am.group(1)):
-            bad_ids.add(m.group(1))
-    # walk every tree section: the main tree (before the first detail
-    # block) AND any '===== Subqueries =====' trees — a Window inside a
-    # scalar-subquery plan has its detail block in the shared list, so
-    # restricting the cross-check to the main tree would raise a false
-    # 'format changed' error for such plans (review r8 pass 1). Tree
-    # lines are recognised by their trailing '(id)'. The scan is
-    # SECTION-gated (r9 advice fix): detail-block lines are skipped
-    # entirely — a detail line that happened to end in a bare
-    # parenthesised integer would otherwise be miscounted as a tree
-    # node and crash every audit as a false 'format changed' error.
-    # Detail blocks start at a '(n) OpName' header line; tree sections
-    # resume at the plan header or a 'Subquery:N ...' header.
-    nodes: list[tuple[int, str, str]] = []  # (depth, name, id)
-    in_tree = True
-    for line in text.splitlines():
-        if re.match(r"\(\d+\) ", line):
-            in_tree = False
-            continue
-        if line.startswith("Subquery:") or line.startswith("== Physical Plan =="):
-            in_tree = True
-            continue
-        if not in_tree:
-            continue
-        m = re.match(r"([:+\-\s]*)\*?\(?\d*\)?\s*([A-Za-z][\w.]*).*?\((\d+)\)\s*$", line)
-        if m:
-            nodes.append((len(m.group(1)), m.group(2), m.group(3)))
-    tree_window_ids = {nid for _, name, nid in nodes if name == "Window"}
-    if tree_window_ids != window_ids:
-        raise ValueError(
-            f"tree/detail Window mismatch (tree {sorted(tree_window_ids)} "
-            f"vs details {sorted(window_ids)}) — explain format changed; "
-            "update plans/audit.py"
-        )
-    if not bad_ids:
-        return []
-    out: list[str] = []
-    for i, (depth, name, nid) in enumerate(nodes):
-        if name == "Window" and nid in bad_ids:
-            child = "?"
-            for d2, n2, _ in nodes[i + 1 :]:
-                if d2 > depth:
-                    child = n2
-                    break
-            out.append(child)
+def _pushed_filters(jvm, scan) -> list[str]:
+    """The source filters Spark hands ``scan``'s parquet reader, each
+    data filter translated as ``FileSourceScanLike.pushedDownFilters``
+    translates it. A filter holding a scalar subquery is translated
+    only once the subquery has run, with its value, so it is left out
+    here; ``pushedDownFilters`` itself would raise on it before the
+    frame runs."""
+    ds = jvm.org.apache.spark.sql.execution.datasources
+    strategy, utils = (getattr(getattr(ds, f"{o}$"), "MODULE$") for o in ("DataSourceStrategy", "DataSourceUtils"))
+    nested = utils.supportNestedPredicatePushdown(scan.relation())
+    subquery = jvm.org.apache.spark.sql.catalyst.trees.TreePattern.SCALAR_SUBQUERY()
+    out = []
+    for e in _seq(scan.dataFilters()):
+        if not e.containsPattern(subquery):
+            f = strategy.translateFilter(e, nested)
+            if f.isDefined():
+                out.append(f.get().toString())
     return out
 
 
-def _parse_read_schema(block: str) -> list[str]:
-    m = re.search(r"ReadSchema: struct<", block)
-    if not m:
-        return []
-    # angle-bracket-depth-aware capture + top-level comma split
-    # (review finding, r8: the old non-greedy <(.*?)> stopped at the
-    # FIRST '>', so a nested struct column emitted phantom field
-    # names and truncated the rest of the schema)
-    i = m.end()
-    depth = 1
-    buf: list[str] = []
-    while i < len(block) and depth:
-        ch = block[i]
-        if ch == "<":
-            depth += 1
-        elif ch == ">":
-            depth -= 1
-        if depth:
-            buf.append(ch)
-        i += 1
-    fields = _split_top_level("".join(buf), openers="([<", closers=")]>")
-    return [f.split(":")[0].strip() for f in fields if ":" in f]
+def _read_child(window) -> str:
+    """nodeName of the operator a window reads: codegen wrappers are
+    not operators of their own."""
+    node = window.child()
+    while True:
+        name = node.nodeName()
+        if name.startswith("WholeStageCodegen") or name == "InputAdapter":
+            node = node.child()
+        else:
+            return name
 
 
 def audit(df: DataFrame) -> PlanAudit:
-    text = formatted_plan(df)
-    # codegen ids appear as "[codegen id : N]" detail annotations.
-    # Under AQE the static plan hides them — callers asserting on
-    # n_codegen_spans should build the frame with
-    # spark.sql.adaptive.enabled=false (see tests/test_plans.py)
-    n_codegen = len(set(re.findall(r"codegen id : (\d+)", text)))
-    # the formatted explain renders the tree, a blank line, then one
-    # "(n) OpName" detail block per operator
-    ops: list[tuple[str, str]] = []
-    for b in re.split(r"\n(?=\(\d+\) )", text):
-        m = re.match(r"\(\d+\) (.+)", b)
-        if m:
-            ops.append((m.group(1).strip(), b))
-    scans = []
-    for opname, b in ops:
-        if opname.startswith("Scan parquet") or opname.startswith("BatchScan"):
-            loc = re.search(r"Location: \S+ \[?([^\],\n]*)", b)
+    names: list[str] = []
+    scans: list[ScanInfo] = []
+    codegen_ids: set[int] = set()
+    global_windows: list[str] = []
+    jvm = df._sc._jvm
+    for node, name in _nodes(jvm, df._jdf.queryExecution().executedPlan(), set()):
+        names.append(name)
+        if name.startswith("Scan parquet"):
+            roots = node.relation().location().rootPaths()
             scans.append(
                 ScanInfo(
-                    location=loc.group(1) if loc else "",
-                    pushed_filters=_parse_list(b, "PushedFilters"),
-                    read_columns=_parse_read_schema(b),
-                    partition_filters=_parse_list(b, "PartitionFilters"),
+                    location=roots.head().toString() if roots.nonEmpty() else "",
+                    pushed_filters=_pushed_filters(jvm, node),
+                    read_columns=list(node.requiredSchema().fieldNames()),
+                    partition_filters=[e.toString() for e in _seq(node.partitionFilters())],
                 )
             )
-    names = [opname.split()[0] for opname, _ in ops]
+        elif name.startswith("WholeStageCodegen"):
+            codegen_ids.add(node.codegenStageId())
+        elif name == "Window" and node.partitionSpec().isEmpty():
+            global_windows.append(_read_child(node))
     return PlanAudit(
         scans=scans,
-        n_exchanges=sum(n == "Exchange" for n in names),
-        n_broadcast_joins=sum(
-            n in ("BroadcastHashJoin", "BroadcastNestedLoopJoin") for n in names
-        ),
-        n_sortmerge_joins=sum(n == "SortMergeJoin" for n in names),
-        n_codegen_spans=n_codegen,
-        # every Python-boundary operator Spark can plan, not just
-        # scalar UDFs (review finding: a mapInPandas/applyInPandas
-        # sneaking into a "codegen-only" query passed the guard)
-        has_python_udf=any(
-            k in text
-            for k in (
-                "BatchEvalPython",
-                "ArrowEvalPython",
-                "MapInPandas",
-                "FlatMapGroupsInPandas",
-                "FlatMapCoGroupsInPandas",
-                "MapInArrow",
-                "PythonMapInArrow",
-                # grouped-agg + window pandas UDFs and Python UDTFs
-                # plan as distinct nodes (review finding r5)
-                "AggregateInPandas",
-                "WindowInPandas",
-                "BatchEvalPythonUDTF",
-                "ArrowEvalPythonUDTF",
-            )
-        ),
-        text=text,
+        n_exchanges=names.count("Exchange"),
+        n_broadcast_joins=sum(n in ("BroadcastHashJoin", "BroadcastNestedLoopJoin") for n in names),
+        n_sortmerge_joins=names.count("SortMergeJoin"),
+        n_codegen_spans=len(codegen_ids),
+        has_python_udf=not _PYTHON_NODES.isdisjoint(names),
+        global_windows=global_windows,
+        text=formatted_plan(df),
     )

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from orderly_spark.operators.asof import asof_join_backward
+from orderly_spark.operators.dedup import _bloom_positions
 from orderly_spark.operators.relational import epoch_us, sessionize, topk_per_group
 from orderly_spark.registry import DAVG, DSUM, davg, dsum, query
 from orderly_spark.tables import load
@@ -1773,21 +1774,10 @@ def a_bloom_filter_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and three scans of a filtered dimension cost less than either
     build = c.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey").distinct()
 
-    def positions(key: Column) -> list[Column]:
-        return [
-            (
-                F.conv(
-                    F.substring(F.md5(F.concat(F.lit(f"{i}:"), key.cast("string"))), 1, 8),
-                    16,
-                    10,
-                ).cast("long")
-                % _BLOOM_M
-            )
-            for i in range(_BLOOM_K)
-        ]
-
     bits = (
-        build.select(F.explode(F.array(*positions(F.col("c_custkey")))).alias("p"))
+        build.select(
+            F.explode(F.array(*_bloom_positions(F.col("c_custkey").cast("string"), _BLOOM_M, _BLOOM_K))).alias("p")
+        )
         .distinct()
         .agg(F.sort_array(F.collect_list("p")).alias("bf"), F.count(F.lit(1)).alias("n_bits"))
     )
@@ -1798,7 +1788,7 @@ def a_bloom_filter_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "hit",
             F.forall(
-                F.array(*positions(F.col("o_custkey"))),
+                F.array(*_bloom_positions(F.col("o_custkey").cast("string"), _BLOOM_M, _BLOOM_K)),
                 lambda p: F.array_contains(F.col("bf"), p),
             ),
         )

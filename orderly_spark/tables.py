@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
@@ -110,6 +110,14 @@ def _footer_schema(path: str, *, ntz: bool = True) -> StructType | None:
         return None
 
 
+def micros_from_nanos(nanos: str) -> Column:
+    """Epoch microseconds of the epoch-nanoseconds bigint column
+    ``nanos``, floored: -1500 ns is -2 µs, the microsecond it falls in.
+    Integer arithmetic throughout; ``nanos / 1000`` in double space is
+    off by 1 µs at epoch-nanos magnitudes (> 2^53)."""
+    return F.expr(f"({nanos} - pmod({nanos}, 1000)) DIV 1000")
+
+
 def load(spark: SparkSession, sf_dir: str, name: str, *, fan_out: bool = False) -> DataFrame:
     """Read one testdata table.
 
@@ -161,18 +169,11 @@ def load(spark: SparkSession, sf_dir: str, name: str, *, fan_out: bool = False) 
         # epoch (field arithmetic, no zone); without it, a timestamp at
         # that UTC instant. Either way the values do not depend on the
         # session time zone.
-        # Integer division: ts/1000 in double space rounds off-by-1µs
-        # for epoch-nanos magnitudes (> 2^53 after scaling). DIV
-        # truncates toward zero where cleaning.py's extraction path
-        # floors via pmod; the two agree on values divisible by 1000,
-        # and tests/test_properties.py::test_events_ts_nanos_microsecond_aligned
-        # pins that alignment for any nanos-stored testdata. If sub-µs
-        # events ever appear, switch to (ts - pmod(ts,1000)) DIV 1000.
-        micros = "ts DIV 1000"
+        micros = micros_from_nanos("ts")
         ts = (
-            F.expr(f"timestampadd(MICROSECOND, {micros}, TIMESTAMP_NTZ'1970-01-01 00:00:00')")
+            F.timestamp_add("MICROSECOND", micros, F.expr("TIMESTAMP_NTZ'1970-01-01 00:00:00'"))
             if ntz
-            else F.timestamp_micros(F.expr(micros))
+            else F.timestamp_micros(micros)
         )
         df = df.withColumn("ts", ts)
     if fan_out:

@@ -647,107 +647,128 @@ def test_no_global_window_over_unbounded_relation_in_bench_set(spark, sf_smoke):
     limit node), never on an unbounded child."""
     from bench import HEADLINE
 
-    from orderly_spark.plans.audit import formatted_plan, global_windows
-
     BOUNDED = {"TakeOrderedAndProject", "GlobalLimit", "CollectLimit", "LocalLimit"}
     # Metadata-scale exceptions, each justified in its query docstring:
     # none currently in the headline set (compaction's per-hour window
     # and the curation histogram's 64-bin window are not benched).
     offenders = {}
     for name in HEADLINE:
-        df = REGISTRY[name].fn(spark, sf_smoke)
-        gw = [c for c in global_windows(formatted_plan(df)) if c not in BOUNDED]
+        gw = [c for c in plan(spark, sf_smoke, name).global_windows if c not in BOUNDED]
         if gw:
             offenders[name] = gw
     assert not offenders, f"unpartitioned Window over unbounded child: {offenders}"
 
 
-def test_global_windows_ignores_detail_lines_ending_in_parenthesised_int():
-    """r9 advice fix: the tree/detail cross-check must scan only tree
-    sections. A detail-block line that mentions Window and happens to
-    end in a bare parenthesised integer (e.g. a wrapped Arguments
-    continuation) previously parsed as a phantom tree node and crashed
-    every audit as a false 'format changed' error."""
-    from orderly_spark.plans.audit import global_windows
-
-    text = (
-        "== Physical Plan ==\n"
-        "* Project (2)\n"
-        "+- Window (1)\n"
-        "\n"
-        "(1) Window\n"
-        "Arguments: [row_number() windowspecdefinition(x ASC NULLS FIRST, "
-        "specifiedwindowframe(RowFrame, unboundedpreceding$(), currentrow$())) "
-        "AS rn], [x]\n"
-        "poison detail continuation mentioning Window id (7)\n"
-        "\n"
-        "(2) Project\n"
-        "Arguments: [rn]\n"
+def test_global_windows_subquery_tree_sections_still_scanned(spark, sf_smoke):
+    """A Window that lives only inside a scalar subquery's plan is
+    reported with the operator it reads: the audit walks every node's
+    subqueries as well as its children. The filter and the scan both
+    host this subquery; it runs once and is reported once."""
+    nation = f"parquet.`{sf_smoke}/nation.parquet`"
+    df = spark.sql(
+        f"SELECT n_name FROM {nation} WHERE n_nationkey > (SELECT max(s) FROM "
+        f"(SELECT sum(n_regionkey) OVER (ORDER BY n_nationkey) AS s FROM {nation}))"
     )
-    # partitioned window -> no offenders; and no ValueError from the
-    # phantom '(7)' detail line
-    assert global_windows(text) == []
+    a = audit(df)
+    assert a.global_windows == ["Sort"], a.text
+    # the filter on the subquery's value is pushed only once it has run
+    assert a.scans[0].pushed_filters == ["IsNotNull(n_nationkey)"], a.scans
 
 
-def test_global_windows_subquery_tree_sections_still_scanned(spark):
-    """The section gate must RESUME at Subquery headers: a Window
-    living only inside a scalar-subquery plan still cross-checks
-    (regression guard for the r8 pass-1 false-positive fix)."""
-    from orderly_spark.plans.audit import global_windows
+def test_audit_after_collect_walks_query_stages(spark, sf_smoke):
+    """Once a frame has run, its adaptive plan is the final plan of
+    query stages; the scans, exchanges and joins inside the stages are
+    reported as they were before the run."""
+    from pyspark.sql import functions as F
 
-    text = (
-        "== Physical Plan ==\n"
-        "* Filter (2)\n"
-        "+- Scan parquet (1)\n"
-        "\n"
-        "(1) Scan parquet\n"
-        "Output [1]: [x]\n"
-        "\n"
-        "(2) Filter\n"
-        "Arguments: x > Subquery scalar-subquery#1\n"
-        "\n"
-        "===== Subqueries =====\n"
-        "\n"
-        "Subquery:1 Hosting operator id = 2 Hosting Expression = x\n"
-        "* HashAggregate (4)\n"
-        "+- Window (3)\n"
-        "\n"
-        "(3) Window\n"
-        "Arguments: [sum(v) windowspecdefinition(specifiedwindowframe(RowFrame, "
-        "unboundedpreceding$(), currentrow$())) AS s]\n"
-        "\n"
-        "(4) HashAggregate\n"
-        "Arguments: keys=[]\n"
+    from orderly_spark.tables import load
+
+    o = load(spark, sf_smoke, "orders").filter(F.col("o_totalprice") > 1000.0)
+    c = load(spark, sf_smoke, "customer")
+    df = o.join(F.broadcast(c), o.o_custkey == c.c_custkey).groupBy("c_mktsegment").count()
+    before = audit(df)
+    df.collect()
+    after = audit(df)
+    assert "QueryStage" in after.text and "QueryStage" not in before.text, after.text
+    key = lambda s: s.location
+    assert len(after.scans) == 2 and sorted(after.scans, key=key) == sorted(before.scans, key=key), after.text
+    assert (after.n_exchanges, after.n_broadcast_joins) == (before.n_exchanges, before.n_broadcast_joins) == (1, 1)
+
+
+def test_partitioned_scan_reports_partition_filters(spark, tmp_path):
+    """A filter on a partitionBy column prunes directories: the scan
+    reports it as a partition filter, the data filter as pushed, and
+    reads only the data column."""
+    path = str(tmp_path / "parts.parquet")
+    spark.range(8).selectExpr("id", "id % 2 AS part").write.partitionBy("part").parquet(path)
+    (scan,) = audit(spark.read.parquet(path).filter("part = 1 AND id > 2")).scans
+    assert scan.location.endswith("parts.parquet"), scan
+    assert scan.partition_filters and all("part" in f for f in scan.partition_filters), scan
+    assert "GreaterThan(id,2)" in scan.pushed_filters, scan
+    assert not any("part" in f for f in scan.pushed_filters), scan
+    assert scan.read_columns == ["id"], scan
+
+
+def test_pushed_in_filter_is_one_entry(spark, sf_smoke):
+    """Each pushed filter is one entry, an In over a value list
+    included (a text parser once split it at the list's commas)."""
+    from pyspark.sql import functions as F
+
+    from orderly_spark.tables import load
+
+    df = load(spark, sf_smoke, "lineitem").filter(
+        F.col("l_linenumber").isin(1, 2) & (F.col("l_quantity") > 5)
     )
-    # the subquery Window is unpartitioned -> reported with its child
-    assert global_windows(text) == ["?"]
-
-
-def test_parse_list_handles_nested_in_filters():
-    """Bracket-aware PushedFilters parsing (review finding, r8): the
-    old non-greedy regex truncated at the ']' inside In(col, [..]),
-    dropping every filter after it."""
-    from orderly_spark.plans.audit import _parse_list
-
-    block = "PushedFilters: [In(l_shipdate, [19940101,19940102]), IsNotNull(l_quantity), GreaterThan(l_quantity, 5.0)]"
-    got = _parse_list(block, "PushedFilters")
-    assert got == [
-        "In(l_shipdate, [19940101,19940102])",
+    scan = audit(df.select("l_orderkey")).scan_for("lineitem")
+    assert scan is not None
+    assert sorted(scan.pushed_filters) == [
+        "GreaterThan(l_quantity,5.0)",
+        "In(l_linenumber, [1,2])",
         "IsNotNull(l_quantity)",
-        "GreaterThan(l_quantity, 5.0)",
-    ]
-    assert _parse_list("PushedFilters: []", "PushedFilters") == []
+    ], scan
 
 
-def test_parse_read_schema_handles_nested_structs():
-    """Angle-bracket-aware ReadSchema parsing (review finding, r8):
-    the old non-greedy <(.*?)> stopped at the first '>', emitting
-    phantom fields from nested structs and truncating the rest."""
-    from orderly_spark.plans.audit import _parse_read_schema
+def test_read_columns_of_nested_struct_scan(spark, tmp_path):
+    """A scan reads top-level column names, one per column, a nested
+    struct column included; a pruned nested read keeps its top-level
+    name."""
+    path = str(tmp_path / "nested.parquet")
+    spark.range(3).selectExpr(
+        "timestamp_seconds(id) AS ts", "named_struct('a', id, 'b', id) AS r", "double(id) AS v"
+    ).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert audit(df).scans[0].read_columns == ["ts", "r", "v"]
+    assert audit(df.select("r.a")).scans[0].read_columns == ["r"]
 
-    block = "ReadSchema: struct<ts:timestamp,r:struct<a:int,b:int>,v:double>"
-    assert _parse_read_schema(block) == ["ts", "r", "v"]
-    assert _parse_read_schema("ReadSchema: struct<a:int>") == ["a"]
+
+def test_every_python_boundary_is_flagged(spark):
+    """Each kind of Python operator Spark plans sets has_python_udf:
+    scalar, grouped-agg and window pandas UDFs, the map/apply/cogroup
+    functions over pandas and over Arrow."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+    from pyspark.sql.functions import PandasUDFType
+
+    df = spark.range(8).selectExpr("id % 2 AS k", "double(id) AS v")
+    # the UDF type is explicit: this module's string annotations defeat
+    # pandas_udf's type-hint inference
+    mean = F.pandas_udf(lambda v: v.mean(), "double", PandasUDFType.GROUPED_AGG)
+    g = df.groupBy("k")
+    frames = {
+        "udf": df.select(F.udf(lambda v: v, "double")("v")),
+        "scalar pandas": df.select(F.pandas_udf(lambda v: v, "double", PandasUDFType.SCALAR)("v")),
+        "grouped agg": g.agg(mean("v")),
+        "window": df.withColumn("m", mean("v").over(Window.partitionBy("k"))),
+        "mapInPandas": df.mapInPandas(lambda it: it, df.schema),
+        "mapInArrow": df.mapInArrow(lambda it: it, df.schema),
+        "applyInPandas": g.applyInPandas(lambda t: t, df.schema),
+        "applyInArrow": g.applyInArrow(lambda t: t, df.schema),
+        "cogroup pandas": g.cogroup(g).applyInPandas(lambda a, b: a, df.schema),
+        "cogroup arrow": g.cogroup(g).applyInArrow(lambda a, b: a, df.schema),
+    }
+    assert not audit(df).has_python_udf
+    missed = [name for name, frame in frames.items() if not audit(frame).has_python_udf]
+    assert not missed, missed
 
 
 def test_pq_adc_joins_are_broadcast_no_nested_loop(spark, sf_smoke):

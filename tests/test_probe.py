@@ -60,6 +60,8 @@ def test_probe_scaled_corpus_and_stage_attribution(spark, sf_smoke, tmp_path):
     codegen = rec["codegen"]
     assert len(codegen["classes"]) == len(codegen["compile_s"]) == 2, codegen
     assert codegen["classes"][0] > 0 and codegen["classes"][1] == 0, codegen
+    # plan facts from the audit's tree walk; q5 ranks by no window
+    assert rec["plan"]["scans"] >= 6 and rec["plan"]["global_windows"] == 0, rec
     # the JIT compilers' seconds while each rep ran
     assert len(rec["jit_s"]) == 2 and all(isinstance(s, (int, float)) and s >= 0 for s in rec["jit_s"]), rec
 

@@ -435,12 +435,12 @@ def test_asof_null_timestamps_match_nothing(spark):
     "sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 )
 def test_events_ts_nanos_microsecond_aligned(sp, sf_dir):
-    """Oracle-validity guard for tables.load's ns→µs conversion
-    (review finding, r8): the engine converts with truncating DIV
-    while cleaning.py's extraction path floors via pmod — the two
-    agree ONLY on 1000-divisible nanos. Pin µs alignment at both gate
-    scales so a testdata change surfaces here, not as a 1µs timestamp
-    drift against DuckDB's native read."""
+    """Oracle-validity guard for tables.load's ns→µs conversion: the
+    engine floors nanos to whole microseconds (tables.micros_from_nanos)
+    while DuckDB reads the column natively, so the two agree ONLY on
+    1000-divisible nanos. Pin µs alignment at both gate scales so a
+    testdata change surfaces here, not as a 1µs timestamp drift
+    against DuckDB's native read."""
     import os
 
     if not os.path.exists(f"{sf_dir}/events.parquet"):

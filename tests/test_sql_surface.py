@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from orderly_spark.functions.sql_registry import register_sql_functions
+from orderly_spark.plans.audit import audit
 from orderly_spark.tables import load, register_views
 
 
@@ -76,8 +77,6 @@ class TestSqlScalarFunctions:
 
     def test_rule_functions_plan_without_python(self, spark):
         # F5 and F13 are SQL-bodied: they inline into the JVM plan
-        from orderly_spark.plans.audit import audit
-
         df = spark.sql(
             "SELECT has_transition_metal(s) AS t, reaction_hash(array(s), array(s)) AS h "
             "FROM VALUES ('[Pd]'), (NULL) AS v(s)"
@@ -104,10 +103,10 @@ class TestUnpivotPlan:
             variableColumnName="measure",
             valueColumnName="val",
         )
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Expand" in plan
+        a = audit(df)
+        assert "Expand" in a.text
         # one scan, not a UNION of per-measure re-scans
-        assert plan.count("Scan parquet") == 1
+        assert len(a.scans) == 1
         assert df.count() == 2 * l.count()
 
 

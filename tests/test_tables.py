@@ -121,6 +121,21 @@ def test_load_converts_nanos_stored_events_ts(spark, tmp_path):
     assert got == dict(enumerate(_MICROS))
 
 
+def test_load_floors_sub_microsecond_nanos(spark, tmp_path):
+    """A nanos ``events.ts`` that is not a whole microsecond loads as the
+    microsecond it falls in, as cleaning.merge_extracted converts its
+    nanos columns: -1500 ns is -2 µs, not -1."""
+    tmp_path.mkdir(exist_ok=True)
+    pq.write_table(
+        pa.table({"event_id": pa.array([0, 1], pa.int64()), "ts": pa.array([-1500, 1500], pa.timestamp("ns"))}),
+        tmp_path / "events.parquet",
+        version="2.6",
+    )
+    df = _fresh_load(spark, str(tmp_path), "events")
+    us = "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts) AS us"
+    assert {r.event_id: r.us for r in df.selectExpr("event_id", us).collect()} == {0: -2, 1: 1}
+
+
 @pytest.mark.parametrize("ntz", ["true", "false"])
 def test_nanos_and_micros_events_ts_load_alike_in_any_zone(spark, tmp_path, ntz):
     """In a non-UTC session, with timestamp_ntz inference on or off, a

@@ -44,7 +44,8 @@ built: its eager barriers, see ``orderly_spark.session.barrier``),
 ``orderly_spark.session.py4j_commands`` as tests/test_build_budget.py
 counts them; tables are loaded once before the slots, so a build's
 schemas come from the cache),
-``plan`` (facts from ``orderly_spark.plans.audit``), ``cds`` (whether
+``plan`` (facts from ``orderly_spark.plans.audit``; ``global_windows``
+counts the windows with no partition spec), ``cds`` (whether
 the session's JVM mapped the class-data archive, was building one or ran
 without one: ``orderly_spark.session.archive_state``), ``codegen`` (the
 classes each rep compiled and its seconds of compiling, one value per
@@ -128,6 +129,7 @@ def plan_facts(a) -> dict:
         "sortmerge_joins": a.n_sortmerge_joins,
         "codegen_spans": a.n_codegen_spans,
         "python_udf": a.has_python_udf,
+        "global_windows": len(a.global_windows),
     }
 
 
